@@ -507,14 +507,16 @@ final class GraftTable(spark: SparkSession, dir: String,
     // results are unchanged; only the per-statement re-derivation goes.
     val nReaders = statements.count(s =>
       !s.trim.take(6).equalsIgnoreCase("INSERT"))
-    val snap: Option[DataFrame] =
-      if (nReaders >= 2)
-        Some(org.apache.spark.sql.graftbridge.RddBridge
-          .localCheckpointWithCount(current())._1)
-      else None
-    val ops = statements.map(compileDml(name, _, systemTime, snap))
-      .reduce(_.unionByName(_))
-    validatedAppend(ops, systemTime)
+    // released once the tx commits (or fails): a table-sized checkpoint
+    // per multi-statement tx would otherwise hold executor storage
+    // until the context cleaner runs
+    graft.bitemporal.Checkpoints.scoped { cps =>
+      val snap: Option[DataFrame] =
+        if (nReaders >= 2) Some(cps.pin(current())) else None
+      val ops = statements.map(compileDml(name, _, systemTime, snap))
+        .reduce(_.unionByName(_))
+      validatedAppend(ops, systemTime)
+    }
   }
 
   /** [[requireDisjoint]] then append as ONE transaction. The ops plan is

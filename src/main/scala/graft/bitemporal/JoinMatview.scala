@@ -160,6 +160,7 @@ final class JoinMatview private[graft] (
     }
   }
   require(nBuckets > 0, "nBuckets must be positive")
+  MvState.requireUnreserved(aggable)
 
   private val dataDir = stateRoot.resolve("state")
   private val wmFile = stateRoot.resolve("_watermark")
@@ -307,11 +308,14 @@ final class JoinMatview private[graft] (
     if (rangeLayout) MvState.checkRangeKey(schema, groupCols.head)
 
   /** Pin every DISTINCT aux to exactly the per-log watermarks this
-    * refresh will record — see [[Matview.syncAuxes]]. Star-form auxes
-    * derive their own delta (the single-table sharing shortcut does not
-    * apply across a join). */
-  private def syncAuxes(lasts: Seq[Long]): Unit =
-    distincts.foreach(_.refreshAuxTo(lasts, None))
+    * refresh will record — see [[Matview.syncAuxes]]. A rebuild hands
+    * its checkpointed member relation down (`shared`, an
+    * [[MvSharedStarBuild]]) so a rebuilding aux groups it instead of
+    * re-running the star join; an incremental refresh shares nothing,
+    * and each aux derives its own delta. */
+  private def syncAuxes(lasts: Seq[Long],
+                        shared: Option[MvShared] = None): Unit =
+    distincts.foreach(_.refreshAuxTo(lasts, shared))
 
   private def readTx(files: Seq[Path]): DataFrame =
     TxLog.readMerged(spark, files.map(_.toString))
@@ -352,6 +356,20 @@ final class JoinMatview private[graft] (
       groupCols.filter(cols.contains)).distinct
   }
 
+  /** The sieved star join at `lasts` with the derived columns attached:
+    * every member row of the view, each side projected to what the
+    * aggregates need plus the `extra` columns it carries (a rebuild
+    * widens it by the DISTINCT auxes' arguments, so the auxes can group
+    * the same relation). */
+  private def members(lasts: Seq[Long], extra: Seq[String] = Nil)
+      : DataFrame =
+    prep(joinAll(
+      project(visibleFact(lasts.head), "_fact_id",
+        (factKeep ++ extra.filter(factCols.contains)).distinct),
+      dims.indices.map(i =>
+        project(visibleDim(i, lasts(i + 1)), dimId(i),
+          (dimKeep(i) ++ extra.filter(dimColsOf(i).contains)).distinct))))
+
   /** fact ⋈ every dim on its fk = dim id — LEFT for left spokes (NULL
     * and dangling fks keep the fact row, dim columns NULL). */
   private def joinAll(fact: DataFrame, dimDfs: Seq[DataFrame]): DataFrame =
@@ -360,29 +378,46 @@ final class JoinMatview private[graft] (
         if (leftOf(i)) "left" else "inner")
     }
 
-  /** The star join sieved by the declared WHERE, then the per-group
-    * COUNT/SUM/COUNT(col) — `withMm` adds MIN/MAX aggregates, valid
-    * only over a COMPLETE member relation (full build, touched-group
-    * re-read), never over a delta: extremes don't subtract. */
-  private def joinAgg(fact: DataFrame, dimDfs: Seq[DataFrame],
-                      withMm: Boolean = false): DataFrame =
-    prep(joinAll(fact, dimDfs))
-      .groupBy(groupCols.map(col): _*)
+  /** Per-group COUNT/SUM/COUNT(col) over a member relation — `withMm`
+    * adds MIN/MAX aggregates, valid only over a COMPLETE member
+    * relation (full build, touched-group re-read), never over a delta:
+    * extremes don't subtract. */
+  private def aggOf(members: DataFrame, withMm: Boolean = false,
+                    more: Seq[Column] = Nil): DataFrame =
+    members.groupBy(groupCols.map(col): _*)
       .agg(count(lit(1)).as("n"),
         sumCols.map(c => sum(col(c)).as(sumAlias(c))) ++ cntAggs ++
-          (if (withMm) mmAggs else Nil): _*)
+          (if (withMm) mmAggs else Nil) ++ more: _*)
+
+  /** The star join sieved by the declared WHERE, then [[aggOf]]. */
+  private def joinAgg(fact: DataFrame, dimDfs: Seq[DataFrame]): DataFrame =
+    aggOf(prep(joinAll(fact, dimDfs)))
 
   /** Exact full recompute → state (first build, or after truncation of
-    * any log). Same temp-write + swap as [[Matview]]. */
-  private def rebuild(lasts: Seq[Long]): (Long, Long) = {
-    syncAuxes(lasts)
-    val agg = MvState.attachDistinctFull(
-      joinAgg(project(visibleFact(lasts.head), "_fact_id", factKeep),
-          dims.indices.map(i =>
-            project(visibleDim(i, lasts(i + 1)), dimId(i), dimKeep(i))),
-          withMm = true)
-        .withColumn("_bucket", bucketCol),
-      groupCols, distincts, spark)
+    * any log). Same temp-write + swap as [[Matview]].
+    *
+    * With DISTINCT auxes the member relation is derived ONCE, widened
+    * by every aux's argument and checkpointed: each aux rebuilding at
+    * the same watermarks groups it by `groups :+ arg`, and this view
+    * aggregates the same checkpoint — one star join per rebuild, not
+    * one per aux plus one. An aux adopts the relation only at equal
+    * watermarks (any drift derives its own, as before). */
+  private def rebuild(lasts: Seq[Long], sharedIn: Option[MvShared],
+                      cps: Checkpoints): (Long, Long) = {
+    val mem = sharedIn match {
+      case Some(sb: MvSharedStarBuild) if sb.lasts == lasts => sb.members
+      case _ =>
+        val m = members(lasts, distincts.map(_.arg))
+        if (JoinMatview.capturePlans) JoinMatview.capturedPlans.synchronized {
+          JoinMatview.capturedPlans +=
+            m.queryExecution.executedPlan.toString: Unit
+        }
+        if (distincts.isEmpty) m else cps.pin(m)
+    }
+    syncAuxes(lasts, Some(MvSharedStarBuild(lasts, mem)))
+    val agg = MvState.withBucket(
+      aggOf(mem, withMm = true, MvState.distinctAggs(distincts)), bucketCol,
+      distincts)
     checkRangeKey(agg.schema)
     if (rangeLayout) MvState.checkRangeBuild(agg,
       MvState.rangeLeadKind(agg.schema, groupCols.head), "build")
@@ -414,11 +449,19 @@ final class JoinMatview private[graft] (
     * main view's just-recorded watermarks, so both states always
     * describe the same log prefixes. Pins at or below the current
     * watermarks are a no-op. */
-  private[graft] def refreshUpTo(pins: Option[Seq[Long]]): (Long, Long) =
+  private[graft] def refreshUpTo(pins: Option[Seq[Long]],
+      sharedIn: Option[MvShared] = None): (Long, Long) =
     MaintainerLease.withLease(
       java.nio.file.Paths.get(factLog.dir) +:
         dims.map(d => java.nio.file.Paths.get(d._1.dir)),
       "join-matview-refresh") {
+      Checkpoints.scoped(refreshHeld(pins, sharedIn, _))
+    }
+
+  /** [[refreshUpTo]]'s body, under the lease; every local checkpoint it
+    * takes goes into `cps` and is released when it returns. */
+  private def refreshHeld(pins: Option[Seq[Long]],
+      sharedIn: Option[MvShared], cps: Checkpoints): (Long, Long) = {
     // a DEFINITION change over the same state dir (JVM restart +
     // re-CREATE, a Scala-API re-instantiation, or a different dim
     // arity) invalidates the state: discard it and fall through to the
@@ -454,7 +497,7 @@ final class JoinMatview private[graft] (
     if (factLog.truncatedUpTo().isDefined ||
       dims.exists(_._1.truncatedUpTo().isDefined) ||
       ws.exists(_ < 0) || !Files.exists(dataDir))
-      return rebuild(lasts)
+      return rebuild(lasts, sharedIn, cps)
 
     if (MvState.storedSchema(stateRoot).exists(tzSensitive))
       MvState.checkTimeZone(spark, stateRoot)
@@ -502,10 +545,7 @@ final class JoinMatview private[graft] (
     // broadcast side.
     val vbNews = dims.indices.map { i =>
       val v = project(visibleDim(i, lasts(i + 1)), dimId(i), dimKeep(i))
-      if (reuseShared)
-        org.apache.spark.sql.graftbridge.RddBridge
-          .localCheckpointWithCount(v)._1
-      else v
+      if (reuseShared) cps.pin(v) else v
     }
     val vaOldT = project(oldTouched(factLog, factCols, ta, ws.head),
       "_fact_id", factKeep)
@@ -577,8 +617,7 @@ final class JoinMatview private[graft] (
           JoinMatview.capturedPlans +=
             da.queryExecution.executedPlan.toString: Unit
         }
-        org.apache.spark.sql.graftbridge.RddBridge
-          .localCheckpointWithCount(da)._1
+        cps.pin(da)
       }
     val affNew = semiOn(vaNew, col("_fact_id"), ta).unionByName(dimAff)
     val affOld = vaOldT // own id touched: every old version is affected
@@ -597,14 +636,16 @@ final class JoinMatview private[graft] (
       .getOption("spark.graft.mv.unionDelta").forall(_.toBoolean)
     val delta0 =
       if (unionDelta) {
+        val sg = col(MvState.SignCol)
         def side(fact: DataFrame, dimDfs: Seq[DataFrame], sign: Int) =
-          prep(joinAll(fact, dimDfs)).withColumn("_sign", lit(sign.toLong))
+          prep(joinAll(fact, dimDfs))
+            .withColumn(MvState.SignCol, lit(sign.toLong))
         side(affNew, vbNews, 1).unionByName(side(affOld, vbOlds, -1))
           .groupBy(groupCols.map(col): _*)
-          .agg(sum(col("_sign")).as("n"),
-            sumCols.map(c => sum(when(col("_sign") === 1L, col(c))
+          .agg(sum(sg).as("n"),
+            sumCols.map(c => sum(when(sg === 1L, col(c))
               .otherwise(-col(c))).as(sumAlias(c))) ++
-              cntCols.map(c => sum(when(col(c).isNotNull, col("_sign"))
+              cntCols.map(c => sum(when(col(c).isNotNull, sg)
                 .otherwise(0L)).as(cntAlias(c))): _*)
       } else {
         val newC = joinAgg(affNew, vbNews)
@@ -650,22 +691,8 @@ final class JoinMatview private[graft] (
       JoinMatview.capturedPlans +=
         delta.queryExecution.executedPlan.toString: Unit
     }
-    val groupCap =
-      if (groupCols.size == 1) MvState.MaxInlineGroups
-      else MvState.MaxInlineGroupTuples
-    val fusedCollect = spark.conf
-      .getOption("spark.graft.mv.fusedCollect").forall(_.toBoolean)
     val (deltaCp, deltaRows, bucketsOpt, tuplesOpt) =
-      if (fusedCollect)
-        org.apache.spark.sql.graftbridge.RddBridge.localCheckpointWithStats(
-          delta, delta.schema.fieldIndex("_bucket"),
-          math.max(nBuckets, MvState.MaxRangeDirs + 1),
-          groupCols.map(delta.schema.fieldIndex), groupCap)
-      else {
-        val (cp, n) = org.apache.spark.sql.graftbridge.RddBridge
-          .localCheckpointWithCount(delta)
-        (cp, n, None, None)
-      }
+      cps.pinDelta(delta, nBuckets, groupCols)
     val affected: Seq[Any] =
       if (deltaRows == 0L) Nil
       else bucketsOpt.getOrElse(
@@ -800,7 +827,9 @@ object JoinMatview {
 
   /** Test hook: the delta executes as a bare RDD checkpoint job (no
     * QueryExecutionListener event), so the pruning spec captures its
-    * physical plan here instead. Off (zero cost) outside tests. */
+    * physical plan here instead — and a rebuild captures each member
+    * relation it derives (the sharing spec counts them). Off (zero
+    * cost) outside tests. */
   @volatile private[graft] var capturePlans = false
   private[graft] val capturedPlans =
     scala.collection.mutable.Buffer.empty[String]

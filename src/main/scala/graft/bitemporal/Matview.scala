@@ -90,6 +90,7 @@ final class Matview private[graft] (
   pcts.foreach(p => require(p.p >= 0.0 && p.p <= 1.0,
     s"percentile fraction ${p.p} must be in [0, 1]"))
   require(nBuckets > 0, "nBuckets must be positive")
+  MvState.requireUnreserved(aggable)
 
   private val dataDir = stateRoot.resolve("state")
   private val wmFile = stateRoot.resolve("_watermark")
@@ -224,16 +225,21 @@ final class Matview private[graft] (
   /** Pin every DISTINCT aux to exactly the watermark this refresh will
     * record, so the rollup below reads pair state at the same log
     * prefix the main state describes. `shared` hands the aux the main
-    * refresh's already-derived (touched, old/new rectangle) relations —
-    * the aux aggregates the SAME table at the SAME watermarks, so
-    * re-deriving them would re-fold the tail once per DISTINCT
-    * argument (r16, guide §2.3). */
+    * refresh's already-derived relations — the (touched, old/new
+    * rectangle) delta inputs, or a rebuild's folded rectangles: the aux
+    * aggregates the SAME table at the SAME watermarks, so re-deriving
+    * them would re-fold the log once per DISTINCT argument. */
   private def syncAuxes(last: Long,
                         shared: Option[MvShared] = None): Unit =
     distincts.foreach(_.refreshAuxTo(Seq(last), shared))
 
   private def readTx(files: Seq[Path]): DataFrame =
     TxLog.readMerged(spark, files.map(_.toString))
+
+  // A/B gate shared with JoinMatview (same key): off = the pre-r16
+  // shapes, for same-JVM measurement
+  private def reuseShared: Boolean = spark.conf
+    .getOption("spark.graft.mv.reuseShared").forall(_.toBoolean)
 
   /** Per-group COUNT/SUM contribution of an already-folded RECTANGLE
     * relation at the view's basis — the self-maintainable part, used on
@@ -250,40 +256,54 @@ final class Matview private[graft] (
     * over a delta: min/max don't subtract. Takes a PREPPED relation
     * (sieve + derived already applied) so the mm touched-group path can
     * semi-join on derived group keys before aggregating. */
-  private def fullAgg(prepped: DataFrame): DataFrame =
+  private def fullAgg(prepped: DataFrame,
+                      more: Seq[Column] = Nil): DataFrame =
     prepped.groupBy(groupCols.map(col): _*)
       .agg(count(lit(1)).as("n"),
-        sumCols.map(c => sum(col(c)).as(sumAlias(c))) ++ cntAggs ++ mmAggs: _*)
+        sumCols.map(c => sum(col(c)).as(sumAlias(c))) ++ cntAggs ++ mmAggs ++
+          more: _*)
 
   /** Rebuild the whole state from the RECTANGLE relation (base +
-    * tail via the persisted base watermark) — the path that stays
-    * correct when the log has been TRUNCATED ([[TxLog.truncate]]): the
-    * incremental delta needs touched ids' full op history, which a
-    * truncated log no longer has; the rectangles still determine the
-    * view exactly. Cost = one full view recompute — the documented
-    * price of retention, paid only on the first refresh after a
-    * truncation advances past this view's watermark. */
-  private def rebuildFromState(last: Long): Long = {
+    * tail via the persisted base watermark) — the first build, and the
+    * path that stays correct when the log has been TRUNCATED
+    * ([[TxLog.truncate]]): the incremental delta needs touched ids'
+    * full op history, which a truncated log no longer has; the
+    * rectangles still determine the view exactly. Cost = one full view
+    * recompute — the documented price of retention, paid on every
+    * refresh after a truncation advances past this view's watermark.
+    *
+    * With DISTINCT auxes the SAME rectangles feed the main build and
+    * every aux's rebuild (each aux is a view over the same log at the
+    * same basis): fold once, checkpoint, and hand them down as an
+    * [[MvSharedBuild]] — an aux rebuilding at the same watermark adopts
+    * them instead of folding the log again. */
+  private def rebuild(last: Long, sharedIn: Option[MvShared],
+                      cps: Checkpoints): Long = {
     // upToTx pins the fold to the watermark being recorded — a tx
     // committing mid-rebuild must stay ABOVE the watermark (it would
     // otherwise fold into state now and again on the next refresh)
-    val visible = Bitemporal.asOf(
-      log.readAllAuto(spark, payloadCols, upToTx = last),
-      lit(validAt), lit(sysProbe))
-    syncAuxes(last)
-    val agg = MvState.attachDistinctFull(
-      fullAgg(prep(visible)).withColumn("_bucket", bucketCol),
-      groupCols, distincts, spark)
+    val rect = sharedIn match {
+      case Some(sb: MvSharedBuild) if sb.last == last => sb.rect
+      case _ =>
+        val r = log.readAllAuto(spark, payloadCols, upToTx = last)
+        if (reuseShared && distincts.nonEmpty) cps.pin(r) else r
+    }
+    syncAuxes(last,
+      if (reuseShared) Some(MvSharedBuild(last, rect)) else None)
+    val visible = Bitemporal.asOf(rect, lit(validAt), lit(sysProbe))
+    val agg = MvState.withBucket(
+      fullAgg(prep(visible), MvState.distinctAggs(distincts)), bucketCol,
+      distincts)
     checkRangeKey(agg.schema)
     if (rangeLayout) MvState.checkRangeBuild(agg,
-      MvState.rangeLeadKind(agg.schema, groupCols.head), "rebuild into")
+      MvState.rangeLeadKind(agg.schema, groupCols.head), "build")
     // temp-write + directory swap (same pattern as the incremental
     // path): a concurrent read() sees either the complete old state or
     // the complete new one — never a partial overwrite-in-place — with
     // ONE caveat: POSIX cannot atomically exchange two directories, so
     // a read landing exactly between the two renames below fails with
     // path-not-found (a retryable error, not wrong data). A crash in
-    // that window self-heals: rebuildFromState derives everything from
+    // that window self-heals: rebuild derives everything from
     // the rectangles, never from prior state, so the next refresh
     // (watermark still behind) rebuilds from scratch.
     val tmp = stateRoot.resolve("state_rebuild_tmp")
@@ -308,7 +328,7 @@ final class Matview private[graft] (
     * touched id's FULL op history (old and new contribution are both
     * re-derived from its ops), so once the log has been truncated
     * ([[TxLog.truncate]]) refresh permanently switches to
-    * [[rebuildFromState]] — exact at any truncation, at full-recompute
+    * [[rebuild]] — exact at any truncation, at full-recompute
     * cost. The standard tension between retention and incremental view
     * maintenance: vacuum less often than you refresh, or accept the
     * recompute. */
@@ -324,6 +344,13 @@ final class Matview private[graft] (
       sharedIn: Option[MvShared] = None): Long =
     MaintainerLease.withLease(
       java.nio.file.Paths.get(log.dir), "matview-refresh") {
+      Checkpoints.scoped(refreshHeld(pin, sharedIn, _))
+    }
+
+  /** [[refreshUpTo]]'s body, under the lease; every local checkpoint it
+    * takes goes into `cps` and is released when it returns. */
+  private def refreshHeld(pin: Option[Long], sharedIn: Option[MvShared],
+                          cps: Checkpoints): Long = {
     // a DEFINITION change over the same state dir (JVM restart +
     // re-CREATE, or a Scala-API re-instantiation with different
     // aggregates/WHERE/groups) invalidates the state: discard it and
@@ -350,51 +377,13 @@ final class Matview private[graft] (
     // under a pin, every relation this refresh folds must stop at it —
     // the file set, the tail, and the touched ids' history alike
     val last = pin.fold(lastAll)(p => math.min(p, lastAll))
-    if (truncated.isDefined)
-      return if (last > w) rebuildFromState(last) else w
-    val files = files0.filter(fid(_) <= last)
-    if (files.isEmpty) return w
     if (last <= w) return w
-
-    // A/B gate shared with JoinMatview (same key): off = the pre-r16
-    // shapes, for same-JVM measurement
-    val reuseShared = spark.conf
-      .getOption("spark.graft.mv.reuseShared").forall(_.toBoolean)
-    if (w < 0 || !Files.exists(dataDir)) {
-      // first build: one full fold, all buckets written once. With
-      // DISTINCT auxes the SAME fold feeds the main build and every
-      // aux's first build (each aux is a view over the same log at the
-      // same basis) — fold once, checkpoint the rectangles (one write
-      // + re-reads instead of one full log fold per aux; r17, guide
-      // §2.3 "don't compute things twice"), hand them down like the
-      // incremental path's MvSharedDelta.
-      val rect0 = sharedIn match {
-        case Some(sb: MvSharedBuild) if sb.last == last => sb.rect
-        case _ => Bitemporal.fold(readTx(files), payloadCols)
-      }
-      val rect =
-        if (reuseShared && distincts.nonEmpty && sharedIn.isEmpty)
-          org.apache.spark.sql.graftbridge.RddBridge
-            .localCheckpointWithCount(rect0)._1
-        else rect0
-      syncAuxes(last,
-        if (reuseShared && distincts.nonEmpty) Some(MvSharedBuild(last, rect))
-        else None)
-      val firstAgg = MvState.attachDistinctFull(
-        fullAgg(prep(Bitemporal.asOf(rect, lit(validAt), lit(sysProbe))))
-          .withColumn("_bucket", bucketCol),
-        groupCols, distincts, spark)
-      checkRangeKey(firstAgg.schema)
-      if (rangeLayout) MvState.checkRangeBuild(firstAgg,
-        MvState.rangeLeadKind(firstAgg.schema, groupCols.head), "build")
-      MvState.writeSchema(stateRoot, firstAgg, bucketKeyCols, nBuckets,
-        rangeLayout)
-      MvState.writeState(firstAgg, groupCols, dataDir, nBuckets)
-      if (tzSensitive(firstAgg.schema)) MvState.pinTimeZone(spark, stateRoot)
-      MvState.pinDef(stateRoot, defFp)
-      setWatermark(last)
-      return last
-    }
+    val files = files0.filter(fid(_) <= last)
+    if (truncated.isEmpty && files.isEmpty) return w
+    // first build, or any refresh of a truncated log: one full fold,
+    // all buckets written once
+    if (truncated.isDefined || w < 0 || !Files.exists(dataDir))
+      return rebuild(last, sharedIn, cps)
 
     if (MvState.storedSchema(stateRoot).exists(tzSensitive))
       MvState.checkTimeZone(spark, stateRoot)
@@ -437,8 +426,7 @@ final class Matview private[graft] (
         else {
           val oldRect0 =
             Bitemporal.fold(hist.filter(col("_tx_id") <= w), payloadCols)
-          val (oldCp, _) = org.apache.spark.sql.graftbridge.RddBridge
-            .localCheckpointWithCount(oldRect0)
+          val oldCp = cps.pin(oldRect0)
           // schemaless normalization for the tail ops (refoldTouched's
           // contract): a short tail may lack payload columns older txs
           // carried
@@ -453,8 +441,7 @@ final class Matview private[graft] (
     // so the applyOps fold runs one time, not once per consumer
     val newRectS =
       if (!reuseShared || distincts.isEmpty || sharedIn.nonEmpty) newRect
-      else org.apache.spark.sql.graftbridge.RddBridge
-        .localCheckpointWithCount(newRect)._1
+      else cps.pin(newRect)
     // Delta per group: (new minus old) as ONE aggregation over the
     // SIGNED union of both rectangle contributions (r17, guide §2.4
     // "two operations keyed the same way can share one exchange") —
@@ -468,15 +455,16 @@ final class Matview private[graft] (
       .getOption("spark.graft.mv.unionDelta").forall(_.toBoolean)
     val delta0 =
       if (unionDelta) {
+        val sg = col(MvState.SignCol)
         def side(rect: DataFrame, sign: Int): DataFrame =
           prep(Bitemporal.asOf(rect, lit(validAt), lit(sysProbe)))
-            .withColumn("_sign", lit(sign.toLong))
+            .withColumn(MvState.SignCol, lit(sign.toLong))
         side(newRectS, 1).unionByName(side(oldRect, -1))
           .groupBy(groupCols.map(col): _*)
-          .agg(sum(col("_sign")).as("n"),
-            sumCols.map(c => sum(when(col("_sign") === 1L, col(c))
+          .agg(sum(sg).as("n"),
+            sumCols.map(c => sum(when(sg === 1L, col(c))
               .otherwise(-col(c))).as(sumAlias(c))) ++
-              cntCols.map(c => sum(when(col(c).isNotNull, col("_sign"))
+              cntCols.map(c => sum(when(col(c).isNotNull, sg)
                 .otherwise(0L)).as(cntAlias(c))): _*)
       } else {
         val oldC = contribRect(oldRect)
@@ -519,22 +507,8 @@ final class Matview private[graft] (
     // and group-tuple probe ride INSIDE the materializing job (r17,
     // fused stats — they each cost one more job over the checkpoint
     // before; spark.graft.mv.fusedCollect=false restores that shape).
-    val groupCap =
-      if (groupCols.size == 1) MvState.MaxInlineGroups
-      else MvState.MaxInlineGroupTuples
-    val fusedCollect = spark.conf
-      .getOption("spark.graft.mv.fusedCollect").forall(_.toBoolean)
     val (deltaCp, deltaRows, bucketsOpt, tuplesOpt) =
-      if (fusedCollect)
-        org.apache.spark.sql.graftbridge.RddBridge.localCheckpointWithStats(
-          delta, delta.schema.fieldIndex("_bucket"),
-          math.max(nBuckets, MvState.MaxRangeDirs + 1),
-          groupCols.map(delta.schema.fieldIndex), groupCap)
-      else {
-        val (cp, n) = org.apache.spark.sql.graftbridge.RddBridge
-          .localCheckpointWithCount(delta)
-        (cp, n, None, None)
-      }
+      cps.pinDelta(delta, nBuckets, groupCols)
     // ≤ nBuckets longs — the only data-dependent collect in a refresh
     val affected: Seq[Any] =
       if (deltaRows == 0L) Nil
@@ -685,8 +659,12 @@ final class Matview private[graft] (
   * under deletes; the rollup columns are a derived cache maintained in
   * the same bucket-scoped swap as every other state column.
   *
-  * Contract: the aux MUST be bucketed on the main view's group columns
-  * (the parent-key prefix) with the SAME bucket count — that makes the
+  * Contract: the aux is a view over the main view's logs (and join) at
+  * the same basis under the same WHERE, grouped by the main groups plus
+  * the argument, with derived columns taken from the main view's — so
+  * the main view's derived relations are the aux's too. It MUST be
+  * bucketed on the main view's group columns (the parent-key prefix)
+  * with the SAME bucket count — that makes the
   * aux's `_bucket` of a pair equal the main `_bucket` of its group, so
   * the incremental rollup scan partition-prunes to exactly the
   * refresh's affected buckets. [[graft.server.GraftMatviews]] creates
@@ -701,9 +679,9 @@ private[graft] final case class MvDistinct(
     /** refresh the aux pinned to exactly these watermarks
       * ([[Matview]]: length 1; [[JoinMatview]]: fact +: dims). The
       * second argument optionally shares the parent refresh's derived
-      * relations ([[MvSharedDelta]] on incremental refreshes,
-      * [[MvSharedBuild]] on first builds; single-table form only —
-      * star auxes ignore it). */
+      * relations: [[MvSharedDelta]] on a single-table incremental
+      * refresh, [[MvSharedBuild]] on a single-table rebuild,
+      * [[MvSharedStarBuild]] on a star rebuild. */
     refreshAuxTo: (Seq[Long], Option[MvShared]) => Unit) {
   def cntAlias: String = s"cntd_$arg"
   def sumAlias: String = s"sumd_$arg"
@@ -733,6 +711,70 @@ private[graft] final case class MvSharedDelta(
   * them saves one full log fold per DISTINCT argument (r17). */
 private[graft] final case class MvSharedBuild(
     last: Long, rect: DataFrame) extends MvShared
+
+/** The star form of [[MvSharedBuild]]: a [[JoinMatview]] rebuild's
+  * sieved fact ⋈ dims member relation (derived columns attached) at the
+  * per-log watermarks `lasts` (fact first, then one per dim), derived
+  * and checkpointed ONCE by the parent with its keep lists widened by
+  * every DISTINCT argument. An aux rebuilding at the same watermarks
+  * groups it by `groups :+ arg` instead of re-running the star join —
+  * sound because an aux joins the same logs at the same basis under the
+  * same WHERE, and its derived columns are the parent's (the
+  * [[MvDistinct]] contract). */
+private[graft] final case class MvSharedStarBuild(
+    lasts: Seq[Long], members: DataFrame) extends MvShared
+
+/** The local checkpoints one refresh, rebuild or tx takes, released
+  * together when it ends: a first build's table-sized checkpoint would
+  * otherwise hold executor storage until the context cleaner happens to
+  * notice it is unreachable. Only frames pinned HERE are released —
+  * relations adopted from a parent refresh belong to the parent's
+  * scope, which outlives the aux refresh it drives. */
+private[graft] final class Checkpoints {
+  import org.apache.spark.sql.graftbridge.RddBridge
+  private val held = scala.collection.mutable.Buffer.empty[DataFrame]
+
+  /** Local-checkpoint `df` in one job; held until [[releaseAll]]. */
+  def pin(df: DataFrame): DataFrame = {
+    val cp = RddBridge.localCheckpointWithCount(df)._1
+    held += cp; cp
+  }
+
+  /** Checkpoint a view delta (which carries `_bucket`) and, in the same
+    * job, collect its affected buckets and touched group tuples up to
+    * their caps — `None` past a cap, and always `None` with the r17
+    * fused stats gated off (`spark.graft.mv.fusedCollect=false`).
+    * Returns (checkpoint, rows, buckets, group tuples). */
+  def pinDelta(delta: DataFrame, nBuckets: Int, groupCols: Seq[String])
+      : (DataFrame, Long, Option[Seq[Any]],
+         Option[Seq[org.apache.spark.sql.Row]]) = {
+    val fused = delta.sparkSession.conf
+      .getOption("spark.graft.mv.fusedCollect").forall(_.toBoolean)
+    val out =
+      if (fused)
+        RddBridge.localCheckpointWithStats(
+          delta, delta.schema.fieldIndex("_bucket"),
+          math.max(nBuckets, MvState.MaxRangeDirs + 1),
+          groupCols.map(delta.schema.fieldIndex),
+          if (groupCols.size == 1) MvState.MaxInlineGroups
+          else MvState.MaxInlineGroupTuples)
+      else {
+        val (cp, n) = RddBridge.localCheckpointWithCount(delta)
+        (cp, n, None, None)
+      }
+    held += out._1; out
+  }
+
+  def releaseAll(): Unit = { held.foreach(RddBridge.release); held.clear() }
+}
+
+private[graft] object Checkpoints {
+  /** Run `body` with a fresh scope, releasing it however `body` ends. */
+  def scoped[T](body: Checkpoints => T): T = {
+    val cps = new Checkpoints
+    try body(cps) finally cps.releaseAll()
+  }
+}
 
 /** One percentile aggregate: MEDIAN / PERCENTILE_CONT (`approx =
   * false`, exact — Spark's `percentile`, the standard continuous
@@ -772,9 +814,8 @@ private[graft] object MvState {
     * parent-key prefix with the main view's bucket count (the
     * [[MvDistinct]] contract). */
   private def rollup(aux: DataFrame, groupCols: Seq[String],
-      d: MvDistinct, buckets: Option[Seq[Any]]): DataFrame = {
-    val scoped = buckets.fold(aux)(b =>
-      aux.filter(col("_bucket").isin(b: _*)))
+      d: MvDistinct, buckets: Seq[Any]): DataFrame = {
+    val scoped = aux.filter(col("_bucket").isin(buckets: _*))
     val aggs = count(lit(1)).as(d.cntAlias) +:
       (if (d.needSum) Seq(sum(col(d.arg)).as(d.sumAlias)) else Nil)
     scoped.filter(col("n") > 0 && col(d.arg).isNotNull)
@@ -782,23 +823,26 @@ private[graft] object MvState {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Attach rollup columns for ALL groups of `agg` — the full-build /
-    * rebuild paths, where every group is (re)computed anyway. COUNT of
-    * zero distinct values is 0, SUM is NULL (SQL semantics). */
-  def attachDistinctFull(agg: DataFrame, groupCols: Seq[String],
-      distincts: Seq[MvDistinct], spark: SparkSession): DataFrame =
-    distincts.foldLeft(agg) { (acc0, d) =>
-      val keep = acc0.columns.toSeq
-      val acc = acc0.as("b")
-      val roll = rollup(d.readAux(spark), groupCols, d, None).as("r")
-      val cond = groupCols.map(g =>
-        col(s"b.$g") <=> col(s"r.$g")).reduce(_ && _)
-      acc.join(roll, cond, "left").select(
-        keep.map(c => col(s"b.$c")) ++
-          (coalesce(col(s"r.${d.cntAlias}"), lit(0L)).as(d.cntAlias) +:
-            (if (d.needSum) Seq(col(s"r.${d.sumAlias}").as(d.sumAlias))
-             else Nil)): _*)
-    }
+  /** The rollup columns of ALL groups, aggregated straight from a
+    * COMPLETE member relation — the full-build / rebuild paths, which
+    * hold every member anyway: COUNT/SUM(DISTINCT arg) per group equal
+    * the aux pair state's rollup (pairs with n > 0 and a non-null
+    * argument) without reading that state back. COUNT of zero distinct
+    * values is 0, SUM is NULL (SQL semantics). */
+  def distinctAggs(distincts: Seq[MvDistinct]): Seq[Column] =
+    distincts.flatMap(d => count_distinct(col(d.arg)).as(d.cntAlias) +:
+      (if (d.needSum) Seq(sum_distinct(col(d.arg)).as(d.sumAlias))
+       else Nil))
+
+  /** Attach `bucket` as `_bucket` to a full aggregate whose rollup
+    * columns come last, keeping the state's column order (rollups
+    * after `_bucket`). */
+  def withBucket(agg: DataFrame, bucket: Column,
+                 distincts: Seq[MvDistinct]): DataFrame = {
+    val dd = distinctAliases(distincts)
+    agg.select(agg.columns.toSeq.filterNot(dd.contains).map(col) ++
+      (bucket.as("_bucket") +: dd.map(col)): _*)
+  }
 
   /** Overlay rollups for the TOUCHED groups onto the merged state slice
     * (which must already carry the rollup columns, ridden along from
@@ -813,7 +857,7 @@ private[graft] object MvState {
     distincts.foldLeft(merged) { (acc0, d) =>
       val keep = acc0.columns.toSeq
       val acc = acc0.as("b")
-      val roll = rollup(d.readAux(spark), groupCols, d, Some(affected))
+      val roll = rollup(d.readAux(spark), groupCols, d, affected)
       val rKey = groupCols.map(g =>
         col(s"tg.$g") <=> col(s"rr.$g")).reduce(_ && _)
       // every touched group gets a row, present in the rollup or not
@@ -1137,16 +1181,36 @@ private[graft] object MvState {
     * whole state. The sort is per-bucket-local (no extra shuffle
     * beyond the repartition every write already pays). */
   /** `width` = the number of bucket dirs this write will produce
-    * (affected buckets on a swap, nBuckets on a full build): explicit
-    * so the write job launches tasks ∝ its actual work — a
-    * conf-derived width costs dozens of empty sort+write tasks per
-    * refresh on a small view, measured at +15% on the sf1 storage
-    * family. */
+    * (affected buckets on a swap, nBuckets on a full build). The write
+    * runs in `min(width, spark.sql.shuffle.partitions)` tasks: never
+    * more than `width` — a conf-derived width costs dozens of empty
+    * sort+write tasks per refresh on a small view, measured at +15% on
+    * the sf1 storage family — and never more than the session's
+    * shuffle parallelism, because one task per
+    * bucket on a full build pays a task's fixed cost per bucket for a
+    * few rows each. The hash partitioning on `_bucket` puts every
+    * bucket in exactly one task, and the sort leads with `_bucket`, so
+    * each bucket dir still holds exactly one file. */
   def writeState(df: DataFrame, groupCols: Seq[String],
                  dest: Path, width: Int): Unit =
-    df.repartition(math.max(width, 1), col("_bucket"))
+    df.repartition(math.max(1, math.min(width,
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)),
+      col("_bucket"))
       .sortWithinPartitions(("_bucket" +: groupCols).map(col): _*)
       .write.mode("overwrite").partitionBy("_bucket").parquet(dest.toString)
+
+  /** The signed-union delta of both view kinds tags each member row
+    * with this column; a user column of the same name would be silently
+    * overwritten by the tag, so both view constructors refuse it — a
+    * CREATE over a table with such a column fails before any state is
+    * written. */
+  val SignCol = "_sign"
+
+  def requireUnreserved(cols: Seq[String]): Unit = {
+    val bad = cols.filter(_.equalsIgnoreCase(SignCol))
+    require(bad.isEmpty, s"column name '${bad.head}' is reserved for the " +
+      "view delta's sign tag — rename the column")
+  }
 
   /** Pin the session timezone the state was (re)built under. Catalyst
     * marks timezone-aware expressions (date_trunc over timestamps,

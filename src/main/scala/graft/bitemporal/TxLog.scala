@@ -422,35 +422,36 @@ final class TxLog(val dir: String) {
     // checkpoint the refold once (rows ∝ touched ids' rectangles —
     // tail-sized): it feeds BOTH the affected-partition collect and the
     // base write below, and re-deriving it would run the fold-from-
-    // state pipeline twice per compaction
-    val (refolded, _) = org.apache.spark.sql.graftbridge.RddBridge
-      .localCheckpointWithCount(
+    // state pipeline twice per compaction; released when it ends
+    Checkpoints.scoped { cps =>
+      val refolded = cps.pin(
         refoldTouched(spark, payloadCols, touched, tail,
             base.drop("_sys_date"))
           .withColumn("_sys_date", to_date(col("_system_from"))))
-    // the affected partition set is small by construction (the touched
-    // ids' history dates) — one driver-side collect of distinct dates
-    val affected: Seq[java.sql.Date] =
-      base.join(touched, Seq("_id"), "left_semi").select(col("_sys_date"))
-        .union(refolded.select(col("_sys_date")))
-        .distinct().collect().map(_.getDate(0)).toSeq
-    if (affected.isEmpty) { setBaseWatermark(last); return last } // tail touched nothing visible
-    val untouchedInAffected = base
-      .filter(col("_sys_date").isin(affected: _*))
-      .join(touched, Seq("_id"), "left_anti")
-    val tmp = Paths.get(dir, "base_tmp")
-    TxLog.deleteRecursively(tmp.toFile)
-    writeBase(untouchedInAffected.unionByName(refolded), tmp, clusterBy)
-    affected.foreach { d =>
-      val name = s"_sys_date=$d"
-      val dst = baseDir.resolve(name)
-      TxLog.deleteRecursively(dst.toFile) // a fully-erased partition just goes
-      val src = tmp.resolve(name)
-      if (Files.exists(src)) { Files.move(src, dst); () }
+      // the affected partition set is small by construction (the touched
+      // ids' history dates) — one driver-side collect of distinct dates
+      val affected: Seq[java.sql.Date] =
+        base.join(touched, Seq("_id"), "left_semi").select(col("_sys_date"))
+          .union(refolded.select(col("_sys_date")))
+          .distinct().collect().map(_.getDate(0)).toSeq
+      if (affected.isEmpty) { setBaseWatermark(last); return last } // tail touched nothing visible
+      val untouchedInAffected = base
+        .filter(col("_sys_date").isin(affected: _*))
+        .join(touched, Seq("_id"), "left_anti")
+      val tmp = Paths.get(dir, "base_tmp")
+      TxLog.deleteRecursively(tmp.toFile)
+      writeBase(untouchedInAffected.unionByName(refolded), tmp, clusterBy)
+      affected.foreach { d =>
+        val name = s"_sys_date=$d"
+        val dst = baseDir.resolve(name)
+        TxLog.deleteRecursively(dst.toFile) // a fully-erased partition just goes
+        val src = tmp.resolve(name)
+        if (Files.exists(src)) { Files.move(src, dst); () }
+      }
+      TxLog.deleteRecursively(tmp.toFile)
+      setBaseWatermark(last)
+      last
     }
-    TxLog.deleteRecursively(tmp.toFile)
-    setBaseWatermark(last)
-    last
   }
 
   // ---- persisted base watermark: which tx ids the base represents ----

@@ -1437,8 +1437,9 @@ object GraftMatviews {
           .foreach(d => fail(s"aggregate argument $d must be a payload " +
             "column of a joined table (or a row-local expression)"))
         val mvDir = matviewDir(factName, "join_matview", name)
-        // star-form auxes: same parent-prefix bucketing and
-        // driven-by-the-main-refresh contract as the single-table form
+        // star-form auxes: same parent-prefix bucketing,
+        // driven-by-the-main-refresh contract and rebuild sharing as the
+        // single-table form
         val auxes: Seq[graft.bitemporal.MvDistinct] =
           distincts.toSeq.map { d =>
             val a = fact.starMatviewAt(mvDir.resolve("_dist").resolve(d),
@@ -1446,7 +1447,7 @@ object GraftMatviews {
               auxDerived(d), bucketCols = effBucketKey, rangeLayout, leftJoins)
             graft.bitemporal.MvDistinct(d, distinctSums.contains(d),
               sess => a.readRaw(sess),
-              (ws, _) => { a.refreshUpTo(Some(ws)): Unit })
+              (ws, sh) => { a.refreshUpTo(Some(ws), sh): Unit })
           }
         val mv = fact.starMatview(name, dims, groups,
           sums.result().distinct, validAt, nb,

@@ -74,6 +74,49 @@ object RddBridge {
     * (each materialized query stage is its own job). */
   val probeActions = new java.util.concurrent.atomic.AtomicLong
 
+  /** Name every checkpoint RDD below carries, so [[release]] (and a
+    * spec reading `sc.getPersistentRDDs`) can tell graft's local
+    * checkpoints from other persisted RDDs. */
+  val CheckpointName = "graft.localCheckpoint"
+
+  /** The shared front half of every variant: count the probe, pin
+    * `df`'s rows as a named local checkpoint (materialized by the
+    * caller's one action). */
+  private def pinned(df: DataFrame)
+      : (classic.Dataset[org.apache.spark.sql.Row],
+         org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
+    probeActions.incrementAndGet()
+    val ds = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
+    val rdd = ds.queryExecution.toRdd.map(_.copy())
+    rdd.setName(CheckpointName)
+    rdd.localCheckpoint()
+    (ds, rdd)
+  }
+
+  private def frameOf(ds: classic.Dataset[org.apache.spark.sql.Row],
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow])
+      : DataFrame =
+    classic.Dataset.ofRows(ds.sparkSession, org.apache.spark.sql.execution
+      .LogicalRDD.fromDataset(rdd, ds, isStreaming = false))
+
+  /** Release a frame returned by one of the checkpoint variants (or any
+    * frame derived from one): unpersist every graft checkpoint RDD its
+    * plan reads, freeing the executor blocks now instead of whenever the
+    * context cleaner notices the RDD is unreachable. The frame must not
+    * be evaluated afterwards — its lineage ends at the released blocks.
+    * (Through the context, not `RDD.unpersist`, which logs a WARN per
+    * call that a local checkpoint cannot be recomputed — true, and the
+    * point of releasing it last.) */
+  def release(df: DataFrame): Unit = {
+    val ds = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
+    ds.queryExecution.logical.foreach {
+      case l: org.apache.spark.sql.execution.LogicalRDD
+          if l.rdd.name == CheckpointName =>
+        ds.sparkSession.sparkContext.unpersistRDD(l.rdd.id, blocking = false)
+      case _ => ()
+    }
+  }
+
   /** Local-checkpoint `df` and return (checkpointed frame, row count) in
     * ONE job. `Dataset.localCheckpoint(eager = true)` runs an internal
     * `rdd.count()` to materialize the checkpoint and THROWS THE COUNT
@@ -84,14 +127,9 @@ object RddBridge {
     * convergence probe rides along free, a bare RDD job with no second
     * Catalyst plan. */
   def localCheckpointWithCount(df: DataFrame): (DataFrame, Long) = {
-    probeActions.incrementAndGet()
-    val ds = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
+    val (ds, rdd) = pinned(df)
     val n = rdd.count()
-    val plan = org.apache.spark.sql.execution.LogicalRDD
-      .fromDataset(rdd, ds, isStreaming = false)
-    (classic.Dataset.ofRows(ds.sparkSession, plan), n)
+    (frameOf(ds, rdd), n)
   }
 
   /** [[localCheckpointWithCount]] for a TAGGED UNION: `df`'s first
@@ -109,16 +147,11 @@ object RddBridge {
     * must be non-nullable (use `!(a <=> b)`, not `a =!= b`). */
   def localCheckpointWithTrueCount(df: DataFrame, boolOrdinal: Int)
       : (DataFrame, Long) = {
-    probeActions.incrementAndGet()
-    val ds = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
+    val (ds, rdd) = pinned(df)
     // computing the filtered child materializes the parent's checkpoint
     // (every partition is fully iterated), same as a bare count
     val n = rdd.filter(_.getBoolean(boolOrdinal)).count()
-    val plan = org.apache.spark.sql.execution.LogicalRDD
-      .fromDataset(rdd, ds, isStreaming = false)
-    (classic.Dataset.ofRows(ds.sparkSession, plan), n)
+    (frameOf(ds, rdd), n)
   }
 
   /** [[localCheckpointWithCount]] that ALSO collects, inside the same
@@ -138,10 +171,7 @@ object RddBridge {
                                tupleOrdinals: Seq[Int], tupleCap: Int)
       : (DataFrame, Long, Option[Seq[Any]],
          Option[Seq[org.apache.spark.sql.Row]]) = {
-    probeActions.incrementAndGet()
-    val ds = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
+    val (ds, rdd) = pinned(df)
     val schema = ds.schema
     val keyType = schema(keyOrdinal).dataType
     val keyConv = org.apache.spark.sql.catalyst.CatalystTypeConverters
@@ -172,9 +202,7 @@ object RddBridge {
         else (a._2 ++ b._2).take(keyCap + 1),
         if (a._3.size > tupleCap) a._3
         else (a._3 ++ b._3).take(tupleCap + 1)))
-    val plan = org.apache.spark.sql.execution.LogicalRDD
-      .fromDataset(rdd, ds, isStreaming = false)
-    (classic.Dataset.ofRows(ds.sparkSession, plan), n,
+    (frameOf(ds, rdd), n,
       if (keys.size > keyCap) None else Some(keys.toSeq),
       if (tuples.size > tupleCap) None
       else Some(tuples.toSeq.map(
@@ -182,14 +210,9 @@ object RddBridge {
   }
 
   def localCheckpointWithTagCounts(df: DataFrame): (DataFrame, Map[Int, Long]) = {
-    probeActions.incrementAndGet()
-    val ds = df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
+    val (ds, rdd) = pinned(df)
     val counts: Map[Int, Long] =
       rdd.map(_.getInt(0)).countByValue().toMap
-    val plan = org.apache.spark.sql.execution.LogicalRDD
-      .fromDataset(rdd, ds, isStreaming = false)
-    (classic.Dataset.ofRows(ds.sparkSession, plan), counts)
+    (frameOf(ds, rdd), counts)
   }
 }
