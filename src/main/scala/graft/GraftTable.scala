@@ -53,12 +53,7 @@ final class GraftTable(spark: SparkSession, dir: String,
     * Two reads at the same generation see the same rectangle relation —
     * schema included — so [[graft.server.GraftMvNav]]'s memoized
     * schema backstop keys on (statement, name, location, generation). */
-  private[graft] def logGeneration: Long = {
-    def fid(p: java.nio.file.Path): Long = p.getFileName.toString
-      .stripPrefix("tx_").stripSuffix(".parquet").toLong
-    (log.txFiles().map(fid) ++ log.truncatedUpTo())
-      .maxOption.getOrElse(-1L)
-  }
+  private[graft] def logGeneration: Long = log.lastTx()
 
   /** The table's storage root — a stable identity for memo keys (two
     * same-named registrations of different tables must never share a

@@ -1,7 +1,6 @@
 package graft.bitemporal
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -59,9 +58,12 @@ import org.apache.spark.sql.functions._
   * Exact-typed sum columns (integral/DECIMAL) give bit parity with a
   * from-scratch recompute, as with [[Matview]].
   *
-  * Truncation of ANY log permanently switches refresh to the exact
-  * rebuild-from-state path (incremental deltas need full op history
+  * Truncation of ANY log permanently switches refresh to an exact
+  * full rebuild from the logs (incremental deltas need full op history
   * for touched ids), mirroring [[Matview]]'s retention tradeoff.
+  *
+  * This class derives a refresh's member relations across the star;
+  * the aggregate, the delta merge and the state store are [[MvCore]]'s.
   */
 final class JoinMatview private[graft] (
     spark: SparkSession,
@@ -103,7 +105,7 @@ final class JoinMatview private[graft] (
   private def fkOf(i: Int) = dims(i)._3
   private def dimId(i: Int) = s"_dim_id_$i"
   private val nDims = dims.size
-  private val allDimCols = dims.flatMap(_._2)
+  private val logs: Seq[TxLog] = factLog +: dims.map(_._1)
 
   dims.foreach { case (_, _, fk) =>
     require(factCols.contains(fk),
@@ -116,39 +118,16 @@ final class JoinMatview private[graft] (
   // join edges, and an untouched row's derived value is identical on
   // both sides of the delta
   private val derivedNames = derived.map(_._1)
-  private val aggable = factCols ++ allDimCols ++ derivedNames
+  // COUNT(col), sketches and percentiles read the JOINED relation, so
+  // their column may live on any side (payload names are disjoint)
+  private val aggable = factCols ++ dims.flatMap(_._2) ++ derivedNames
   require(sumCols.forall(c => factCols.contains(c) || derivedNames.contains(c)),
     s"sum columns $sumCols must be fact payload or derived columns")
   require((minCols ++ maxCols).forall(c =>
       factCols.contains(c) || derivedNames.contains(c)),
     s"min/max columns ${minCols ++ maxCols} must be fact payload or derived columns")
-  // COUNT(col) counts the JOINED relation's non-null cells, so the
-  // column may live on any side (payload names are disjoint)
-  require(cntCols.forall(aggable.contains),
-    s"count columns $cntCols must be payload or derived columns")
-  require(hllCols.forall(aggable.contains),
-    s"approx-distinct columns $hllCols must be payload or derived columns")
-  require(pcts.forall(p => aggable.contains(p.arg)),
-    s"percentile columns ${pcts.map(_.arg)} must be payload or derived columns")
-  pcts.foreach(p => require(p.p >= 0.0 && p.p <= 1.0,
-    s"percentile fraction ${p.p} must be in [0, 1]"))
-  require(groupCols.nonEmpty, "at least one group column")
   groupCols.foreach(g => require(aggable.contains(g),
     s"group column $g must be a payload or derived column of some table"))
-  // aux pair views bucket on the PARENT view's group prefix — see
-  // [[MvDistinct]]'s contract and [[Matview]]'s matching guard
-  private val bucketKeyCols =
-    if (bucketCols.isEmpty) groupCols else bucketCols
-  require(bucketKeyCols.forall(groupCols.contains),
-    s"bucket key $bucketKeyCols must be a subset of group columns $groupCols")
-  // range layout partitions by groupCols.head's VALUE while the _schema
-  // sidecar stamps GroupsKey from bucketKeyCols — they must agree or
-  // MvBucketPrune.pruneRange would translate predicates on the wrong
-  // column (see Matview's matching guard)
-  require(!rangeLayout || bucketKeyCols.head == groupCols.head,
-    s"layout = 'range' requires the bucket key to lead with the " +
-      s"leading group column (got ${bucketKeyCols.headOption} vs " +
-      s"${groupCols.head})")
   locally {
     val sides = factCols +: dims.map(_._2)
     sides.indices.foreach { i =>
@@ -159,25 +138,24 @@ final class JoinMatview private[graft] (
       }
     }
   }
-  require(nBuckets > 0, "nBuckets must be positive")
-  MvState.requireUnreserved(aggable)
 
-  private val dataDir = stateRoot.resolve("state")
-  private val wmFile = stateRoot.resolve("_watermark")
-  private val sysProbe = Timestamp.valueOf("9998-01-01 00:00:00")
+  // the fingerprint covers the spokes (dim-arity changes over the same
+  // state) and, only when some spoke is LEFT, the join types
+  private val core = new MvCore(spark, stateRoot, aggable, groupCols,
+    sumCols, minCols, maxCols, cntCols, hllCols, pcts, distincts,
+    bucketCols, nBuckets, rangeLayout, whereSql, derived, validAt,
+    fpPayload = factCols,
+    fpSpokes = dims.map(d => d._3 + ":" + d._2.mkString(",")),
+    fpJoinExtra =
+      if (leftOf.exists(identity))
+        Seq("left:" + leftOf.map(b => if (b) "1" else "0").mkString)
+      else Nil)
 
   /** Tx watermarks folded into the state, fact first then one per dim;
     * all -1 fresh. Short files (state written by an older build, or a
     * view regrown with more dims) pad with -1 — the affected dims then
     * rebuild their contribution on the next refresh. */
-  def watermarksAll: Seq[Long] = {
-    val stored =
-      if (Files.exists(wmFile))
-        new String(Files.readAllBytes(wmFile), UTF_8).trim
-          .split(" ").toSeq.filter(_.nonEmpty).map(_.toLong)
-      else Nil
-    stored.padTo(1 + nDims, -1L).take(1 + nDims)
-  }
+  def watermarksAll: Seq[Long] = core.watermarks(1 + nDims)
 
   /** (fact, first dim) watermarks — the 2-ary view's historical API. */
   def watermarks: (Long, Long) = {
@@ -186,50 +164,8 @@ final class JoinMatview private[graft] (
   }
 
   /** Is the state CURRENT across EVERY log — would a refresh be a
-    * no-op? True when no tx (or truncation point) exists past the
-    * recorded watermark on the fact log or any dim log. One directory
-    * listing per log, no data read — the aggregate-navigation
-    * freshness gate ([[graft.server.GraftMvNav]]). */
-  def isFresh: Boolean = {
-    val ws = watermarksAll
-    lastOf(factLog) <= ws.head &&
-      dims.zip(ws.tail).forall { case ((log, _, _), w) => lastOf(log) <= w }
-  }
-
-  private def setWatermarks(ws: Seq[Long]): Unit = {
-    Files.createDirectories(stateRoot)
-    val tmp = stateRoot.resolve("_watermark.tmp")
-    Files.write(tmp, ws.mkString(" ").getBytes(UTF_8))
-    Files.move(tmp, wmFile,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-  }
-
-  private def sumAlias(c: String) = s"sum_$c"
-  private def minAlias(c: String) = s"min_$c"
-  private def maxAlias(c: String) = s"max_$c"
-  private def cntAlias(c: String) = s"cnt_$c"
-  private def hllAlias(c: String) = s"hll_$c"
-  // APPROX_COUNT_DISTINCT sketches ride the MIN/MAX lifecycle —
-  // recomputed for touched groups across the join at every refresh,
-  // never merged incrementally — see [[Matview]]'s note: that makes
-  // deletes/updates and dim group-moves exact for the sketch.
-  // MEDIAN/PERCENTILE/APPROX_PERCENTILE ride the same touched-group
-  // recompute as the sketches — percentiles cannot subtract, and a dim
-  // group-move re-groups members with zero fact ops, so the crossed
-  // re-read is the only exact option (see [[MvPct]]).
-  private def mmAliases: Seq[String] =
-    minCols.map(minAlias) ++ maxCols.map(maxAlias) ++ hllCols.map(hllAlias) ++
-      pcts.map(_.alias)
-  private def mmAggs =
-    minCols.map(c => min(col(c)).as(minAlias(c))) ++
-      maxCols.map(c => max(col(c)).as(maxAlias(c))) ++
-      hllCols.map(c => hll_sketch_agg(col(c)).as(hllAlias(c))) ++
-      pcts.map(p => p.agg.as(p.alias))
-  // per-column NON-NULL counters over the JOINED relation — they delta
-  // exactly like n does (a null cell never contributes), so they ride
-  // the same self-maintainable path; AVG = sum/cnt at read time
-  private def cntAggs =
-    cntCols.map(c => count(col(c)).as(cntAlias(c)))
+    * no-op? See [[MvCore.isFresh]]. */
+  def isFresh: Boolean = core.isFresh(logs)
 
   /** Columns the WHERE and the derived expressions reference
     * (unresolved parse — resolution and the deterministic/row-local
@@ -245,85 +181,15 @@ final class JoinMatview private[graft] (
     whereSql.map(refsOf).getOrElse(Set.empty) ++
       derived.flatMap(d => refsOf(d._2))
 
-  /** The maintained relation is the FILTERED join when the view
-    * declares a WHERE. A row-local deterministic predicate commutes
-    * with the Δ(A⋈B) rules because "touched" already propagates across
-    * the join edges: a fact row whose predicate INPUT can have changed
-    * is either own-id-touched (fact columns) or references a touched
-    * dim (dim columns) — both re-derive old and new contributions with
-    * the predicate applied, and an untouched row's predicate value is
-    * identical on both sides of the delta. */
-  private def prep(joined: DataFrame): DataFrame =
-    MvState.prep(joined, whereSql, derived)
-
-  // timezone-aware expressions make incremental refresh
-  // session-timezone-sensitive — see MvState.pinTimeZone. A
-  // TIMESTAMP-typed group column is sensitive through the bucket hash
-  // itself (the key casts to string under the session zone).
-  private def tzSensitive(schema: org.apache.spark.sql.types.StructType)
-      : Boolean =
-    whereSql.nonEmpty || derived.nonEmpty ||
-      groupCols.exists(g => schema.find(_.name == g).exists(
-        _.dataType.typeName.startsWith("timestamp")))
-
-  /** Stable fingerprint of the view DEFINITION, dims included — see
-    * MvState.pinDef (covers dim-arity changes over the same state). */
-  private val defFp: String = {
-    // distinct/bucket-key parts append only when non-default — see
-    // [[Matview]]'s fingerprint note (pre-existing plain views keep
-    // their state across the upgrade)
-    val extras =
-      (if (distincts.nonEmpty)
-        Seq("dist:" + distincts.map(d =>
-          d.arg + (if (d.needSum) "+s" else "")).mkString(","))
-      else Nil) ++
-      (if (bucketKeyCols != groupCols)
-        Seq("bkey:" + bucketKeyCols.mkString(",")) else Nil) ++
-      (if (hllCols.nonEmpty) Seq("hll:" + hllCols.mkString(",")) else Nil) ++
-      (if (rangeLayout) Seq("layout:range") else Nil) ++
-      (if (leftOf.exists(identity))
-        Seq("left:" + leftOf.map(b => if (b) "1" else "0").mkString)
-      else Nil) ++
-      (if (pcts.nonEmpty) Seq("pct:" + pcts.map(_.fpPart).mkString(","))
-       else Nil)
-    val parts = Seq(factCols, groupCols, sumCols, minCols, maxCols,
-      cntCols, Seq(whereSql.getOrElse("")),
-      derived.map(d => d._1 + "=" + d._2),
-      dims.map(d => d._3 + ":" + d._2.mkString(",")),
-      Seq(validAt.toString, nBuckets.toString)) ++
-      (if (extras.nonEmpty) Seq(extras) else Nil)
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(parts.map(_.mkString("\u0001")).mkString("\u0002")
-        .getBytes(UTF_8)).map(b => f"$b%02x").mkString
-  }
-
-  private def bucketCol =
-    if (rangeLayout) MvState.rangeBucketCol(groupCols.head)
-    else MvState.bucketCol(bucketKeyCols, nBuckets)
-  private def ddAliases: Seq[String] = MvState.distinctAliases(distincts)
-
-  /** `layout = range` guards — shared with [[Matview]] via MvState. */
-  private def checkRangeKey(schema: org.apache.spark.sql.types.StructType)
-      : Unit =
-    if (rangeLayout) MvState.checkRangeKey(schema, groupCols.head)
-
-  /** Pin every DISTINCT aux to exactly the per-log watermarks this
-    * refresh will record — see [[Matview.syncAuxes]]. A rebuild hands
-    * its checkpointed member relation down (`shared`, an
-    * [[MvSharedStarBuild]]) so a rebuilding aux groups it instead of
-    * re-running the star join; an incremental refresh shares nothing,
-    * and each aux derives its own delta. */
-  private def syncAuxes(lasts: Seq[Long],
-                        shared: Option[MvShared] = None): Unit =
-    distincts.foreach(_.refreshAuxTo(lasts, shared))
-
   private def readTx(files: Seq[Path]): DataFrame =
     TxLog.readMerged(spark, files.map(_.toString))
 
-  private def lastOf(log: TxLog): Long =
-    (log.txFiles().map(_.getFileName.toString
-      .stripPrefix("tx_").stripSuffix(".parquet").toLong) ++
-      log.truncatedUpTo()).maxOption.getOrElse(-1L)
+  /** Test hook: snapshot a relation's physical plan when
+    * [[JoinMatview.capturePlans]] is on. */
+  private def capture(df: DataFrame): Unit =
+    if (JoinMatview.capturePlans) JoinMatview.capturedPlans.synchronized {
+      JoinMatview.capturedPlans += df.queryExecution.executedPlan.toString: Unit
+    }
 
   /** Visible rows of one side at the basis, projected to the columns
     * the join needs (side-tagged id, so the join has no name clash). */
@@ -336,11 +202,9 @@ final class JoinMatview private[graft] (
   // wholly in the next refresh, or it would fold into state now AND
   // again later (the double-count race — found by review)
   private def visibleFact(upToTx: Long): DataFrame =
-    Bitemporal.asOf(factLog.readAllAuto(spark, factCols, upToTx),
-      lit(validAt), lit(sysProbe))
+    core.visible(factLog.readAllAuto(spark, factCols, upToTx))
   private def visibleDim(i: Int, upToTx: Long): DataFrame =
-    Bitemporal.asOf(dimLogOf(i).readAllAuto(spark, dimColsOf(i), upToTx),
-      lit(validAt), lit(sysProbe))
+    core.visible(dimLogOf(i).readAllAuto(spark, dimColsOf(i), upToTx))
 
   private def factKeep: Seq[String] =
     (dims.map(_._3) ++
@@ -361,9 +225,8 @@ final class JoinMatview private[graft] (
     * aggregates need plus the `extra` columns it carries (a rebuild
     * widens it by the DISTINCT auxes' arguments, so the auxes can group
     * the same relation). */
-  private def members(lasts: Seq[Long], extra: Seq[String] = Nil)
-      : DataFrame =
-    prep(joinAll(
+  private def members(lasts: Seq[Long], extra: Seq[String]): DataFrame =
+    core.prep(joinAll(
       project(visibleFact(lasts.head), "_fact_id",
         (factKeep ++ extra.filter(factCols.contains)).distinct),
       dims.indices.map(i =>
@@ -378,67 +241,6 @@ final class JoinMatview private[graft] (
         if (leftOf(i)) "left" else "inner")
     }
 
-  /** Per-group COUNT/SUM/COUNT(col) over a member relation — `withMm`
-    * adds MIN/MAX aggregates, valid only over a COMPLETE member
-    * relation (full build, touched-group re-read), never over a delta:
-    * extremes don't subtract. */
-  private def aggOf(members: DataFrame, withMm: Boolean = false,
-                    more: Seq[Column] = Nil): DataFrame =
-    members.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("n"),
-        sumCols.map(c => sum(col(c)).as(sumAlias(c))) ++ cntAggs ++
-          (if (withMm) mmAggs else Nil) ++ more: _*)
-
-  /** The star join sieved by the declared WHERE, then [[aggOf]]. */
-  private def joinAgg(fact: DataFrame, dimDfs: Seq[DataFrame]): DataFrame =
-    aggOf(prep(joinAll(fact, dimDfs)))
-
-  /** Exact full recompute → state (first build, or after truncation of
-    * any log). Same temp-write + swap as [[Matview]].
-    *
-    * With DISTINCT auxes the member relation is derived ONCE, widened
-    * by every aux's argument and checkpointed: each aux rebuilding at
-    * the same watermarks groups it by `groups :+ arg`, and this view
-    * aggregates the same checkpoint — one star join per rebuild, not
-    * one per aux plus one. An aux adopts the relation only at equal
-    * watermarks (any drift derives its own, as before). */
-  private def rebuild(lasts: Seq[Long], sharedIn: Option[MvShared],
-                      cps: Checkpoints): (Long, Long) = {
-    val mem = sharedIn match {
-      case Some(sb: MvSharedStarBuild) if sb.lasts == lasts => sb.members
-      case _ =>
-        val m = members(lasts, distincts.map(_.arg))
-        if (JoinMatview.capturePlans) JoinMatview.capturedPlans.synchronized {
-          JoinMatview.capturedPlans +=
-            m.queryExecution.executedPlan.toString: Unit
-        }
-        if (distincts.isEmpty) m else cps.pin(m)
-    }
-    syncAuxes(lasts, Some(MvSharedStarBuild(lasts, mem)))
-    val agg = MvState.withBucket(
-      aggOf(mem, withMm = true, MvState.distinctAggs(distincts)), bucketCol,
-      distincts)
-    checkRangeKey(agg.schema)
-    if (rangeLayout) MvState.checkRangeBuild(agg,
-      MvState.rangeLeadKind(agg.schema, groupCols.head), "build")
-    val tmp = stateRoot.resolve("state_rebuild_tmp")
-    TxLog.deleteRecursively(tmp.toFile)
-    // schema sidecar: a join that matches nothing writes a file-less
-    // parquet dir — without the pinned schema every later read throws
-    MvState.writeSchema(stateRoot, agg, bucketKeyCols, nBuckets,
-      rangeLayout)
-    MvState.writeState(agg, groupCols, tmp, nBuckets)
-    val old = stateRoot.resolve("state_rebuild_old")
-    TxLog.deleteRecursively(old.toFile)
-    if (Files.exists(dataDir)) { Files.move(dataDir, old): Unit }
-    Files.move(tmp, dataDir): Unit
-    TxLog.deleteRecursively(old.toFile)
-    if (tzSensitive(agg.schema)) MvState.pinTimeZone(spark, stateRoot)
-    MvState.pinDef(stateRoot, defFp)
-    setWatermarks(lasts)
-    (lasts.head, lasts.tail.max)
-  }
-
   /** Fold every log's tail into the state; returns (fact watermark,
     * max dim watermark). */
   def refresh(): (Long, Long) = refreshUpTo(None)
@@ -452,8 +254,7 @@ final class JoinMatview private[graft] (
   private[graft] def refreshUpTo(pins: Option[Seq[Long]],
       sharedIn: Option[MvShared] = None): (Long, Long) =
     MaintainerLease.withLease(
-      java.nio.file.Paths.get(factLog.dir) +:
-        dims.map(d => java.nio.file.Paths.get(d._1.dir)),
+      logs.map(l => java.nio.file.Paths.get(l.dir)),
       "join-matview-refresh") {
       Checkpoints.scoped(refreshHeld(pins, sharedIn, _))
     }
@@ -462,21 +263,9 @@ final class JoinMatview private[graft] (
     * takes goes into `cps` and is released when it returns. */
   private def refreshHeld(pins: Option[Seq[Long]],
       sharedIn: Option[MvShared], cps: Checkpoints): (Long, Long) = {
-    // a DEFINITION change over the same state dir (JVM restart +
-    // re-CREATE, a Scala-API re-instantiation, or a different dim
-    // arity) invalidates the state: discard it and fall through to the
-    // rebuild/first-build path
-    if (!MvState.defMatches(stateRoot, defFp)) {
-      TxLog.deleteRecursively(dataDir.toFile)
-      Files.deleteIfExists(wmFile): Unit
-      // sidecars go WITH the data (see Matview.refresh): a surviving
-      // '_schema' would serve the OLD definition's columns until the
-      // rebuild lands — or forever, if it fails or a log is empty
-      Files.deleteIfExists(stateRoot.resolve("_schema")): Unit
-      Files.deleteIfExists(stateRoot.resolve("_tz")): Unit
-    }
+    core.dropIfRedefined()
     val ws = watermarksAll
-    val lastsAll = lastOf(factLog) +: dims.map(d => lastOf(d._1))
+    val lastsAll = logs.map(_.lastTx())
     // every relation below is already parameterized by `lasts` (the
     // visibles' upToTx, the touched sets, the old-history filters and
     // the rebuild) — pinning is just a cap on what this refresh records
@@ -492,22 +281,23 @@ final class JoinMatview private[graft] (
     // relation cannot be constructed (the DDL's empty-table check
     // surfaces this loudly at CREATE).
     if (lasts.exists(_ < 0)) return ret(ws)
-    // ws.exists(_ < 0) also covers a state REGROWN with more dims (its
-    // padded -1 watermark has no incremental history to fold from)
-    if (factLog.truncatedUpTo().isDefined ||
-      dims.exists(_._1.truncatedUpTo().isDefined) ||
-      ws.exists(_ < 0) || !Files.exists(dataDir))
-      return rebuild(lasts, sharedIn, cps)
+    // a rebuild derives the member relation ONCE (widened by every
+    // DISTINCT argument), so each aux groups it instead of re-running
+    // the star join — one star join per rebuild, not one per aux plus
+    // one
+    if (core.needsRebuild(logs, ws)) {
+      core.rebuild(lasts, sharedIn, cps) {
+        val m = members(lasts, distincts.map(_.arg))
+        capture(m); m
+      }
+      return ret(lasts)
+    }
 
-    if (MvState.storedSchema(stateRoot).exists(tzSensitive))
-      MvState.checkTimeZone(spark, stateRoot)
     // touched ids per side (tail-sized), bounded to the recorded
     // watermarks — same snapshot discipline as the visibles
-    def idOf(p: java.nio.file.Path): Long = p.getFileName.toString
-      .stripPrefix("tx_").stripSuffix(".parquet").toLong
     def touchedOf(log: TxLog, w: Long, last: Long): DataFrame =
       if (last > w)
-        readTx(log.txFilesAfter(w).filter(idOf(_) <= last))
+        readTx(log.txFilesAfter(w).filter(TxLog.txIdOf(_) <= last))
           .select(col("_id").cast("long").as("_t_id")).distinct()
       else spark.range(0).select(col("id").as("_t_id"))
     val ta = touchedOf(factLog, ws.head, lasts.head)
@@ -518,35 +308,26 @@ final class JoinMatview private[graft] (
     // up to the watermark (the same point-read shape Matview uses)
     def oldTouched(log: TxLog, cols: Seq[String], touched: DataFrame,
                    w: Long): DataFrame = {
-      val all = readTx(log.txFiles().filter(idOf(_) <= w))
+      val all = readTx(log.txFiles().filter(TxLog.txIdOf(_) <= w))
       val hist = all.join(touched,
         all("_id").cast("long") === touched("_t_id"), "left_semi")
-      Bitemporal.asOf(Bitemporal.fold(hist.filter(col("_tx_id") <= w), cols),
-        lit(validAt), lit(sysProbe))
+      core.visible(Bitemporal.fold(hist.filter(col("_tx_id") <= w), cols))
     }
     def semiOn(df: DataFrame, key: Column, ids: DataFrame): DataFrame =
       df.join(ids, key === ids("_t_id"), "left_semi")
     def antiOn(df: DataFrame, key: Column, ids: DataFrame): DataFrame =
       df.join(ids, key === ids("_t_id"), "left_anti")
 
-    // A/B gate for the subtree-reuse checkpoints below (measurement:
-    // reuse trades duplicated subtree work for serialized jobs — the
-    // win must be measured, not assumed). Default on.
-    val reuseShared = spark.conf
-      .getOption("spark.graft.mv.reuseShared").forall(_.toBoolean)
     val vaNew = project(visibleFact(lasts.head), "_fact_id", factKeep)
     // each dim's visible relation feeds the new-side join, the old-side
     // union AND (for min/max views) the member re-join — up to three
     // executions of the dim log's full fold per refresh (no cross-
     // branch CSE). Dims are the small side by construction (the same
     // assumption that broadcasts them into the join), so materialize
-    // each ONCE (r16, guide §2.3): one fold job per dim, every
-    // consumer reads the checkpoint; AQE's runtime stats still pick the
-    // broadcast side.
-    val vbNews = dims.indices.map { i =>
-      val v = project(visibleDim(i, lasts(i + 1)), dimId(i), dimKeep(i))
-      if (reuseShared) cps.pin(v) else v
-    }
+    // each ONCE: one fold job per dim, every consumer reads the
+    // checkpoint; AQE's runtime stats still pick the broadcast side.
+    val vbNews = dims.indices.map(i => cps.pin(
+      project(visibleDim(i, lasts(i + 1)), dimId(i), dimKeep(i))))
     val vaOldT = project(oldTouched(factLog, factCols, ta, ws.head),
       "_fact_id", factKeep)
     // dim OLD relations: untouched dims unchanged; touched re-folded
@@ -577,228 +358,44 @@ final class JoinMatview private[graft] (
     def dimTouchedAny(df: DataFrame): DataFrame = {
       val inlineConds = dims.indices.flatMap { i =>
         tbIdss(i) match {
-          case Some(Seq()) => None
-          case Some(ids) =>
+          case Some(ids) if ids.nonEmpty =>
             Some(col(fkOf(i)).cast("long").isin(ids: _*))
-          case None => None
+          case _ => None
         }
       }
-      val bigDims = dims.indices.filter(i => tbIdss(i).isEmpty)
       val inlinePart =
         if (inlineConds.isEmpty) None
         else Some(df.filter(inlineConds.reduce(_ || _)))
-      val semiParts = bigDims.map(i =>
+      val semiParts = dims.indices.filter(i => tbIdss(i).isEmpty).map(i =>
         semiOn(df, col(fkOf(i)).cast("long"), tbs(i)))
       val parts = inlinePart.toSeq ++ semiParts
       if (parts.isEmpty) df.limit(0)
       else if (parts.size == 1) parts.head
       else parts.reduce(_ unionByName _).dropDuplicates("_fact_id")
     }
-    val antiOwn = antiOn(vaNew, col("_fact_id"), ta)
-    // dim-affected facts feed BOTH delta legs (they are affNew's second
-    // branch and affOld's second branch). Catalyst has no cross-branch
-    // CSE, so the pre-r16 plan executed the whole subtree — a full
-    // visible-fact derivation plus the touched-dim restriction — TWICE
-    // inside the delta job. Checkpoint it once (rows ∝ facts referencing
-    // touched dims — the refresh's own IVM cost contract, same size
-    // class as the delta checkpoint); skip the job entirely when no dim
-    // has tail ops (the fact-only refresh, where the subtree is empty
-    // by construction).
+    // dim-affected facts feed BOTH delta legs, and Catalyst has no
+    // cross-branch CSE: checkpoint them once (rows ∝ facts referencing
+    // touched dims — the refresh's own IVM cost contract); skip the job
+    // when no dim has tail ops (the subtree is empty by construction).
+    // The touched-dim fact restriction executes in THIS job, so the
+    // pushdown spec snapshots its plan here.
     val noDimTail = dims.indices.forall(i => lasts(i + 1) <= ws(i + 1))
     val dimAff =
       if (noDimTail) vaNew.limit(0)
-      else if (!reuseShared) dimTouchedAny(antiOwn)
       else {
-        val da = dimTouchedAny(antiOwn)
-        // the touched-dim fact restriction now executes in THIS job, so
-        // the pushdown spec snapshots its plan here (the delta plan
-        // below only sees the checkpointed RDD)
-        if (JoinMatview.capturePlans) JoinMatview.capturedPlans.synchronized {
-          JoinMatview.capturedPlans +=
-            da.queryExecution.executedPlan.toString: Unit
-        }
+        val da = dimTouchedAny(antiOn(vaNew, col("_fact_id"), ta))
+        capture(da)
         cps.pin(da)
       }
     val affNew = semiOn(vaNew, col("_fact_id"), ta).unionByName(dimAff)
     val affOld = vaOldT // own id touched: every old version is affected
       .unionByName(dimAff)
-
-    // Delta per group as ONE aggregation over the SIGNED union of both
-    // legs' joined member relations (r17, guide §2.4 "share one
-    // exchange") — the pre-r17 shape aggregated new and old separately
-    // and full-outer-joined them: two exchanges plus a join where one
-    // exchange suffices. The two star joins themselves remain (their
-    // inputs differ); only the aggregate+merge fuses. Numerically
-    // identical for exact (integral/DECIMAL) sum types: SUM(new) −
-    // SUM(old) = SUM(±x) term for term. A/B gate:
-    // spark.graft.mv.unionDelta=false restores the join shape.
-    val unionDelta = spark.conf
-      .getOption("spark.graft.mv.unionDelta").forall(_.toBoolean)
-    val delta0 =
-      if (unionDelta) {
-        val sg = col(MvState.SignCol)
-        def side(fact: DataFrame, dimDfs: Seq[DataFrame], sign: Int) =
-          prep(joinAll(fact, dimDfs))
-            .withColumn(MvState.SignCol, lit(sign.toLong))
-        side(affNew, vbNews, 1).unionByName(side(affOld, vbOlds, -1))
-          .groupBy(groupCols.map(col): _*)
-          .agg(sum(sg).as("n"),
-            sumCols.map(c => sum(when(sg === 1L, col(c))
-              .otherwise(-col(c))).as(sumAlias(c))) ++
-              cntCols.map(c => sum(when(col(c).isNotNull, sg)
-                .otherwise(0L)).as(cntAlias(c))): _*)
-      } else {
-        val newC = joinAgg(affNew, vbNews)
-        val oldC = joinAgg(affOld, vbOlds)
-        val o = oldC.as("o"); val nw = newC.as("n")
-        val dKey = groupCols.map(g =>
-          col(s"n.$g") <=> col(s"o.$g")).reduce(_ && _)
-        nw.join(o, dKey, "full_outer")
-          .select(
-            (groupCols.map(g =>
-              coalesce(col(s"n.$g"), col(s"o.$g")).as(g)) :+
-              (coalesce(col("n.n"), lit(0L)) - coalesce(col("o.n"), lit(0L)))
-                .as("n")) ++
-              sumCols.map { c =>
-                val a = sumAlias(c)
-                (coalesce(col(s"n.$a"), lit(0)) - coalesce(col(s"o.$a"), lit(0)))
-                  .as(a)
-              } ++ cntCols.map { c =>
-                val a = cntAlias(c)
-                (coalesce(col(s"n.$a"), lit(0L)) - coalesce(col(s"o.$a"), lit(0L)))
-                  .as(a)
-              }: _*)
-      }
-    // the state's sum types are pinned to the plain aggregate's types:
-    // uncapped, each merge's +/- widens decimal precision by one until
-    // the parquet byte width no longer matches older bucket files
-    // (FIXED_LEN_BYTE_ARRAY grows at p=23 and p=26) and reads fail
-    val sumT: Map[String, org.apache.spark.sql.types.DataType] =
-      sumCols.map(c => sumAlias(c) ->
-        joinAgg(affNew, vbNews).schema(sumAlias(c)).dataType).toMap
-    val delta = delta0.select(
-      (groupCols.map(col) :+ col("n")) ++
-        (sumCols.map(c => col(sumAlias(c)).cast(sumT(sumAlias(c)))
-          .as(sumAlias(c))) ++
-          cntCols.map(c => col(cntAlias(c)))): _*)
-      .withColumn("_bucket", bucketCol)
-    // the delta feeds the affected-bucket collect, the state merge AND
-    // (for min/max views) the touched-group set — checkpoint it once
-    // (rows ∝ touched groups) so the Δ(A⋈B) pipeline upstream runs one
-    // time, not once per consumer. Bucket set + group-tuple probe ride
-    // INSIDE the materializing job (r17 fused stats — see [[Matview]]).
-    if (JoinMatview.capturePlans) JoinMatview.capturedPlans.synchronized {
-      JoinMatview.capturedPlans +=
-        delta.queryExecution.executedPlan.toString: Unit
-    }
-    val (deltaCp, deltaRows, bucketsOpt, tuplesOpt) =
-      cps.pinDelta(delta, nBuckets, groupCols)
-    val affected: Seq[Any] =
-      if (deltaRows == 0L) Nil
-      else bucketsOpt.getOrElse(
-        deltaCp.select(col("_bucket")).distinct()
-          .collect().map(_.get(0)).toSeq)
-    if (affected.isEmpty) {
-      MvState.pinDef(stateRoot, defFp)
-      setWatermarks(lasts); return ret(lasts)
-    }
-    if (rangeLayout)
-      MvState.checkRangeRefresh(affected,
-        MvState.rangeLeadKind(deltaCp.schema, groupCols.head))
-
-    val state = MvState.readState(spark, stateRoot, dataDir)
-      .filter(col("_bucket").isin(affected: _*))
-    val s = state.as("s"); val d = deltaCp.as("d")
-    val mKey = groupCols.map(g =>
-      col(s"s.$g") <=> col(s"d.$g")).reduce(_ && _)
-    val countSum = s.join(d, mKey, "full_outer")
-      .select(
-        groupCols.map(g =>
-          coalesce(col(s"s.$g"), col(s"d.$g")).as(g)) ++
-          ((coalesce(col("s.n"), lit(0L)) + coalesce(col("d.n"), lit(0L)))
-            .as("n") +:
-          (sumCols.map { c =>
-            val a = sumAlias(c)
-            (coalesce(col(s"s.$a"), lit(0)) + coalesce(col(s"d.$a"), lit(0)))
-              .cast(sumT(a)).as(a)
-          } ++ cntCols.map { c =>
-            val a = cntAlias(c)
-            (coalesce(col(s"s.$a"), lit(0L)) + coalesce(col(s"d.$a"), lit(0L)))
-              .as(a)
-          } ++
-            // state's min/max — and the distinct rollup columns — ride
-            // along for groups in an affected bucket that this refresh
-            // does NOT touch (null for brand new groups — every new
-            // group is touched, so the overlay/re-read below always
-            // overwrites it)
-            (mmAliases ++ ddAliases).map(a => col(s"s.$a").as(a)) :+
-          coalesce(col("s._bucket"), col("d._bucket")).as("_bucket"))): _*)
-      .filter(col("n") > 0) // group left the join entirely
-    // MIN/MAX fallback, crossed over the join (the classic IVM
-    // restriction plus the group-move case: a dim relocation can strip
-    // the OLD group's extreme with zero fact ops): the TOUCHED GROUPS —
-    // and only those — re-derive their member facts by re-joining at
-    // the basis and recompute extremes from scratch. COUNT/SUM-only
-    // views skip all of this, keeping refresh ∝ the tails.
-    // shared by the mm fallback AND the distinct-rollup overlay below;
-    // fused-stats tuples (≤ cap) serve as a LOCAL relation — see
-    // [[Matview]]'s matching note
-    lazy val touchedGroups = tuplesOpt match {
-      case Some(rows) =>
-        spark.createDataFrame(
-          new java.util.ArrayList(
-            scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-          org.apache.spark.sql.types.StructType(
-            groupCols.map(g => deltaCp.schema(g))))
-      case None => deltaCp.select(groupCols.map(col): _*).distinct()
-    }
-    val merged =
-      if (mmAliases.isEmpty) countSum
-      else {
-        // the member relation for extremes is the SIEVED join (a row
-        // outside the WHERE is not a member and must not donate a
-        // min/max), with derived columns attached — extremes may be
-        // over an expression. The touched-group restriction ships as
-        // LITERALS under the cap: Catalyst pushes each per-column
-        // predicate BELOW the join to whichever side carries the group
-        // column (the semi-join above the join never could), reaching
-        // the side's parquet scan.
-        val full = prep(joinAll(vaNew, vbNews))
-        val mm = MvState.membersOfTouched(full, touchedGroups, groupCols)
-          .groupBy(groupCols.map(col): _*)
-          .agg(mmAggs.head, mmAggs.tail: _*)
-          .select(groupCols.map(col) ++ (lit(true).as("_mm") +:
-            mmAliases.map(a => col(a).as(s"_r_$a"))): _*)
-        val rKey = groupCols.map(g =>
-          col(s"m.$g") <=> col(s"r.$g")).reduce(_ && _)
-        val mrg = countSum.as("m").join(mm.as("r"), rKey, "left")
-        mrg.select(
-          (groupCols.map(g => col(s"m.$g").as(g)) :+ col("m.n").as("n")) ++
-            (sumCols.map(c => col(s"m.${sumAlias(c)}").as(sumAlias(c))) ++
-              cntCols.map(c => col(s"m.${cntAlias(c)}").as(cntAlias(c))) ++
-              // the _mm flag (not coalesce) decides: a touched group
-              // whose recomputed extreme is legitimately NULL (all
-              // values null) must not fall back to the stale state
-              mmAliases.map(a =>
-                when(col("_mm") === true, col(s"_r_$a"))
-                  .otherwise(col(s"m.$a")).as(a)) ++
-              ddAliases.map(a => col(s"m.$a").as(a)) :+
-            col("m._bucket").as("_bucket")): _*)
-      }
-    // DISTINCT rollup overlay — see [[Matview]]: auxes pinned to this
-    // refresh's watermarks, touched groups recomputed from pair state
-    // partition-pruned to the affected buckets.
-    val finalMerged =
-      if (distincts.isEmpty) merged
-      else {
-        syncAuxes(lasts)
-        MvState.overlayDistinct(merged, groupCols, touchedGroups,
-          affected, distincts, spark)
-      }
-    MvState.swapBuckets(stateRoot, dataDir, finalMerged, affected, groupCols,
-      rangeCap = rangeLayout)
-    MvState.pinDef(stateRoot, defFp)
-    setWatermarks(lasts)
+    // the delta's two legs join the star over their own inputs; the
+    // MIN/MAX re-read re-joins the whole fact at the basis (the
+    // group-move case: a dim relocation can strip the OLD group's
+    // extreme with zero fact ops)
+    core.applyDelta(joinAll(affNew, vbNews), joinAll(affOld, vbOlds),
+      joinAll(vaNew, vbNews), lasts, None, cps)
     ret(lasts)
   }
 
@@ -809,13 +406,12 @@ final class JoinMatview private[graft] (
   def read(): DataFrame = read(spark)
 
   /** [[read]] bound to an EXPLICIT session (see [[Matview.read]]). */
-  def read(session: SparkSession): DataFrame =
-    MvState.readState(session, stateRoot, dataDir).drop("_bucket")
+  def read(session: SparkSession): DataFrame = core.read(session)
 
   /** [[read]] WITH the `_bucket` partition column — the parent view's
     * rollup scan prunes on it (aux pair views only). */
   private[graft] def readRaw(session: SparkSession): DataFrame =
-    MvState.readState(session, stateRoot, dataDir)
+    core.readRaw(session)
 }
 
 object JoinMatview {
@@ -825,11 +421,11 @@ object JoinMatview {
     * sized on the driver, same class as the affected-bucket collect. */
   private[bitemporal] val MaxInlineDimIds = 10000
 
-  /** Test hook: the delta executes as a bare RDD checkpoint job (no
-    * QueryExecutionListener event), so the pruning spec captures its
-    * physical plan here instead — and a rebuild captures each member
-    * relation it derives (the sharing spec counts them). Off (zero
-    * cost) outside tests. */
+  /** Test hook: the dim-affected fact restriction executes as a bare
+    * RDD checkpoint job (no QueryExecutionListener event), so the
+    * pruning spec captures its physical plan here instead — and a
+    * rebuild captures each member relation it derives (the sharing spec
+    * counts them). Off (zero cost) outside tests. */
   @volatile private[graft] var capturePlans = false
   private[graft] val capturedPlans =
     scala.collection.mutable.Buffer.empty[String]

@@ -39,6 +39,9 @@ import org.apache.spark.sql.functions._
   * For exact parity with a from-scratch recompute use exact-typed sum
   * columns (integral/DECIMAL): incremental float sums differ from
   * recomputed ones in the last bits, decimals never do.
+  *
+  * This class derives a refresh's member rectangles; the aggregate,
+  * the delta merge and the state store are [[MvCore]]'s.
   */
 final class Matview private[graft] (
     spark: SparkSession, log: TxLog, stateRoot: Path,
@@ -52,286 +55,34 @@ final class Matview private[graft] (
     hllCols: Seq[String] = Nil,
     rangeLayout: Boolean = false,
     pcts: Seq[MvPct] = Nil) {
-  require(groupCols.nonEmpty, "at least one group column")
-  // the state's bucket hash normally covers the whole group key; an aux
-  // pair view buckets on the PARENT view's group prefix instead (see
-  // MvDistinct's contract) — any non-default key must be a subset of
-  // the group columns (a bucket must be a function of the group key)
-  private val bucketKeyCols =
-    if (bucketCols.isEmpty) groupCols else bucketCols
-  require(bucketKeyCols.forall(groupCols.contains),
-    s"bucket key $bucketKeyCols must be a subset of group columns $groupCols")
-  // a range layout partitions state by groupCols.head's VALUE, but the
-  // _schema sidecar stamps GroupsKey from bucketKeyCols — MvBucketPrune
-  // translates predicates on GroupsKey.head, so the two MUST agree or
-  // pruning would be unsound (the DDL always satisfies this; the guard
-  // closes the private-API hole)
-  require(!rangeLayout || bucketKeyCols.head == groupCols.head,
-    s"layout = 'range' requires the bucket key to lead with the " +
-      s"leading group column (got ${bucketKeyCols.headOption} vs " +
-      s"${groupCols.head})")
   // DERIVED columns (name -> row-local deterministic SQL expression
   // over the payload) extend the aggregable surface to expression
-  // aggregates — SUM(a*b) maintains exactly like SUM(c) because the
-  // expression commutes with the Δ-rules for the same reason the WHERE
-  // sieve does: an untouched row's derived value is identical on both
-  // sides of the delta
+  // aggregates — SUM(a*b) maintains exactly like SUM(c)
   private val aggable = payloadCols ++ derived.map(_._1)
   require(sumCols.forall(aggable.contains),
     s"sum columns $sumCols must be payload or derived columns $aggable")
   require((minCols ++ maxCols).forall(aggable.contains),
     s"min/max columns ${minCols ++ maxCols} must be payload or derived columns $aggable")
-  require(cntCols.forall(aggable.contains),
-    s"count columns $cntCols must be payload or derived columns $aggable")
-  require(hllCols.forall(aggable.contains),
-    s"approx-distinct columns $hllCols must be payload or derived columns $aggable")
-  require(pcts.forall(p => aggable.contains(p.arg)),
-    s"percentile columns ${pcts.map(_.arg)} must be payload or derived columns $aggable")
-  pcts.foreach(p => require(p.p >= 0.0 && p.p <= 1.0,
-    s"percentile fraction ${p.p} must be in [0, 1]"))
-  require(nBuckets > 0, "nBuckets must be positive")
-  MvState.requireUnreserved(aggable)
 
-  private val dataDir = stateRoot.resolve("state")
-  private val wmFile = stateRoot.resolve("_watermark")
-  // "system = latest" probe: any timestamp beyond every real system
-  // time selects exactly the open (_system_to = ∞) rectangles
-  private val sysProbe = Timestamp.valueOf("9998-01-01 00:00:00")
+  private val core = new MvCore(spark, stateRoot, aggable, groupCols,
+    sumCols, minCols, maxCols, cntCols, hllCols, pcts, distincts,
+    bucketCols, nBuckets, rangeLayout, whereSql, derived, validAt,
+    fpPayload = payloadCols)
 
   /** Last tx id folded into the state, -1 before the first refresh. */
-  def watermark: Long =
-    if (Files.exists(wmFile))
-      new String(Files.readAllBytes(wmFile), UTF_8).trim.toLong
-    else -1L
+  def watermark: Long = core.watermarks(1).head
 
-  private def setWatermark(w: Long): Unit = {
-    Files.createDirectories(stateRoot)
-    val tmp = stateRoot.resolve("_watermark.tmp")
-    Files.write(tmp, w.toString.getBytes(UTF_8))
-    Files.move(tmp, wmFile,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-  }
-
-  /** Is the state CURRENT — would a refresh be a no-op? True when
-    * neither a tx file nor a truncation point exists past the recorded
-    * watermark, i.e. the served state equals what a refresh right now
-    * would serve. One log directory listing, no data read — the
-    * aggregate-navigation freshness gate ([[graft.server.GraftMvNav]]),
-    * checked per candidate query. */
-  def isFresh: Boolean = {
-    def fid(p: Path): Long = p.getFileName.toString
-      .stripPrefix("tx_").stripSuffix(".parquet").toLong
-    (log.txFiles().map(fid) ++ log.truncatedUpTo())
-      .maxOption.getOrElse(-1L) <= watermark
-  }
-
-  private def sumAlias(c: String) = s"sum_$c"
-  private def minAlias(c: String) = s"min_$c"
-  private def maxAlias(c: String) = s"max_$c"
-  private def cntAlias(c: String) = s"cnt_$c"
-  private def hllAlias(c: String) = s"hll_$c"
-  // APPROX_COUNT_DISTINCT state: one mergeable DataSketches HLL sketch
-  // (binary) per group — state ∝ groups where the exact pair-level
-  // alternative is ∝ distinct (group, value) pairs. Sketches cannot
-  // subtract, so they ride the SAME lifecycle as MIN/MAX: recomputed
-  // for the TOUCHED GROUPS from their member rows at every refresh
-  // (never merged incrementally) — which makes deletes/updates EXACT
-  // for the sketch's own semantics: the stored sketch always describes
-  // exactly the current members, no lingering tombstoned values.
-  // MEDIAN/PERCENTILE_CONT (exact) and APPROX_PERCENTILE state: the
-  // per-group percentile VALUE (double), recomputed for the TOUCHED
-  // GROUPS from their member rows at every refresh — percentiles, like
-  // extremes, are not self-maintainable under deletes/updates, so they
-  // ride the same lifecycle as MIN/MAX. Exact percentile buffers one
-  // touched group's values per task (fine for the recompute's member
-  // slice; a group with billions of members should use the approx
-  // form, whose t-digest memory is bounded by its accuracy knob).
-  private def mmAliases: Seq[String] =
-    minCols.map(minAlias) ++ maxCols.map(maxAlias) ++ hllCols.map(hllAlias) ++
-      pcts.map(_.alias)
-  private def mmAggs =
-    minCols.map(c => min(col(c)).as(minAlias(c))) ++
-      maxCols.map(c => max(col(c)).as(maxAlias(c))) ++
-      hllCols.map(c => hll_sketch_agg(col(c)).as(hllAlias(c))) ++
-      pcts.map(p => p.agg.as(p.alias))
-  // COUNT(col) = per-column NON-NULL counter — self-maintainable the
-  // same way n is (a delta subtracts like a count does; null cells
-  // simply never contribute)
-  private def cntAggs =
-    cntCols.map(c => count(col(c)).as(cntAlias(c)))
-
-  /** The maintained relation is the FILTERED visible relation when the
-    * view declares a WHERE (a row-local deterministic predicate
-    * commutes with the Δ-rules — a tail row that leaves or enters the
-    * predicate behaves exactly like a delete or insert), with the
-    * derived expression columns attached — [[MvState.prep]], shared
-    * with [[JoinMatview]]. */
-  private def prep(visible: DataFrame): DataFrame =
-    MvState.prep(visible, whereSql, derived)
-
-  // timezone-aware expressions make incremental refresh
-  // session-timezone-sensitive — see MvState.pinTimeZone. Beyond
-  // WHERE/derived expressions, a TIMESTAMP-typed group column is
-  // sensitive through the bucket hash itself (the key casts to string,
-  // and timestamp rendering reads the session zone) — its type is read
-  // from the given schema (state sidecar, or the aggregate's own).
-  private def tzSensitive(schema: org.apache.spark.sql.types.StructType)
-      : Boolean =
-    whereSql.nonEmpty || derived.nonEmpty ||
-      groupCols.exists(g => schema.find(_.name == g).exists(
-        _.dataType.typeName.startsWith("timestamp")))
-
-  /** Stable fingerprint of the view DEFINITION — see MvState.pinDef.
-    * The distinct-rollup and bucket-key parts append ONLY when
-    * non-default, keeping every pre-existing plain view's fingerprint
-    * (and thus its state) intact across the upgrade; a view that GAINS
-    * rollup columns or changes its bucket key must rebuild (its state
-    * schema/layout changes). */
-  private val defFp: String = {
-    val extras =
-      (if (distincts.nonEmpty)
-        Seq("dist:" + distincts.map(d =>
-          d.arg + (if (d.needSum) "+s" else "")).mkString(","))
-      else Nil) ++
-      (if (bucketKeyCols != groupCols)
-        Seq("bkey:" + bucketKeyCols.mkString(",")) else Nil) ++
-      (if (hllCols.nonEmpty) Seq("hll:" + hllCols.mkString(",")) else Nil) ++
-      (if (rangeLayout) Seq("layout:range") else Nil) ++
-      (if (pcts.nonEmpty) Seq("pct:" + pcts.map(_.fpPart).mkString(","))
-       else Nil)
-    val parts = Seq(payloadCols, groupCols, sumCols, minCols, maxCols,
-      cntCols, Seq(whereSql.getOrElse("")),
-      derived.map(d => d._1 + "=" + d._2),
-      Seq(validAt.toString, nBuckets.toString)) ++
-      (if (extras.nonEmpty) Seq(extras) else Nil)
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(parts.map(_.mkString("\u0001")).mkString("\u0002")
-        .getBytes(UTF_8)).map(b => f"$b%02x").mkString
-  }
-
-  private def bucketCol =
-    if (rangeLayout) MvState.rangeBucketCol(groupCols.head)
-    else MvState.bucketCol(bucketKeyCols, nBuckets)
-  private def ddAliases: Seq[String] = MvState.distinctAliases(distincts)
-
-  /** `layout = range` partitions state by the LEADING group column's
-    * VALUE — dir-level pruning for range predicates on time-keyed
-    * rollups. Only lexicographically-ordered keys are sound (dir names
-    * compare as strings), so any non-string leading key refuses. */
-  private def checkRangeKey(schema: org.apache.spark.sql.types.StructType)
-      : Unit =
-    if (rangeLayout) MvState.checkRangeKey(schema, groupCols.head)
-
-  /** Pin every DISTINCT aux to exactly the watermark this refresh will
-    * record, so the rollup below reads pair state at the same log
-    * prefix the main state describes. `shared` hands the aux the main
-    * refresh's already-derived relations — the (touched, old/new
-    * rectangle) delta inputs, or a rebuild's folded rectangles: the aux
-    * aggregates the SAME table at the SAME watermarks, so re-deriving
-    * them would re-fold the log once per DISTINCT argument. */
-  private def syncAuxes(last: Long,
-                        shared: Option[MvShared] = None): Unit =
-    distincts.foreach(_.refreshAuxTo(Seq(last), shared))
+  /** Is the state CURRENT — would a refresh be a no-op? See
+    * [[MvCore.isFresh]]. */
+  def isFresh: Boolean = core.isFresh(Seq(log))
 
   private def readTx(files: Seq[Path]): DataFrame =
     TxLog.readMerged(spark, files.map(_.toString))
 
-  // A/B gate shared with JoinMatview (same key): off = the pre-r16
-  // shapes, for same-JVM measurement
-  private def reuseShared: Boolean = spark.conf
-    .getOption("spark.graft.mv.reuseShared").forall(_.toBoolean)
-
-  /** Per-group COUNT/SUM contribution of an already-folded RECTANGLE
-    * relation at the view's basis — the self-maintainable part, used on
-    * both sides of the delta (the old side folds once and is
-    * checkpointed; the new side derives from it by fold-from-state). */
-  private def contribRect(rect: DataFrame): DataFrame =
-    prep(Bitemporal.asOf(rect, lit(validAt), lit(sysProbe)))
-      .groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("n"),
-        sumCols.map(c => sum(col(c)).as(sumAlias(c))) ++ cntAggs: _*)
-
-  /** Full per-group aggregate INCLUDING min/max — only valid over a
-    * COMPLETE visible relation (first build, truncation rebuild), never
-    * over a delta: min/max don't subtract. Takes a PREPPED relation
-    * (sieve + derived already applied) so the mm touched-group path can
-    * semi-join on derived group keys before aggregating. */
-  private def fullAgg(prepped: DataFrame,
-                      more: Seq[Column] = Nil): DataFrame =
-    prepped.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("n"),
-        sumCols.map(c => sum(col(c)).as(sumAlias(c))) ++ cntAggs ++ mmAggs ++
-          more: _*)
-
-  /** Rebuild the whole state from the RECTANGLE relation (base +
-    * tail via the persisted base watermark) — the first build, and the
-    * path that stays correct when the log has been TRUNCATED
-    * ([[TxLog.truncate]]): the incremental delta needs touched ids'
-    * full op history, which a truncated log no longer has; the
-    * rectangles still determine the view exactly. Cost = one full view
-    * recompute — the documented price of retention, paid on every
-    * refresh after a truncation advances past this view's watermark.
-    *
-    * With DISTINCT auxes the SAME rectangles feed the main build and
-    * every aux's rebuild (each aux is a view over the same log at the
-    * same basis): fold once, checkpoint, and hand them down as an
-    * [[MvSharedBuild]] — an aux rebuilding at the same watermark adopts
-    * them instead of folding the log again. */
-  private def rebuild(last: Long, sharedIn: Option[MvShared],
-                      cps: Checkpoints): Long = {
-    // upToTx pins the fold to the watermark being recorded — a tx
-    // committing mid-rebuild must stay ABOVE the watermark (it would
-    // otherwise fold into state now and again on the next refresh)
-    val rect = sharedIn match {
-      case Some(sb: MvSharedBuild) if sb.last == last => sb.rect
-      case _ =>
-        val r = log.readAllAuto(spark, payloadCols, upToTx = last)
-        if (reuseShared && distincts.nonEmpty) cps.pin(r) else r
-    }
-    syncAuxes(last,
-      if (reuseShared) Some(MvSharedBuild(last, rect)) else None)
-    val visible = Bitemporal.asOf(rect, lit(validAt), lit(sysProbe))
-    val agg = MvState.withBucket(
-      fullAgg(prep(visible), MvState.distinctAggs(distincts)), bucketCol,
-      distincts)
-    checkRangeKey(agg.schema)
-    if (rangeLayout) MvState.checkRangeBuild(agg,
-      MvState.rangeLeadKind(agg.schema, groupCols.head), "build")
-    // temp-write + directory swap (same pattern as the incremental
-    // path): a concurrent read() sees either the complete old state or
-    // the complete new one — never a partial overwrite-in-place — with
-    // ONE caveat: POSIX cannot atomically exchange two directories, so
-    // a read landing exactly between the two renames below fails with
-    // path-not-found (a retryable error, not wrong data). A crash in
-    // that window self-heals: rebuild derives everything from
-    // the rectangles, never from prior state, so the next refresh
-    // (watermark still behind) rebuilds from scratch.
-    val tmp = stateRoot.resolve("state_rebuild_tmp")
-    TxLog.deleteRecursively(tmp.toFile)
-    MvState.writeSchema(stateRoot, agg, bucketKeyCols, nBuckets, rangeLayout)
-    MvState.writeState(agg, groupCols, tmp, nBuckets)
-    val old = stateRoot.resolve("state_rebuild_old")
-    TxLog.deleteRecursively(old.toFile)
-    if (Files.exists(dataDir)) { Files.move(dataDir, old): Unit }
-    Files.move(tmp, dataDir): Unit
-    TxLog.deleteRecursively(old.toFile)
-    if (tzSensitive(agg.schema)) MvState.pinTimeZone(spark, stateRoot)
-    MvState.pinDef(stateRoot, defFp)
-    setWatermark(last)
-    last
-  }
-
   /** Fold every tx past the watermark into the state. Returns the new
-    * watermark (= old one when the log has nothing new).
-    *
-    * Retention interaction: the incremental delta structurally needs a
-    * touched id's FULL op history (old and new contribution are both
-    * re-derived from its ops), so once the log has been truncated
-    * ([[TxLog.truncate]]) refresh permanently switches to
-    * [[rebuild]] — exact at any truncation, at full-recompute
-    * cost. The standard tension between retention and incremental view
-    * maintenance: vacuum less often than you refresh, or accept the
-    * recompute. */
+    * watermark (= old one when the log has nothing new). Once the log
+    * has been truncated ([[TxLog.truncate]]) every refresh is an exact
+    * full rebuild — see [[MvCore.needsRebuild]]. */
   def refresh(): Long = refreshUpTo(None)
 
   /** [[refresh]] bounded to fold NO tx past `pin` — the DISTINCT serve
@@ -351,278 +102,68 @@ final class Matview private[graft] (
     * takes goes into `cps` and is released when it returns. */
   private def refreshHeld(pin: Option[Long], sharedIn: Option[MvShared],
                           cps: Checkpoints): Long = {
-    // a DEFINITION change over the same state dir (JVM restart +
-    // re-CREATE, or a Scala-API re-instantiation with different
-    // aggregates/WHERE/groups) invalidates the state: discard it and
-    // fall through to the first-build path — folding new-definition
-    // deltas into old-definition state would be silently wrong
-    if (!MvState.defMatches(stateRoot, defFp)) {
-      TxLog.deleteRecursively(dataDir.toFile)
-      Files.deleteIfExists(wmFile): Unit
-      // the sidecars go WITH the data: a surviving '_schema' would let
-      // read() serve the OLD definition's column set (empty relation /
-      // phantom schema) until the rebuild completes — and if the
-      // rebuild fails or the log is empty, forever. Without them,
-      // read() fails with the honest "has no state" story;
-      // writeSchema/pinTimeZone re-create both on the rebuild.
-      Files.deleteIfExists(stateRoot.resolve("_schema")): Unit
-      Files.deleteIfExists(stateRoot.resolve("_tz")): Unit
-    }
+    core.dropIfRedefined()
     val w = watermark
     val truncated = log.truncatedUpTo()
-    def fid(p: Path): Long = p.getFileName.toString
-      .stripPrefix("tx_").stripSuffix(".parquet").toLong
     val files0 = log.txFiles()
-    val lastAll = (files0.map(fid) ++ truncated).maxOption.getOrElse(-1L)
+    val lastAll =
+      (files0.map(TxLog.txIdOf) ++ truncated).maxOption.getOrElse(-1L)
     // under a pin, every relation this refresh folds must stop at it —
     // the file set, the tail, and the touched ids' history alike
     val last = pin.fold(lastAll)(p => math.min(p, lastAll))
     if (last <= w) return w
-    val files = files0.filter(fid(_) <= last)
+    val files = files0.filter(TxLog.txIdOf(_) <= last)
     if (truncated.isEmpty && files.isEmpty) return w
-    // first build, or any refresh of a truncated log: one full fold,
-    // all buckets written once
-    if (truncated.isDefined || w < 0 || !Files.exists(dataDir))
-      return rebuild(last, sharedIn, cps)
+    // first build, or any refresh of a truncated log: one full fold of
+    // the rectangles (base + tail), pinned to the watermark being
+    // recorded — a tx committing mid-rebuild stays ABOVE it
+    if (core.needsRebuild(Seq(log), Seq(w))) {
+      core.rebuild(Seq(last), sharedIn, cps)(core.prep(core.visible(
+        log.readAllAuto(spark, payloadCols, upToTx = last))))
+      return last
+    }
 
-    if (MvState.storedSchema(stateRoot).exists(tzSensitive))
-      MvState.checkTimeZone(spark, stateRoot)
-    // the tail re-lists the directory — bound it to the `last` this
-    // refresh will record, so a concurrently landing tx stays wholly
-    // in the NEXT refresh (its id would otherwise join `touched` while
-    // the pinned hist lacks its ops — harmless for COUNT/SUM deltas,
-    // but the bound makes the snapshot airtight rather than argued)
-    // Old and new contributions from ONE full-history fold (r16 guide
-    // §2.3 "don't compute things twice"): the pre-r16 shape folded the
-    // touched ids' history TWICE (once ≤ w for the old side, once whole
-    // for the new side) — two scans of every tx file, two sort shuffles.
-    // Now the old rectangles fold once (the `_tx_id ≤ w` filter prunes
-    // tail files via their constant-_tx_id footer stats), checkpoint
-    // (rows ∝ touched ids' rectangles — the same size class as the
-    // delta checkpoint below), and the new side derives by FOLD FROM
-    // STATE: applyOps(old rectangles, tail ops) — the exact-equivalence
+    // Old and new contributions from ONE full-history fold of the
+    // touched ids: the old rectangles fold once (the `_tx_id ≤ w`
+    // filter prunes tail files via their constant-_tx_id footer stats)
+    // and checkpoint; the new side derives by FOLD FROM STATE:
+    // applyOps(old rectangles, tail ops) — the exact-equivalence
     // contract BitemporalSpec locks ("applyOps == full fold at EVERY
-    // split point") under the storage-wide monotonic-system-time
-    // contract every readAll/compaction path already assumes.
+    // split point"). The tail is bounded to `last`, so a concurrently
+    // landing tx stays wholly in the NEXT refresh.
     //
     // An aux refresh driven by its parent over the SAME log at the SAME
-    // watermarks adopts the parent's relations outright (sharedIn) —
-    // zero re-derivation; the gate falls back to self-derivation on any
-    // watermark drift (post-restore, def-change rebuild).
+    // watermarks adopts the parent's relations outright (sharedIn); any
+    // watermark drift (post-restore, def-change rebuild) self-derives.
     val (touched, oldRect, newRect) = sharedIn match {
       case Some(sd: MvSharedDelta) if sd.baseW == w && sd.last == last =>
         (sd.touched, sd.oldRect, sd.newRect)
       case _ =>
-        val tail = readTx(log.txFilesAfter(w).filter(_.getFileName.toString
-          .stripPrefix("tx_").stripSuffix(".parquet").toLong <= last))
+        val tail = readTx(log.txFilesAfter(w).filter(TxLog.txIdOf(_) <= last))
         val tch = tail.select(col("_id").cast("long").as("_id")).distinct()
-        val hist = {
-          val all = readTx(files)
-          all.join(tch, all("_id").cast("long") === tch("_id"), "left_semi")
-        }
-        if (!reuseShared)
-          (tch, Bitemporal.fold(hist.filter(col("_tx_id") <= w), payloadCols),
-            Bitemporal.fold(hist, payloadCols))
-        else {
-          val oldRect0 =
-            Bitemporal.fold(hist.filter(col("_tx_id") <= w), payloadCols)
-          val oldCp = cps.pin(oldRect0)
-          // schemaless normalization for the tail ops (refoldTouched's
-          // contract): a short tail may lack payload columns older txs
-          // carried
-          val tailOps = payloadCols.foldLeft(tail)((d, c) =>
-            if (d.columns.contains(c)) d
-            else d.withColumn(c, lit(null).cast(oldCp.schema(c).dataType)))
-          (tch, oldCp, Bitemporal.applyOps(oldCp, tailOps, payloadCols))
-        }
+        val all = readTx(files)
+        val hist = all.join(tch, all("_id").cast("long") === tch("_id"),
+          "left_semi")
+        val oldCp = cps.pin(
+          Bitemporal.fold(hist.filter(col("_tx_id") <= w), payloadCols))
+        // schemaless normalization for the tail ops (refoldTouched's
+        // contract): a short tail may lack payload columns older txs
+        // carried
+        val tailOps = payloadCols.foldLeft(tail)((d, c) =>
+          if (d.columns.contains(c)) d
+          else d.withColumn(c, lit(null).cast(oldCp.schema(c).dataType)))
+        (tch, oldCp, Bitemporal.applyOps(oldCp, tailOps, payloadCols))
     }
     // with DISTINCT auxes the new-side rectangles are consumed by this
     // refresh's delta AND by every aux's (shared) delta — pin them once
     // so the applyOps fold runs one time, not once per consumer
     val newRectS =
-      if (!reuseShared || distincts.isEmpty || sharedIn.nonEmpty) newRect
+      if (distincts.isEmpty || sharedIn.nonEmpty) newRect
       else cps.pin(newRect)
-    // Delta per group: (new minus old) as ONE aggregation over the
-    // SIGNED union of both rectangle contributions (r17, guide §2.4
-    // "two operations keyed the same way can share one exchange") —
-    // the pre-r17 shape aggregated each side separately and full-outer-
-    // joined them: two exchanges plus a join where one exchange
-    // suffices. Numerically identical for the exact (integral/DECIMAL)
-    // sum types the views use: SUM(new) − SUM(old) = SUM(±x) term for
-    // term. A/B gate: spark.graft.mv.unionDelta=false restores the
-    // join shape for same-JVM measurement.
-    val unionDelta = spark.conf
-      .getOption("spark.graft.mv.unionDelta").forall(_.toBoolean)
-    val delta0 =
-      if (unionDelta) {
-        val sg = col(MvState.SignCol)
-        def side(rect: DataFrame, sign: Int): DataFrame =
-          prep(Bitemporal.asOf(rect, lit(validAt), lit(sysProbe)))
-            .withColumn(MvState.SignCol, lit(sign.toLong))
-        side(newRectS, 1).unionByName(side(oldRect, -1))
-          .groupBy(groupCols.map(col): _*)
-          .agg(sum(sg).as("n"),
-            sumCols.map(c => sum(when(sg === 1L, col(c))
-              .otherwise(-col(c))).as(sumAlias(c))) ++
-              cntCols.map(c => sum(when(col(c).isNotNull, sg)
-                .otherwise(0L)).as(cntAlias(c))): _*)
-      } else {
-        val oldC = contribRect(oldRect)
-        val newC = contribRect(newRectS)
-        val o = oldC.as("o")
-        val nw = newC.as("n")
-        val key = groupCols.map(g =>
-          col(s"n.$g") <=> col(s"o.$g")).reduce(_ && _)
-        nw.join(o, key, "full_outer")
-          .select(
-            groupCols.map(g =>
-              coalesce(col(s"n.$g"), col(s"o.$g")).as(g)) ++
-              ((coalesce(col("n.n"), lit(0L)) - coalesce(col("o.n"), lit(0L))).as("n") +:
-                (sumCols.map { c =>
-                  val a = sumAlias(c)
-                  (coalesce(col(s"n.$a"), lit(0)) - coalesce(col(s"o.$a"), lit(0))).as(a)
-                } ++ cntCols.map { c =>
-                  val a = cntAlias(c)
-                  (coalesce(col(s"n.$a"), lit(0L)) - coalesce(col(s"o.$a"), lit(0L))).as(a)
-                })): _*)
-      }
-    // sum types pinned to the plain aggregate's: uncapped, each delta/
-    // merge +/- widens decimal precision by one per refresh until the
-    // parquet FIXED_LEN byte width diverges from older bucket files
-    // (grows at p=24) and state reads fail — regression-tested by
-    // MatviewSpec's many-refresh test
-    val sumT: Map[String, org.apache.spark.sql.types.DataType] =
-      sumCols.map(c => sumAlias(c) ->
-        contribRect(newRectS).schema(sumAlias(c)).dataType).toMap
-    val delta = delta0.select(
-      (groupCols.map(col) :+ col("n")) ++
-        (sumCols.map(c => col(sumAlias(c)).cast(sumT(sumAlias(c)))
-          .as(sumAlias(c))) ++
-          cntCols.map(c => col(cntAlias(c)))): _*)
-      .withColumn("_bucket", bucketCol)
-    // the delta feeds the affected-bucket collect, the touched-group
-    // probe AND the state merge below — checkpoint it once (rows ∝
-    // touched groups, tiny) so the whole upstream refold+aggregate
-    // pipeline runs one time, not once per consumer. The bucket set
-    // and group-tuple probe ride INSIDE the materializing job (r17,
-    // fused stats — they each cost one more job over the checkpoint
-    // before; spark.graft.mv.fusedCollect=false restores that shape).
-    val (deltaCp, deltaRows, bucketsOpt, tuplesOpt) =
-      cps.pinDelta(delta, nBuckets, groupCols)
-    // ≤ nBuckets longs — the only data-dependent collect in a refresh
-    val affected: Seq[Any] =
-      if (deltaRows == 0L) Nil
-      else bucketsOpt.getOrElse(
-        deltaCp.select(col("_bucket")).distinct()
-          .collect().map(_.get(0)).toSeq)
-    if (affected.isEmpty) {
-      MvState.pinDef(stateRoot, defFp); setWatermark(last); return last
-    }
-    if (rangeLayout)
-      MvState.checkRangeRefresh(affected,
-        MvState.rangeLeadKind(deltaCp.schema, groupCols.head))
-
-    val state = MvState.readState(spark, stateRoot, dataDir)
-      .filter(col("_bucket").isin(affected: _*))
-    val s = state.as("s")
-    val d = deltaCp.as("d")
-    val mkey = groupCols.map(g =>
-      col(s"s.$g") <=> col(s"d.$g")).reduce(_ && _)
-    val countSum = s.join(d, mkey, "full_outer")
-      .select(
-        (groupCols.map(g =>
-          coalesce(col(s"s.$g"), col(s"d.$g")).as(g)) :+
-          (coalesce(col("s.n"), lit(0L)) + coalesce(col("d.n"), lit(0L))).as("n")) ++
-          (sumCols.map { c =>
-            val a = sumAlias(c)
-            (coalesce(col(s"s.$a"), lit(0)) + coalesce(col(s"d.$a"), lit(0)))
-              .cast(sumT(a)).as(a)
-          } ++ cntCols.map { c =>
-            val a = cntAlias(c)
-            (coalesce(col(s"s.$a"), lit(0L)) + coalesce(col(s"d.$a"), lit(0L))).as(a)
-          } ++
-            // state's min/max — and the distinct rollup columns — ride
-            // along for groups in an affected bucket that this refresh
-            // does NOT touch (null for brand new groups — every new
-            // group is touched, so the overlay/re-read below always
-            // overwrites it)
-            (mmAliases ++ ddAliases).map(a => col(s"s.$a").as(a)) :+
-          coalesce(col("s._bucket"), col("d._bucket")).as("_bucket")): _*)
-      .filter(col("n") > 0) // a group whose last row left the view goes away
-    // MIN/MAX (and HLL-sketch) fallback (the classic IVM restriction:
-    // extremes are not self-maintainable under deletes/updates): the
-    // TOUCHED GROUPS — and only those — re-read their member rows at
-    // the basis and recompute from scratch. The restriction ships as a
-    // LITERAL group predicate when the touched set is small (the
-    // overwhelmingly common case) — plain group keys push to the base
-    // parquet scan (footer/file pruning on a group-clustered base),
-    // the join disappears either way; big sets fall back to the
-    // semi-join (MvState.membersOfTouched). COUNT/SUM-only views skip
-    // all of this, keeping refresh ∝ tail.
-    // shared by the mm fallback AND the distinct-rollup overlay below
-    // (one plan, built once — rows ∝ touched groups over the
-    // checkpointed delta). When the fused stats already collected the
-    // distinct group tuples (≤ cap), serve them as a LOCAL relation:
-    // downstream probes/joins then read driver-local rows instead of
-    // re-scanning the checkpoint (membersOfTouched's limit-collect
-    // becomes job-free).
-    lazy val touchedGroups = tuplesOpt match {
-      case Some(rows) =>
-        spark.createDataFrame(
-          new java.util.ArrayList(
-            scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-          org.apache.spark.sql.types.StructType(
-            groupCols.map(g => deltaCp.schema(g))))
-      case None => deltaCp.select(groupCols.map(col): _*).distinct()
-    }
-    val merged =
-      if (mmAliases.isEmpty) countSum
-      else {
-        // prep BEFORE the restriction: a derived group key must exist
-        // on the member relation for the touched-group predicate
-        val visible = prep(Bitemporal.asOf(
-          log.readAllAuto(spark, payloadCols, upToTx = last),
-          lit(validAt), lit(sysProbe)))
-        val mm = fullAgg(
-          MvState.membersOfTouched(visible, touchedGroups, groupCols))
-          .select(groupCols.map(col) ++ (lit(true).as("_mm") +:
-            mmAliases.map(a => col(a).as(s"_r_$a"))): _*)
-        val mmKey = groupCols.map(g =>
-          col(s"m.$g") <=> col(s"r.$g")).reduce(_ && _)
-        val mrg = countSum.as("m").join(mm.as("r"), mmKey, "left")
-        mrg.select(
-          (groupCols.map(g => col(s"m.$g").as(g)) :+ col("m.n").as("n")) ++
-            (sumCols.map(c => col(s"m.${sumAlias(c)}").as(sumAlias(c))) ++
-              cntCols.map(c => col(s"m.${cntAlias(c)}").as(cntAlias(c))) ++
-              // the _mm flag (not coalesce) decides: a touched group
-              // whose recomputed extreme is legitimately NULL (all
-              // values null) must not fall back to the stale state
-              mmAliases.map(a =>
-                when(col("_mm") === true, col(s"_r_$a"))
-                  .otherwise(col(s"m.$a")).as(a)) ++
-              ddAliases.map(a => col(s"m.$a").as(a)) :+
-            col("m._bucket").as("_bucket")): _*)
-      }
-    // DISTINCT rollup overlay: pin the auxes to this refresh's
-    // watermark, then recompute cntd/sumd for the TOUCHED groups from
-    // the pair state — partition-pruned to the affected buckets (the
-    // aux is bucketed on the parent group prefix with the same bucket
-    // count). Untouched groups in affected buckets keep the stored
-    // rollup they rode along with above.
-    val finalMerged =
-      if (distincts.isEmpty) merged
-      else {
-        syncAuxes(last,
-          if (reuseShared)
-            Some(MvSharedDelta(w, last, touched, oldRect, newRectS))
-          else None)
-        MvState.overlayDistinct(merged, groupCols, touchedGroups,
-          affected, distincts, spark)
-      }
-    MvState.swapBuckets(stateRoot, dataDir, finalMerged, affected, groupCols,
-      rangeCap = rangeLayout)
-    MvState.pinDef(stateRoot, defFp)
-    setWatermark(last)
+    core.applyDelta(core.visible(newRectS), core.visible(oldRect),
+      core.visible(log.readAllAuto(spark, payloadCols, upToTx = last)),
+      Seq(last), Some(MvSharedDelta(w, last, touched, oldRect, newRectS)),
+      cps)
     last
   }
 
@@ -639,13 +180,12 @@ final class Matview private[graft] (
     * and a DataFrame is session-bound, so serving a view inside a
     * client's session needs the read built THERE. State files are
     * shared; only the plan binding differs. */
-  def read(session: SparkSession): DataFrame =
-    MvState.readState(session, stateRoot, dataDir).drop("_bucket")
+  def read(session: SparkSession): DataFrame = core.read(session)
 
   /** [[read]] WITH the `_bucket` partition column — the parent view's
     * rollup scan prunes on it (aux pair views only). */
   private[graft] def readRaw(session: SparkSession): DataFrame =
-    MvState.readState(session, stateRoot, dataDir)
+    core.readRaw(session)
 }
 
 /** One DISTINCT aggregate argument's maintenance hooks, supplied by the
@@ -680,8 +220,7 @@ private[graft] final case class MvDistinct(
       * ([[Matview]]: length 1; [[JoinMatview]]: fact +: dims). The
       * second argument optionally shares the parent refresh's derived
       * relations: [[MvSharedDelta]] on a single-table incremental
-      * refresh, [[MvSharedBuild]] on a single-table rebuild,
-      * [[MvSharedStarBuild]] on a star rebuild. */
+      * refresh, [[MvSharedBuild]] on a rebuild of either kind. */
     refreshAuxTo: (Seq[Long], Option[MvShared]) => Unit) {
   def cntAlias: String = s"cntd_$arg"
   def sumAlias: String = s"sumd_$arg"
@@ -690,8 +229,8 @@ private[graft] final case class MvDistinct(
 }
 
 /** A parent refresh's derived relations handed to its DISTINCT auxes
-  * over the SAME tx log — the aux adopts them instead of re-deriving
-  * (watermark-gated; any drift self-derives as before). */
+  * over the SAME logs — the aux adopts them instead of re-deriving
+  * (watermark-gated; on any drift the aux derives its own). */
 private[graft] sealed trait MvShared
 
 /** The parent refresh's derived incremental-delta relations, handed to
@@ -705,23 +244,15 @@ private[graft] final case class MvSharedDelta(
     baseW: Long, last: Long, touched: DataFrame,
     oldRect: DataFrame, newRect: DataFrame) extends MvShared
 
-/** The parent FIRST BUILD's folded rectangle relation at `last`
-  * (checkpointed by the parent when auxes exist): the aux's first
-  * build aggregates the SAME rectangles at the SAME basis, so adopting
-  * them saves one full log fold per DISTINCT argument (r17). */
+/** A parent rebuild's prepped member relation (visible at the basis,
+  * sieved, derived columns attached; a star's keep lists widened by
+  * every DISTINCT argument) at the per-log watermarks `lasts` (a star's
+  * fact first, then one per dim), checkpointed by the parent when auxes
+  * exist. An aux rebuilding at the same watermarks groups it by
+  * `groups :+ arg` instead of reading the logs again — sound because an
+  * aux reads the same logs at the same basis under the same WHERE, and
+  * its derived columns are the parent's (the [[MvDistinct]] contract). */
 private[graft] final case class MvSharedBuild(
-    last: Long, rect: DataFrame) extends MvShared
-
-/** The star form of [[MvSharedBuild]]: a [[JoinMatview]] rebuild's
-  * sieved fact ⋈ dims member relation (derived columns attached) at the
-  * per-log watermarks `lasts` (fact first, then one per dim), derived
-  * and checkpointed ONCE by the parent with its keep lists widened by
-  * every DISTINCT argument. An aux rebuilding at the same watermarks
-  * groups it by `groups :+ arg` instead of re-running the star join —
-  * sound because an aux joins the same logs at the same basis under the
-  * same WHERE, and its derived columns are the parent's (the
-  * [[MvDistinct]] contract). */
-private[graft] final case class MvSharedStarBuild(
     lasts: Seq[Long], members: DataFrame) extends MvShared
 
 /** The local checkpoints one refresh, rebuild or tx takes, released
@@ -742,26 +273,17 @@ private[graft] final class Checkpoints {
 
   /** Checkpoint a view delta (which carries `_bucket`) and, in the same
     * job, collect its affected buckets and touched group tuples up to
-    * their caps — `None` past a cap, and always `None` with the r17
-    * fused stats gated off (`spark.graft.mv.fusedCollect=false`).
-    * Returns (checkpoint, rows, buckets, group tuples). */
+    * their caps — `None` past a cap. Returns (checkpoint, rows, buckets,
+    * group tuples). */
   def pinDelta(delta: DataFrame, nBuckets: Int, groupCols: Seq[String])
       : (DataFrame, Long, Option[Seq[Any]],
          Option[Seq[org.apache.spark.sql.Row]]) = {
-    val fused = delta.sparkSession.conf
-      .getOption("spark.graft.mv.fusedCollect").forall(_.toBoolean)
-    val out =
-      if (fused)
-        RddBridge.localCheckpointWithStats(
-          delta, delta.schema.fieldIndex("_bucket"),
-          math.max(nBuckets, MvState.MaxRangeDirs + 1),
-          groupCols.map(delta.schema.fieldIndex),
-          if (groupCols.size == 1) MvState.MaxInlineGroups
-          else MvState.MaxInlineGroupTuples)
-      else {
-        val (cp, n) = RddBridge.localCheckpointWithCount(delta)
-        (cp, n, None, None)
-      }
+    val out = RddBridge.localCheckpointWithStats(
+      delta, delta.schema.fieldIndex("_bucket"),
+      math.max(nBuckets, MvState.MaxRangeDirs + 1),
+      groupCols.map(delta.schema.fieldIndex),
+      if (groupCols.size == 1) MvState.MaxInlineGroups
+      else MvState.MaxInlineGroupTuples)
     held += out._1; out
   }
 
@@ -799,7 +321,7 @@ private[graft] final case class MvPct(
     else expr(s"percentile(cast(`$arg` as double), $p)")
 }
 
-/** State-store helpers shared by [[Matview]] and [[JoinMatview]]. */
+/** State-store helpers behind [[MvCore]], shared by both view kinds. */
 private[graft] object MvState {
 
   /** The materialized rollup column names `distincts` contribute to the

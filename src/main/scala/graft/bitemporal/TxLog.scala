@@ -26,6 +26,7 @@ import org.apache.spark.sql.functions._
   * one op that rewrites base files (matching the reference's erase).
   */
 final class TxLog(val dir: String) {
+  import TxLog.txIdOf
   private val logDir: Path = Paths.get(dir, "log")
   private val baseDir: Path = Paths.get(dir, "base")
   Files.createDirectories(logDir)
@@ -62,10 +63,9 @@ final class TxLog(val dir: String) {
     val s = Files.list(logDir)
     try {
       import scala.jdk.CollectionConverters._
-      s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("tx_"))
-        .map(_.stripPrefix("tx_").stripSuffix(".parquet").toLong)
-        .toSeq
+      s.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("tx_"))
+        .map(txIdOf).toSeq
     } finally s.close()
   }
 
@@ -116,14 +116,16 @@ final class TxLog(val dir: String) {
       .foreach(p => TxLog.deleteRecursively(p.toFile))
   }
 
-  private def txIdOf(p: Path): Long =
-    p.getFileName.toString.stripPrefix("tx_").stripSuffix(".parquet").toLong
+  /** The highest committed tx id, or the truncation point when that is
+    * higher; -1 for an empty log. One directory listing, no data read —
+    * a generation key for the log: two reads at the same value see the
+    * same rectangle relation. */
+  def lastTx(): Long =
+    (txFiles().map(txIdOf) ++ truncatedUpTo()).maxOption.getOrElse(-1L)
 
   /** Committed tx files with id strictly greater than `afterTx`. */
   def txFilesAfter(afterTx: Long): Seq[Path] =
-    txFiles().filter(p =>
-      p.getFileName.toString.stripPrefix("tx_").stripSuffix(".parquet")
-        .toLong > afterTx)
+    txFiles().filter(txIdOf(_) > afterTx)
 
   /** Append one transaction. `ops` must carry `_op, _id, _valid_from,
     * _valid_to` + payload columns; `_tx_id`/`_system_from` are assigned
@@ -213,9 +215,7 @@ final class TxLog(val dir: String) {
     // would then silently drop its effects until the next compact.
     val files = txFiles()
     require(files.nonEmpty, s"empty tx log at $logDir")
-    val last = files
-      .map(_.getFileName.toString.stripPrefix("tx_").stripSuffix(".parquet").toLong)
-      .max
+    val last = files.map(txIdOf).max
     val log = TxLog.readMerged(spark, files.map(_.toString))
     writeBase(Bitemporal.fold(log, payloadCols)
       .withColumn("_sys_date", to_date(col("_system_from"))), baseDir,
@@ -498,6 +498,10 @@ final class TxLog(val dir: String) {
 }
 
 object TxLog {
+  /** The tx id a `tx_<id>.parquet` log entry carries. */
+  def txIdOf(p: Path): Long =
+    p.getFileName.toString.stripPrefix("tx_").stripSuffix(".parquet").toLong
+
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 

@@ -572,8 +572,28 @@ class JoinMatviewSpec extends AnyFunSuite {
     }
   }
 
-  test("restart recovers watermarks; truncation switches to exact rebuild") {
+  test("many star refreshes keep the state's decimal type fixed (no widening)") {
+    // the delta's sum type is the pinned state type: an uncapped
+    // delta/merge +/- widens decimal precision by one per refresh, and
+    // once the parquet byte width changes older bucket files no longer
+    // read. Every refresh after the first build touches ONE group.
     val (fact, dim, _) = fresh()
+    putDims(dim, Seq((1L, "east"), (2L, "west")))
+    putFacts(fact, Seq((10L, 2L, "3.00")))
+    val mv = fact.starMatview("tight_star", Seq(dim -> "cust"),
+      Seq("region"), Seq("amt"), validAt, nBuckets = 2)
+    (1 to 5).foreach { i =>
+      putFacts(fact, Seq((i.toLong, 1L, f"$i%d.25")))
+      mv.refresh()
+      assertParity(mv, fact, dim)
+      val dt = mv.read().schema("sum_amt").dataType
+      assert(dt == org.apache.spark.sql.types.DecimalType(22, 2),
+        s"refresh $i: $dt")
+    }
+  }
+
+  test("restart recovers watermarks; truncation switches to exact rebuild") {
+    val (fact, dim, fdir) = fresh()
     putDims(dim, Seq((1L, "east"), (2L, "west")))
     putFacts(fact, Seq((10L, 1L, "10.00"), (11L, 2L, "20.00")))
     val mv = fact.joinMatview("jv", dim, "cust", "region",
@@ -587,6 +607,15 @@ class JoinMatviewSpec extends AnyFunSuite {
       Seq("amt"), validAt, nBuckets = 4)
     assert(mv2.watermarks == mv.watermarks)
     assertParity(mv2, fact, dim)
+    // state adoption lock: the definition fingerprint and the "wf wd"
+    // watermark file keep the bytes deployed state dirs carry — a change
+    // to either would make every existing view discard and rebuild
+    val root = java.nio.file.Paths.get(fdir, "join_matview", "jv")
+    def sidecar(f: String) =
+      new String(java.nio.file.Files.readAllBytes(root.resolve(f)), "UTF-8")
+    assert(sidecar("_def") == "eecd51df6c77dca82183a3238fdbf3dd")
+    val (wf, wd) = mv2.watermarks
+    assert(sidecar("_watermark") == s"$wf $wd")
 
     // vacuum the FACT log (compact + truncate): the incremental delta
     // can no longer see touched ids' history → refresh must take the

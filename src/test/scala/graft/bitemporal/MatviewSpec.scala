@@ -219,6 +219,14 @@ class MatviewSpec extends AnyFunSuite {
     }
     drain()
     assertParity(mv, t)
+    // state adoption lock: the definition fingerprint and the watermark
+    // file keep the bytes deployed state dirs carry — a change to either
+    // would make every existing view discard its state and rebuild
+    val root = java.nio.file.Paths.get(dir, "matview", "live")
+    def sidecar(f: String) =
+      new String(java.nio.file.Files.readAllBytes(root.resolve(f)), "UTF-8")
+    assert(sidecar("_def") == "aa341ae7ba4a19acaff250f21e61f583")
+    assert(sidecar("_watermark") == mv.watermark.toString)
 
     // more txs while the maintainer is DOWN; a restarted maintainer
     // catches up from the view's own watermark (no double counting even
