@@ -283,27 +283,22 @@ final class GraftTable(spark: SparkSession, dir: String,
     Bitemporal.currentState(rectangles(session))
 
   /** The reference's `entity` lookup: one id's document at a basis
-    * (defaults to now/now), None when not visible. Reads ONLY the files
-    * whose chunk metadata says they can contain the id (the reference's
-    * metadata-driven scan planning, `core2.metadata`): per-file `_id`
-    * min/max from the parquet footers — computed once per immutable
-    * file, cached driver-side — decide the file list BEFORE Spark ever
-    * lists the table, and the id filter still lands sargable on the
-    * scan for row-group pruning within the chosen files. */
+    * (defaults to now/now), None when not visible. A basis filter over
+    * [[rectanglesOf]]: one Spark job reads the few files whose footer
+    * `_id` range covers the id, and the fold runs on the driver. */
   def entity(id: Long,
              validTime: Option[Timestamp] = None,
              systemTime: Option[Timestamp] = None): Option[org.apache.spark.sql.Row] = {
     val vt = validTime.map(lit(_)).getOrElse(current_timestamp())
     val st = systemTime.map(lit(_)).getOrElse(current_timestamp())
-    val rows = Bitemporal.asOf(entityRectangles(id).filter(col("_id") === id), vt, st)
-      .limit(2).collect()
+    val rows = Bitemporal.asOf(rectanglesOf(Seq(id)), vt, st).collect()
     require(rows.length <= 1,
       s"entity $id: ${rows.length} rectangles visible at one basis — " +
         "overlapping valid intervals in the log")
     rows.headOption
   }
 
-  // ---- metadata-driven file pruning (the default point-read path) ----
+  // ---- the point path: rectangles of a few ids, folded on the driver ----
 
   /** Per-file `_id` (min, max) from parquet footers, cached driver-side
     * with an LRU BOUND: part files are immutable once committed (every
@@ -311,7 +306,7 @@ final class GraftTable(spark: SparkSession, dir: String,
     * file COUNT is unbounded over a table's life (millions of base
     * files at the 100 TB tier), so the cache must not grow with it.
     * Eviction is pure cost, never correctness: an evicted file repays
-    * one footer pass on its next point read. Cap tunable via
+    * one footer read on its next point read. Cap tunable via
     * `spark.graft.entity.metaCacheSize` (entries ≈ 250 bytes each;
     * the 64k default holds ~16 MB worst case). */
   private val idRangeCacheCap: Int =
@@ -328,12 +323,14 @@ final class GraftTable(spark: SparkSession, dir: String,
   private[graft] def idRangeCacheSize: Int =
     idRangeCache.synchronized { idRangeCache.size }
 
-  /** The part files under `paths` that can contain `id` per their
-    * footer `_id` stats. Files without usable stats are kept (never
-    * prune on absence of evidence). Looked-up ranges are held locally
-    * for the final filter, so pruning stays exact even when this very
-    * call overflows the LRU. */
-  private def covering(paths: Seq[String], id: Long): Seq[String] = {
+  /** The part files under `paths` that can contain one of `ids` per
+    * their footer `_id` range — the reference's metadata-driven scan
+    * planning (`core2.metadata`), on the driver: footers are read once
+    * per immutable file, no Spark job. Files without usable stats are
+    * kept (never prune on absence of evidence). Looked-up ranges are
+    * held locally for the final filter, so pruning stays exact even
+    * when this very call overflows the LRU. */
+  private def covering(paths: Seq[String], ids: Seq[Long]): Seq[String] = {
     if (paths.isEmpty) return Nil
     val parts = graft.bitemporal.ChunkMetadata.files(spark, paths)
     val local = scala.collection.mutable.Map.empty[String, (Long, Long)]
@@ -350,83 +347,92 @@ final class GraftTable(spark: SparkSession, dir: String,
       }
     }
     if (missing.nonEmpty) {
-      val fetched = graft.bitemporal.ChunkMetadata.forPaths(spark, missing)
-        .filter(col("column") === "_id" &&
-          col("min").isNotNull && col("max").isNotNull)
-        .groupBy("file")
-        .agg(min(col("min").cast("long")).as("mn"),
-          max(col("max").cast("long")).as("mx"))
-        .collect() // footer pass runs OUTSIDE the lock
+      val conf = spark.sessionState.newHadoopConf()
+      // footer reads run OUTSIDE the lock
+      val fetched = missing.map(f => f ->
+        graft.bitemporal.ChunkMetadata.idRange(conf, f)
+          .getOrElse((Long.MinValue, Long.MaxValue)))
       idRangeCache.synchronized {
-        fetched.foreach { r =>
-          val range = (r.getLong(1), r.getLong(2))
-          local(r.getString(0)) = range
-          idRangeCache.put(r.getString(0), range): Unit
-        }
-        missing.filterNot(local.contains).foreach { f =>
-          local(f) = (Long.MinValue, Long.MaxValue)
-          idRangeCache.put(f, (Long.MinValue, Long.MaxValue)): Unit
+        fetched.foreach { case (f, range) =>
+          local(f) = range
+          idRangeCache.put(f, range): Unit
         }
       }
     }
     parts.filter { f =>
-      val (mn, mx) = local(f); mn <= id && id <= mx
+      val (mn, mx) = local(f); ids.exists(id => mn <= id && id <= mx)
     }
   }
 
-  /** Rectangles for ONE id, from the minimal file set: an id untouched
-    * since the last compaction reads just the base files covering it
-    * (usually one — the base is `(_sys_date, _id)`-clustered); a
-    * touched id re-folds its full history from the log files covering
-    * it. Same per-id semantics as [[TxLog.readAll]]. */
-  private def entityRectangles(id: Long): DataFrame = {
-    def none = rectangles().filter(lit(false)) // schema-only, no scan
-    def foldPruned(parts: Seq[String]): DataFrame =
-      if (parts.isEmpty) none
-      else {
-        val df = TxLog.readMerged(spark, parts)
-        // schemaless edge: if the id's files predate a payload column,
-        // the pruned union lacks it — fall back to the full read where
-        // mergeSchema over the whole log supplies the type
-        if (payloadCols.forall(df.columns.contains))
-          Bitemporal.fold(df, payloadCols)
-        else rectangles()
-      }
-    if (lastCompacted < 0)
-      return foldPruned(covering(log.txFiles().map(_.toString), id))
-    val baseDir = java.nio.file.Paths.get(dir, "base").toString
-    def baseState: DataFrame = {
-      val baseParts = covering(Seq(baseDir), id)
-      if (baseParts.isEmpty)
-        log.readBase(spark).drop("_sys_date").filter(lit(false))
-      else spark.read.option("basePath", baseDir).parquet(baseParts: _*)
-        .drop("_sys_date")
-    }
-    val tailParts = covering(log.txFilesAfter(lastCompacted).map(_.toString), id)
-    if (tailParts.isEmpty) {
-      val baseParts = covering(Seq(baseDir), id)
-      if (baseParts.isEmpty) none
-      else spark.read.option("basePath", baseDir).parquet(baseParts: _*)
-        .drop("_sys_date")
-    } else {
-      // touched id: FOLD FROM STATE over the minimal file set — its
-      // covering base files are the state, its covering tail files the
-      // ops; pre-watermark log files are never read (and may be
-      // truncated away entirely, see [[vacuumLog]])
-      val ops = TxLog.readMerged(spark, tailParts)
-      val state = baseState
-      if (payloadCols.forall(c =>
-            ops.columns.contains(c) && state.columns.contains(c)))
-        Bitemporal.applyOps(state.filter(col("_id") === id),
-          ops.filter(col("_id").cast("long") === id), payloadCols)
-      else rectangles() // schema-drift edge: full path supplies types
-    }
+  /** What a point read of some ids opens: the base part files and the
+    * unapplied tail's tx part files whose footer `_id` range covers one
+    * of them. The tail (`tailTxs`) starts after the persisted base
+    * watermark when another instance compacted further, as in
+    * [[TxLog.readAll]], so no tx the base holds is applied twice. */
+  private final case class PointFiles(compacted: Long, base: Seq[String],
+                                      tail: Seq[String], tailTxs: Seq[String])
+
+  private def pointFiles(ids: Seq[Long]): PointFiles = {
+    val compacted = math.max(lastCompacted, log.baseWatermark().getOrElse(-1L))
+    val tailTxs = log.txFilesAfter(compacted).map(_.toString)
+    val base =
+      if (compacted < 0) Nil
+      else covering(Seq(java.nio.file.Paths.get(dir, "base").toString), ids)
+    PointFiles(compacted, base, covering(tailTxs, ids), tailTxs)
   }
 
-  /** The files a point read of `id` would open — the observable for
+  /** Exactly `rectangles().filter(_id IN ids)` — same columns, types and
+    * rows, each id's full bitemporal history, so any basis filter
+    * (AS OF, history) works on it — at the cost of the ids it touches,
+    * not the table's tail. The base and tail files whose footer `_id`
+    * range covers an id are read in ONE Spark job with the id filter
+    * pushed to parquet; the rows are folded on the driver with
+    * [[Bitemporal.applyOps]]'s semantics and served as a local relation.
+    * The SQL front doors bind `_id`-keyed reads and DML here (see
+    * [[BitemporalSql.sql]], [[dml]]). */
+  def rectanglesOf(ids: Seq[Long]): DataFrame = {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val want = ids.distinct
+    val files = pointFiles(want)
+    val baseSchema = if (files.compacted < 0) None else log.baseSchema(spark)
+    val tailSchema = TxLog.mergedSchema(spark, files.tailTxs)
+    val types = payloadCols.flatMap(c =>
+      (baseSchema.toSeq ++ tailSchema).flatMap(_.find(_.name == c))
+        .headOption.map(f => c -> f.dataType)).toMap
+    // the fold's output columns; once compacted, the base's order with
+    // payload columns it predates appended, as TxLog.readAll unions them
+    val foldCols = ("_id" +: payloadCols) ++
+      Seq("_valid_from", "_valid_to", "_system_from", "_system_to")
+    val order = baseSchema.filter(_ => lastCompacted >= 0)
+      .map(b => b.fieldNames.toSeq ++ payloadCols.filterNot(b.fieldNames.contains))
+      .getOrElse(foldCols)
+    // schema drift the point path can't type (a payload column no file
+    // knows, a base with other columns): the full path decides
+    if (types.size < payloadCols.size || order.sorted != foldCols.sorted)
+      return rectangles().filter(col("_id").isin(want: _*))
+    def payload(df: DataFrame) = payloadCols.map(c =>
+      (if (df.columns.contains(c)) col(c) else lit(null)).cast(types(c)).as(c))
+    val inIds = col("_id").isin(want: _*)
+    val base = Option(files.base).filter(_.nonEmpty).map(parts =>
+      spark.read.schema(baseSchema.get).parquet(parts: _*).filter(inIds))
+    val ops = Option(files.tail).filter(_.nonEmpty).map(parts =>
+      TxLog.readMerged(spark, parts).filter(inIds))
+    val reads = base.map(b => Bitemporal.pointRects(b, payload(b))) ++
+      ops.map(o => Bitemporal.pointOps(o, payload(o)))
+    val rows = reads.reduceOption(_.unionByName(_))
+      .map(_.collect().toSeq).getOrElse(Nil)
+    Bitemporal.localRectangles(spark, Bitemporal.applyOpsLocal(rows),
+        StructType(payloadCols.map(c => StructField(c, types(c)))),
+        nullable = lastCompacted >= 0)
+      .select(order.map(col): _*)
+  }
+
+  /** The files a point read of `id` opens — the observable for
     * pruning tests. */
-  private[graft] def entityScanFiles(id: Long): Seq[String] =
-    entityRectangles(id).inputFiles.toSeq
+  private[graft] def entityScanFiles(id: Long): Seq[String] = {
+    val files = pointFiles(Seq(id))
+    files.base ++ files.tail
+  }
 
   /** Valid-time history as believed at `systemTime`. */
   def history(systemTime: Timestamp): DataFrame =
@@ -453,7 +459,8 @@ final class GraftTable(spark: SparkSession, dir: String,
     graft.bitemporal.ChunkMetadata.forPaths(spark, Seq(dir))
 
   def sql(name: String, query: String): DataFrame =
-    BitemporalSql.sql(spark, query, Map(name -> rectangles()))
+    BitemporalSql.sql(spark, query, Map(name -> rectangles()),
+      Map(name -> (rectanglesOf _)))
 
   /** SQL DML (`INSERT`/`UPDATE`/`DELETE`/`ERASE`, see
     * [[BitemporalDml]]) submitted as one transaction at `systemTime`;
@@ -468,7 +475,9 @@ final class GraftTable(spark: SparkSession, dir: String,
     *  - UPDATE/DELETE/ERASE predicates and SET right-hand sides bind
     *    over the table's CURRENT state (system = valid = now); an
     *    unassigned payload column keeps its current value. FOR PORTION
-    *    OF APPLICATION_TIME limits the write's valid interval.
+    *    OF APPLICATION_TIME limits the write's valid interval. A WHERE
+    *    that pins `_id` (a top-level `_id = n` or `_id IN (…)`
+    *    conjunct) binds over those ids' state alone ([[rectanglesOf]]).
     */
   def dml(name: String, statement: String, systemTime: Timestamp): Long = {
     val ops = compileDml(name, statement, systemTime)
@@ -476,8 +485,27 @@ final class GraftTable(spark: SparkSession, dir: String,
     // in its source) — see requireDisjoint
     if (statement.trim.take(6).equalsIgnoreCase("INSERT"))
       validatedAppend(ops, systemTime) // already wraps appended()
-    else appended(log.append(ops, systemTime))
+    else appended(log.append(ops, systemTime, localRows(ops)))
   }
+
+  /** The row count of a relation the optimizer folds to a local one
+    * (DML over [[rectanglesOf]]), known on the driver without a job. */
+  private def localRows(df: DataFrame): Option[Long] =
+    df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        Some(l.data.size.toLong)
+      case _ => None
+    }
+
+  /** The ids an UPDATE/DELETE/ERASE's WHERE pins `_id` to; None for an
+    * INSERT or an unpinned WHERE. */
+  private def boundIds(statement: String): Option[Seq[Long]] =
+    BitemporalDml.parse(statement) match {
+      case BitemporalDml.Update(_, _, _, where) => BitemporalSql.boundIds(spark, where)
+      case BitemporalDml.Delete(_, _, where) => BitemporalSql.boundIds(spark, where)
+      case BitemporalDml.Erase(_, where) => BitemporalSql.boundIds(spark, where)
+      case _: BitemporalDml.Insert => None
+    }
 
   /** SEVERAL DML statements as ONE atomic transaction — the reference's
     * submit-tx shape (a tx is a VECTOR of ops; SURVEY.md §3.3): one
@@ -495,19 +523,24 @@ final class GraftTable(spark: SparkSession, dir: String,
             systemTime: Timestamp): Long = {
     require(statements.nonEmpty, "empty transaction")
     // Every UPDATE/DELETE/ERASE of the tx reads the SAME pre-tx
-    // snapshot (the documented semantics). Materialize it ONCE when
-    // two or more statements would each re-fold the whole log for it
-    // (r17, guide §2.3 "don't compute things twice"): the snapshot is
-    // the table's current state — the same relation either way, so
-    // results are unchanged; only the per-statement re-derivation goes.
-    val nReaders = statements.count(s =>
-      !s.trim.take(6).equalsIgnoreCase("INSERT"))
+    // snapshot (the documented semantics). When each of them pins
+    // `_id`, that snapshot is the current state of their ids alone, one
+    // point read. Otherwise materialize the table's current state ONCE
+    // when two or more statements would each re-fold the whole log for
+    // it (r17, guide §2.3 "don't compute things twice"). The same
+    // relation either way, so results are unchanged; only the
+    // per-statement re-derivation goes.
+    val readers = statements.filterNot(_.trim.take(6).equalsIgnoreCase("INSERT"))
+    val bound = readers.map(boundIds)
     // released once the tx commits (or fails): a table-sized checkpoint
     // per multi-statement tx would otherwise hold executor storage
     // until the context cleaner runs
     graft.bitemporal.Checkpoints.scoped { cps =>
       val snap: Option[DataFrame] =
-        if (nReaders >= 2) Some(cps.pin(current())) else None
+        if (readers.nonEmpty && bound.forall(_.isDefined))
+          Some(Bitemporal.currentState(rectanglesOf(bound.flatten.flatten)))
+        else if (readers.size >= 2) Some(cps.pin(current()))
+        else None
       val ops = statements.map(compileDml(name, _, systemTime, snap))
         .reduce(_.unionByName(_))
       validatedAppend(ops, systemTime)
@@ -520,8 +553,10 @@ final class GraftTable(spark: SparkSession, dir: String,
     * once for the validation pass and again for the append. */
   private def validatedAppend(ops: DataFrame, systemTime: Timestamp): Long = {
     val cached = ops.cache()
-    try { requireDisjoint(cached); appended(log.append(cached, systemTime)) }
-    finally { cached.unpersist(); () }
+    try {
+      val rows = requireDisjoint(cached)
+      appended(log.append(cached, systemTime, Some(rows)))
+    } finally { cached.unpersist(); () }
   }
 
   /** [[requireDisjoint]] then append via the N-way parallel bulk path
@@ -531,8 +566,8 @@ final class GraftTable(spark: SparkSession, dir: String,
                                   partitions: Int): Long = {
     val cached = ops.cache()
     try {
-      requireDisjoint(cached)
-      appended(log.appendBulk(cached, systemTime, partitions))
+      val rows = requireDisjoint(cached)
+      appended(log.appendBulk(cached, systemTime, partitions, Some(rows)))
     } finally { cached.unpersist(); () }
   }
 
@@ -662,8 +697,9 @@ final class GraftTable(spark: SparkSession, dir: String,
     * to the append's write job). Within ONE statement only INSERT can
     * produce the hazard (duplicate ids in the source); UPDATE/DELETE/
     * ERASE read from `current()`, which is disjoint per id by the fold
-    * invariant — so [[dml]] checks inserts only. */
-  private def requireDisjoint(ops: DataFrame): Unit = {
+    * invariant — so [[dml]] checks inserts only. Returns the op count,
+    * which sizes the tx file's `_id` bloom. */
+  private def requireDisjoint(ops: DataFrame): Long = {
     import org.apache.spark.sql.expressions.Window
     // One fused validation pass (optimization r16, guide §2.3
     // "aggregate before you shuffle / don't re-scan"): the pre-r16
@@ -696,7 +732,8 @@ final class GraftTable(spark: SparkSession, dir: String,
     val r = flags.agg(
       coalesce(max(col("_nullkey")), lit(false)).as("nk"),
       max(when(col("_erasemix"), col("_ids"))).as("em"),
-      max(when(col("_overlap"), col("_ids"))).as("ov")).head
+      max(when(col("_overlap"), col("_ids"))).as("ov"),
+      count(lit(1)).as("n")).head
     require(!r.getBoolean(0),
       "op with NULL _id or _valid_from — every row of a transaction " +
         "needs a non-null id and valid-from instant")
@@ -706,11 +743,14 @@ final class GraftTable(spark: SparkSession, dir: String,
     require(r.isNullAt(2),
       s"transaction writes overlapping valid intervals for _id ${r.getString(2)} — " +
         "use disjoint FOR PORTION OF intervals or separate transactions")
+    r.getLong(3)
   }
 
   /** One statement -> its tx-log op rows (not yet appended).
     * `snapshot` optionally supplies an already-materialized pre-tx
-    * current state shared across a transaction's statements. */
+    * current state shared across a transaction's statements; without
+    * it an `_id`-pinned WHERE reads its ids' state ([[rectanglesOf]]),
+    * any other the table's. */
   private def compileDml(name: String, statement: String,
                          systemTime: Timestamp,
                          snapshot: Option[DataFrame] = None): DataFrame = {
@@ -725,6 +765,10 @@ final class GraftTable(spark: SparkSession, dir: String,
     }
     def nullPayload(df: DataFrame): Seq[(String, Column)] =
       payloadCols.map(c => c -> lit(null).cast(df.schema(c).dataType))
+    def matching(where: String): DataFrame = snapshot.getOrElse(
+      BitemporalSql.boundIds(spark, where)
+        .fold(current())(ids => Bitemporal.currentState(rectanglesOf(ids))))
+      .filter(expr(where))
     stmt match {
       case Insert(_, cols, source) =>
         val bad = cols.filterNot(c =>
@@ -760,7 +804,7 @@ final class GraftTable(spark: SparkSession, dir: String,
                 else lit(null).cast(knownTypes(c)))
         })
       case Update(_, portion, sets, where) =>
-        val rows = snapshot.getOrElse(current()).filter(expr(where))
+        val rows = matching(where)
         val (vf, vt) = interval(portion)
         val payload = payloadCols.map { c =>
           c -> sets.collectFirst { case (n, rhs) if n == c => expr(rhs) }
@@ -770,11 +814,11 @@ final class GraftTable(spark: SparkSession, dir: String,
         require(unknown.isEmpty, s"SET of non-payload column: ${unknown.mkString(", ")}")
         TxOps.put(rows, col("_id"), vf, vt, payload)
       case Delete(_, portion, where) =>
-        val rows = snapshot.getOrElse(current()).filter(expr(where))
+        val rows = matching(where)
         val (vf, vt) = interval(portion)
         TxOps.delete(rows, col("_id"), vf, vt, nullPayload(rows))
       case Erase(_, where) =>
-        val rows = snapshot.getOrElse(current()).filter(expr(where))
+        val rows = matching(where)
         TxOps.erase(rows, col("_id"), nullPayload(rows))
     }
   }

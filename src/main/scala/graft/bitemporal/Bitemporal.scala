@@ -59,7 +59,7 @@ object Bitemporal {
   // NTZ↔TZ casts here are value-preserving
   private def micros(c: Column): Column = unix_micros(c.cast("timestamp"))
 
-  private def prep(ops: DataFrame, payloadCols: Seq[String]): DataFrame =
+  private def prep(ops: DataFrame, payload: Seq[Column]): DataFrame =
     ops.select(
       col("_id").cast("long").as("_id"),
       col("_op").as("_op"),
@@ -67,7 +67,7 @@ object Bitemporal {
       micros(col("_system_from")).as("_sys"),
       micros(col("_valid_from")).as("_vf"),
       coalesce(micros(col("_valid_to")), lit(SentinelMicros)).as("_vt"),
-      struct(payloadCols.map(col): _*).as("_p"))
+      struct(payload: _*).as("_p"))
 
   private def ntz(c: Column): Column = timestamp_micros(c).cast("timestamp_ntz")
 
@@ -91,53 +91,61 @@ object Bitemporal {
     * `system_to = sentinel`.
     */
   def fold(ops: DataFrame, payloadCols: Seq[String]): DataFrame = {
-    val p = prep(ops, payloadCols)
+    val p = prep(ops, payloadCols.map(col))
     val spark = p.sparkSession
     import spark.implicits._
-    val payloadType = p.schema("_p").dataType
-    val outSchema = StructType(Seq(
-      StructField("_id", LongType, nullable = false),
-      StructField("_p", payloadType),
-      StructField("_vf", LongType, nullable = false),
-      StructField("_vt", LongType, nullable = false),
-      StructField("_sf", LongType, nullable = false),
-      StructField("_st", LongType, nullable = false)))
+    p.groupByKey(_.getLong(0))
+      .flatMapSortedGroups($"_sys", $"_tx")((id: Long, it: Iterator[Row]) =>
+        foldId(id, it))(Encoders.row(foldedSchema(p.schema("_p").dataType)))
+      .transform(unpack)
+  }
 
-    final case class Seg(vf: Long, vt: Long, p: Row, sf: Long)
+  /** [[fold]]'s per-group output: `(_id, _p, _vf, _vt, _sf, _st)`, the
+    * four instants in epoch micros. */
+  private def foldedSchema(payloadType: DataType): StructType = StructType(Seq(
+    StructField("_id", LongType, nullable = false),
+    StructField("_p", payloadType),
+    StructField("_vf", LongType, nullable = false),
+    StructField("_vt", LongType, nullable = false),
+    StructField("_sf", LongType, nullable = false),
+    StructField("_st", LongType, nullable = false)))
 
-    val folded = p.groupByKey(_.getLong(0))
-      .flatMapSortedGroups($"_sys", $"_tx") { (id: Long, it: Iterator[Row]) =>
-        val emitted = scala.collection.mutable.ArrayBuffer.empty[Row]
-        var segs = List.empty[Seg]
-        it.foreach { r =>
-          val op = r.getString(1)
-          val sys = r.getLong(3)
-          val pf = r.getLong(4)
-          val pt = r.getLong(5)
-          op match {
-            case Erase =>
-              // erase drops the id's full history, including already
-              // emitted rectangles — the single physically-destructive op
-              emitted.clear(); segs = Nil
-            case _ if pf >= pt => // empty portion: no-op
-            case _ =>
-              val (hit, keep) = segs.partition(s => s.vf < pt && pf < s.vt)
-              var next = keep
-              hit.foreach { s =>
-                // close the whole segment's system version at `sys`...
-                if (sys > s.sf) emitted += Row(id, s.p, s.vf, s.vt, s.sf, sys)
-                // ...and re-open the valid-time remnants outside [pf, pt)
-                if (s.vf < pf) next ::= Seg(s.vf, pf, s.p, sys)
-                if (s.vt > pt) next ::= Seg(pt, s.vt, s.p, sys)
-              }
-              if (op == Put) next ::= Seg(pf, pt, r.getStruct(6), sys)
-              segs = next
+  private final case class Seg(vf: Long, vt: Long, p: Row, sf: Long)
+
+  /** The fold of ONE id: its ops in [[prep]]'s row layout, sorted by
+    * `(_sys, _tx)`, to its rectangles in [[foldedSchema]]'s layout. The
+    * distributed [[fold]] runs it per sorted group; the driver-side
+    * point path ([[applyOpsLocal]]) runs it on one id's collected rows. */
+  private def foldId(id: Long, it: Iterator[Row]): Seq[Row] = {
+    val emitted = scala.collection.mutable.ArrayBuffer.empty[Row]
+    var segs = List.empty[Seg]
+    it.foreach { r =>
+      val op = r.getString(1)
+      val sys = r.getLong(3)
+      val pf = r.getLong(4)
+      val pt = r.getLong(5)
+      op match {
+        case Erase =>
+          // erase drops the id's full history, including already
+          // emitted rectangles — the single physically-destructive op
+          emitted.clear(); segs = Nil
+        case _ if pf >= pt => // empty portion: no-op
+        case _ =>
+          val (hit, keep) = segs.partition(s => s.vf < pt && pf < s.vt)
+          var next = keep
+          hit.foreach { s =>
+            // close the whole segment's system version at `sys`...
+            if (sys > s.sf) emitted += Row(id, s.p, s.vf, s.vt, s.sf, sys)
+            // ...and re-open the valid-time remnants outside [pf, pt)
+            if (s.vf < pf) next ::= Seg(s.vf, pf, s.p, sys)
+            if (s.vt > pt) next ::= Seg(pt, s.vt, s.p, sys)
           }
-        }
-        segs.foreach(s => emitted += Row(id, s.p, s.vf, s.vt, s.sf, SentinelMicros))
-        emitted
-      }(Encoders.row(outSchema))
-    unpack(folded)
+          if (op == Put) next ::= Seg(pf, pt, r.getStruct(6), sys)
+          segs = next
+      }
+    }
+    segs.foreach(s => emitted += Row(id, s.p, s.vf, s.vt, s.sf, SentinelMicros))
+    emitted.toSeq
   }
 
   /** Append-only fold — the scalable special case: every op's valid
@@ -159,7 +167,7 @@ object Bitemporal {
     // erases, valid-to widened to the sentinel). Validate distributed:
     // assert_true raises on the first violating row, coalesce(NULL,true)
     // keeps the filter transparent otherwise.
-    val p = prep(ops, payloadCols)
+    val p = prep(ops, payloadCols.map(col))
       .filter(coalesce(assert_true(
         col("_op") =!= Erase && col("_vt") === SentinelMicros,
         lit("foldAppendOnly contract: no erase ops, unbounded valid-to " +
@@ -327,6 +335,62 @@ object Bitemporal {
     closed.join(erased, Seq("_id"), "left_anti")
       .select(refolded.columns.map(col): _*)
       .unionByName(refolded)
+  }
+
+  // ---- the driver-side point path: [[applyOps]] over a few ids ----
+
+  /** Ops in the point path's collected layout: [[prep]]'s columns plus
+    * a NULL `_st`. `payload` are the payload columns, typed and aliased. */
+  private[graft] def pointOps(ops: DataFrame, payload: Seq[Column]): DataFrame =
+    prep(ops, payload).withColumn("_st", lit(null).cast("long"))
+
+  /** Rectangles in the point path's collected layout: a NULL `_op` and
+    * `_tx`, the four instants in micros (`_system_from` as `_sys`,
+    * `_system_to` as `_st`). Union-compatible with [[pointOps]]. */
+  private[graft] def pointRects(rects: DataFrame, payload: Seq[Column]): DataFrame =
+    rects.select(
+      col("_id").cast("long").as("_id"),
+      lit(null).cast("string").as("_op"),
+      lit(null).cast("long").as("_tx"),
+      micros(col("_system_from")).as("_sys"),
+      micros(col("_valid_from")).as("_vf"),
+      micros(col("_valid_to")).as("_vt"),
+      struct(payload: _*).as("_p"),
+      micros(col("_system_to")).as("_st"))
+
+  /** [[applyOps]] on the driver, over collected [[pointRects]] and
+    * [[pointOps]] rows of a few ids; returns their rectangles in
+    * [[foldedSchema]]'s layout. Same per-id semantics: an id without
+    * ops keeps its rectangles; otherwise its closed rectangles pass
+    * through unless an op erases the id, its open ones re-enter as
+    * pseudo-puts at tx −1, and [[foldId]] folds them with the ops in
+    * `(_sys, _tx)` order. */
+  private[graft] def applyOpsLocal(rows: Seq[Row]): Seq[Row] =
+    rows.groupBy(_.getLong(0)).toSeq.sortBy(_._1).flatMap { case (id, rs) =>
+      val (rects, ops) = rs.partition(_.isNullAt(1))
+      def folded(r: Row) =
+        Row(id, r.get(6), r.getLong(4), r.getLong(5), r.getLong(3), r.getLong(7))
+      if (ops.isEmpty) rects.map(folded)
+      else {
+        val (open, closed) = rects.partition(_.getLong(7) == SentinelMicros)
+        val kept =
+          if (ops.exists(_.getString(1) == Erase)) Nil else closed.map(folded)
+        val pseudo = open.map(r =>
+          Row(id, Put, -1L, r.getLong(3), r.getLong(4), r.getLong(5), r.get(6)))
+        kept ++ foldId(id,
+          (pseudo ++ ops).sortBy(r => (r.getLong(3), r.getLong(2))).iterator)
+      }
+    }
+
+  /** [[applyOpsLocal]]'s rows as a local relation with [[fold]]'s output
+    * columns. `nullable` makes every column nullable, as [[fold]]'s
+    * output becomes in a union with a parquet read. */
+  private[graft] def localRectangles(spark: org.apache.spark.sql.SparkSession,
+      rows: Seq[Row], payloadType: StructType, nullable: Boolean): DataFrame = {
+    val sc = foldedSchema(payloadType)
+    import scala.jdk.CollectionConverters._
+    unpack(spark.createDataFrame(rows.asJava,
+      if (nullable) StructType(sc.fields.map(_.copy(nullable = true))) else sc))
   }
 
   /** KEYLESS interval overlap join — the range-join shape open-source

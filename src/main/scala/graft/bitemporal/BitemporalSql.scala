@@ -100,12 +100,19 @@ object BitemporalSql {
     * and each substituted relation keeps its original name as its
     * correlation alias, so `SELECT prices.price FROM prices` works.
     * No temp views are created: nothing in the session catalog is
-    * touched or clobbered. */
+    * touched or clobbered.
+    *
+    * `points` gives a table's point path (`ids => rectangles of those
+    * ids`, e.g. [[graft.GraftTable.rectanglesOf]]): a reference to it
+    * directly under a WHERE whose top-level conjunct binds `_id`
+    * ([[boundIds]]) reads only those ids' rectangles — same answer,
+    * cost of the ids, not the table. */
   def sql(spark: SparkSession, query: String,
-          tables: Map[String, DataFrame]): DataFrame = {
+          tables: Map[String, DataFrame],
+          points: Map[String, Seq[Long] => DataFrame] = Map.empty): DataFrame = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
     import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
-    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias, UnresolvedWith}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, SubqueryAlias, UnresolvedWith}
     import org.apache.spark.sql.graftbridge.PlanBridge
 
     // stage 0: SQL:2011 period predicates (OVERLAPS/CONTAINS/...)
@@ -123,8 +130,9 @@ object BitemporalSql {
     // inside `-- a comment` or a `"SYSTEM_TIME"` identifier never
     // triggers the rewrite.
     val spans = SqlText.maskedSpans(query0)
-    val placeholders = scala.collection.mutable.Map
-      .empty[String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
+    // placeholder -> (table as written, valid spec, system spec); the
+    // relation binds in stage 2, where its WHERE is known
+    val placeholders = scala.collection.mutable.Map.empty[String, (String, Spec, Spec)]
     val m = tableWithClauses.matcher(query0)
     val sb = new StringBuffer
     while (m.find()) {
@@ -133,7 +141,7 @@ object BitemporalSql {
       val replacement = tables.get(table) match {
         case _ if inLiteral => m.group(0) // inside a quoted literal: verbatim
         case None => m.group(0) // not ours: pass through verbatim
-        case Some(rects) =>
+        case Some(_) =>
           var sys: Option[Spec] = None
           var valid: Option[Spec] = None
           val cm = onePeriod.matcher(m.group(2))
@@ -144,8 +152,7 @@ object BitemporalSql {
           }
           def orNow(o: Option[Spec]) = o.getOrElse(AsOf(current_timestamp()))
           val ph = s"graft_temporal_${viewId.incrementAndGet()}"
-          placeholders(ph) = SubqueryAlias(table, PlanBridge.logicalPlan(
-            filtered(rects, orNow(valid), orNow(sys))))
+          placeholders(ph) = (table, orNow(valid), orNow(sys))
           ph
       }
       m.appendReplacement(sb,
@@ -161,6 +168,27 @@ object BitemporalSql {
     // rectangle table where the user's CTE should resolve. Substitution
     // happens pre-analysis, so this scoping must be done by hand.
     val byLower = tables.map { case (k, v) => k.toLowerCase -> ((k, v)) }
+    // a placeholder or registered name -> its relation; `ids` binds it
+    // to the table's point path when it has one
+    def bind(ident: String, shadowed: Set[String],
+             ids: Option[Seq[Long]]): Option[LogicalPlan] = {
+      def rects(name: String) =
+        ids.flatMap(i => points.get(name).map(_(i))).getOrElse(tables(name))
+      placeholders.get(ident).map { case (table, valid, sys) =>
+        SubqueryAlias(table,
+          PlanBridge.logicalPlan(filtered(rects(table), valid, sys)))
+      }.orElse {
+        if (shadowed.contains(ident.toLowerCase)) None
+        else byLower.get(ident.toLowerCase).map { case (name, _) =>
+          SubqueryAlias(name,
+            PlanBridge.logicalPlan(Bitemporal.currentState(rects(name))))
+        }
+      }
+    }
+    def spliceSubqueries(plan: LogicalPlan, shadowed: Set[String]) =
+      plan.transformExpressionsUp {
+        case se: SubqueryExpression => se.withNewPlan(splice(se.plan, shadowed))
+      }
     def splice(plan: LogicalPlan, shadowed: Set[String]): LogicalPlan =
       plan match {
         case w: UnresolvedWith =>
@@ -173,15 +201,13 @@ object BitemporalSql {
               (n, splice(sa, inner).asInstanceOf[SubqueryAlias], lim)
             },
             child = splice(w.child, inner))
+        // a point read: `_id`-bound WHERE directly over the relation
+        case f @ Filter(cond, u: UnresolvedRelation) if u.multipartIdentifier.size == 1 =>
+          spliceSubqueries(f.copy(child =
+            bind(u.multipartIdentifier.head, shadowed, boundIds(cond)).getOrElse(u)),
+            shadowed)
         case u: UnresolvedRelation if u.multipartIdentifier.size == 1 =>
-          val ident = u.multipartIdentifier.head
-          placeholders.get(ident).orElse {
-            if (shadowed.contains(ident.toLowerCase)) None
-            else byLower.get(ident.toLowerCase).map { case (name, rects) =>
-              SubqueryAlias(name,
-                PlanBridge.logicalPlan(Bitemporal.currentState(rects)))
-            }
-          }.getOrElse(u)
+          bind(u.multipartIdentifier.head, shadowed, None).getOrElse(u)
         // Spark's NATIVE time-travel spelling (`t TIMESTAMP AS OF ts`,
         // the one temporal clause Spark 4's grammar parses itself)
         // resolved at the PLAN level for registered tables: system time
@@ -202,13 +228,47 @@ object BitemporalSql {
                 }
             case _ => None
           }).getOrElse(tt)
-        case other =>
-          other.mapChildren(splice(_, shadowed))
-            .transformExpressionsUp {
-              case se: SubqueryExpression =>
-                se.withNewPlan(splice(se.plan, shadowed))
-            }
+        case other => spliceSubqueries(other.mapChildren(splice(_, shadowed)), shadowed)
       }
     PlanBridge.ofRows(spark, splice(PlanBridge.parsePlan(spark, rewritten), Set.empty))
   }
+
+  /** The ids a predicate pins `_id` to: a top-level conjunct
+    * `_id = <integral literal>` or `_id IN (<integral literals>)`, the
+    * first one found. None for any other shape (casts, parameters,
+    * qualified names, OR) — those read the whole relation. */
+  private[graft] def boundIds(
+      cond: org.apache.spark.sql.catalyst.expressions.Expression): Option[Seq[Long]] = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, In, Literal}
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    def isId(e: Expression) = e match {
+      case a: UnresolvedAttribute =>
+        a.nameParts.size == 1 && a.nameParts.head.equalsIgnoreCase("_id")
+      case _ => false
+    }
+    def integral(e: Expression): Option[Long] = e match {
+      case Literal(v: Number, IntegerType | LongType | ShortType | ByteType) =>
+        Some(v.longValue)
+      case _ => None
+    }
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    conjuncts(cond).iterator.map {
+      case EqualTo(a, v) if isId(a) => integral(v).map(Seq(_))
+      case EqualTo(v, a) if isId(a) => integral(v).map(Seq(_))
+      case In(a, vs) if isId(a) && vs.nonEmpty =>
+        val ls = vs.flatMap(integral)
+        if (ls.size == vs.size) Some(ls) else None
+      case _ => None
+    }.collectFirst { case Some(ids) => ids }
+  }
+
+  /** [[boundIds]] of a SQL predicate's text (a DML WHERE); None when it
+    * does not parse, so the statement's own compile reports the error. */
+  private[graft] def boundIds(spark: SparkSession, where: String): Option[Seq[Long]] =
+    scala.util.Try(spark.sessionState.sqlParser.parseExpression(where))
+      .toOption.flatMap(boundIds)
 }

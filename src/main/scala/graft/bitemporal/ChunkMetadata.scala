@@ -98,6 +98,38 @@ object ChunkMetadata {
     spark.createDataFrame(rows, schema)
   }
 
+  /** One file's `_id` (min, max) over all its row groups, read on the
+    * driver from the footer alone — the point path's file pruning needs
+    * a handful of footers, not a Spark job. A file with no row groups
+    * covers no id: `(Long.MaxValue, Long.MinValue)`. None when a row
+    * group lacks integral `_id` stats (never prune on absent evidence). */
+  def idRange(conf: org.apache.hadoop.conf.Configuration,
+              file: String): Option[(Long, Long)] = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file), conf)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try {
+      import scala.jdk.CollectionConverters._
+      def integral(v: Any): Option[Long] = v match {
+        case n: java.lang.Long => Some(n.longValue)
+        case n: java.lang.Integer => Some(n.longValue)
+        case _ => None
+      }
+      r.getFooter.getBlocks.asScala.foldLeft(
+          Option((Long.MaxValue, Long.MinValue))) { (acc, block) =>
+        if (block.getRowCount == 0) acc
+        else for {
+          (mn, mx) <- acc
+          c <- block.getColumns.asScala.find(_.getPath.toDotString == "_id")
+          st = c.getStatistics
+          if st != null && !st.isEmpty && st.hasNonNullValue
+          lo <- integral(st.genericGetMin)
+          hi <- integral(st.genericGetMax)
+        } yield (math.min(mn, lo), math.max(mx, hi))
+      }
+    } finally r.close()
+  }
+
   private def listParquet(fs: org.apache.hadoop.fs.FileSystem,
                           p: org.apache.hadoop.fs.Path): Seq[String] = {
     val st = fs.getFileStatus(p)

@@ -135,9 +135,12 @@ final class TxLog(val dir: String) {
     * One task per tx (`coalesce(1)`) — right for the OLTP-ish tail of
     * small transactions, where one part file per tx avoids a tiny-file
     * explosion. For large ingests use [[appendBulk]]: same monotonic tx
-    * semantics, N-way parallel write. */
-  def append(ops: DataFrame, systemTime: java.sql.Timestamp): Long =
-    appendShaped(ops.coalesce(1), systemTime)
+    * semantics, N-way parallel write. `rows`, when the caller already
+    * knows the op count, sizes the `_id` bloom to it (see
+    * [[TxLog.bloomSized]]). */
+  def append(ops: DataFrame, systemTime: java.sql.Timestamp,
+             rows: Option[Long] = None): Long =
+    appendShaped(ops.coalesce(1), systemTime, rows)
 
   /** Bulk-load append: ONE transaction (one monotonic `_tx_id`, one
     * `_system_from`, one atomically-visible directory) written by
@@ -149,12 +152,12 @@ final class TxLog(val dir: String) {
     * incoming partitioning (no extra shuffle — the right call when the
     * load is already well-partitioned). */
   def appendBulk(ops: DataFrame, systemTime: java.sql.Timestamp,
-                 partitions: Int = 0): Long =
+                 partitions: Int = 0, rows: Option[Long] = None): Long =
     appendShaped(if (partitions > 0) ops.repartition(partitions) else ops,
-      systemTime)
+      systemTime, rows)
 
-  private def appendShaped(ops: DataFrame,
-                           systemTime: java.sql.Timestamp): Long =
+  private def appendShaped(ops: DataFrame, systemTime: java.sql.Timestamp,
+                           rows: Option[Long]): Long =
     appendLock.synchronized {
       // Atomic id claim, safe even against writers OUTSIDE this JVM:
       // POSIX mkdir fails with EEXIST if the directory exists, so the
@@ -175,19 +178,19 @@ final class TxLog(val dir: String) {
         try { claimed = Files.createDirectory(target) }
         catch { case _: java.nio.file.FileAlreadyExistsException => txId += 1 }
       }
-      ops.withColumn("_tx_id", lit(txId))
+      // append INTO the claimed (empty) directory: the commit protocol
+      // moves part files in, then `_SUCCESS` makes the tx visible to
+      // txFiles(); overwrite would delete the claim marker first.
+      //
+      // tx files are ordered by ARRIVAL, not id, so `_id = x` point reads
+      // (entity(), incremental refold) can't skip them on min/max stats
+      // the way the range-clustered base does. A per-row-group bloom on
+      // `_id` restores the skip — the analog of the reference's per-chunk
+      // bloom filters (xtdb/core2 `core2.bloom`): footer check, no data
+      // pages read for row groups that can't contain the id.
+      TxLog.bloomSized(ops.withColumn("_tx_id", lit(txId))
         .withColumn("_system_from", lit(systemTime))
-        // append INTO the claimed (empty) directory: the commit protocol
-        // moves part files in, then `_SUCCESS` makes the tx visible to
-        // txFiles(); overwrite would delete the claim marker first.
-        .write.mode("append")
-        // tx files are ordered by ARRIVAL, not id, so `_id = x` point reads
-        // (entity(), incremental refold) can't skip them on min/max stats
-        // the way the range-clustered base does. A per-row-group bloom on
-        // `_id` restores the skip — the analog of the reference's per-chunk
-        // bloom filters (xtdb/core2 `core2.bloom`): footer check, no data
-        // pages read for row groups that can't contain the id.
-        .option("parquet.bloom.filter.enabled#_id", "true")
+        .write.mode("append"), rows)
         .parquet(claimed.toString)
       txId
     }
@@ -285,12 +288,12 @@ final class TxLog(val dir: String) {
               (col("_sys_date") +: cs.map(col)) :+ col("_id"): _*)
             .sortWithinPartitions("_sys_date", cs :+ "_id": _*)
     }
-    clustered.write.mode("overwrite").partitionBy("_sys_date")
-      // belt over the min/max braces: clustering gives tight per-group
-      // id ranges, but a sparse id space leaves gaps INSIDE a range that
-      // stats can't see; the bloom rejects those too (core2.bloom kept
-      // one per chunk for the same reason)
-      .option("parquet.bloom.filter.enabled#_id", "true")
+    // belt over the min/max braces: clustering gives tight per-group
+    // id ranges, but a sparse id space leaves gaps INSIDE a range that
+    // stats can't see; the bloom rejects those too (core2.bloom kept
+    // one per chunk for the same reason)
+    TxLog.bloomSized(
+        clustered.write.mode("overwrite").partitionBy("_sys_date"), None)
       .parquet(target.toString)
   }
 
@@ -352,7 +355,10 @@ final class TxLog(val dir: String) {
     val touched = tail.select(col("_id").cast("long").as("_id")).distinct()
     val base = readBase(spark).drop("_sys_date")
     val untouched = base.join(touched, Seq("_id"), "left_anti")
-    untouched.unionByName(refoldTouched(spark, payloadCols, touched, tail, base))
+    // a payload column the base predates is NULL on its untouched rows,
+    // appended last as the log's merged schema appends it
+    untouched.unionByName(refoldTouched(spark, payloadCols, touched, tail, base),
+      allowMissingColumns = true)
   }
 
   /** Touched ids' new rectangles via FOLD FROM STATE
@@ -440,7 +446,8 @@ final class TxLog(val dir: String) {
         .join(touched, Seq("_id"), "left_anti")
       val tmp = Paths.get(dir, "base_tmp")
       TxLog.deleteRecursively(tmp.toFile)
-      writeBase(untouchedInAffected.unionByName(refolded), tmp, clusterBy)
+      writeBase(untouchedInAffected.unionByName(refolded, allowMissingColumns = true),
+        tmp, clusterBy)
       affected.foreach { d =>
         val name = s"_sys_date=$d"
         val dst = baseDir.resolve(name)
@@ -494,7 +501,20 @@ final class TxLog(val dir: String) {
     * date(systemTime)` — the Spark-native replacement for the
     * reference's temporal index (SURVEY.md §1.4). */
   def readBase(spark: SparkSession): DataFrame =
-    spark.read.parquet(baseDir.toString)
+    baseSchema(spark) match {
+      case Some(data) => spark.read
+        .schema(data.add("_sys_date", org.apache.spark.sql.types.DateType))
+        .parquet(baseDir.toString)
+      case None => spark.read.parquet(baseDir.toString)
+    }
+
+  /** The base's data schema (no `_sys_date`): its part files' cached
+    * footer schemas merged driver-side, as [[TxLog.readMerged]] merges —
+    * so [[readBase]] runs no schema-inference job. None when there is no
+    * base, it has no part files, or a footer lacks Spark's schema. */
+  def baseSchema(spark: SparkSession): Option[org.apache.spark.sql.types.StructType] =
+    if (!Files.exists(baseDir)) None
+    else TxLog.mergedSchema(spark, ChunkMetadata.files(spark, Seq(baseDir.toString)))
 }
 
 object TxLog {
@@ -606,18 +626,33 @@ object TxLog {
     * like mergeSchema merges. Falls back to the legacy
     * `mergeSchema=true` read when a footer lacks the serialized schema
     * or every path is part-less. */
-  def readMerged(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    def legacy = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    footerMeta(spark, paths) match {
-      case Some(metas) =>
-        val schemas = metas.map(_._1).filter(_.nonEmpty)
-        if (schemas.isEmpty) legacy
-        else {
-          val merged = schemas.reduce(
-            org.apache.spark.sql.graftbridge.SchemaBridge.merge)
-          spark.read.schema(merged).parquet(paths: _*)
-        }
-      case None => legacy
+  def readMerged(spark: SparkSession, paths: Seq[String]): DataFrame =
+    mergedSchema(spark, paths) match {
+      case Some(merged) => spark.read.schema(merged).parquet(paths: _*)
+      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    }
+
+  /** The schema [[readMerged]] reads `paths` with, from cached footers:
+    * None when a footer lacks Spark's serialized schema or every path is
+    * part-less. */
+  def mergedSchema(spark: SparkSession, paths: Seq[String])
+      : Option[org.apache.spark.sql.types.StructType] =
+    footerMeta(spark, paths).flatMap(metas =>
+      metas.map(_._1).filter(_.nonEmpty)
+        .reduceOption(org.apache.spark.sql.graftbridge.SchemaBridge.merge))
+
+  /** Size the `_id` bloom of a log or base write. A known row count
+    * bounds the id count, so the filter is sized to it: a one-row tx
+    * file is ~1 KB, not the ~1 MiB parquet-mr allocates by default (its
+    * `max.bytes`). Without a count the adaptive filter picks among
+    * candidate sizes by the ids actually written. */
+  private def bloomSized(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row],
+      rows: Option[Long]): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
+    val bloom = w.option("parquet.bloom.filter.enabled#_id", "true")
+    rows match {
+      case Some(n) =>
+        bloom.option("parquet.bloom.filter.expected.ndv#_id", math.max(n, 1L))
+      case None => bloom.option("parquet.bloom.filter.adaptive.enabled", "true")
     }
   }
 

@@ -675,7 +675,7 @@ object GraftPgWire {
         s"bind message has ${p.resFormats.size} result formats " +
           s"but query has ${p.width} columns")
       if (p.resFormats.forall(_ == 0))
-        p.rows = textProjection(df).toLocalIterator()
+        p.rows = rowsOf(textProjection(df))
       else {
         // mixed projection: text columns render executor-side as before;
         // binary columns keep native values (complex → json text, whose
@@ -1242,6 +1242,16 @@ object GraftPgWire {
     case _ => c.cast("string")
   }
 
+  /** A result's rows, partition-at-a-time via toLocalIterator — except
+    * rows the plan already holds on the driver (a local relation: a DML
+    * statement's tx id, a point read's rectangles), which need no job. */
+  private def rowsOf(df: DataFrame): java.util.Iterator[org.apache.spark.sql.Row] =
+    df.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        df.collectAsList().iterator()
+      case _ => df.toLocalIterator()
+    }
+
   /** Every column rendered to its PG text form, executor-side. */
   private def textProjection(df: DataFrame): DataFrame = {
     val cols = df.schema.fields.map(f =>
@@ -1273,10 +1283,9 @@ object GraftPgWire {
       }
     })
 
-  /** Stream every row as a DataRow; returns the row count. Partition-
-    * at-a-time via toLocalIterator — no collect. */
+  /** Stream every row as a DataRow ([[rowsOf]]); returns the row count. */
   private def streamRows(out: DataOutputStream, df: DataFrame): Long = {
-    val it = textProjection(df).toLocalIterator()
+    val it = rowsOf(textProjection(df))
     var n = 0L
     val width = df.schema.length
     while (it.hasNext) {

@@ -207,7 +207,8 @@ final class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
     } else {
       GraftSqlParser.inRewrite.set(true)
       try PlanBridge.logicalPlan(BitemporalSql.sql(session, sqlText,
-        referenced.map(n => n -> tables(n).rectangles()).toMap))
+        referenced.map(n => n -> tables(n).rectangles()).toMap,
+        referenced.map(n => n -> (tables(n).rectanglesOf _)).toMap))
       finally GraftSqlParser.inRewrite.set(false)
     }
   }
