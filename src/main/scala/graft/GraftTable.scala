@@ -27,12 +27,11 @@ final class GraftTable(spark: SparkSession, dir: String,
   require(clusterBy.forall(c => payloadCols.contains(c) || c == "_id"),
     s"clusterBy columns $clusterBy must be payload columns (or _id)")
   private val log = new TxLog(dir)
-  // recover the compaction watermark persisted with the base: a fresh
-  // instance serves untouched ids from the base instead of re-folding
-  // the whole log — and for a truncated log (whose prefix lives ONLY in
-  // the base) this is the correctness requirement, not an optimization
-  private var lastCompacted: Long =
-    log.baseWatermark().orElse(log.truncatedUpTo()).getOrElse(-1L)
+  // Where the base ends and the live tail begins is always read from the
+  // PERSISTED base watermark, never cached: another instance over this
+  // directory may have compacted, or truncated the log (whose prefix then
+  // lives ONLY in the base), since this one last looked.
+  private def compacted: Long = log.baseWatermark().getOrElse(-1L)
 
   /** Opt-in compaction policy (`autoCompactEvery` = N > 0): after a
     * write lands, compact when the unapplied tail reaches N
@@ -44,7 +43,7 @@ final class GraftTable(spark: SparkSession, dir: String,
     * the end, not every N txs. */
   private def maybeAutoCompact(): Unit =
     if (autoCompactEvery > 0 &&
-      log.txFilesAfter(lastCompacted).size >= autoCompactEvery) compact()
+      log.txFilesAfter(compacted).size >= autoCompactEvery) compact()
 
   private def appended[A](txId: A): A = { maybeAutoCompact(); txId }
 
@@ -105,7 +104,7 @@ final class GraftTable(spark: SparkSession, dir: String,
     * FACT side joined to `dim` on `fkCol = dim._id`, COUNT/SUM per
     * `groupCol` (a payload column of either table) at the fixed basis
     * `validAt` — the Δ(A⋈B) IVM rules over both tx logs' tails; see
-    * [[graft.bitemporal.JoinMatview]] for semantics and cost model. */
+    * [[graft.bitemporal.Matview]] for semantics and cost model. */
   def joinMatview(name: String, dim: GraftTable, fkCol: String,
                   groupCol: String, sumCols: Seq[String],
                   validAt: Timestamp,
@@ -154,13 +153,10 @@ final class GraftTable(spark: SparkSession, dir: String,
                   bucketCols: Seq[String] = Nil)
       : graft.bitemporal.JoinMatview = {
     require(dims.nonEmpty, "at least one dimension table")
-    new graft.bitemporal.JoinMatview(spark, log, payloadCols,
-      dims.head._1.log, dims.head._1.payloadColumns,
-      java.nio.file.Paths.get(dir, "join_matview", name),
-      dims.head._2, groupCols, sumCols, validAt, nBuckets, minCols, maxCols,
-      cntCols, where, derived,
-      dims.tail.map(d => (d._1.log, d._1.payloadColumns, d._2)),
-      distincts, bucketCols, hllCols, rangeLayout, leftJoins, pcts)
+    viewAt(java.nio.file.Paths.get(dir, "join_matview", name), dims,
+      groupCols, validAt, nBuckets, sumCols, minCols, maxCols, cntCols,
+      where, derived, distincts, hllCols, rangeLayout, leftJoins, pcts,
+      bucketCols)
   }
 
   /** An incrementally-maintained COUNT/SUM view over this table at a
@@ -190,44 +186,45 @@ final class GraftTable(spark: SparkSession, dir: String,
                pcts: Seq[graft.bitemporal.MvPct] = Nil,
                bucketCols: Seq[String] = Nil)
       : graft.bitemporal.Matview =
-    new graft.bitemporal.Matview(spark, log,
-      java.nio.file.Paths.get(dir, "matview", name), payloadCols,
-      groupCols, sumCols, validAt, nBuckets, minCols, maxCols, cntCols,
-      where, derived, distincts, bucketCols, hllCols, rangeLayout, pcts)
+    viewAt(java.nio.file.Paths.get(dir, "matview", name), Nil, groupCols,
+      validAt, nBuckets, sumCols, minCols, maxCols, cntCols, where,
+      derived, distincts, hllCols, rangeLayout, pcts = pcts,
+      bucketCols = bucketCols)
 
-  /** [[matviewN]] with an EXPLICIT state dir and COUNT(*)-only state —
-    * the DISTINCT-aggregate serve path nests its auxiliary pair-level
-    * views (group key = the view's groups plus the distinct argument)
-    * INSIDE the main view's state dir, so DROP / failure cleanup /
-    * RESTORE handle the whole tree as one. `bucketCols` buckets the
-    * pair state on the PARENT view's group prefix (same bucket count),
-    * so the parent's rollup scan partition-prunes — [[MvDistinct]]. */
-  private[graft] def matviewAt(stateRoot: java.nio.file.Path,
-      groupCols: Seq[String], validAt: Timestamp, nBuckets: Int,
-      where: Option[String],
-      derived: Seq[(String, String)],
-      bucketCols: Seq[String],
-      rangeLayout: Boolean = false): graft.bitemporal.Matview =
-    new graft.bitemporal.Matview(spark, log, stateRoot, payloadCols,
-      groupCols, Nil, validAt, nBuckets, Nil, Nil, Nil, where, derived,
-      Nil, bucketCols, Nil, rangeLayout)
-
-  /** [[starMatview]] with an EXPLICIT state dir and COUNT(*)-only
-    * state — see [[matviewAt]]. */
-  private[graft] def starMatviewAt(stateRoot: java.nio.file.Path,
+  /** A view over this table as the fact and `dims` as its spokes (none
+    * for a single-table view) with an EXPLICIT state dir — every view
+    * builder lands here. The SQL front door places its views itself,
+    * and nests each DISTINCT aggregate's auxiliary pair-level view
+    * (group key = the view's groups plus the argument) INSIDE the main
+    * view's state dir, so DROP / failure cleanup / RESTORE handle the
+    * whole tree as one; `bucketCols` buckets the pair state on the
+    * PARENT view's group prefix (same bucket count), so the parent's
+    * rollup scan partition-prunes — [[graft.bitemporal.MvDistinct]]. */
+  private[graft] def viewAt(stateRoot: java.nio.file.Path,
       dims: Seq[(GraftTable, String)], groupCols: Seq[String],
-      validAt: Timestamp, nBuckets: Int, where: Option[String],
-      derived: Seq[(String, String)],
-      bucketCols: Seq[String],
+      validAt: Timestamp, nBuckets: Int,
+      sumCols: Seq[String] = Nil,
+      minCols: Seq[String] = Nil,
+      maxCols: Seq[String] = Nil,
+      cntCols: Seq[String] = Nil,
+      where: Option[String] = None,
+      derived: Seq[(String, String)] = Nil,
+      distincts: Seq[graft.bitemporal.MvDistinct] = Nil,
+      hllCols: Seq[String] = Nil,
       rangeLayout: Boolean = false,
-      leftJoins: Seq[Boolean] = Nil): graft.bitemporal.JoinMatview = {
-    require(dims.nonEmpty, "at least one dimension table")
-    new graft.bitemporal.JoinMatview(spark, log, payloadCols,
-      dims.head._1.log, dims.head._1.payloadColumns, stateRoot,
-      dims.head._2, groupCols, Nil, validAt, nBuckets, Nil, Nil, Nil,
-      where, derived,
-      dims.tail.map(d => (d._1.log, d._1.payloadColumns, d._2)),
-      Nil, bucketCols, Nil, rangeLayout, leftJoins)
+      leftJoins: Seq[Boolean] = Nil,
+      pcts: Seq[graft.bitemporal.MvPct] = Nil,
+      bucketCols: Seq[String] = Nil): graft.bitemporal.Matview = {
+    require(leftJoins.size <= dims.size,
+      s"leftJoins has ${leftJoins.size} entries for ${dims.size} dims")
+    val spokes = dims.zip(leftJoins.padTo(dims.size, false)).map {
+      case ((d, fk), left) =>
+        graft.bitemporal.Matview.Spoke(d.log, d.payloadColumns, fk, left)
+    }
+    new graft.bitemporal.Matview(spark, log, payloadCols, stateRoot,
+      spokes, groupCols, sumCols, validAt, nBuckets, minCols, maxCols,
+      cntCols, where, derived, distincts, bucketCols, hllCols, rangeLayout,
+      pcts)
   }
 
   /** Fold the log into the partitioned rectangle base — incrementally
@@ -238,8 +235,7 @@ final class GraftTable(spark: SparkSession, dir: String,
   def compact(): Unit =
     graft.bitemporal.MaintainerLease.withLease(
         java.nio.file.Paths.get(dir), "compact") {
-      lastCompacted = log.compactIncremental(spark, payloadCols, lastCompacted,
-        clusterBy)
+      log.compactIncremental(spark, payloadCols, compacted, clusterBy): Unit
     }
 
   /** Log retention: compact, then DELETE the tx files the base now
@@ -255,7 +251,7 @@ final class GraftTable(spark: SparkSession, dir: String,
     graft.bitemporal.MaintainerLease.withLease(
         java.nio.file.Paths.get(dir), "vacuum") {
       compact() // re-entrant on the same lease
-      log.truncate(lastCompacted)
+      log.truncate(compacted)
     }
 
   /** All rectangles: compacted base + re-fold of ids touched since. */
@@ -268,8 +264,7 @@ final class GraftTable(spark: SparkSession, dir: String,
     * [[graft.bitemporal.Matview.read(session*]]). Storage is shared;
     * only the plan binding differs. */
   def rectangles(session: SparkSession): DataFrame =
-    if (lastCompacted < 0) Bitemporal.fold(log.read(session), payloadCols)
-    else log.readAll(session, payloadCols, lastCompacted)
+    log.readAllAuto(session, payloadCols)
 
   /** Snapshot at a bitemporal basis. */
   def asOf(validTime: Timestamp, systemTime: Timestamp): DataFrame =
@@ -366,19 +361,18 @@ final class GraftTable(spark: SparkSession, dir: String,
 
   /** What a point read of some ids opens: the base part files and the
     * unapplied tail's tx part files whose footer `_id` range covers one
-    * of them. The tail (`tailTxs`) starts after the persisted base
-    * watermark when another instance compacted further, as in
-    * [[TxLog.readAll]], so no tx the base holds is applied twice. */
+    * of them. The tail (`tailTxs`) starts after the base watermark, as
+    * in [[TxLog.readAll]], so no tx the base holds is applied twice. */
   private final case class PointFiles(compacted: Long, base: Seq[String],
                                       tail: Seq[String], tailTxs: Seq[String])
 
   private def pointFiles(ids: Seq[Long]): PointFiles = {
-    val compacted = math.max(lastCompacted, log.baseWatermark().getOrElse(-1L))
-    val tailTxs = log.txFilesAfter(compacted).map(_.toString)
+    val upTo = compacted
+    val tailTxs = log.txFilesAfter(upTo).map(_.toString)
     val base =
-      if (compacted < 0) Nil
+      if (upTo < 0) Nil
       else covering(Seq(java.nio.file.Paths.get(dir, "base").toString), ids)
-    PointFiles(compacted, base, covering(tailTxs, ids), tailTxs)
+    PointFiles(upTo, base, covering(tailTxs, ids), tailTxs)
   }
 
   /** Exactly `rectangles().filter(_id IN ids)` — same columns, types and
@@ -403,7 +397,7 @@ final class GraftTable(spark: SparkSession, dir: String,
     // payload columns it predates appended, as TxLog.readAll unions them
     val foldCols = ("_id" +: payloadCols) ++
       Seq("_valid_from", "_valid_to", "_system_from", "_system_to")
-    val order = baseSchema.filter(_ => lastCompacted >= 0)
+    val order = baseSchema
       .map(b => b.fieldNames.toSeq ++ payloadCols.filterNot(b.fieldNames.contains))
       .getOrElse(foldCols)
     // schema drift the point path can't type (a payload column no file
@@ -423,7 +417,7 @@ final class GraftTable(spark: SparkSession, dir: String,
       .map(_.collect().toSeq).getOrElse(Nil)
     Bitemporal.localRectangles(spark, Bitemporal.applyOpsLocal(rows),
         StructType(payloadCols.map(c => StructField(c, types(c)))),
-        nullable = lastCompacted >= 0)
+        nullable = files.compacted >= 0)
       .select(order.map(col): _*)
   }
 
@@ -459,7 +453,7 @@ final class GraftTable(spark: SparkSession, dir: String,
     graft.bitemporal.ChunkMetadata.forPaths(spark, Seq(dir))
 
   def sql(name: String, query: String): DataFrame =
-    BitemporalSql.sql(spark, query, Map(name -> rectangles()),
+    BitemporalSql.sqlOver(spark, query, Map(name -> (() => rectangles())),
       Map(name -> (rectanglesOf _)))
 
   /** SQL DML (`INSERT`/`UPDATE`/`DELETE`/`ERASE`, see

@@ -109,7 +109,17 @@ object BitemporalSql {
     * cost of the ids, not the table. */
   def sql(spark: SparkSession, query: String,
           tables: Map[String, DataFrame],
-          points: Map[String, Seq[Long] => DataFrame] = Map.empty): DataFrame = {
+          points: Map[String, Seq[Long] => DataFrame] = Map.empty): DataFrame =
+    sqlOver(spark, query, tables.map { case (n, df) => n -> (() => df) },
+      points)
+
+  /** [[sql]] over tables given by name: a table's full relation is built
+    * only when some reference binds it — at most once per query — so a
+    * query that every reference serves from the point path never plans
+    * the table's full rectangle relation. */
+  def sqlOver(spark: SparkSession, query: String,
+              tables: Map[String, () => DataFrame],
+              points: Map[String, Seq[Long] => DataFrame]): DataFrame = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
     import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, SubqueryAlias, UnresolvedWith}
@@ -167,19 +177,22 @@ object BitemporalSql {
     // (definitions + body) — substituting it would silently serve the
     // rectangle table where the user's CTE should resolve. Substitution
     // happens pre-analysis, so this scoping must be done by hand.
-    val byLower = tables.map { case (k, v) => k.toLowerCase -> ((k, v)) }
+    val full = scala.collection.mutable.Map.empty[String, DataFrame]
+    def fullOf(name: String): DataFrame =
+      full.getOrElseUpdate(name, tables(name)())
+    val byLower = tables.keys.map(k => k.toLowerCase -> k).toMap
     // a placeholder or registered name -> its relation; `ids` binds it
     // to the table's point path when it has one
     def bind(ident: String, shadowed: Set[String],
              ids: Option[Seq[Long]]): Option[LogicalPlan] = {
       def rects(name: String) =
-        ids.flatMap(i => points.get(name).map(_(i))).getOrElse(tables(name))
+        ids.flatMap(i => points.get(name).map(_(i))).getOrElse(fullOf(name))
       placeholders.get(ident).map { case (table, valid, sys) =>
         SubqueryAlias(table,
           PlanBridge.logicalPlan(filtered(rects(table), valid, sys)))
       }.orElse {
         if (shadowed.contains(ident.toLowerCase)) None
-        else byLower.get(ident.toLowerCase).map { case (name, _) =>
+        else byLower.get(ident.toLowerCase).map { name =>
           SubqueryAlias(name,
             PlanBridge.logicalPlan(Bitemporal.currentState(rects(name))))
         }
@@ -221,10 +234,10 @@ object BitemporalSql {
                 tt.timestamp.isDefined &&
                 !shadowed.contains(u.multipartIdentifier.head.toLowerCase) =>
               byLower.get(u.multipartIdentifier.head.toLowerCase)
-                .map { case (name, rects) =>
+                .map { name =>
                   val t = PlanBridge.column(tt.timestamp.get).cast("timestamp")
                   SubqueryAlias(name, PlanBridge.logicalPlan(
-                    filtered(rects, AsOf(current_timestamp()), AsOf(t))))
+                    filtered(fullOf(name), AsOf(current_timestamp()), AsOf(t))))
                 }
             case _ => None
           }).getOrElse(tt)

@@ -1,51 +1,78 @@
 package graft.bitemporal
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Incrementally-maintained aggregate view over a bitemporal tx log —
-  * COUNT/SUM (and anything derivable: AVG) per group at a FIXED
-  * bitemporal basis, kept current by folding only the log TAIL into
-  * stored per-group state instead of recomputing the aggregate.
+/** Incrementally-maintained aggregate view over a FACT tx log and zero
+  * or more DIMENSION tx logs — COUNT/SUM/COUNT(col) (and anything
+  * derivable: AVG) plus MIN/MAX, sketches, percentiles and DISTINCT
+  * rollups per group of `fact [⋈ dim1 ON fk1 = dim1._id ⋈ dim2 …]` (the
+  * star-schema rollup; a single-table view is the star with no spokes)
+  * at a FIXED bitemporal basis, optionally sieved by a row-local
+  * deterministic WHERE, kept current from the logs' TAILS instead of
+  * recomputing the aggregate. The delta follows the classic join-IVM
+  * rules
   *
-  * Classic self-maintainable IVM, shaped for the 100 TB tier:
+  *   Δ(A ⋈ B) = ΔA ⋈ B_new  ∪  A_old ⋈ ΔB
   *
-  *   - refresh work ∝ the tail: tail tx files are file-pruned by the
-  *     watermark (never listed, let alone read, for old txs); the
-  *     touched ids' PRIOR contribution re-folds only their history
-  *     rows (sargable `_id` semi-join over the sorted, bloom-filtered
-  *     log — the same point-read path `entity()` uses);
+  * applied hub-and-spoke (the fact is the hub: for every dim the "other
+  * side" is the fact extended by the remaining dims), with the
+  * bitemporal twist that "Δ per table" is (visible contribution after)
+  * − (visible contribution before) for the rows the tails touch. A fact
+  * row is affected when ITS OWN id has tail ops or any of its fks
+  * references a dim id with tail ops (the dim-side group move: updating
+  * one dim row re-groups every fact that points at it, with no fact op).
+  *
+  * Cost model (the honest 100 TB statement):
+  *   - the fact's own rows cost ∝ its tail: tail tx files are listed
+  *     past the watermark, never read for old txs; the touched ids'
+  *     OLD rectangles re-fold only their history rows (sargable `_id`
+  *     semi-join over the sorted, bloom-filtered log — the point-read
+  *     path `entity()` uses), and their NEW rectangles apply the tail
+  *     ops to those ([[Bitemporal.applyOps]], fold from state);
+  *   - dim-affected facts cost ∝ the facts referencing touched dim ids:
+  *     a LITERAL `fk IN (touched)` per dim when each touched set is ≤
+  *     [[Matview.MaxInlineDimIds]], OR-ed into ONE filter pass pushed
+  *     to the fact base's parquet scan (FILE-level pruning when the base
+  *     is fk-clustered, `GraftTable(clusterBy = Seq(fk))`), degrading to
+  *     per-dim semi-joins for huge dim churn;
+  *   - each dim costs one scan of its visible relation (dims are the
+  *     small side by construction — AQE broadcasts them into the join);
   *   - state writes ∝ touched GROUPS: state is hash-bucketed on the
-  *     group key and only buckets holding a changed group are
-  *     rewritten (temp-write + directory swap, the
-  *     [[TxLog.compactIncremental]] pattern) — a refresh that touches
-  *     3 groups rewrites ≤ 3 of [[nBuckets]] bucket directories;
-  *   - no driver-side data: the only collects are the affected bucket
-  *     ids (≤ nBuckets longs) and the watermark.
+  *     group key and only buckets holding a changed group are rewritten
+  *     (temp-write + per-bucket directory swap);
+  *   - no driver-side data: the only data-dependent collects are the
+  *     affected bucket ids (≤ nBuckets) and the touched-id probes.
   *
   * The basis (`validAt`, system = latest) is fixed at construction so
   * incrementality is sound: a row's visibility at the basis changes
   * only through new transactions, never through wall-clock drift.
-  * COUNT/SUM are self-maintainable; MIN/MAX are NOT under
-  * deletes/updates (the classic IVM restriction) and are served by the
-  * documented fallback: each refresh recomputes extremes for the
-  * TOUCHED GROUPS ONLY by re-reading their member rows at the basis
-  * (group predicate pushed into the base scan). A COUNT/SUM-only view
-  * never pays that read — refresh stays ∝ tail.
-  * For exact parity with a from-scratch recompute use exact-typed sum
-  * columns (integral/DECIMAL): incremental float sums differ from
-  * recomputed ones in the last bits, decimals never do.
+  * COUNT/SUM are self-maintainable; MIN/MAX, sketches and percentiles
+  * are not under deletes/updates or a dim group-move (the old group may
+  * lose its extreme with zero fact ops), so each refresh recomputes them
+  * for the TOUCHED GROUPS ONLY by re-deriving their members across the
+  * star at the basis; a COUNT/SUM-only view never pays that read. Use
+  * exact-typed sum columns (integral/DECIMAL) for bit parity with a
+  * from-scratch recompute — incremental float sums differ in the last
+  * bits.
   *
-  * This class derives a refresh's member rectangles; the aggregate,
-  * the delta merge and the state store are [[MvCore]]'s.
+  * The fact side serves `_id` and its temporal columns to the WHERE,
+  * derived expressions and group keys; dims serve their payload only.
+  * Truncation of ANY log switches refresh to an exact full rebuild
+  * (incremental deltas need full op history for touched ids) — see
+  * [[MvCore.needsRebuild]].
+  *
+  * This class derives a refresh's member relations; the aggregate, the
+  * delta merge and the state store are [[MvCore]]'s.
   */
 final class Matview private[graft] (
-    spark: SparkSession, log: TxLog, stateRoot: Path,
-    payloadCols: Seq[String], groupCols: Seq[String], sumCols: Seq[String],
+    spark: SparkSession, factLog: TxLog, factCols: Seq[String],
+    stateRoot: Path, spokes: Seq[Matview.Spoke],
+    groupCols: Seq[String], sumCols: Seq[String],
     validAt: Timestamp, nBuckets: Int,
     minCols: Seq[String] = Nil, maxCols: Seq[String] = Nil,
     cntCols: Seq[String] = Nil, whereSql: Option[String] = None,
@@ -55,116 +82,311 @@ final class Matview private[graft] (
     hllCols: Seq[String] = Nil,
     rangeLayout: Boolean = false,
     pcts: Seq[MvPct] = Nil) {
-  // DERIVED columns (name -> row-local deterministic SQL expression
-  // over the payload) extend the aggregable surface to expression
-  // aggregates — SUM(a*b) maintains exactly like SUM(c)
-  private val aggable = payloadCols ++ derived.map(_._1)
-  require(sumCols.forall(aggable.contains),
-    s"sum columns $sumCols must be payload or derived columns $aggable")
-  require((minCols ++ maxCols).forall(aggable.contains),
-    s"min/max columns ${minCols ++ maxCols} must be payload or derived columns $aggable")
+  private def dimId(i: Int) = s"_dim_id_$i"
+  private val logs: Seq[TxLog] = factLog +: spokes.map(_.log)
 
+  spokes.foreach(s => require(factCols.contains(s.fk),
+    s"fk column ${s.fk} must be a fact payload column"))
+  // DERIVED columns (name -> row-local deterministic SQL expression,
+  // referencing ANY side) are computed on the joined relation right
+  // after the sieve — they commute with the Δ rules for the same reason
+  // the WHERE does: an untouched row's value is identical on both sides
+  // of the delta. SUM(a*b) maintains exactly like SUM(c).
+  private val derivedNames = derived.map(_._1)
+  // COUNT(col), sketches and percentiles read the JOINED relation, so
+  // their column may live on any side (payload names are disjoint)
+  private val aggable = factCols ++ spokes.flatMap(_.cols) ++ derivedNames
+  private val factAll = factCols ++ Matview.FactMetaCols
+  require(sumCols.forall(c => factCols.contains(c) || derivedNames.contains(c)),
+    s"sum columns $sumCols must be fact payload or derived columns")
+  require((minCols ++ maxCols).forall(c =>
+      factCols.contains(c) || derivedNames.contains(c)),
+    s"min/max columns ${minCols ++ maxCols} must be fact payload or derived columns")
+  groupCols.foreach(g => require(aggable.contains(g) || factAll.contains(g),
+    s"group column $g must be a payload or derived column of some table"))
+  locally {
+    val sides = factCols +: spokes.map(_.cols)
+    sides.indices.foreach { i =>
+      sides.indices.drop(i + 1).foreach { j =>
+        val clash = sides(i).toSet & sides(j).toSet
+        require(clash.isEmpty,
+          s"payload names must be disjoint across the joined tables: $clash")
+      }
+    }
+  }
+
+  // the fingerprint covers the spokes (dim-arity changes over the same
+  // state) and, only when some spoke is LEFT, the join types
   private val core = new MvCore(spark, stateRoot, aggable, groupCols,
     sumCols, minCols, maxCols, cntCols, hllCols, pcts, distincts,
     bucketCols, nBuckets, rangeLayout, whereSql, derived, validAt,
-    fpPayload = payloadCols)
+    fpPayload = factCols,
+    fpSpokes = spokes.map(s => s.fk + ":" + s.cols.mkString(",")),
+    fpJoinExtra =
+      if (spokes.exists(_.left))
+        Seq("left:" + spokes.map(s => if (s.left) "1" else "0").mkString)
+      else Nil)
 
-  /** Last tx id folded into the state, -1 before the first refresh. */
-  def watermark: Long = core.watermarks(1).head
+  /** Tx watermarks folded into the state, fact first then one per
+    * spoke; all -1 fresh. Short files (a star regrown with more dims)
+    * pad with -1 — those logs then rebuild on the next refresh. */
+  def watermarks: Seq[Long] = core.watermarks(logs.size)
 
-  /** Is the state CURRENT — would a refresh be a no-op? See
-    * [[MvCore.isFresh]]. */
-  def isFresh: Boolean = core.isFresh(Seq(log))
+  /** Is the state CURRENT across EVERY log — would a refresh be a
+    * no-op? See [[MvCore.isFresh]]. */
+  def isFresh: Boolean = core.isFresh(logs)
+
+  /** Columns the WHERE and the derived expressions reference
+    * (unresolved parse — resolution and the deterministic/row-local
+    * checks happen at DDL validation): they must survive the side
+    * projections so the post-join sieve/derivation sees them. */
+  private def refsOf(sql: String): Set[String] =
+    org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+      .parseExpression(sql).collect {
+        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+          a.nameParts.last.toLowerCase
+      }.toSet
+  private val rowLocalRefs: Set[String] =
+    whereSql.map(refsOf).getOrElse(Set.empty) ++
+      derived.flatMap(d => refsOf(d._2))
+
+  /** What each side carries into the join: every aggregate input, group
+    * key and row-local reference it holds, plus the DISTINCT arguments
+    * — so the auxes can group the parent's member relation — and, on
+    * the fact, the fks. */
+  private val needed: Set[String] = (sumCols ++ minCols ++ maxCols ++
+    cntCols ++ hllCols ++ pcts.map(_.arg) ++ groupCols ++
+    distincts.map(_.arg)).toSet
+  private def keepOf(side: Seq[String]): Seq[String] =
+    side.filter(c => needed.contains(c) || rowLocalRefs.contains(c.toLowerCase))
+  private val factKeep = (spokes.map(_.fk) ++ keepOf(factAll)).distinct
+  private val dimKeeps = spokes.map(s => keepOf(s.cols))
 
   private def readTx(files: Seq[Path]): DataFrame =
     TxLog.readMerged(spark, files.map(_.toString))
 
-  /** Fold every tx past the watermark into the state. Returns the new
-    * watermark (= old one when the log has nothing new). Once the log
-    * has been truncated ([[TxLog.truncate]]) every refresh is an exact
-    * full rebuild — see [[MvCore.needsRebuild]]. */
-  def refresh(): Long = refreshUpTo(None)
+  /** Test hook: snapshot a relation's physical plan when
+    * [[Matview.capturePlans]] is on. */
+  private def capture(df: DataFrame): Unit =
+    if (Matview.capturePlans) Matview.capturedPlans.synchronized {
+      Matview.capturedPlans += df.queryExecution.executedPlan.toString: Unit
+    }
 
-  /** [[refresh]] bounded to fold NO tx past `pin` — the DISTINCT serve
-    * path refreshes its auxiliary pair-level view pinned to the main
-    * view's just-recorded watermark, so both states always describe
-    * the same log prefix (a tx landing between the two refreshes stays
-    * wholly in the next one). A pin at or below the current watermark
-    * is a no-op. */
-  private[graft] def refreshUpTo(pin: Option[Long],
-      sharedIn: Option[MvShared] = None): Long =
-    MaintainerLease.withLease(
-      java.nio.file.Paths.get(log.dir), "matview-refresh") {
-      Checkpoints.scoped(refreshHeld(pin, sharedIn, _))
+  /** Rows of one side at the basis, projected to the columns the join
+    * needs (side-tagged id, so the join has no name clash). */
+  private def project(v: DataFrame, idAs: String,
+                      keep: Seq[String]): DataFrame =
+    v.select(col("_id").cast("long").as(idAs) +: keep.map(col): _*)
+
+  // all visible relations are pinned to the tx ids the refresh will
+  // RECORD as its watermarks: a tx committing concurrently must stay
+  // wholly in the next refresh, or it would fold into state now AND
+  // again later (the double-count race)
+  private def factRel(upToTx: Long): DataFrame =
+    project(core.visible(factLog.readAllAuto(spark, factCols, upToTx)),
+      "_fact_id", factKeep)
+  private def dimRel(i: Int, upToTx: Long): DataFrame =
+    project(core.visible(spokes(i).log.readAllAuto(spark, spokes(i).cols,
+      upToTx)), dimId(i), dimKeeps(i))
+
+  /** fact ⋈ every dim on its fk = dim id — LEFT for left spokes (NULL
+    * and dangling fks keep the fact row, dim columns NULL). Both delta
+    * legs join over the SAME join types, so null-extended rows subtract
+    * exactly like matched ones. */
+  private def joinAll(fact: DataFrame, dimDfs: Seq[DataFrame]): DataFrame =
+    dimDfs.zipWithIndex.foldLeft(fact) { case (acc, (d, i)) =>
+      acc.join(d, col(spokes(i).fk).cast("long") === col(dimId(i)),
+        if (spokes(i).left) "left" else "inner")
+    }
+
+  /** Fold every log's tail into the state; returns the recorded
+    * watermarks, fact first (= the old ones when nothing is new). Once
+    * a log has been truncated ([[TxLog.truncate]]) every refresh is an
+    * exact full rebuild — see [[MvCore.needsRebuild]]. */
+  def refresh(): Seq[Long] = refreshUpTo(None)
+
+  /** [[refresh]] bounded to fold NO tx past the per-log `pins` (fact
+    * first, then one per dim — [[watermarks]] order): the DISTINCT
+    * serve path refreshes its auxiliary pair-level view pinned to the
+    * main view's just-recorded watermarks, so both states always
+    * describe the same log prefixes (a tx landing between the two
+    * refreshes stays wholly in the next one). Pins at or below the
+    * current watermarks are a no-op. */
+  private[graft] def refreshUpTo(pins: Option[Seq[Long]],
+      sharedIn: Option[MvShared] = None): Seq[Long] =
+    MaintainerLease.withLease(logs.map(l => Paths.get(l.dir)),
+      "matview-refresh") {
+      Checkpoints.scoped(refreshHeld(pins, sharedIn, _))
     }
 
   /** [[refreshUpTo]]'s body, under the lease; every local checkpoint it
     * takes goes into `cps` and is released when it returns. */
-  private def refreshHeld(pin: Option[Long], sharedIn: Option[MvShared],
-                          cps: Checkpoints): Long = {
+  private def refreshHeld(pins: Option[Seq[Long]],
+      sharedIn: Option[MvShared], cps: Checkpoints): Seq[Long] = {
     core.dropIfRedefined()
-    val w = watermark
-    val truncated = log.truncatedUpTo()
-    val files0 = log.txFiles()
-    val lastAll =
-      (files0.map(TxLog.txIdOf) ++ truncated).maxOption.getOrElse(-1L)
-    // under a pin, every relation this refresh folds must stop at it —
-    // the file set, the tail, and the touched ids' history alike
-    val last = pin.fold(lastAll)(p => math.min(p, lastAll))
-    if (last <= w) return w
-    val files = files0.filter(TxLog.txIdOf(_) <= last)
-    if (truncated.isEmpty && files.isEmpty) return w
-    // first build, or any refresh of a truncated log: one full fold of
-    // the rectangles (base + tail), pinned to the watermark being
-    // recorded — a tx committing mid-rebuild stays ABOVE it
-    if (core.needsRebuild(Seq(log), Seq(w))) {
-      core.rebuild(Seq(last), sharedIn, cps)(core.prep(core.visible(
-        log.readAllAuto(spark, payloadCols, upToTx = last))))
-      return last
+    val ws = watermarks
+    val lastsAll = logs.map(_.lastTx())
+    // every relation below is parameterized by `lasts` (the visibles'
+    // upToTx, the tails, the old-history filters and the rebuild) —
+    // pinning is just a cap on what this refresh records
+    val lasts = pins.fold(lastsAll)(p =>
+      lastsAll.zip(p.padTo(lastsAll.size, Long.MaxValue))
+        .map { case (l, pi) => math.min(l, pi) })
+    // nothing new; or some log is still empty — the view first builds
+    // once EVERY log holds data (an empty log has no parquet files, so
+    // a LEFT spoke's column types are unknowable; the DDL's empty-table
+    // check surfaces this loudly at CREATE)
+    if (lasts.zip(ws).forall { case (l, w) => l <= w } ||
+        lasts.exists(_ < 0)) return ws
+    // a rebuild derives the member relation ONCE (widened by every
+    // DISTINCT argument), so each aux groups it instead of re-reading
+    // the logs
+    if (core.needsRebuild(logs, ws)) {
+      core.rebuild(lasts, sharedIn, cps) {
+        val m = core.prep(joinAll(factRel(lasts.head),
+          spokes.indices.map(i => dimRel(i, lasts(i + 1)))))
+        capture(m); m
+      }
+      return lasts
     }
+    refreshDelta(ws, lasts, sharedIn, cps)
+    lasts
+  }
 
-    // Old and new contributions from ONE full-history fold of the
-    // touched ids: the old rectangles fold once (the `_tx_id ≤ w`
-    // filter prunes tail files via their constant-_tx_id footer stats)
-    // and checkpoint; the new side derives by FOLD FROM STATE:
-    // applyOps(old rectangles, tail ops) — the exact-equivalence
-    // contract BitemporalSpec locks ("applyOps == full fold at EVERY
-    // split point"). The tail is bounded to `last`, so a concurrently
-    // landing tx stays wholly in the NEXT refresh.
-    //
-    // An aux refresh driven by its parent over the SAME log at the SAME
-    // watermarks adopts the parent's relations outright (sharedIn); any
-    // watermark drift (post-restore, def-change rebuild) self-derives.
-    val (touched, oldRect, newRect) = sharedIn match {
-      case Some(sd: MvSharedDelta) if sd.baseW == w && sd.last == last =>
-        (sd.touched, sd.oldRect, sd.newRect)
+  /** One incremental refresh from `ws` to `lasts`. An aux driven by its
+    * parent over the SAME logs at the SAME watermarks adopts the
+    * parent's delta legs outright; any watermark drift (post-restore,
+    * def-change rebuild) self-derives. */
+  private def refreshDelta(ws: Seq[Long], lasts: Seq[Long],
+      sharedIn: Option[MvShared], cps: Checkpoints): Unit = {
+    // each dim's visible relation feeds the new-side join, the old-side
+    // union AND (for min/max views) the member re-join — up to three
+    // executions of the dim log's fold per refresh (no cross-branch
+    // CSE). Dims are the small side by construction, so materialize
+    // each ONCE; AQE's runtime stats still pick the broadcast side.
+    lazy val vaNew = factRel(lasts.head)
+    lazy val vbNews = spokes.indices.map(i => cps.pin(dimRel(i, lasts(i + 1))))
+    def members = core.prep(joinAll(vaNew, vbNews))
+    sharedIn match {
+      case Some(sd: MvSharedDelta) if sd.baseWs == ws && sd.lasts == lasts =>
+        core.applyDelta(sd.newSide, sd.oldSide, members, lasts, None, cps)
+        return
       case _ =>
-        val tail = readTx(log.txFilesAfter(w).filter(TxLog.txIdOf(_) <= last))
-        val tch = tail.select(col("_id").cast("long").as("_id")).distinct()
-        val all = readTx(files)
-        val hist = all.join(tch, all("_id").cast("long") === tch("_id"),
-          "left_semi")
-        val oldCp = cps.pin(
-          Bitemporal.fold(hist.filter(col("_tx_id") <= w), payloadCols))
+    }
+    def tailOf(log: TxLog, w: Long, last: Long): DataFrame =
+      readTx(log.txFilesAfter(w).filter(TxLog.txIdOf(_) <= last))
+    def idsOf(tail: DataFrame): DataFrame =
+      tail.select(col("_id").cast("long").as("_t_id")).distinct()
+    val noIds = spark.range(0).select(col("id").as("_t_id"))
+    // the touched ids' rectangles as of the watermark: their own op
+    // history re-folded (the `_tx_id ≤ w` filter prunes tail files via
+    // their constant-_tx_id footer stats; reading up to `last` keeps
+    // payload columns only the tail carries in the schema)
+    def oldRects(log: TxLog, cols: Seq[String], ids: DataFrame, w: Long,
+                 last: Long): DataFrame = {
+      val all = readTx(log.txFiles().filter(TxLog.txIdOf(_) <= last))
+      val hist = all.join(ids, all("_id").cast("long") === ids("_t_id"),
+        "left_semi")
+      Bitemporal.fold(hist.filter(col("_tx_id") <= w), cols)
+    }
+    def semiOn(df: DataFrame, key: Column, ids: DataFrame): DataFrame =
+      df.join(ids, key === ids("_t_id"), "left_semi")
+    def antiOn(df: DataFrame, key: Column, ids: DataFrame): DataFrame =
+      df.join(ids, key === ids("_t_id"), "left_anti")
+    def hasTail(i: Int) = lasts(i) > ws(i)
+
+    // the fact's OWN touched rows, tail-sized: the old rectangles fold
+    // once and checkpoint (both legs read them); the new side derives
+    // by FOLD FROM STATE — applyOps(old rectangles, tail ops), the
+    // exact-equivalence contract BitemporalSpec locks ("applyOps == full
+    // fold at EVERY split point"). The tail is bounded to `last`.
+    val (ta, ownNew, ownOld) =
+      if (!hasTail(0)) (noIds, vaNew.limit(0), vaNew.limit(0))
+      else {
+        val tail = tailOf(factLog, ws.head, lasts.head)
+        val ids = idsOf(tail)
+        val hist = oldRects(factLog, factCols, ids, ws.head, lasts.head)
+        capture(hist)
+        val old = cps.pin(hist)
         // schemaless normalization for the tail ops (refoldTouched's
         // contract): a short tail may lack payload columns older txs
         // carried
-        val tailOps = payloadCols.foldLeft(tail)((d, c) =>
+        val ops = factCols.foldLeft(tail)((d, c) =>
           if (d.columns.contains(c)) d
-          else d.withColumn(c, lit(null).cast(oldCp.schema(c).dataType)))
-        (tch, oldCp, Bitemporal.applyOps(oldCp, tailOps, payloadCols))
+          else d.withColumn(c, lit(null).cast(old.schema(c).dataType)))
+        (ids,
+          project(core.visible(Bitemporal.applyOps(old, ops, factCols)),
+            "_fact_id", factKeep),
+          project(core.visible(old), "_fact_id", factKeep))
+      }
+
+    // touched dim ids (tail-sized); a dim's OLD relation is its new one
+    // with the touched ids' rows swapped for their re-folded old rows
+    val tbs = spokes.indices.map(i =>
+      if (hasTail(i + 1)) idsOf(tailOf(spokes(i).log, ws(i + 1), lasts(i + 1)))
+      else noIds)
+    val vbOlds = spokes.indices.map { i =>
+      if (!hasTail(i + 1)) vbNews(i)
+      else antiOn(vbNews(i), col(dimId(i)), tbs(i)).unionByName(project(
+        core.visible(oldRects(spokes(i).log, spokes(i).cols, tbs(i),
+          ws(i + 1), lasts(i + 1))), dimId(i), dimKeeps(i)))
     }
-    // with DISTINCT auxes the new-side rectangles are consumed by this
-    // refresh's delta AND by every aux's (shared) delta — pin them once
-    // so the applyOps fold runs one time, not once per consumer
-    val newRectS =
-      if (distincts.isEmpty || sharedIn.nonEmpty) newRect
-      else cps.pin(newRect)
-    core.applyDelta(core.visible(newRectS), core.visible(oldRect),
-      core.visible(log.readAllAuto(spark, payloadCols, upToTx = last)),
-      Seq(last), Some(MvSharedDelta(w, last, touched, oldRect, newRectS)),
-      cps)
-    last
+
+    // dim-affected facts: not own-touched, but some fk references a
+    // touched dim. Each dim's touched predicate ships as a LITERAL In
+    // when its touched set is small (the overwhelmingly common case):
+    // the per-dim Ins OR together into ONE filter pass over the fact
+    // relation, pushed to the fact base's parquet scan (a semi-join
+    // never reaches the scan). Past the inline cap the big dims degrade
+    // to semi-joins, deduped by fact id (a visible relation has exactly
+    // one row per id, so dropDuplicates is exact). They feed BOTH legs,
+    // so they checkpoint once (rows ∝ facts referencing touched dims —
+    // the refresh's own IVM cost contract); the restriction executes in
+    // that job, so the pushdown spec snapshots its plan there.
+    val dimAff: Option[DataFrame] =
+      if (!spokes.indices.exists(i => hasTail(i + 1))) None
+      else {
+        val tbIdss: Seq[Option[Seq[Long]]] = spokes.indices.map { i =>
+          if (!hasTail(i + 1)) Some(Nil) // no tail: skip the probe
+          else {
+            val probe = tbs(i).limit(Matview.MaxInlineDimIds + 1)
+              .collect().map(_.getLong(0)).toSeq
+            if (probe.size <= Matview.MaxInlineDimIds) Some(probe) else None
+          }
+        }
+        val cand = antiOn(vaNew, col("_fact_id"), ta)
+        val inlineConds = spokes.indices.flatMap { i =>
+          tbIdss(i).filter(_.nonEmpty)
+            .map(ids => col(spokes(i).fk).cast("long").isin(ids: _*))
+        }
+        val parts =
+          (if (inlineConds.isEmpty) Nil
+           else Seq(cand.filter(inlineConds.reduce(_ || _)))) ++
+            spokes.indices.filter(i => tbIdss(i).isEmpty).map(i =>
+              semiOn(cand, col(spokes(i).fk).cast("long"), tbs(i)))
+        val da =
+          if (parts.isEmpty) cand.limit(0)
+          else if (parts.size == 1) parts.head
+          else parts.reduce(_ unionByName _).dropDuplicates("_fact_id")
+        capture(da)
+        Some(cps.pin(da))
+      }
+    def withDimAff(own: DataFrame) = dimAff.fold(own)(own.unionByName(_))
+
+    // the two legs, prepped, with every DISTINCT argument kept: this
+    // refresh's delta and each aux's read them, so with auxes they
+    // checkpoint once — except a zero-spoke old leg, a projection of the
+    // checkpointed old rectangles already
+    val newSide = core.prep(joinAll(withDimAff(ownNew), vbNews))
+    val oldSide = core.prep(joinAll(withDimAff(ownOld), vbOlds))
+    val (newS, oldS) =
+      if (distincts.isEmpty) (newSide, oldSide)
+      else (cps.pin(newSide), if (spokes.isEmpty) oldSide else cps.pin(oldSide))
+    // the MIN/MAX re-read re-joins the whole fact at the basis (the
+    // group-move case: a dim relocation can strip the OLD group's
+    // extreme with zero fact ops)
+    core.applyDelta(newS, oldS, members, lasts,
+      Some(MvSharedDelta(ws, lasts, newS, oldS)), cps)
   }
 
   /** The maintained view: (group, n, sum_*) — read-only, no recompute.
@@ -186,6 +408,38 @@ final class Matview private[graft] (
     * rollup scan prunes on it (aux pair views only). */
   private[graft] def readRaw(session: SparkSession): DataFrame =
     core.readRaw(session)
+}
+
+object Matview {
+  /** One dimension of a star: its log and payload columns, the fact
+    * column holding its foreign key, and whether the join is LEFT. A
+    * LEFT spoke keeps facts with a NULL or dangling fk as NULL-extended
+    * rows; the Δ rules carry over unchanged, because a fact whose match
+    * appears or disappears is exactly a fact whose fk references a
+    * touched dim id, and a NULL fk is never dim-affected. */
+  private[graft] final case class Spoke(log: TxLog, cols: Seq[String],
+                                        fk: String, left: Boolean)
+
+  /** The fact-side columns beyond the payload a WHERE, derived
+    * expression or group key may read. */
+  private val FactMetaCols =
+    Seq("_id", "_valid_from", "_valid_to", "_system_from", "_system_to")
+
+  /** Touched-dim sets up to this size inline as a literal In predicate
+    * (pushes to the fact scan → file pruning on an fk-clustered base);
+    * larger sets fall back to the semi-join. ~10k longs is metadata-
+    * sized on the driver, same class as the affected-bucket collect. */
+  private[bitemporal] val MaxInlineDimIds = 10000
+
+  /** Test hook: the dim-affected fact restriction and the fact's
+    * touched history execute as bare RDD checkpoint jobs (no
+    * QueryExecutionListener event), so the specs capture their physical
+    * plans here instead — and a rebuild captures each member relation
+    * it derives (the sharing specs count them). Off (zero cost) outside
+    * tests. */
+  @volatile private[graft] var capturePlans = false
+  private[graft] val capturedPlans =
+    scala.collection.mutable.Buffer.empty[String]
 }
 
 /** One DISTINCT aggregate argument's maintenance hooks, supplied by the
@@ -216,11 +470,10 @@ private[graft] final case class MvDistinct(
     needSum: Boolean,
     /** the aux pair state (groups…, arg, n, _bucket) — WITH _bucket. */
     readAux: SparkSession => DataFrame,
-    /** refresh the aux pinned to exactly these watermarks
-      * ([[Matview]]: length 1; [[JoinMatview]]: fact +: dims). The
-      * second argument optionally shares the parent refresh's derived
-      * relations: [[MvSharedDelta]] on a single-table incremental
-      * refresh, [[MvSharedBuild]] on a rebuild of either kind. */
+    /** refresh the aux pinned to exactly these watermarks (fact first,
+      * then one per dim). The second argument optionally shares the
+      * parent refresh's derived relations: [[MvSharedDelta]] on an
+      * incremental refresh, [[MvSharedBuild]] on a rebuild. */
     refreshAuxTo: (Seq[Long], Option[MvShared]) => Unit) {
   def cntAlias: String = s"cntd_$arg"
   def sumAlias: String = s"sumd_$arg"
@@ -230,28 +483,26 @@ private[graft] final case class MvDistinct(
 
 /** A parent refresh's derived relations handed to its DISTINCT auxes
   * over the SAME logs — the aux adopts them instead of re-deriving
-  * (watermark-gated; on any drift the aux derives its own). */
+  * (watermark-gated; on any drift the aux derives its own). Sound
+  * because an aux reads the same logs at the same basis under the same
+  * WHERE, and its derived columns are the parent's (the [[MvDistinct]]
+  * contract); the parent's keep lists carry every DISTINCT argument. */
 private[graft] sealed trait MvShared
 
-/** The parent refresh's derived incremental-delta relations, handed to
-  * each DISTINCT aux over the SAME tx log so the aux does not re-read
-  * the tail and re-fold the touched ids' history once per argument:
-  * `baseW`/`last` gate adoption (the aux self-derives on any watermark
-  * drift), `touched` the tail's id set, `oldRect` the touched ids'
-  * rectangles at `baseW` (checkpointed by the parent), `newRect` the
-  * same ids' rectangles at `last` (checkpointed when auxes exist). */
+/** A parent's incremental delta legs — the affected member rows after
+  * (`newSide`) and before (`oldSide`) the refresh from `baseWs` to
+  * `lasts`, prepped, checkpointed by the parent. An aux at the same
+  * watermarks folds them grouped by `groups :+ arg` instead of reading
+  * the tails and re-folding the touched ids' history once per
+  * argument. */
 private[graft] final case class MvSharedDelta(
-    baseW: Long, last: Long, touched: DataFrame,
-    oldRect: DataFrame, newRect: DataFrame) extends MvShared
+    baseWs: Seq[Long], lasts: Seq[Long],
+    newSide: DataFrame, oldSide: DataFrame) extends MvShared
 
-/** A parent rebuild's prepped member relation (visible at the basis,
-  * sieved, derived columns attached; a star's keep lists widened by
-  * every DISTINCT argument) at the per-log watermarks `lasts` (a star's
-  * fact first, then one per dim), checkpointed by the parent when auxes
-  * exist. An aux rebuilding at the same watermarks groups it by
-  * `groups :+ arg` instead of reading the logs again — sound because an
-  * aux reads the same logs at the same basis under the same WHERE, and
-  * its derived columns are the parent's (the [[MvDistinct]] contract). */
+/** A parent rebuild's prepped member relation at the per-log watermarks
+  * `lasts` (fact first, then one per dim), checkpointed by the parent
+  * when auxes exist. An aux rebuilding at the same watermarks groups it
+  * by `groups :+ arg` instead of reading the logs again. */
 private[graft] final case class MvSharedBuild(
     lasts: Seq[Long], members: DataFrame) extends MvShared
 
@@ -321,7 +572,7 @@ private[graft] final case class MvPct(
     else expr(s"percentile(cast(`$arg` as double), $p)")
 }
 
-/** State-store helpers behind [[MvCore]], shared by both view kinds. */
+/** State-store helpers behind [[MvCore]]. */
 private[graft] object MvState {
 
   /** The materialized rollup column names `distincts` contribute to the
@@ -402,17 +653,6 @@ private[graft] object MvState {
           case c => col(s"b.$c")
         }: _*)
     }
-  /** Sieve (the view's WHERE) then attach the derived expression
-    * columns — the row-local preparation every aggregation path of
-    * both view kinds shares. One definition, because it feeds the
-    * group-key/bucket formula below: the two must never drift apart
-    * between the view kinds. */
-  def prep(df: DataFrame, whereSql: Option[String],
-           derived: Seq[(String, String)]): DataFrame =
-    derived.foldLeft(whereSql.map(w => df.filter(expr(w))).getOrElse(df)) {
-      case (d, (n, e)) => d.withColumn(n, expr(e))
-    }
-
   /** Hash bucket of the group key (null-safe: null groups get a real
     * bucket, not a hive default partition). The single-column formula
     * is kept BIT-IDENTICAL to the pre-r12 one so existing state dirs
@@ -465,7 +705,7 @@ private[graft] object MvState {
     * predicate on the member re-read (MIN/MAX/HLL recompute) instead
     * of a semi-join: plain stored group keys then push to the base
     * parquet scan (`PushedFilters` → footer/file pruning on a
-    * group-clustered base — the same treatment [[JoinMatview]]'s
+    * group-clustered base — the same treatment a star's
     * dim-touched fact restriction gets), and even derived keys skip
     * the join. Multi-column keys expand to a per-tuple conjunction
     * disjunction, capped lower (predicate-tree size). Past the cap the
@@ -532,7 +772,7 @@ private[graft] object MvState {
     // test hook — the member re-read runs inside the merged write job
     // (no QueryExecutionListener event), so the pushdown spec snapshots
     // the restricted relation's STANDALONE plan and the branch taken
-    // (same pattern as JoinMatview.capturePlans). This locks the
+    // (same pattern as Matview.capturePlans). This locks the
     // pushdown within the subtree; the EXECUTED-plan evidence is the
     // ScaleSpec row that measures footer-admitted rows on a real
     // refresh (identical at 10x base). Off (zero cost) outside tests.
@@ -549,9 +789,8 @@ private[graft] object MvState {
   private[graft] val capturedMemberPlans =
     scala.collection.mutable.Buffer.empty[(String, String)]
 
-  /** `layout = range` soundness guard, shared by both view kinds (the
-    * r12 lesson: layout-critical checks live in ONE place or they
-    * drift): dir names compare lexicographically, so only STRING
+  /** `layout = range` soundness guard (the r12 lesson: layout-critical
+    * checks live in ONE place or they drift): dir names compare lexicographically, so only STRING
     * leading keys are accepted. */
   def checkRangeKey(schema: org.apache.spark.sql.types.StructType,
                     leadGroupCol: String): Unit = {
@@ -593,7 +832,7 @@ private[graft] object MvState {
     * driver collect ∝ touched values). Builds and refreshes refuse
     * past this cap with the hash-layout pointer instead of melting the
     * file system. Same driver-metadata size class as
-    * [[JoinMatview.MaxInlineDimIds]]. */
+    * [[Matview.MaxInlineDimIds]]. */
   // var is a TEST HOOK only (specs lower the cap instead of minting
   // 10k real dirs); production never writes it
   @volatile var MaxRangeDirs = 10000
@@ -721,11 +960,10 @@ private[graft] object MvState {
       .sortWithinPartitions(("_bucket" +: groupCols).map(col): _*)
       .write.mode("overwrite").partitionBy("_bucket").parquet(dest.toString)
 
-  /** The signed-union delta of both view kinds tags each member row
-    * with this column; a user column of the same name would be silently
-    * overwritten by the tag, so both view constructors refuse it — a
-    * CREATE over a table with such a column fails before any state is
-    * written. */
+  /** The signed-union delta tags each member row with this column; a
+    * user column of the same name would be silently overwritten by the
+    * tag, so the view refuses it ([[MvCore]]'s constructor) — a CREATE
+    * over a table with such a column fails before any state is written. */
   val SignCol = "_sign"
 
   def requireUnreserved(cols: Seq[String]): Unit = {
@@ -743,14 +981,9 @@ private[graft] object MvState {
     * the view. Full (re)builds overwrite the pin (the whole state is
     * recomputed under one zone, which is consistent); incremental
     * paths verify it via [[checkTimeZone]]. */
-  def pinTimeZone(spark: SparkSession, stateRoot: Path): Unit = {
-    Files.createDirectories(stateRoot)
-    val tmp = stateRoot.resolve("_tz.tmp")
-    Files.write(tmp,
+  def pinTimeZone(spark: SparkSession, stateRoot: Path): Unit =
+    TxLog.writeAtomic(stateRoot.resolve("_tz"),
       spark.conf.get("spark.sql.session.timeZone").getBytes(UTF_8))
-    Files.move(tmp, stateRoot.resolve("_tz"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-  }
 
   /** Persist a fingerprint of the view DEFINITION beside the state.
     * The views registry is in-memory: after a JVM restart a CREATE (or
@@ -761,13 +994,8 @@ private[graft] object MvState {
     * forever. On mismatch the refresh discards the state and rebuilds
     * from the logs (state is always derivable). A missing fingerprint
     * (state from before this guard) adopts and pins. */
-  def pinDef(stateRoot: Path, fp: String): Unit = {
-    Files.createDirectories(stateRoot)
-    val tmp = stateRoot.resolve("_def.tmp")
-    Files.write(tmp, fp.getBytes(UTF_8))
-    Files.move(tmp, stateRoot.resolve("_def"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-  }
+  def pinDef(stateRoot: Path, fp: String): Unit =
+    TxLog.writeAtomic(stateRoot.resolve("_def"), fp.getBytes(UTF_8))
 
   /** True when the stored fingerprint matches (or none exists — legacy
     * state adopts and is pinned by the caller's next full write). */
@@ -832,7 +1060,6 @@ private[graft] object MvState {
   def writeSchema(stateRoot: Path, df: DataFrame,
                   bucketKeyCols: Seq[String], nBuckets: Int,
                   rangeLayout: Boolean = false): Unit = {
-    Files.createDirectories(stateRoot)
     val stamped = org.apache.spark.sql.types.StructType(df.schema.map { f =>
       if (f.name == bucketKeyCols.head)
         f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
@@ -843,10 +1070,8 @@ private[graft] object MvState {
           .build())
       else f
     })
-    val tmp = stateRoot.resolve("_schema.tmp")
-    Files.write(tmp, stamped.json.getBytes(UTF_8))
-    Files.move(tmp, stateRoot.resolve("_schema"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+    TxLog.writeAtomic(stateRoot.resolve("_schema"),
+      stamped.json.getBytes(UTF_8))
   }
 
   /** Temp-write + per-bucket directory swap: `merged` (which must

@@ -8,13 +8,13 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** The maintenance core both view kinds share: the aggregate definition
+/** The maintenance core of a [[Matview]]: the aggregate definition
   * (groups, COUNT/SUM/COUNT(col), MIN/MAX, HLL sketches, percentiles,
   * DISTINCT rollups, the bucket key and layout, the WHERE sieve and the
-  * derived columns) and the state directory it maintains. [[Matview]]
-  * and [[JoinMatview]] differ only in how a refresh derives its member
-  * relations — the rectangles of one log, or the star join of a fact
-  * log with its dims. Everything after that is written once, here:
+  * derived columns) and the state directory it maintains. The view
+  * derives a refresh's member relations — the star join of a fact log
+  * with its dims, none for a single-table view; everything after that
+  * is here:
   *
   *   - [[applyDelta]] folds the (new − old) member contribution into
   *     the affected buckets of the state;
@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.StructType
   *     timezone pin, reads.
   *
   * `fpPayload`, `fpSpokes` and `fpJoinExtra` are the parts of the
-  * definition fingerprint only the view kind knows (payload or fact
+  * definition fingerprint only the view knows (the fact's payload
   * columns, the star's spokes, its left-join flags). */
 private[graft] final class MvCore(
     spark: SparkSession, stateRoot: Path, aggable: Seq[String],
@@ -78,12 +78,15 @@ private[graft] final class MvCore(
   def visible(rect: DataFrame): DataFrame =
     Bitemporal.asOf(rect, lit(validAt), lit(sysProbe))
 
-  /** Sieve by the view's WHERE, then attach the derived columns — see
-    * [[MvState.prep]]. A row-local deterministic predicate or expression
-    * commutes with the Δ-rules: an untouched row's value is identical on
-    * both sides of the delta, and a row that leaves or enters the
-    * predicate behaves exactly like a delete or insert. */
-  def prep(df: DataFrame): DataFrame = MvState.prep(df, whereSql, derived)
+  /** Sieve by the view's WHERE, then attach the derived columns. A
+    * row-local deterministic predicate or expression commutes with the
+    * Δ-rules: an untouched row's value is identical on both sides of
+    * the delta, and a row that leaves or enters the predicate behaves
+    * exactly like a delete or insert. */
+  def prep(df: DataFrame): DataFrame =
+    derived.foldLeft(whereSql.map(w => df.filter(expr(w))).getOrElse(df)) {
+      case (d, (n, e)) => d.withColumn(n, expr(e))
+    }
 
   private def sumAlias(c: String) = s"sum_$c"
   private def cntAlias(c: String) = s"cnt_$c"
@@ -173,13 +176,8 @@ private[graft] final class MvCore(
     stored.padTo(nLogs, -1L).take(nLogs)
   }
 
-  private def setWatermarks(ws: Seq[Long]): Unit = {
-    Files.createDirectories(stateRoot)
-    val tmp = stateRoot.resolve("_watermark.tmp")
-    Files.write(tmp, ws.mkString(" ").getBytes(UTF_8))
-    Files.move(tmp, wmFile,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-  }
+  private def setWatermarks(ws: Seq[Long]): Unit =
+    TxLog.writeAtomic(wmFile, ws.mkString(" ").getBytes(UTF_8))
 
   /** Is the state CURRENT — would a refresh be a no-op? True when no
     * tx (or truncation point) exists past the recorded watermark of any
@@ -226,10 +224,9 @@ private[graft] final class MvCore(
   /** Fold one incremental refresh into the state and record `lasts`.
     *
     * `newSide`/`oldSide` are the affected member rows after and before
-    * the refresh, not yet prepped; `members` (by name — only MIN/MAX,
-    * sketch and percentile views read it) is the complete member
-    * relation after it, also not yet prepped. `auxShare` goes to the
-    * DISTINCT auxes.
+    * the refresh, prepped; `members` (by name — only MIN/MAX, sketch
+    * and percentile views read it) is the complete prepped member
+    * relation after it. `auxShare` goes to the DISTINCT auxes.
     *
     * Work stays ∝ the tail: the delta is one aggregation over the
     * SIGNED union of both sides (one exchange — SUM(new) − SUM(old) =
@@ -244,7 +241,7 @@ private[graft] final class MvCore(
       MvState.checkTimeZone(spark, stateRoot)
     val sg = col(MvState.SignCol)
     def side(df: DataFrame, sign: Long): DataFrame =
-      prep(df).withColumn(MvState.SignCol, lit(sign))
+      df.withColumn(MvState.SignCol, lit(sign))
     val delta = side(newSide, 1L).unionByName(side(oldSide, -1L))
       .groupBy(groupCols.map(col): _*)
       .agg(sum(sg).as("n"),
@@ -314,12 +311,12 @@ private[graft] final class MvCore(
     // their members at the basis and recompute. The restriction ships as
     // a LITERAL group predicate under the cap, which Catalyst pushes to
     // whichever base scan carries the group column
-    // (MvState.membersOfTouched); prep comes first because a derived
-    // group key must exist on the members for it
+    // (MvState.membersOfTouched); the members come prepped because a
+    // derived group key must exist on them for it
     val merged =
       if (mmAliases.isEmpty) countSum
       else {
-        val mm = MvState.membersOfTouched(prep(members), touchedGroups,
+        val mm = MvState.membersOfTouched(members, touchedGroups,
             groupCols)
           .groupBy(groupCols.map(col): _*)
           .agg(mmAggs.head, mmAggs.tail: _*)

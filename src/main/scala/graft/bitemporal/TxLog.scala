@@ -107,11 +107,7 @@ final class TxLog(val dir: String) {
         "truncating beyond the compacted base would lose history")
     require(truncatedUpTo().forall(_ <= uptoTx),
       "truncate: watermark may not move backwards")
-    val tmp = logDir.resolve("_truncated.tmp")
-    Files.write(tmp, uptoTx.toString.getBytes("UTF-8"))
-    Files.move(tmp, truncMarker,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    TxLog.writeAtomic(truncMarker, uptoTx.toString.getBytes("UTF-8"))
     txFiles().filter(txIdOf(_) <= uptoTx)
       .foreach(p => TxLog.deleteRecursively(p.toFile))
   }
@@ -474,13 +470,8 @@ final class TxLog(val dir: String) {
       Some(new String(Files.readAllBytes(bwFile), "UTF-8").trim.toLong)
     else None
 
-  private def setBaseWatermark(w: Long): Unit = {
-    val tmp = Paths.get(dir, "_base_watermark.tmp")
-    Files.write(tmp, w.toString.getBytes("UTF-8"))
-    Files.move(tmp, bwFile,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-  }
+  private def setBaseWatermark(w: Long): Unit =
+    TxLog.writeAtomic(bwFile, w.toString.getBytes("UTF-8"))
 
   /** [[readAll]] driven by the PERSISTED base watermark: correct from
     * any fresh instance, truncated log included (where a full re-fold
@@ -663,6 +654,19 @@ object TxLog {
   def cachedRowCount(spark: SparkSession, paths: Seq[String])
       : Option[Long] =
     footerMeta(spark, paths).map(_.map(_._2).sum)
+
+  /** Replace the small file `f` (a watermark, marker or sidecar) with
+    * `bytes` by one atomic rename of a sibling temp file: a concurrent
+    * reader sees the old content or the new, never a missing file — a
+    * move without ATOMIC_MOVE unlinks the target before the rename, and
+    * a crash in that window loses the file. */
+  def writeAtomic(f: Path, bytes: Array[Byte]): Unit = {
+    Files.createDirectories(f.getParent)
+    val tmp = f.resolveSibling(f.getFileName.toString + ".tmp")
+    Files.write(tmp, bytes)
+    Files.move(tmp, f, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
+  }
 
   def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))

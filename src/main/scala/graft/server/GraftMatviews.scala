@@ -11,9 +11,9 @@ import graft.bitemporal.{BitemporalDml, SqlText}
 
 /** Materialized-view DDL for the SQL front doors — the reference's 2.x
   * line grew exactly this surface; here it routes onto the
-  * incrementally-maintained views ([[graft.bitemporal.Matview]] /
-  * [[graft.bitemporal.JoinMatview]]), so a wire client creates,
-  * refreshes and queries IVM state with plain SQL text:
+  * incrementally-maintained views ([[graft.bitemporal.Matview]], over
+  * one table or a star), so a wire client creates, refreshes and
+  * queries IVM state with plain SQL text:
   *
   * {{{
   *   CREATE MATERIALIZED VIEW by_nation
@@ -1285,11 +1285,43 @@ object GraftMatviews {
       }
 
     val fact = graftTable(factName)
+    // each JOIN clause is one spoke of the star (none for a single-table
+    // view): resolve the dim table and read the fact fk off its ON
+    // clause; LEFT spokes keep facts with NULL/dangling fks as
+    // NULL-extended rows
+    val dims: Seq[(graft.GraftTable, String)] = joinSpecs.map {
+      case (dn, on, _) =>
+        val dim = graftTable(dn)
+        // top-level split only: an '=' inside a (hypothetical)
+        // literal or parens must not shear the clause
+        val sides = BitemporalDml.splitTopLevel(on, '=').map(_.trim)
+        if (sides.length != 2)
+          fail(s"ON clause must be fk = ${dn}._id, got '$on'")
+        val dimIdSide = sides.indexWhere(s =>
+          unqualify(s).equalsIgnoreCase("_id") &&
+            (!s.contains(".") ||
+              s.toLowerCase.startsWith(dn.toLowerCase + ".")))
+        if (dimIdSide < 0)
+          fail(s"ON clause must equate a fact column with ${dn}._id, " +
+            s"got '$on'")
+        dim -> unqualify(sides(1 - dimIdSide))
+    }
+    val leftJoins: Seq[Boolean] = joinSpecs.map(_._3)
     // semantic WHERE validation, against the maintained relation's own
-    // schema (the single-table sieve sees the payload AND the temporal
-    // columns — `_valid_from < '2030-01-01'` is a legitimate row-local
-    // predicate); the join form validates against the joined payload
-    // schema below
+    // schema: a single-table sieve sees the payload AND the temporal
+    // columns (`_valid_from < '2030-01-01'` is a legitimate row-local
+    // predicate); a star's sees every side's PAYLOAD columns (names are
+    // disjoint by construction; temporal/_id columns would be ambiguous
+    // across the join and are not served to it). Lazy: only forced when
+    // something validates against it — an empty log (no txs yet) must
+    // still allow a plain CREATE
+    lazy val validationBase =
+      if (dims.isEmpty) fact.current(spark)
+      else dims.foldLeft(
+          fact.current(spark).select(fact.payloadColumns.map(col): _*)) {
+        case (acc, (dim, _)) => acc.crossJoin(
+          dim.current(spark).select(dim.payloadColumns.map(col): _*))
+      }
     def derivedLabel(dn: String, e: String): String =
       if (groupExprNames.contains(dn)) s"GROUP BY expression '$e'"
       else s"aggregate argument '$e'"
@@ -1315,20 +1347,15 @@ object GraftMatviews {
           case _ =>
         }
       }
-    if (joinSpecs.isEmpty) {
-      // lazy: only forced when something validates against it — an
-      // empty log (no txs yet) must still allow a plain CREATE
-      lazy val base = fact.current(spark)
-      whereOpt.foreach(w => validateWhere(base, w))
-      checkVarStdNumeric(base)
-      derivedExprs.foreach { case (dn, e) =>
-        validateExpr(base, e, derivedLabel(dn, e))
-      }
+    whereOpt.foreach(w => validateWhere(validationBase, w))
+    checkVarStdNumeric(validationBase)
+    derivedExprs.foreach { case (dn, e) =>
+      validateExpr(validationBase, e, derivedLabel(dn, e))
     }
     val serveAll =
       groups.map(g => (ServeCol.Group(g): ServeCol) -> groupAliases(g)) ++
         serve.result()
-    // navigation metadata, shared shape across both view forms
+    // navigation metadata
     val navGroupOut: Seq[(String, String)] = groups.map { g =>
       val src =
         if (derivedExprs.contains(g)) normText(derivedExprs(g))
@@ -1343,129 +1370,56 @@ object GraftMatviews {
         else g.toLowerCase
       src -> g
     }
-    def navInfo(joinsNav: Seq[(String, String, Boolean)],
-                freshFn: () => Boolean,
-                auxNav: Map[String, DistinctAuxNav]): NavInfo =
-      NavInfo(factName.toLowerCase, joinsNav, whereOpt.map(normText),
-        navGroupOut, navAgg.result(), navSum.result(), validAt, trusted,
-        freshFn, navGroupPhys, auxNav)
     // an aux pair view needs exactly the derived definitions its own
     // group key uses: the view's derived group keys plus (when the
     // DISTINCT argument is an expression) the argument itself
     def auxDerived(d: String): Seq[(String, String)] =
       (groups :+ d).distinct.filter(derivedExprs.contains)
         .map(n => n -> derivedExprs(n))
-    val handle =
-      if (joinSpecs.isEmpty) {
-        val nb = buckets.getOrElse(32)
-        (distincts ++ hlls.result() ++ pcts.map(_.arg)).filterNot(d =>
-            fact.payloadColumns.contains(d) || derivedExprs.contains(d))
-          .foreach(d => fail(s"aggregate argument $d must be a payload " +
-            s"column of $factName (or a row-local expression)"))
-        val mvDir = matviewDir(factName, "matview", name)
-        // each DISTINCT argument's auxiliary pair-level view, nested
-        // inside the main state dir and BUCKETED ON THE PARENT GROUP
-        // PREFIX (same bucket count) so the main refresh's rollup scan
-        // partition-prunes to its affected buckets — [[MvDistinct]].
-        // The MAIN view drives the auxes from inside its own refresh
-        // (pin-to-recorded-watermark, then rollup into main state);
-        // reads serve from the main state alone.
-        val auxes: Seq[graft.bitemporal.MvDistinct] =
-          distincts.toSeq.map { d =>
-            // a range-layout main view range-partitions the aux on the
-            // same leading key, so the rollup's affected-values filter
-            // prunes aux dirs exactly like the hash case prunes buckets
-            val a = fact.matviewAt(mvDir.resolve("_dist").resolve(d),
-              (groups :+ d).distinct, validAt, nb, whereOpt,
-              auxDerived(d), bucketCols = effBucketKey, rangeLayout)
-            graft.bitemporal.MvDistinct(d, distinctSums.contains(d),
-              sess => a.readRaw(sess),
-              (ws, sh) => { a.refreshUpTo(Some(ws.head), sh): Unit })
-          }
-        val mv = fact.matviewN(name, groups, sums.result().distinct, validAt,
-          nb, mins.result(), maxs.result(),
-          cnts.result().distinct, whereOpt, derivedExprs.toSeq, auxes,
-          hlls.result().distinct, rangeLayout, pcts.toSeq,
-          bucketCols = bucketKeyCols)
-        val auxNav = auxes.flatMap(a => distinctNavSrc.get(a.arg).map(
-          src => src -> DistinctAuxNav(a.arg, a.readAux))).toMap
-        Handle(name, serveAll, havingOpt,
-          sess => mv.read(sess),
-          () => (mv.refresh(), Option.empty[Long]),
-          mvDir, canonicalDdl(nb), navInfo(Nil, () => mv.isFresh, auxNav))
-      } else {
-        // each JOIN clause is one spoke of the star: resolve the dim
-        // table and read the fact fk off its ON clause; LEFT spokes
-        // keep facts with NULL/dangling fks as NULL-extended rows
-        val dims: Seq[(graft.GraftTable, String)] = joinSpecs.map {
-          case (dn, on, _) =>
-            val dim = graftTable(dn)
-            // top-level split only: an '=' inside a (hypothetical)
-            // literal or parens must not shear the clause
-            val sides = BitemporalDml.splitTopLevel(on, '=').map(_.trim)
-            if (sides.length != 2)
-              fail(s"ON clause must be fk = ${dn}._id, got '$on'")
-            val dimIdSide = sides.indexWhere(s =>
-              unqualify(s).equalsIgnoreCase("_id") &&
-                (!s.contains(".") ||
-                  s.toLowerCase.startsWith(dn.toLowerCase + ".")))
-            if (dimIdSide < 0)
-              fail(s"ON clause must equate a fact column with ${dn}._id, " +
-                s"got '$on'")
-            dim -> unqualify(sides(1 - dimIdSide))
-        }
-        val leftJoins: Seq[Boolean] = joinSpecs.map(_._3)
-        // the join sieve sees every side's PAYLOAD columns (names are
-        // disjoint by construction; temporal/_id columns would be
-        // ambiguous across the join and are not served to it) — the
-        // semantic validation runs over exactly that schema
-        lazy val joinedBase = dims.foldLeft(
-            fact.current(spark).select(fact.payloadColumns.map(col): _*)) {
-          case (acc, (dim, _)) => acc.crossJoin(
-            dim.current(spark).select(dim.payloadColumns.map(col): _*))
-        }
-        whereOpt.foreach(w => validateWhere(joinedBase, w))
-        checkVarStdNumeric(joinedBase)
-        derivedExprs.foreach { case (dn, e) =>
-          validateExpr(joinedBase, e, derivedLabel(dn, e))
-        }
-        val nb = buckets.getOrElse(64)
-        val allPayload =
-          fact.payloadColumns ++ dims.flatMap(_._1.payloadColumns)
-        (distincts ++ hlls.result() ++ pcts.map(_.arg)).filterNot(d =>
-            allPayload.contains(d) || derivedExprs.contains(d))
-          .foreach(d => fail(s"aggregate argument $d must be a payload " +
-            "column of a joined table (or a row-local expression)"))
-        val mvDir = matviewDir(factName, "join_matview", name)
-        // star-form auxes: same parent-prefix bucketing,
-        // driven-by-the-main-refresh contract and rebuild sharing as the
-        // single-table form
-        val auxes: Seq[graft.bitemporal.MvDistinct] =
-          distincts.toSeq.map { d =>
-            val a = fact.starMatviewAt(mvDir.resolve("_dist").resolve(d),
-              dims, (groups :+ d).distinct, validAt, nb, whereOpt,
-              auxDerived(d), bucketCols = effBucketKey, rangeLayout, leftJoins)
-            graft.bitemporal.MvDistinct(d, distinctSums.contains(d),
-              sess => a.readRaw(sess),
-              (ws, sh) => { a.refreshUpTo(Some(ws), sh): Unit })
-          }
-        val mv = fact.starMatview(name, dims, groups,
-          sums.result().distinct, validAt, nb,
-          mins.result(), maxs.result(), cnts.result().distinct, whereOpt,
-          derivedExprs.toSeq, auxes, hlls.result().distinct, rangeLayout,
-          leftJoins, pcts.toSeq, bucketCols = bucketKeyCols)
-        val joinsNav = joinSpecs.zip(dims).map {
-          case ((dn, _, left), (_, fk)) =>
-            (dn.toLowerCase, fk.toLowerCase, left)
-        }
-        val auxNav = auxes.flatMap(a => distinctNavSrc.get(a.arg).map(
-          src => src -> DistinctAuxNav(a.arg, a.readAux))).toMap
-        Handle(name, serveAll, havingOpt,
-          sess => mv.read(sess),
-          () => { val (a, b) = mv.refresh(); (a, Some(b)) },
-          mvDir, canonicalDdl(nb),
-          navInfo(joinsNav, () => mv.isFresh, auxNav))
+    val nb = buckets.getOrElse(if (dims.isEmpty) 32 else 64)
+    val allPayload = fact.payloadColumns ++ dims.flatMap(_._1.payloadColumns)
+    (distincts ++ hlls.result() ++ pcts.map(_.arg)).filterNot(d =>
+        allPayload.contains(d) || derivedExprs.contains(d))
+      .foreach(d => fail(s"aggregate argument $d must be a payload " +
+        "column of " + (if (dims.isEmpty) factName else "a joined table") +
+        " (or a row-local expression)"))
+    val mvDir = matviewDir(factName,
+      if (dims.isEmpty) "matview" else "join_matview", name)
+    // each DISTINCT argument's auxiliary pair-level view, nested inside
+    // the main state dir and BUCKETED ON THE PARENT GROUP PREFIX (same
+    // bucket count) so the main refresh's rollup scan partition-prunes
+    // to its affected buckets — [[MvDistinct]]; a range-layout main view
+    // range-partitions the aux on the same leading key. The MAIN view
+    // drives the auxes from inside its own refresh (pin-to-recorded-
+    // watermarks, sharing its delta or rebuild relation, then rollup
+    // into main state); reads serve from the main state alone.
+    val auxes: Seq[graft.bitemporal.MvDistinct] =
+      distincts.toSeq.map { d =>
+        val a = fact.viewAt(mvDir.resolve("_dist").resolve(d), dims,
+          (groups :+ d).distinct, validAt, nb, where = whereOpt,
+          derived = auxDerived(d), rangeLayout = rangeLayout,
+          leftJoins = leftJoins, bucketCols = effBucketKey)
+        graft.bitemporal.MvDistinct(d, distinctSums.contains(d),
+          sess => a.readRaw(sess),
+          (ws, sh) => { a.refreshUpTo(Some(ws), sh): Unit })
       }
+    val mv = fact.viewAt(mvDir, dims, groups, validAt, nb,
+      sums.result().distinct, mins.result(), maxs.result(),
+      cnts.result().distinct, whereOpt, derivedExprs.toSeq, auxes,
+      hlls.result().distinct, rangeLayout, leftJoins, pcts.toSeq,
+      bucketKeyCols)
+    val joinsNav = joinSpecs.zip(dims).map {
+      case ((dn, _, left), (_, fk)) => (dn.toLowerCase, fk.toLowerCase, left)
+    }
+    val auxNav = auxes.flatMap(a => distinctNavSrc.get(a.arg).map(
+      src => src -> DistinctAuxNav(a.arg, a.readAux))).toMap
+    val handle = Handle(name, serveAll, havingOpt,
+      sess => mv.read(sess),
+      () => { val ws = mv.refresh(); (ws.head, ws.tail.maxOption) },
+      mvDir, canonicalDdl(nb),
+      NavInfo(factName.toLowerCase, joinsNav, whereOpt.map(normText),
+        navGroupOut, navAgg.result(), navSum.result(), validAt, trusted,
+        () => mv.isFresh, navGroupPhys, auxNav))
 
     // any failure past this point (bad HAVING, empty-table schema,
     // registration) must also remove the state the populating refresh
@@ -1529,11 +1483,8 @@ object GraftMatviews {
       // makes its populating refresh adopt the state — zero recompute).
       // Inside the SAME cleanup discipline: a failed sidecar write must
       // not leave a registered view whose CREATE reported failure.
-      val tmp = handle.stateDir.resolve("_ddl.tmp")
-      java.nio.file.Files.write(tmp,
+      graft.bitemporal.TxLog.writeAtomic(handle.stateDir.resolve("_ddl"),
         handle.ddl.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, handle.stateDir.resolve("_ddl"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
     } catch { case e: Throwable =>
       // e.g. an empty source table: state schema is unknowable until
       // data lands — don't leave a half-registered view behind
@@ -1554,7 +1505,7 @@ object GraftMatviews {
 
   // The DISTINCT serve/refresh composition (the r13 Aux machinery:
   // read-time rollup joins, crash-skew heal, the composite
-  // refresh-with-auxes lease) moved INTO Matview/JoinMatview as
+  // refresh-with-auxes lease) moved INTO Matview as
   // [[graft.bitemporal.MvDistinct]]: the main view's refresh now pins
   // each aux to its recorded watermark and materializes the rollup
   // into the MAIN state, so reads serve one bucket-prunable state tree

@@ -206,8 +206,8 @@ final class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
       }
     } else {
       GraftSqlParser.inRewrite.set(true)
-      try PlanBridge.logicalPlan(BitemporalSql.sql(session, sqlText,
-        referenced.map(n => n -> tables(n).rectangles()).toMap,
+      try PlanBridge.logicalPlan(BitemporalSql.sqlOver(session, sqlText,
+        referenced.map(n => n -> (() => tables(n).rectangles())).toMap,
         referenced.map(n => n -> (tables(n).rectanglesOf _)).toMap))
       finally GraftSqlParser.inRewrite.set(false)
     }

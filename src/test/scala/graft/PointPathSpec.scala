@@ -121,6 +121,16 @@ class PointPathSpec extends AnyFunSuite {
     seed(other, Seq(6L), at(4))
     assertParity(t2, 1L to 6L, "stale instance")
     assertParity(early, 1L to 6L, "never-compacted instance")
+    // the peer then VACUUMs and writes once more: the log has lost its
+    // prefix, so an instance opened before any compaction must read
+    // through the persisted base watermark, not fold what is left of
+    // the log
+    other.vacuumLog()
+    seed(other, Seq(7L), at(5))
+    assertParity(early, 1L to 7L, "never-compacted instance, peer VACUUM")
+    val truth = new GraftTable(spark, dir2, cols).current().count()
+    assert(truth == other.current().count())
+    assert(early.current().count() == truth)
   }
 
   test("id-bound UPDATE/DELETE/ERASE and dmlTx leave the full path's rectangles") {

@@ -474,19 +474,19 @@ class JoinMatviewSpec extends AnyFunSuite {
     putDims(dim, Seq((5L, "moved")))
     val metaLen = "spark.sql.maxMetadataStringLength"
     val prevLen = spark.conf.get(metaLen)
-    JoinMatview.capturedPlans.synchronized(JoinMatview.capturedPlans.clear())
-    JoinMatview.capturePlans = true
+    Matview.capturedPlans.synchronized(Matview.capturedPlans.clear())
+    Matview.capturePlans = true
     try {
       spark.conf.set(metaLen, "16384") // default 100 truncates PushedFilters
       mv.refresh()
     } finally {
-      JoinMatview.capturePlans = false
+      Matview.capturePlans = false
       spark.conf.set(metaLen, prevLen)
     }
     assertParity(mv, fact, dim)
     // a 1-element In may fold to EqualTo; both are pushed predicates
-    val factScans = JoinMatview.capturedPlans.synchronized {
-      JoinMatview.capturedPlans.filter(p => p.contains(s"$fdir/base") &&
+    val factScans = Matview.capturedPlans.synchronized {
+      Matview.capturedPlans.filter(p => p.contains(s"$fdir/base") &&
         (p.contains("In(cust") || p.contains("EqualTo(cust")))
     }
     assert(factScans.nonEmpty,
@@ -528,26 +528,26 @@ class JoinMatviewSpec extends AnyFunSuite {
       Seq("cat" -> $"c"), sys()): Unit
     val metaLen = "spark.sql.maxMetadataStringLength"
     val prevLen = spark.conf.get(metaLen)
-    JoinMatview.capturedPlans.synchronized(JoinMatview.capturedPlans.clear())
-    JoinMatview.capturePlans = true
+    Matview.capturedPlans.synchronized(Matview.capturedPlans.clear())
+    Matview.capturePlans = true
     try {
       spark.conf.set(metaLen, "16384")
       mv.refresh()
     } finally {
-      JoinMatview.capturePlans = false
+      Matview.capturePlans = false
       spark.conf.set(metaLen, prevLen)
     }
     def hasPred(p: String, c: String) =
       p.contains(s"In($c") || p.contains(s"EqualTo($c") ||
         p.contains(s"$c#") && p.contains(" OR ")
-    val both = JoinMatview.capturedPlans.synchronized {
-      JoinMatview.capturedPlans.filter(p =>
+    val both = Matview.capturedPlans.synchronized {
+      Matview.capturedPlans.filter(p =>
         hasPred(p, "cust") && hasPred(p, "prod"))
     }
     assert(both.nonEmpty,
       "no delta plan carries BOTH dims' touched predicates in one pass: " +
-        JoinMatview.capturedPlans.synchronized(
-          JoinMatview.capturedPlans.mkString("\n---\n")).take(2000))
+        Matview.capturedPlans.synchronized(
+          Matview.capturedPlans.mkString("\n---\n")).take(2000))
 
     // and the result is exactly the from-scratch star
     val got = mv.read().collect()
@@ -614,7 +614,7 @@ class JoinMatviewSpec extends AnyFunSuite {
     def sidecar(f: String) =
       new String(java.nio.file.Files.readAllBytes(root.resolve(f)), "UTF-8")
     assert(sidecar("_def") == "eecd51df6c77dca82183a3238fdbf3dd")
-    val (wf, wd) = mv2.watermarks
+    val Seq(wf, wd) = mv2.watermarks
     assert(sidecar("_watermark") == s"$wf $wd")
 
     // vacuum the FACT log (compact + truncate): the incremental delta

@@ -59,7 +59,7 @@ class MatviewSpec extends AnyFunSuite {
       $"id", lit("2020-01-01").cast("timestamp"), None,
       Seq("grp" -> $"g", "amt" -> $"m".cast("decimal(12,2)")),
       ts("2024-01-01 00:00:00"))
-    assert(mv.refresh() == 0L)
+    assert(mv.refresh() == Seq(0L))
     assertParity(mv, t)
 
     // tx2: in-place update (id 1 amount), group move (id 3 b -> c)
@@ -87,7 +87,7 @@ class MatviewSpec extends AnyFunSuite {
 
     // idle refresh: watermark unchanged, state unchanged
     val before = viewState(mv)
-    val w = mv.watermark
+    val w = mv.watermarks
     assert(mv.refresh() == w)
     assert(viewState(mv) == before)
   }
@@ -226,7 +226,7 @@ class MatviewSpec extends AnyFunSuite {
     def sidecar(f: String) =
       new String(java.nio.file.Files.readAllBytes(root.resolve(f)), "UTF-8")
     assert(sidecar("_def") == "aa341ae7ba4a19acaff250f21e61f583")
-    assert(sidecar("_watermark") == mv.watermark.toString)
+    assert(sidecar("_watermark") == mv.watermarks.head.toString)
 
     // more txs while the maintainer is DOWN; a restarted maintainer
     // catches up from the view's own watermark (no double counting even
@@ -590,8 +590,8 @@ class MatviewSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_mv_rng").toString
     val t = new GraftTable(spark, dir, Seq("a", "b"))
     val e = intercept[IllegalArgumentException] {
-      t.matviewAt(java.nio.file.Paths.get(dir, "matview", "bad"),
-        Seq("a", "b"), validAt, 8, None, Nil,
+      t.viewAt(java.nio.file.Paths.get(dir, "matview", "bad"), Nil,
+        Seq("a", "b"), validAt, 8,
         bucketCols = Seq("b"), rangeLayout = true)
     }
     assert(e.getMessage.contains("leading group column"), e.getMessage)
@@ -599,10 +599,32 @@ class MatviewSpec extends AnyFunSuite {
     val dimDir = java.nio.file.Files.createTempDirectory("graft_mv_dim")
     val dim = new GraftTable(spark, dimDir.toString, Seq("d"))
     val e2 = intercept[IllegalArgumentException] {
-      t.starMatviewAt(java.nio.file.Paths.get(dir, "matview", "bad2"),
-        Seq((dim, "b")), Seq("a", "d"), validAt, 8, None, Nil,
+      t.viewAt(java.nio.file.Paths.get(dir, "matview", "bad2"),
+        Seq((dim, "b")), Seq("a", "d"), validAt, 8,
         bucketCols = Seq("d"), rangeLayout = true)
     }
     assert(e2.getMessage.contains("leading group column"), e2.getMessage)
+  }
+
+  test("sidecar writes replace the file atomically: a concurrent reader " +
+      "never finds it missing") {
+    val root = java.nio.file.Files.createTempDirectory("graft_mv_atomic")
+    val f = root.resolve("_def")
+    MvState.pinDef(root, "fp-0")
+    @volatile var done = false
+    var checks = 0L
+    var missing = 0L
+    val reader = new Thread(() => while (!done) {
+      checks += 1
+      if (!java.nio.file.Files.exists(f)) missing += 1
+    })
+    reader.start()
+    val until = System.nanoTime() + 1000L * 1000 * 1000
+    var i = 0
+    try while (System.nanoTime() < until) { i += 1; MvState.pinDef(root, s"fp-$i") }
+    finally { done = true; reader.join() }
+    assert(checks > 0 && i > 0)
+    assert(missing == 0L, s"_def missing in $missing of $checks checks over $i writes")
+    assert(new String(java.nio.file.Files.readAllBytes(f), "UTF-8") == s"fp-$i")
   }
 }

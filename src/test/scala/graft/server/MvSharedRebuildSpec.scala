@@ -8,11 +8,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.bitemporal.JoinMatview
+import graft.bitemporal.Matview
 
-/** Full view rebuilds — a CREATE's first build, and every refresh once
-  * VACUUM has truncated a log: a star view derives its member relation
-  * once and shares it with its DISTINCT auxes; every state write keeps
+/** What a view refresh derives, and how often. A full rebuild — a
+  * CREATE's first build, and every refresh once VACUUM has truncated a
+  * log — derives a star's member relation once and shares it with its
+  * DISTINCT auxes, and an incremental refresh shares its delta legs the
+  * same way; a single-table view, the star with no spokes, keeps its
+  * access to `_id` and the temporal columns; every state write keeps
   * one file per bucket directory however few tasks write it; and what a
   * rebuild, refresh or multi-statement tx checkpoints, it releases. */
 class MvSharedRebuildSpec extends AnyFunSuite {
@@ -49,14 +52,14 @@ class MvSharedRebuildSpec extends AnyFunSuite {
   private def derivations(body: => Unit): Seq[String] = {
     val metaLen = "spark.sql.maxMetadataStringLength"
     val prevLen = spark.conf.get(metaLen)
-    JoinMatview.capturedPlans.synchronized(JoinMatview.capturedPlans.clear())
-    JoinMatview.capturePlans = true
+    Matview.capturedPlans.synchronized(Matview.capturedPlans.clear())
+    Matview.capturePlans = true
     try { spark.conf.set(metaLen, "16384"); body }
     finally {
-      JoinMatview.capturePlans = false
+      Matview.capturePlans = false
       spark.conf.set(metaLen, prevLen)
     }
-    JoinMatview.capturedPlans.synchronized(JoinMatview.capturedPlans.toList)
+    Matview.capturedPlans.synchronized(Matview.capturedPlans.toList)
   }
 
   test("star rebuild shares one member relation with its DISTINCT auxes " +
@@ -154,6 +157,121 @@ class MvSharedRebuildSpec extends AnyFunSuite {
     } finally {
       GraftServer.unregister("shfact")
       GraftServer.unregister("shdim")
+      GraftMatviews.reset()
+    }
+  }
+
+  test("star incremental refresh shares its delta legs with the " +
+      "DISTINCT auxes: the fact's touched history is derived once") {
+    val s = spark
+    import s.implicits._
+    val (fact, fdir) = freshTable(Seq("cust", "code", "amt"))
+    val (dim, _) = freshTable(Seq("region"))
+    GraftServer.register("sdfact", fact)
+    GraftServer.register("sddim", dim)
+    try {
+      dim.put(Seq((1L, "EU"), (2L, "US"), (3L, "US")).toDF("id", "r"), $"id",
+        lit("2020-01-01").cast("timestamp"), None, Seq("region" -> $"r"),
+        ts("2024-01-01 00:00:00"))
+      fact.put(Seq((10L, 1L, 100L, 5L), (11L, 1L, 100L, 6L),
+          (12L, 2L, 200L, 7L), (13L, 3L, 100L, 8L)).toDF("id", "ck", "c", "m"),
+        $"id", lit("2020-01-01").cast("timestamp"), None,
+        Seq("cust" -> $"ck", "code" -> $"c", "amt" -> $"m"),
+        ts("2024-01-01 00:00:01"))
+      GraftSql.sql(spark, "CREATE MATERIALIZED VIEW mv_sd WITH " +
+        "(valid_at = '2030-01-01 00:00:00', buckets = 4) AS " +
+        "SELECT region, COUNT(*) AS n, COUNT(DISTINCT code) AS nd, " +
+        "SUM(DISTINCT amt) AS sa FROM sdfact JOIN sddim ON cust = sddim._id " +
+        "GROUP BY region")
+      def read(): Seq[Seq[String]] =
+        GraftSql.sql(spark, "SELECT region, n, nd, sa FROM mv_sd " +
+          "ORDER BY region").collect().map(_.toSeq.map(String.valueOf)).toSeq
+      def scratch(): Seq[Seq[String]] = {
+        val d = dim.current().select($"_id".cast("long").as("did"), $"region")
+        fact.current().join(d, $"cust" === $"did").groupBy($"region")
+          .agg(count(lit(1)), count_distinct($"code"), sum_distinct($"amt"))
+          .orderBy($"region").collect()
+          .map(_.toSeq.map(String.valueOf)).toSeq
+      }
+      assert(read() == scratch())
+
+      // fact-only ops: the parent folds the touched ids' history once,
+      // and both auxes adopt its legs instead of deriving their own
+      fact.dml("sdfact", "UPDATE sdfact SET code = 300L WHERE _id = 10",
+        ts("2024-01-02 00:00:00"))
+      fact.dml("sdfact", "DELETE FROM sdfact WHERE _id = 13",
+        ts("2024-01-02 00:00:01"))
+      val histories = derivations {
+        GraftSql.sql(spark, "REFRESH MATERIALIZED VIEW mv_sd").collect()
+      }.count(_.contains(s"$fdir/log"))
+      assert(histories == 1, s"fact history derived $histories times")
+      assert(read() == scratch())
+      assert(read() == Seq(Seq("EU", "2", "2", "11"), Seq("US", "1", "1", "7")))
+
+      // fact and dim ops in one refresh: still exact
+      dim.put(Seq((3L, "EU")).toDF("id", "r"), $"id",
+        lit("2020-01-01").cast("timestamp"), None, Seq("region" -> $"r"),
+        ts("2024-01-03 00:00:00"))
+      fact.dml("sdfact", "INSERT INTO sdfact (_id, cust, code, amt) " +
+        "VALUES (14, 3L, 100L, 9L), (15, 2L, 200L, 7L)", ts("2024-01-03 00:00:01"))
+      GraftSql.sql(spark, "REFRESH MATERIALIZED VIEW mv_sd").collect()
+      assert(read() == scratch())
+      GraftSql.sql(spark, "DROP MATERIALIZED VIEW mv_sd")
+    } finally {
+      GraftServer.unregister("sdfact")
+      GraftServer.unregister("sddim")
+      GraftMatviews.reset()
+    }
+  }
+
+  test("single-table view: a WHERE on _valid_from and a GROUP BY over " +
+      "_id match a recompute through CREATE, UPDATE, DELETE and REFRESH") {
+    val s = spark
+    import s.implicits._
+    val (t, _) = freshTable(Seq("g", "v"))
+    GraftServer.register("vfsingle", t)
+    try {
+      t.put(Seq((1L, 5L), (2L, 6L), (3L, 7L), (4L, 8L), (5L, 9L))
+          .toDF("id", "v"), $"id", lit("2020-01-01").cast("timestamp"), None,
+        Seq("g" -> lit("x"), "v" -> $"v"), ts("2024-01-01 00:00:00"))
+      // valid from 2025-06: outside the view's WHERE from the start
+      t.put(Seq((6L, 1L)).toDF("id", "v"), $"id",
+        lit("2025-06-01").cast("timestamp"), None,
+        Seq("g" -> lit("x"), "v" -> $"v"), ts("2024-01-01 00:00:01"))
+      GraftSql.sql(spark, "CREATE MATERIALIZED VIEW mv_vf WITH " +
+        "(valid_at = '2030-01-01 00:00:00', buckets = 4) AS " +
+        "SELECT _id % 3 AS b, COUNT(*) AS n, SUM(v) AS s FROM vfsingle " +
+        "WHERE _valid_from < '2025-01-01' GROUP BY _id % 3")
+      def read(): Seq[Seq[String]] =
+        GraftSql.sql(spark, "SELECT b, n, s FROM mv_vf ORDER BY b").collect()
+          .map(_.toSeq.map(String.valueOf)).toSeq
+      def scratch(): Seq[Seq[String]] =
+        graft.bitemporal.Bitemporal.asOf(t.rectangles(), lit(validAt),
+            lit(ts("9998-01-01 00:00:00")))
+          .filter($"_valid_from" < lit("2025-01-01").cast("timestamp"))
+          .groupBy(($"_id" % 3).as("b")).agg(count(lit(1)), sum($"v"))
+          .orderBy($"b").collect().map(_.toSeq.map(String.valueOf)).toSeq
+      assert(read() == scratch())
+      assert(read() == Seq(Seq("0", "1", "7"), Seq("1", "2", "13"),
+        Seq("2", "2", "15")))
+
+      // an update that stays in the WHERE, one whose new version leaves
+      // it (valid from 2025-06), a delete and an insert
+      t.dml("vfsingle", "UPDATE vfsingle SET v = v + 100 WHERE _id = 1",
+        ts("2024-01-02 00:00:00"))
+      t.dml("vfsingle", "UPDATE vfsingle SET v = 0L WHERE _id = 2",
+        ts("2025-06-01 00:00:00"))
+      t.dml("vfsingle", "DELETE FROM vfsingle WHERE _id = 3",
+        ts("2025-06-01 00:00:01"))
+      t.dml("vfsingle", "INSERT INTO vfsingle (_id, _valid_from, g, v) " +
+        "VALUES (7, TIMESTAMP '2024-02-01 00:00:00', 'x', 20L)",
+        ts("2025-06-01 00:00:02"))
+      GraftSql.sql(spark, "REFRESH MATERIALIZED VIEW mv_vf").collect()
+      assert(read() == scratch())
+      assert(read() == Seq(Seq("1", "3", "133"), Seq("2", "1", "9")))
+      GraftSql.sql(spark, "DROP MATERIALIZED VIEW mv_vf")
+    } finally {
+      GraftServer.unregister("vfsingle")
       GraftMatviews.reset()
     }
   }
