@@ -575,13 +575,18 @@ final class GraftTable(spark: SparkSession, dir: String,
     * the log may be truncated by [[vacuumLog]], in which case the base
     * remembers the types the departed tx files established). The
     * source of truth for null-filling omitted INSERT columns and for
-    * typing text ingest ([[copyFrom]]); empty where the log is empty. */
+    * typing text ingest ([[copyFrom]]) and DML writes; empty where the
+    * log is empty. Read off the cached file footers — a DataFrame's
+    * schema only where a footer lacks Spark's — so a commit pays no
+    * file listing for it. */
   private def knownLogTypes(): Map[String, org.apache.spark.sql.types.DataType] = {
-    def schemaOf(df: => DataFrame) =
-      scala.util.Try(df.schema).toOption
-        .map(sc => sc.fields.map(f => f.name -> f.dataType).toMap)
-        .getOrElse(Map.empty[String, org.apache.spark.sql.types.DataType])
-    schemaOf(log.readBase(spark)) ++ schemaOf(log.read(spark))
+    def schemaOf(footers: => Option[org.apache.spark.sql.types.StructType],
+                 df: => DataFrame) =
+      scala.util.Try(footers.getOrElse(df.schema)).toOption.toSeq
+        .flatMap(_.fields).map(f => f.name -> f.dataType)
+    (schemaOf(log.baseSchema(spark), log.readBase(spark)) ++
+      schemaOf(TxLog.mergedSchema(spark, log.txFiles().map(_.toString)),
+        log.read(spark))).toMap
   }
 
   /** The Spark type [[copyFrom]] will cast each COPY column to, plus
@@ -774,17 +779,12 @@ final class GraftTable(spark: SparkSession, dir: String,
         // documents): an omitted payload column inserts as a typed null
         // once the log knows the type; the very first insert must still
         // list every column (a null has no type before the schema exists)
-        val missing = payloadCols.filterNot(cols.contains)
-        val knownTypes: Map[String, org.apache.spark.sql.types.DataType] =
-          if (missing.isEmpty) Map.empty
-          else {
-            val known = knownLogTypes()
-            val untyped = missing.filterNot(known.contains)
-            require(untyped.isEmpty,
-              "INSERT omits payload column(s) the log has never seen " +
-                s"(no type to null-fill): ${untyped.mkString(", ")}")
-            known
-          }
+        val knownTypes = knownLogTypes()
+        val untyped = payloadCols.filterNot(c => cols.contains(c) ||
+          knownTypes.contains(c))
+        require(untyped.isEmpty,
+          "INSERT omits payload column(s) the log has never seen " +
+            s"(no type to null-fill): ${untyped.mkString(", ")}")
         val srcSql = if (source.toUpperCase.startsWith("VALUES"))
           s"SELECT * FROM ( $source ) AS __v(${cols.mkString(", ")})"
         else source
@@ -793,16 +793,22 @@ final class GraftTable(spark: SparkSession, dir: String,
                  else lit(systemTime)
         val vt = if (cols.contains("_valid_to"))
                    Some(col("_valid_to").cast("timestamp")) else None
+        // a listed column writes in the log's known type (an INT literal
+        // into a BIGINT column must not pin an INT tx file, which no read
+        // could merge); the first writer of a column pins its type
         TxOps.put(src, col("_id"), vf, vt, payloadCols.map { c =>
-          c -> (if (cols.contains(c)) col(c)
-                else lit(null).cast(knownTypes(c)))
+          c -> (if (!cols.contains(c)) lit(null).cast(knownTypes(c))
+                else knownTypes.get(c).fold(col(c))(col(c).cast))
         })
       case Update(_, portion, sets, where) =>
         val rows = matching(where)
         val (vf, vt) = interval(portion)
+        // SET values take the column's current type (see INSERT)
         val payload = payloadCols.map { c =>
-          c -> sets.collectFirst { case (n, rhs) if n == c => expr(rhs) }
-            .getOrElse(col(c))
+          c -> sets.collectFirst { case (n, rhs) if n == c =>
+            rows.schema.find(_.name == c).fold(expr(rhs))(f =>
+              expr(rhs).cast(f.dataType))
+          }.getOrElse(col(c))
         }
         val unknown = sets.map(_._1).filterNot(payloadCols.contains)
         require(unknown.isEmpty, s"SET of non-payload column: ${unknown.mkString(", ")}")

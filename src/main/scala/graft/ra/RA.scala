@@ -200,49 +200,8 @@ object RA {
     * frontier feeds the next step; `localCheckpoint` truncates lineage so
     * plans don't grow exponentially across iterations (each iteration is
     * a distributed union+distinct — no driver-side data). */
-  /** Iterations folded into ONE checkpoint+count job ("blocked
-    * semi-naive"): `unroll` > 1 chains that many step expansions lazily
-    * and materializes the block's novel union once, cutting driver
-    * round-trips per convergence ∝ depth/K at the price of (a) running
-    * up to K−1 cheap empty-frontier steps past the fixed point and (b)
-    * a deeper per-job plan. 0 = read `graft.fixpoint.unroll` from the
-    * session conf (default 1) — the bench harness A/Bs it via
-    * SPARK_GRAFT_CONF. */
-  private def unrollOf(spark: org.apache.spark.sql.SparkSession,
-                       explicit: Int): Int =
-    if (explicit > 0) explicit
-    // 0 is the documented read-from-conf sentinel; a NEGATIVE explicit
-    // argument is the same typo class the conf path rejects — fail it
-    // just as loudly instead of silently falling through to the conf.
-    else if (explicit < 0) throw new IllegalArgumentException(
-      s"fixpoint unroll must be positive (or 0 = read from conf), got $explicit")
-    else spark.conf.getOption("graft.fixpoint.unroll")
-      .map { s =>
-        val n = try s.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"graft.fixpoint.unroll must be a positive int, got '$s'")
-        }
-        // fail as loudly as the parse error: silently coercing
-        // unroll=-4 to the default would mask an operator typo
-        if (n <= 0) throw new IllegalArgumentException(
-          s"graft.fixpoint.unroll must be a positive int, got '$s'")
-        n
-      }.getOrElse(1)
-
-  /** Cluster-latency simulator for the blocked-unroll A/B
-    * (`graft.fixpoint.simulatedLaunchLatencyMs`, default 0 = no-op):
-    * sleeps before each convergence-probe job, standing in for the
-    * 10–100 ms of scheduler/RPC latency a REAL cluster pays per job
-    * launch. Local-mode round-trips are sub-ms, so the r8 local A/B
-    * could not resolve what the unroll knob actually targets — this
-    * conf lets the bench measure the crossover it exists for. */
-  private def simulatedLaunch(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.conf.getOption("graft.fixpoint.simulatedLaunchLatencyMs")
-      .map(_.toLong).filter(_ > 0).foreach(Thread.sleep)
-
   def fixpoint(base: DataFrame, step: DataFrame => DataFrame,
-               maxIter: Int = 100, compactEvery: Int = 8,
-               unroll: Int = 0): DataFrame = {
+               maxIter: Int = 100, compactEvery: Int = 8): DataFrame = {
     // Re-alias every column (fresh expression IDs): when `step` derives
     // its result from the same DataFrame as `base` (e.g. joining the edge
     // relation each iteration), union/except children would share
@@ -260,7 +219,6 @@ object RA {
     val oldConf = spark.conf.get(confKey, "true")
     spark.conf.set(confKey, "false")
     try {
-      val K = unrollOf(spark, unroll)
       var acc = base.distinct().localCheckpoint()
       var frontier = acc
       var i = 0
@@ -270,69 +228,29 @@ object RA {
         // distinct() BEFORE except is deliberate, not redundant: EXCEPT
         // dedups only AFTER its anti join, while closure steps re-derive
         // the same fact many times — pre-dedup shrinks the anti-join
-        // probe side by the re-derivation factor.
-        // Lazily unroll up to K semi-naive iterations (each novel delta
-        // excepted against the lazily-growing accumulator, exactly the
-        // K=1 algebra), then checkpoint + convergence-probe the block's
-        // novel union in ONE job (RddBridge.localCheckpointWithCount —
-        // the count that materializes the checkpoint is returned
+        // probe side by the re-derivation factor. Checkpoint and
+        // convergence probe are ONE job (RddBridge.localCheckpointWithCount
+        // — the count that materializes the checkpoint is returned
         // instead of discarded; the eager-checkpoint + isEmpty pair was
         // two scheduler round-trips per iteration).
-        if (K == 1) {
-          simulatedLaunch(spark)
-          val (next, n) = org.apache.spark.sql.graftbridge.RddBridge
-            .localCheckpointWithCount(fresh(step(frontier).distinct()).except(acc))
-          if (n == 0L) done = true
-          else {
-            // acc accumulates as a union of CHECKPOINTED deltas and is
-            // itself re-checkpointed only every few iterations: per-round
-            // re-materialization of the whole accumulator would be
-            // quadratic I/O over iterations, while never compacting grows
-            // the union plan (and per-iteration analysis cost) without
-            // bound — compacting every `compactEvery` rounds bounds both.
-            acc = acc.union(fresh(next))
-            sinceCompact += 1
-            if (sinceCompact >= compactEvery) {
-              acc = acc.localCheckpoint(); sinceCompact = 0
-            }
-            frontier = next
+        val (next, n) = org.apache.spark.sql.graftbridge.RddBridge
+          .localCheckpointWithCount(fresh(step(frontier).distinct()).except(acc))
+        if (n == 0L) done = true
+        else {
+          // acc accumulates as a union of CHECKPOINTED deltas and is
+          // itself re-checkpointed only every few iterations: per-round
+          // re-materialization of the whole accumulator would be
+          // quadratic I/O over iterations, while never compacting grows
+          // the union plan (and per-iteration analysis cost) without
+          // bound — compacting every `compactEvery` rounds bounds both.
+          acc = acc.union(fresh(next))
+          sinceCompact += 1
+          if (sinceCompact >= compactEvery) {
+            acc = acc.localCheckpoint(); sinceCompact = 0
           }
-          i += 1
-        } else {
-          // blocked: chain the sub-iterations lazily, tag each novel
-          // delta with its sub-iteration index, checkpoint + per-tag
-          // count the union in ONE job. The next frontier is the LAST
-          // sub-iteration's slice only — earlier slices were already
-          // expanded inside the block, so re-stepping them would break
-          // semi-naive's no-re-derivation property.
-          var front = frontier
-          var accL = acc
-          var tagged: Option[DataFrame] = None
-          var k = 0
-          while (k < K && i + k < maxIter) {
-            val novel = fresh(step(front).distinct()).except(accL)
-            accL = accL.union(fresh(novel))
-            front = novel
-            val t = novel.select(lit(k).as("_tag") +:
-              novel.columns.map(col): _*)
-            tagged = Some(tagged.fold(t)(b => b.unionAll(t)))
-            k += 1
-          }
-          simulatedLaunch(spark)
-          val (cp, counts) = org.apache.spark.sql.graftbridge.RddBridge
-            .localCheckpointWithTagCounts(tagged.get)
-          if (counts.values.sum == 0L) done = true
-          else {
-            acc = acc.union(fresh(cp.drop("_tag")))
-            sinceCompact += k
-            if (sinceCompact >= compactEvery) {
-              acc = acc.localCheckpoint(); sinceCompact = 0
-            }
-            if (counts.getOrElse(k - 1, 0L) == 0L) done = true // last slice empty: converged
-            else frontier = fresh(cp.where(col("_tag") === (k - 1)).drop("_tag"))
-          }
-          i += k
+          frontier = next
         }
+        i += 1
       }
       // A silently truncated closure is indistinguishable from a converged
       // one — fail loudly instead (WITH RECURSIVE would keep iterating).
@@ -360,8 +278,7 @@ object RA {
     * driver-side data beyond the per-relation emptiness probe. */
   def fixpointN(bases: Seq[Option[DataFrame]],
                 step: (Seq[Option[DataFrame]], Seq[Option[DataFrame]]) => Seq[Option[DataFrame]],
-                maxIter: Int = 100, compactEvery: Int = 8,
-                unroll: Int = 0): Seq[Option[DataFrame]] = {
+                maxIter: Int = 100, compactEvery: Int = 8): Seq[Option[DataFrame]] = {
     require(bases.exists(_.nonEmpty),
       "fixpointN: at least one relation needs base facts")
     def fresh(df: DataFrame): DataFrame =
@@ -373,159 +290,76 @@ object RA {
     val oldConf = spark.conf.get(confKey, "true")
     spark.conf.set(confKey, "false")
     try {
-      val K = unrollOf(spark, unroll)
       var accs = bases.map(_.map(_.distinct().localCheckpoint()))
       var deltas = accs
       var i = 0
       var sinceCompact = 0
       var done = false
-      // pre-distinct is deliberate (see [[fixpoint]]): dedup before
-      // the EXCEPT anti join, not only after it.
-      def novelsOf(curAccs: Seq[Option[DataFrame]],
-                   curDeltas: Seq[Option[DataFrame]]): Seq[Option[DataFrame]] = {
-        val derived = step(curAccs, curDeltas)
-        require(derived.length == accs.length, "fixpointN: step arity mismatch")
-        curAccs.zip(derived).map {
-          case (accOpt, dOpt) =>
-            dOpt.map { d =>
-              accOpt.fold(fresh(d.distinct()))(acc =>
-                fresh(d.distinct()).except(acc))
-            }
-        }
-      }
-      def mergeAccs(cur: Seq[Option[DataFrame]], add: Seq[Option[DataFrame]],
-                    k: Int): Seq[Option[DataFrame]] = {
-        sinceCompact += k
-        val compactNow = sinceCompact >= compactEvery
-        if (compactNow) sinceCompact = 0
-        cur.zip(add).map {
-          case (accOpt, Some(n)) =>
-            val u = accOpt.fold(n)(a => a.union(fresh(n)))
-            Some(if (compactNow) u.localCheckpoint() else u)
-          case (accOpt, None) => accOpt
-        }
-      }
       while (!done && i < maxIter) {
-        if (K == 1) {
-          // The per-relation novel-delta plans stay LAZY and are fused
-          // into one tagged union, so checkpoint + convergence probe for
-          // the WHOLE vector is ONE Spark job per iteration — not r
-          // sequential scheduler round-trips (recursion depth × r jobs
-          // is exactly what makes deep mutual recursion latency-bound).
-          // Spark's DAG scheduler runs the independent per-relation
-          // stages of that single job concurrently. Driver-THREAD
-          // concurrency (futures per relation) was tried and measured no
-          // faster locally while adding planning-lock contention; fusing
-          // is deterministic — the job count per iteration drops from r
-          // to 1 (asserted in RASpec).
-          val novels = novelsOf(accs, deltas)
-          val live = novels.zipWithIndex.collect { case (Some(n), idx) => (n, idx) }
-          val next: Seq[Option[DataFrame]] =
-            if (live.isEmpty) Seq.fill(novels.size)(None)
-            else if (live.size == 1) {
-              // single live relation: nothing to fuse
-              val (n, idx) = live.head
-              simulatedLaunch(spark)
-              val (cp, cnt) = org.apache.spark.sql.graftbridge.RddBridge
-                .localCheckpointWithCount(n)
-              novels.indices.map(j => if (j == idx && cnt > 0L) Some(cp) else None)
-            } else {
-              // (_tag, _s0 … _s{r-1}): each branch packs its own columns
-              // into its struct slot and nulls the others, so heterogeneous
-              // schemas union by position.
-              val schemas = live.map { case (n, idx) => idx -> n.schema }.toMap
-              val fusedPlan = live.map { case (n, idx) =>
-                n.select(lit(idx).as("_tag") +: live.map { case (_, j) =>
-                  if (j == idx) struct(n.columns.map(col): _*).as(s"_s$j")
-                  else lit(null).cast(schemas(j)).as(s"_s$j")
-                }: _*)
-              }.reduce(_.unionAll(_))
-              simulatedLaunch(spark)
-              val (cp, counts) = org.apache.spark.sql.graftbridge.RddBridge
-                .localCheckpointWithTagCounts(fusedPlan)
-              novels.indices.map { j =>
-                if (counts.getOrElse(j, 0L) == 0L) None
-                else Some(cp.where(col("_tag") === j).select(
-                  schemas(j).fieldNames.toSeq.map(f =>
-                    col(s"_s$j").getField(f).as(f)): _*))
-              }
-            }
-          if (next.forall(_.isEmpty)) done = true
-          else {
-            // union of checkpointed deltas with periodic compaction, as
-            // in [[fixpoint]] — amortized-linear I/O, bounded plan size
-            accs = mergeAccs(accs, next, 1)
-            deltas = next
-          }
-          i += 1
-        } else {
-          // Blocked semi-naive (see [[fixpoint]]): chain K sub-
-          // iterations lazily, tag each (sub-iteration, relation) novel
-          // with the composite tag k·R + idx, checkpoint + per-tag count
-          // the whole block in ONE job. The next deltas are the LAST
-          // sub-iteration's slices only — earlier slices were already
-          // expanded inside the block.
-          val R = accs.size
-          var curAccs = accs
-          var curDeltas = deltas
-          // blockNovels(k)(idx)
-          val blockNovels = scala.collection.mutable.ArrayBuffer
-            .empty[Seq[Option[DataFrame]]]
-          var k = 0
-          while (k < K && i + k < maxIter) {
-            val novels = novelsOf(curAccs, curDeltas)
-            curAccs = curAccs.zip(novels).map {
-              case (accOpt, Some(n)) => Some(accOpt.fold(n)(a => a.union(fresh(n))))
-              case (accOpt, None) => accOpt
-            }
-            curDeltas = novels
-            blockNovels += novels
-            k += 1
-          }
-          val live: Seq[(DataFrame, Int)] = blockNovels.zipWithIndex.flatMap {
-            case (novels, kk) => novels.zipWithIndex.collect {
-              case (Some(n), idx) => (n, kk * R + idx)
-            }
-          }.toSeq
-          if (live.isEmpty) done = true
-          else {
-            val liveIdx = live.map(_._2 % R).distinct.sorted
-            val schemas: Map[Int, org.apache.spark.sql.types.StructType] =
-              live.map { case (n, t) => (t % R) -> n.schema }.toMap
-            val fusedPlan = live.map { case (n, t) =>
-              n.select(lit(t).as("_tag") +: liveIdx.map { j =>
-                if (j == t % R) struct(n.columns.map(col): _*).as(s"_s$j")
+        // pre-distinct is deliberate (see [[fixpoint]]): dedup before
+        // the EXCEPT anti join, not only after it.
+        val derived = step(accs, deltas)
+        require(derived.length == accs.length, "fixpointN: step arity mismatch")
+        val novels = accs.zip(derived).map { case (accOpt, dOpt) =>
+          dOpt.map(d => accOpt.fold(fresh(d.distinct()))(acc =>
+            fresh(d.distinct()).except(acc)))
+        }
+        // The per-relation novel-delta plans stay LAZY and are fused
+        // into one tagged union, so checkpoint + convergence probe for
+        // the WHOLE vector is ONE Spark job per iteration — not r
+        // sequential scheduler round-trips (recursion depth × r jobs
+        // is exactly what makes deep mutual recursion latency-bound).
+        // Spark's DAG scheduler runs the independent per-relation
+        // stages of that single job concurrently. Driver-THREAD
+        // concurrency (futures per relation) was tried and measured no
+        // faster locally while adding planning-lock contention; fusing
+        // is deterministic — the job count per iteration drops from r
+        // to 1 (asserted in RASpec).
+        val live = novels.zipWithIndex.collect { case (Some(n), idx) => (n, idx) }
+        val next: Seq[Option[DataFrame]] =
+          if (live.isEmpty) Seq.fill(novels.size)(None)
+          else if (live.size == 1) {
+            // single live relation: nothing to fuse
+            val (n, idx) = live.head
+            val (cp, cnt) = org.apache.spark.sql.graftbridge.RddBridge
+              .localCheckpointWithCount(n)
+            novels.indices.map(j => if (j == idx && cnt > 0L) Some(cp) else None)
+          } else {
+            // (_tag, _s0 … _s{r-1}): each branch packs its own columns
+            // into its struct slot and nulls the others, so heterogeneous
+            // schemas union by position.
+            val schemas = live.map { case (n, idx) => idx -> n.schema }.toMap
+            val fusedPlan = live.map { case (n, idx) =>
+              n.select(lit(idx).as("_tag") +: live.map { case (_, j) =>
+                if (j == idx) struct(n.columns.map(col): _*).as(s"_s$j")
                 else lit(null).cast(schemas(j)).as(s"_s$j")
               }: _*)
             }.reduce(_.unionAll(_))
-            simulatedLaunch(spark)
             val (cp, counts) = org.apache.spark.sql.graftbridge.RddBridge
               .localCheckpointWithTagCounts(fusedPlan)
-            if (counts.values.sum == 0L) done = true
-            else {
-              def slice(j: Int, pred: Column): DataFrame =
-                cp.where(pred).select(
-                  schemas(j).fieldNames.toSeq.map(f =>
-                    col(s"_s$j").getField(f).as(f)): _*)
-              // all of a relation's block novelty joins its accumulator
-              val blockNew: Seq[Option[DataFrame]] = (0 until R).map { j =>
-                val total = (0 until k).map(kk =>
-                  counts.getOrElse(kk * R + j, 0L)).sum
-                if (total == 0L || !liveIdx.contains(j)) None
-                else Some(slice(j, col("_tag") % R === j))
-              }
-              accs = mergeAccs(accs, blockNew, k)
-              // only the final sub-iteration's slices are unexpanded
-              val lastSlices: Seq[Option[DataFrame]] = (0 until R).map { j =>
-                if (counts.getOrElse((k - 1) * R + j, 0L) == 0L) None
-                else Some(slice(j, col("_tag") === (k - 1) * R + j))
-              }
-              if (lastSlices.forall(_.isEmpty)) done = true // converged mid-block
-              else deltas = lastSlices
+            novels.indices.map { j =>
+              if (counts.getOrElse(j, 0L) == 0L) None
+              else Some(cp.where(col("_tag") === j).select(
+                schemas(j).fieldNames.toSeq.map(f =>
+                  col(s"_s$j").getField(f).as(f)): _*))
             }
           }
-          i += k
+        if (next.forall(_.isEmpty)) done = true
+        else {
+          // union of checkpointed deltas with periodic compaction, as
+          // in [[fixpoint]] — amortized-linear I/O, bounded plan size
+          sinceCompact += 1
+          val compactNow = sinceCompact >= compactEvery
+          if (compactNow) sinceCompact = 0
+          accs = accs.zip(next).map {
+            case (accOpt, Some(n)) =>
+              val u = accOpt.fold(n)(a => a.union(fresh(n)))
+              Some(if (compactNow) u.localCheckpoint() else u)
+            case (accOpt, None) => accOpt
+          }
+          deltas = next
         }
+        i += 1
       }
       if (!done)
         throw new IllegalStateException(

@@ -5,6 +5,13 @@ import java.sql.Timestamp
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias,
+  UnresolvedAttribute, UnresolvedFunction, UnresolvedHaving,
+  UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And,
+  BaseGroupingSets, EqualTo, Expression, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter,
+  GlobalLimit, Join, LocalLimit, LogicalPlan, Offset, Project, Sort}
 import org.apache.spark.sql.functions._
 
 import graft.bitemporal.{BitemporalDml, SqlText}
@@ -134,7 +141,7 @@ object GraftMatviews {
   private[server] final case class NavInfo(
       fact: String,                          // lowercased fact table
       joins: Seq[(String, String, Boolean)], // (dim, fk) lowercase, isLeft
-      whereNorm: Option[String],
+      whereConj: Seq[String],                // normalized WHERE conjuncts
       groupOut: Seq[(String, String)],       // normalized src -> alias
       aggOut: Seq[(NavKey, String)],         // key -> served alias
       sumState: Map[String, String],         // alias -> sum_ state column
@@ -245,97 +252,15 @@ object GraftMatviews {
   private val restoreRe =
     "(?is)^\\s*RESTORE\\s+MATERIALIZED\\s+VIEWS?\\s*;?\\s*$".r
 
-  private def failShape(): Nothing =
+  private def failShape(detail: String = ""): Nothing =
     fail("materialized-view SELECT must be: SELECT <g…>, " +
       "COUNT(*)/COUNT/SUM/AVG/MIN/MAX([DISTINCT] col or row-local " +
-      "expression AS alias), … FROM " +
+      "expression) [FILTER (WHERE <predicate>)] AS alias, … FROM " +
       "<table> [JOIN <dim> ON <fk> = <dim>._id …] [WHERE <predicate>] " +
       "GROUP BY <g>[, <g2> …] [HAVING <predicate over the output " +
-      "columns>] — subqueries are not incrementally maintainable " +
-      "here and are rejected rather than snapshotted")
-
-  private val plainTableRe = "(?s)^[A-Za-z_]\\w*$".r
-
-  /** Split the matview SELECT body on TOP-LEVEL clause keywords only —
-    * outside string literals, quoted identifiers and comments
-    * ([[SqlText.maskedSpans]]) and outside parentheses — so a predicate
-    * or aggregate argument containing ' GROUP BY ' / ' JOIN ' /
-    * ' HAVING ' inside a literal, or `extract(DAY FROM ts)` inside
-    * parens, can never mis-split the statement (the previous regex
-    * split was literal-unaware). Returns (select list, fact table,
-    * (dim, ON text, is-LEFT) per join spoke, WHERE?, GROUP BY,
-    * HAVING?). The DDL requires a GROUP BY; the navigator passes
-    * `requireGroupBy = false` so a GLOBAL aggregate query (`SELECT
-    * COUNT(*) … FROM fact`, no GROUP BY) parses with an empty group
-    * clause. */
-  private[server] def splitSelect(select: String,
-      requireGroupBy: Boolean = true)
-      : (String, String, Seq[(String, String, Boolean)], Option[String],
-         String, Option[String]) = {
-    val t = select.trim
-    val spans = SqlText.maskedSpans(t)
-    val depth = parenDepth(t, spans)
-    val kwRe = ("(?i)\\b(SELECT|FROM|LEFT\\s+(?:OUTER\\s+)?JOIN|" +
-      "INNER\\s+JOIN|JOIN|ON|WHERE|GROUP\\s+BY|HAVING)\\b").r
-    case class Kw(word: String, start: Int, end: Int)
-    val kws = kwRe.findAllMatchIn(t)
-      .filter(m => !SqlText.masked(spans, m.start) && depth(m.start) == 0)
-      .map { m =>
-        val w = m.group(1).toUpperCase.split("\\s+").mkString(" ")
-        Kw(if (w == "INNER JOIN") "JOIN"
-           else if (w.startsWith("LEFT")) "LEFT JOIN" else w,
-          m.start, m.end)
-      }.toVector
-    if (kws.isEmpty || kws.head.word != "SELECT" || kws.head.start != 0)
-      failShape()
-    def segEnd(j: Int): Int = if (j + 1 < kws.length) kws(j + 1).start else t.length
-    def seg(j: Int): String = t.substring(kws(j).end, segEnd(j)).trim
-    if (kws.length < 2 || kws(1).word != "FROM") failShape()
-    val list = seg(0)
-    if (list.isEmpty) failShape()
-    val factName = seg(1)
-    if (!plainTableRe.matches(factName))
-      fail(s"unsupported JOIN syntax near '$factName': FROM must name a " +
-        "single fact table, star-joined only as INNER or LEFT " +
-        "`JOIN <dim> ON <fk> = <dim>._id` — other join forms are not " +
-        "incrementally maintainable here and are rejected rather than " +
-        "snapshotted")
-    var j = 2
-    val joins = Seq.newBuilder[(String, String, Boolean)]
-    while (j < kws.length &&
-        (kws(j).word == "JOIN" || kws(j).word == "LEFT JOIN")) {
-      val dim = seg(j)
-      if (j + 1 >= kws.length || kws(j + 1).word != "ON" ||
-          !plainTableRe.matches(dim))
-        fail(s"unsupported JOIN syntax near '$dim': each join " +
-          "must be an INNER or LEFT `JOIN <dim> ON <fk> = <dim>._id` — " +
-          "other join forms are not incrementally maintainable here " +
-          "and are rejected rather than snapshotted")
-      joins += ((dim, seg(j + 1), kws(j).word == "LEFT JOIN"))
-      j += 2
-    }
-    val whereOpt =
-      if (j < kws.length && kws(j).word == "WHERE") {
-        val w = seg(j); j += 1
-        if (w.isEmpty) failShape()
-        Some(w)
-      } else None
-    val groupBy =
-      if (j < kws.length && kws(j).word == "GROUP BY") {
-        val g = seg(j); j += 1
-        if (g.isEmpty) failShape()
-        g
-      } else if (requireGroupBy) failShape()
-      else ""
-    val havingOpt =
-      if (j < kws.length && kws(j).word == "HAVING") {
-        val hv = seg(j); j += 1
-        if (hv.isEmpty) failShape()
-        Some(hv)
-      } else None
-    if (j != kws.length) failShape() // clause out of order (e.g. WHERE after GROUP BY)
-    (list, factName, joins.result(), whereOpt, groupBy, havingOpt)
-  }
+      "columns>] — FILTER follows an aggregate call; subqueries are " +
+      "not incrementally maintainable here and are rejected rather " +
+      "than snapshotted" + detail)
 
   // WHERE must be a row-local DETERMINISTIC predicate for the Δ-rules
   // to commute with it: subqueries see other rows, and random/clock
@@ -464,56 +389,266 @@ object GraftMatviews {
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(msg)
 
-  // ===== the SELECT-item grammar, shared by the DDL dispatch and the
-  // ===== aggregate-navigation matcher (GraftMvNav) — ONE set of
-  // ===== patterns, so a query item and a view item can never classify
-  // ===== differently
-  private[server] val aggRe = "(?is)^(COUNT|SUM|MIN|MAX|AVG)\\s*\\(\\s*([*]|[A-Za-z_](?:\\w|\\.)*)\\s*\\)(?:\\s+AS\\s+([A-Za-z_]\\w*))?$".r
-  // DISTINCT aggregate — COUNT/SUM/AVG(DISTINCT col-or-expression)
-  // maintain EXACTLY through an auxiliary pair-level view (group key
-  // = the view's groups + the argument, nested under this view's
-  // state dir — see the Aux plumbing in create()); MIN/MAX(DISTINCT x)
-  // is the same aggregate as MIN/MAX(x) and routes there.
-  private[server] val aggDistRe = "(?is)^(COUNT|SUM|MIN|MAX|AVG)\\s*\\(\\s*DISTINCT\\s+([\\s\\S]+?)\\s*\\)(?:\\s+AS\\s+([A-Za-z_]\\w*))?$".r
-  // APPROX_COUNT_DISTINCT(col-or-expression) — the cheap option for
-  // HIGH-CARDINALITY arguments where the exact pair-level state
-  // (∝ distinct (group, value) pairs) outgrows its worth: state is
-  // ONE mergeable DataSketches HLL sketch per group (∝ groups), and
-  // the sketch rides the MIN/MAX maintenance lifecycle (touched-group
-  // recompute at refresh), so deletes/updates stay exact for the
-  // sketch — no lingering tombstoned values, no refuse path.
-  // Standard HLL error (~1.6% at the default lgK); exact in sparse
-  // mode (low per-group cardinality).
-  private[server] val apdRe = ("(?is)^APPROX_COUNT_DISTINCT\\s*\\(\\s*([\\s\\S]+?)" +
-    "\\s*\\)(?:\\s+AS\\s+([A-Za-z_]\\w*))?$").r
-  // MEDIAN(x) / PERCENTILE_CONT(x, p) / PERCENTILE(x, p) — EXACT
-  // continuous percentiles — and APPROX_PERCENTILE(x, p) (bounded
-  // memory for huge groups). Neither subtracts, so the state stores
-  // the per-group VALUE recomputed for touched groups on the MIN/MAX
-  // lifecycle ([[graft.bitemporal.MvPct]]) — deletes/updates exact.
-  private[server] val pctRe = ("(?is)^(MEDIAN|PERCENTILE_CONT|PERCENTILE|" +
-    "APPROX_PERCENTILE)\\s*\\(\\s*([\\s\\S]+?)" +
-    "(?:\\s*,\\s*([0-9]*\\.?[0-9]+)\\s*)?\\)" +
-    "(?:\\s+AS\\s+([A-Za-z_]\\w*))?$").r
-  // VARIANCE/STDDEV family: exactly self-maintainable through sum +
-  // sum-of-squares (a derived column) + non-null count — zero new
-  // state mechanics, served by formula (ServeCol.VarStd)
-  private[server] val vsRe = ("(?is)^(STDDEV_SAMP|STDDEV_POP|STDDEV|VAR_SAMP|" +
-    "VAR_POP|VARIANCE)\\s*\\(\\s*([\\s\\S]+?)\\s*\\)" +
-    "(?:\\s+AS\\s+([A-Za-z_]\\w*))?$").r
-  // EXPRESSION aggregate — any argument that isn't a bare column ref
-  // (tried after aggRe). The argument becomes a DERIVED column on the
-  // maintained relation, computed row-locally after the sieve, so the
-  // aggregate maintains exactly like one over a stored column; the
-  // derived name is content-addressed from the normalized text so
-  // SUM(x*y) and AVG(x * y) share one derived (and state) column.
-  private[server] val aggExprRe = "(?is)^(COUNT|SUM|MIN|MAX|AVG)\\s*\\(\\s*([\\s\\S]+?)\\s*\\)(?:\\s+AS\\s+([A-Za-z_]\\w*))?$".r
-  private[server] val identRe = "(?is)^([A-Za-z_](?:\\w|\\.)*)(?:\\s+AS\\s+([A-Za-z_]\\w*))?$".r
+  // ===== the SELECT grammar: Spark's own parser, read ONCE into an
+  // ===== MvSelect that both the DDL dispatch and the aggregate
+  // ===== navigator (GraftMvNav) consume — one parse, so a query item
+  // ===== and a view item can never classify differently
+
+  private val pctFns =
+    Set("MEDIAN", "PERCENTILE_CONT", "PERCENTILE", "APPROX_PERCENTILE")
+  private val varStdFns = Set("STDDEV_SAMP", "STDDEV_POP", "STDDEV",
+    "VAR_SAMP", "VAR_POP", "VARIANCE")
+  private val basicFns = Set("COUNT", "SUM", "MIN", "MAX", "AVG")
+  private val aggFns =
+    basicFns ++ pctFns ++ varStdFns + "APPROX_COUNT_DISTINCT"
+  // a percentile fraction as written: `PERCENTILE_CONT(x, 0.5)`
+  private val fracRe = "^[0-9]*\\.?[0-9]+$".r
   private[server] val plainIdentRe = "(?s)^[A-Za-z_](?:\\w|\\.)*$".r
-  // a select item that repeats a GROUP BY expression, with its
-  // MANDATORY alias (greedy: the LAST top-level AS wins, so
-  // `cast(x AS int) AS m` aliases to m)
-  private[server] val exprAliasRe = "(?is)^([\\s\\S]+)\\s+AS\\s+([A-Za-z_]\\w*)$".r
+
+  /** One aggregate call as written. `fn` is upper-cased; `arg` is the
+    * exact source between its parentheses (DISTINCT stripped, a
+    * percentile's fraction split off into `frac`); `filter` is the
+    * source of its `FILTER (WHERE …)` predicate. */
+  private[server] final case class AggCall(fn: String, distinct: Boolean,
+      arg: String, frac: Option[String], filter: Option[String]) {
+    /** ANSI `agg(…) FILTER (WHERE pred)` on the expression-aggregate
+      * machinery: every aggregate accepted here ignores NULL inputs (the
+      * rule FILTER is defined against), so `CASE WHEN (pred) THEN (arg)
+      * END` IS the filtered aggregate — COUNT(*) counts matching rows
+      * through `THEN 1`, DISTINCT keeps its keyword, and a percentile's
+      * fraction stays outside the wrapper. The predicate inherits the
+      * argument's row-local rules (validateExpr). */
+    def desugared: AggCall = filter.fold(this) { p =>
+      copy(arg = if (arg == "*") s"CASE WHEN ($p) THEN 1 END"
+                 else s"CASE WHEN ($p) THEN ($arg) END", filter = None)
+    }
+  }
+
+  /** A materialized-view SELECT — or a query the navigator tries to
+    * answer from one — as Spark's parser reads it: the select items,
+    * the fact table, the `JOIN dim ON fk = dim._id` spokes as
+    * (dim, fk, isLeft), WHERE, GROUP BY, HAVING, and the ORDER BY /
+    * LIMIT nodes above the aggregate (outermost first). Every text that
+    * names state is a slice of `src` ([[text]], [[AggCall]]), so the
+    * derived-column names, the `_def` fingerprint and the `_ddl`
+    * canonical text keep the bytes the definition was written with. */
+  private[server] final case class MvSelect(src: String,
+      items: Seq[Expression], fact: String,
+      joins: Seq[(String, String, Boolean)], where: Option[Expression],
+      groups: Seq[Expression], having: Option[Expression],
+      tail: Seq[LogicalPlan]) {
+
+    /** [start, end) of `e` in `src`: min start to max stop over the
+      * subtree — a node's own origin can leave part of it out (a
+      * BETWEEN starts at its keyword), and an unaliased item's wrapper
+      * carries the whole statement's. */
+    def span(e: Expression): (Int, Int) = {
+      val os = e.collect {
+        case x if !x.isInstanceOf[UnresolvedAlias] &&
+            x.origin.startIndex.isDefined && x.origin.stopIndex.isDefined =>
+          (x.origin.startIndex.get, x.origin.stopIndex.get + 1)
+      }
+      if (os.isEmpty) fail(s"no source position for '${e.sql}'")
+      (os.map(_._1).min, os.map(_._2).max)
+    }
+
+    /** `e` exactly as written, without parentheses around it. */
+    def raw(e: Expression): String = { val (s, t) = span(e); src.substring(s, t) }
+
+    /** [[span]] widened over parentheses that wrap `e` whole. */
+    def wideSpan(e: Expression): (Int, Int) = {
+      def before(i: Int) = src.lastIndexWhere(!_.isWhitespace, i - 1)
+      def after(i: Int) = src.indexWhere(!_.isWhitespace, i)
+      var (s, t) = span(e)
+      while (before(s) >= 0 && src.charAt(before(s)) == '(' &&
+          after(t) >= 0 && src.charAt(after(t)) == ')') {
+        s = before(s); t = after(t) + 1
+      }
+      (s, t)
+    }
+
+    /** `e`'s source as its clause delimits it (wrapping parentheses
+      * kept) — the text a WHERE, GROUP BY item or derived column
+      * persists. */
+    def text(e: Expression): String = { val (s, t) = wideSpan(e); src.substring(s, t) }
+
+    /** The WHERE's top-level AND conjuncts. */
+    def conjuncts: Seq[Expression] = {
+      def split(e: Expression): Seq[Expression] = e match {
+        case And(l, r) => split(l) ++ split(r)
+        case x => Seq(x)
+      }
+      where.toSeq.flatMap(split)
+    }
+
+    /** A select item's expression and its alias, if one was written. */
+    def aliased(item: Expression): (Expression, Option[String]) = item match {
+      case Alias(c, n) => (c, Some(n))
+      case UnresolvedAlias(c, _) => (c, None)
+      case e => (e, None)
+    }
+
+    /** `e` as an aggregate call this engine knows, sliced from the
+      * source: the argument between the call's own parentheses (up to
+      * its FILTER clause), so `COUNT(*)` and `COUNT(1)` — one node to
+      * Spark — stay apart. */
+    def aggCall(e: Expression): Option[AggCall] = e match {
+      case f: UnresolvedFunction if f.nameParts.size == 1 &&
+          aggFns(f.nameParts.head.toUpperCase) && !f.ignoreNulls &&
+          f.orderingWithinGroup.isEmpty =>
+        val (s, t) = span(f)
+        val open = src.indexOf('(', s)
+        val (close, filter) = f.filter match {
+          case None => (t - 1, None)
+          case Some(p) =>
+            val m = filterHeadRe.findFirstMatchIn(
+              src.substring(open, span(p)._1)).get
+            (open + m.start(1), Some(src.substring(open + m.end(2), t - 1).trim))
+        }
+        val inner = src.substring(open + 1, close).trim
+        val body =
+          if (f.isDistinct) inner.replaceFirst("(?is)^DISTINCT\\s+", "") else inner
+        val fn = f.nameParts.head.toUpperCase
+        val (arg, frac) = f.arguments match {
+          case Seq(_, l: Literal) if pctFns(fn) && fracRe.matches(raw(l)) =>
+            (src.substring(open + 1, src.lastIndexOf(',', span(l)._1)).trim,
+              Some(raw(l)))
+          case _ => (body, None)
+        }
+        Some(AggCall(fn, f.isDistinct, arg, frac, filter))
+      case _ => None
+    }
+
+    /** The ORDER BY / LIMIT source, as written. */
+    def tailText: String =
+      tail.headOption.flatMap(_.origin.startIndex)
+        .fold("")(i => src.substring(i).trim)
+  }
+
+  // `…) FILTER (WHERE (` between an aggregate's argument list and its
+  // filter predicate: group 1 is the argument list's closing paren,
+  // group 2 ends the WHERE keyword
+  private val filterHeadRe =
+    "(?is)(\\))\\s*FILTER\\s*\\(\\s*(WHERE)\\b[\\s(]*$".r
+
+  /** Parse `select` with Spark's SQL parser into an [[MvSelect]]. A
+    * materialized-view definition (`ddl`) must GROUP BY and carry no
+    * ORDER BY / LIMIT; a navigated query may aggregate globally and
+    * keep them. Anything else — subqueries in FROM, set operations,
+    * RIGHT/FULL/USING/comma joins, an ON that is not `fk = dim._id` —
+    * is refused with the reason. */
+  private[server] def parseSelect(select: String, ddl: Boolean): MvSelect = {
+    import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
+    val plan =
+      try org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parsePlan(select)
+      catch { case e: org.apache.spark.sql.catalyst.parser.ParseException =>
+        failShape(": " + e.getMessage.trim.linesIterator.next()) }
+    def near(p: LogicalPlan): String =
+      (p.origin.startIndex, p.origin.stopIndex) match {
+        case (Some(s), Some(t)) => select.substring(s, t + 1)
+        case _ => p.nodeName
+      }
+    def badJoin(p: LogicalPlan): Nothing =
+      fail(s"unsupported JOIN syntax near '${near(p)}': FROM must name a " +
+        "single fact table, star-joined only as INNER or LEFT " +
+        "`JOIN <dim> ON <fk> = <dim>._id` — other join forms are not " +
+        "incrementally maintainable here and are rejected rather than " +
+        "snapshotted")
+    var tail = Seq.empty[LogicalPlan]
+    var core = plan
+    while (core.isInstanceOf[Sort] || core.isInstanceOf[GlobalLimit] ||
+        core.isInstanceOf[LocalLimit] || core.isInstanceOf[Offset]) {
+      tail :+= core; core = core.children.head
+    }
+    val (having, aggPlan) = core match {
+      case UnresolvedHaving(h, c) => (Some(h), c)
+      case c => (None, c)
+    }
+    val (items, groups, input) = aggPlan match {
+      case a: Aggregate => (a.aggregateExpressions, a.groupingExpressions, a.child)
+      case Project(list, c) => (list, Nil, c)
+      case _ => failShape()
+    }
+    if ((ddl && (groups.isEmpty || tail.nonEmpty)) ||
+        groups.exists(_.isInstanceOf[BaseGroupingSets])) failShape()
+    val (where, rel) = input match {
+      case Filter(w, c) => (Some(w), c)
+      case c => (None, c)
+    }
+    // a partial shape only for slicing the ON clause below
+    val sliced = MvSelect(select, Nil, "", Nil, None, Nil, None, Nil)
+    def spokes(p: LogicalPlan): (String, Seq[(String, String, Boolean)]) = p match {
+      case r: UnresolvedRelation if r.multipartIdentifier.size == 1 =>
+        (r.multipartIdentifier.head, Nil)
+      case j: Join if j.joinType == Inner || j.joinType == LeftOuter =>
+        (j.right, j.condition) match {
+          case (r: UnresolvedRelation, Some(on)) if r.multipartIdentifier.size == 1 =>
+            val dim = r.multipartIdentifier.head
+            val onText = sliced.text(on)
+            val sides = on match {
+              case EqualTo(l: UnresolvedAttribute, r: UnresolvedAttribute) =>
+                Seq(sliced.text(l), sliced.text(r))
+              case _ => fail(s"ON clause must be fk = ${dim}._id, got '$onText'")
+            }
+            val dimIdSide = sides.indexWhere(s =>
+              unqualify(s).equalsIgnoreCase("_id") &&
+                (!s.contains(".") || s.toLowerCase.startsWith(dim.toLowerCase + ".")))
+            if (dimIdSide < 0)
+              fail(s"ON clause must equate a fact column with ${dim}._id, " +
+                s"got '$onText'")
+            val (fact, js) = spokes(j.left)
+            (fact, js :+ ((dim, unqualify(sides(1 - dimIdSide)),
+              j.joinType == LeftOuter)))
+          case _ => badJoin(j)
+        }
+      case other => badJoin(other)
+    }
+    val (fact, joins) = spokes(rel)
+    MvSelect(select, items, fact, joins, where, groups, having, tail)
+  }
+
+  /** The state kind of a COUNT/SUM/AVG/MIN/MAX call — also its
+    * default serve-name prefix. */
+  private def basicKind(fn: String, distinct: Boolean): String =
+    (fn, distinct) match {
+      case ("COUNT", d) => if (d) "cntd" else "cnt"
+      case ("SUM" | "AVG", true) => fn.toLowerCase + "d"
+      case _ => fn.toLowerCase
+    }
+
+  /** A percentile call's fraction: MEDIAN is 0.5, the others need an
+    * explicit p in [0, 1]. Left = why not. */
+  private def pctFraction(c: AggCall): Either[String, Double] =
+    (c.fn, c.frac) match {
+      case ("MEDIAN", None) => Right(0.5)
+      case ("MEDIAN", Some(_)) => Left("MEDIAN takes a single argument — " +
+        "use PERCENTILE_CONT(col, p) for other fractions")
+      case (fn, None) => Left(s"$fn needs a fraction: $fn(col, p) with p in [0, 1]")
+      case (fn, Some(f)) =>
+        val d = f.toDouble
+        if (d < 0.0 || d > 1.0) Left(s"$fn fraction must be in [0, 1], got $f")
+        else Right(d)
+    }
+
+  /** What an aggregate call IS, for navigation: one mapping for the view
+    * items recorded at CREATE and the query items matched against them.
+    * None = not servable from state. */
+  private[server] def navKey(call: AggCall): Option[NavKey] = {
+    val c = call.desugared
+    val a = navSrc(c.arg)
+    c.fn match {
+      case fn if c.arg == "*" =>
+        if (fn == "COUNT" && !c.distinct) Some(NavKey.Agg("n", "")) else None
+      case fn if basicFns(fn) => Some(NavKey.Agg(basicKind(fn, c.distinct), a))
+      case _ if c.distinct => None
+      case "APPROX_COUNT_DISTINCT" => Some(NavKey.Agg("apd", a))
+      case fn if varStdFns(fn) =>
+        Some(NavKey.Agg((if (fn.startsWith("STDDEV")) "std" else "var") +
+          (if (fn.endsWith("_POP")) "p" else ""), a))
+      case fn => pctFraction(c).toOption
+        .map(p => NavKey.Pct(a, p, approx = fn == "APPROX_PERCENTILE"))
+    }
+  }
 
   /** Collapse whitespace OUTSIDE literal/comment spans only: 'x  y'
     * must stay two-spaced (it is data), while SUM(x*y) and SUM(x * y)
@@ -543,113 +678,6 @@ object GraftMatviews {
   private[server] def navSrc(a: String): String = {
     val t = a.trim
     if (plainIdentRe.matches(t)) unqualify(t).toLowerCase else normText(t)
-  }
-
-  /** Paren depth at each offset of `t`; masked chars never open/close. */
-  private def parenDepth(t: String, spans: Seq[(Int, Int)]): Array[Int] = {
-    val depth = new Array[Int](math.max(t.length, 1))
-    var d = 0; var i = 0
-    while (i < t.length) {
-      depth(i) = d
-      if (!SqlText.masked(spans, i)) {
-        val c = t.charAt(i)
-        if (c == '(') d += 1 else if (c == ')') d = math.max(0, d - 1)
-      }
-      i += 1
-    }
-    depth
-  }
-
-  /** ANSI `agg(…) FILTER (WHERE pred)` desugars onto the expression-
-    * aggregate machinery BEFORE dispatch: every aggregate this DDL
-    * accepts ignores NULL inputs (the ANSI rule FILTER is defined
-    * against), so wrapping the aggregated argument in
-    * `CASE WHEN (pred) THEN arg END` IS the filtered aggregate — rows
-    * failing (or NULL under) the predicate contribute NULL, which the
-    * aggregate drops. COUNT(*) counts matching rows through
-    * `CASE WHEN (pred) THEN 1 END`; DISTINCT keeps its keyword and
-    * wraps the value (COUNT(DISTINCT x) over the conditional sees
-    * exactly the filtered rows' distinct values); two-argument
-    * percentile forms wrap the VALUE argument only (the fraction is a
-    * literal). The predicate inherits the WHERE sieve's row-local
-    * deterministic rules for free: the rewritten argument validates as
-    * an expression-aggregate argument (validateExpr), so a clock read,
-    * subquery or env read in the FILTER refuses with the same message.
-    * An alias is mandatory — the rewritten item is an expression
-    * aggregate, and two SUM(x)s differing only in FILTER must not
-    * collide on a default serve name. Items without a top-level FILTER
-    * keyword pass through verbatim. */
-  private[server] def desugarFilter(item: String): String = {
-    val spans = SqlText.maskedSpans(item)
-    val depth = parenDepth(item, spans)
-    val fkw = "(?i)\\bFILTER\\b".r.findAllMatchIn(item)
-      .find(m => !SqlText.masked(spans, m.start) && depth(m.start) == 0 &&
-        m.start > 0)
-    fkw match {
-      case None => item
-      case Some(m) =>
-        def bad(why: String): Nothing =
-          fail(s"malformed FILTER clause in select item '$item': $why — " +
-            "the accepted form is AGG(arg) FILTER (WHERE predicate) " +
-            "AS alias")
-        val head = item.substring(0, m.start).trim
-        val headRe = "(?is)^([A-Za-z_]\\w*)\\s*\\(([\\s\\S]*)\\)$".r
-        val (fn, inner) = head match {
-          case headRe(f, in) => (f.toUpperCase, in.trim)
-          case _ => bad("FILTER must directly follow an aggregate call")
-        }
-        // the parenthesized (WHERE …) group: matching close paren by
-        // the same depth scan (masked chars never open/close)
-        var i = m.end
-        while (i < item.length && item.charAt(i).isWhitespace) i += 1
-        if (i >= item.length || item.charAt(i) != '(')
-          bad("FILTER needs a parenthesized (WHERE predicate)")
-        val open = i
-        var close = -1
-        locally {
-          var d = 0; var j = open
-          while (j < item.length && close < 0) {
-            if (!SqlText.masked(spans, j)) {
-              val c = item.charAt(j)
-              if (c == '(') d += 1
-              else if (c == ')') { d -= 1; if (d == 0) close = j }
-            }
-            j += 1
-          }
-        }
-        if (close < 0) bad("unbalanced parentheses after FILTER")
-        val body = item.substring(open + 1, close).trim
-        val whereRe = "(?is)^WHERE\\b([\\s\\S]+)$".r
-        val pred = body match {
-          case whereRe(p) if p.trim.nonEmpty => p.trim
-          case _ => bad("the clause must read FILTER (WHERE predicate)")
-        }
-        val tail = item.substring(close + 1)
-        val alias = "(?is)^\\s+AS\\s+([A-Za-z_]\\w*)\\s*$".r
-          .findFirstMatchIn(tail).map(_.group(1)).getOrElse {
-            if (tail.trim.isEmpty)
-              fail(s"FILTER aggregate '$item' needs an explicit AS " +
-                "alias to serve as a column name")
-            else bad(s"unexpected trailing text '${tail.trim}'")
-          }
-        val distRe = "(?is)^DISTINCT\\s+([\\s\\S]+)$".r
-        val newInner = inner match {
-          case "*" =>
-            if (fn != "COUNT")
-              bad(s"$fn(*) is not an aggregate this view can maintain")
-            s"CASE WHEN ($pred) THEN 1 END"
-          case distRe(v) =>
-            s"DISTINCT CASE WHEN ($pred) THEN ($v) END"
-          case _ =>
-            // wrap the VALUE argument only: a trailing literal
-            // fraction (percentile forms) rides along unwrapped
-            val parts = BitemporalDml.splitTopLevel(inner)
-            if (parts.isEmpty) bad("empty aggregate argument")
-            (s"CASE WHEN ($pred) THEN (${parts.head}) END" +:
-              parts.tail).mkString(", ")
-        }
-        s"$fn($newInner) AS $alias"
-    }
   }
 
   private[server] def unqualify(c: String): String = {
@@ -966,12 +994,14 @@ object GraftMatviews {
         (if (trusted) ", rewrite = 'trusted'" else "") +
         s") AS ${select.trim}"
 
-    // clause split is masked-span + paren-depth aware (splitSelect): a
-    // clause the grammar cannot parse (missing ON, USING form,
-    // RIGHT/FULL JOIN) refuses loudly, never silently drops a spoke —
-    // a view missing a declared join would serve wrong aggregates
-    val (list, factName, joinSpecs, whereOpt, groupBy, havingOpt) =
-      splitSelect(select)
+    // one parse by Spark's own grammar: a clause it cannot read, or a
+    // join this engine cannot maintain (missing ON, USING, RIGHT/FULL),
+    // refuses loudly, never silently drops a spoke — a view missing a
+    // declared join would serve wrong aggregates
+    val q = parseSelect(select, ddl = true)
+    val factName = q.fact
+    val whereOpt = q.where.map(q.text)
+    val havingOpt = q.having.map(q.text)
 
     // derived name -> ORIGINAL trimmed expression text (what executes —
     // normalization is for NAMING/matching only, so whitespace inside
@@ -1002,18 +1032,22 @@ object GraftMatviews {
     // a stored group key. A derived key's SELECT item must repeat the
     // expression (whitespace-insensitively) with an AS alias.
     val groupExprNames = scala.collection.mutable.LinkedHashSet.empty[String]
-    val groups = BitemporalDml.splitTopLevel(groupBy)
-      .map(_.trim).filter(_.nonEmpty).map { g =>
-        if (g.matches("\\d+"))
-          // a bare number would silently become a constant group key,
-          // not the Postgres/Spark ordinal the user meant
-          fail(s"GROUP BY ordinal '$g' is not supported here — name " +
-            "the column or repeat the expression")
+    // (state column, normalized source) per GROUP BY item
+    val groupSrcs: Seq[(String, String)] = q.groups.map { ge =>
+      val g = q.text(ge)
+      if (g.matches("\\d+"))
+        // a bare number would silently become a constant group key,
+        // not the Postgres/Spark ordinal the user meant
+        fail(s"GROUP BY ordinal '$g' is not supported here — name " +
+          "the column or repeat the expression")
+      val c =
         if (plainIdentRe.matches(g)) unqualify(g)
         else { val dn = derivedName(g); groupExprNames += dn; dn }
-      }
+      c -> navSrc(q.raw(ge))
+    }
+    val groups = groupSrcs.map(_._1)
     if (groups.distinct.size != groups.size)
-      fail(s"duplicate GROUP BY column in $groupBy")
+      fail(s"duplicate GROUP BY column in ${q.groups.map(q.text).mkString(", ")}")
 
     // bucket_key names resolve against the PLAIN group columns (a
     // derived GROUP BY expression has no user-writable name) —
@@ -1065,248 +1099,135 @@ object GraftMatviews {
     // is additionally order-dependent across refreshes. Refused at
     // CREATE with a cast hint (mirrors the navigation exactness gate).
     val varStdArgs = Seq.newBuilder[(String, String)]
-    BitemporalDml.splitTopLevel(list).map(_.trim).filter(_.nonEmpty)
-      .map(desugarFilter)
-      .foreach {
-        case apdRe(arg0, alias0) =>
-          if (arg0.trim == "*" || arg0.trim.equalsIgnoreCase("distinct"))
-            fail("APPROX_COUNT_DISTINCT needs a column or row-local " +
-              "expression argument")
-          val isCol = plainIdentRe.matches(arg0.trim)
-          val c = if (isCol) unqualify(arg0) else derivedName(arg0)
-          val alias = Option(alias0).getOrElse {
-            if (isCol) s"apd_$c"
-            else fail(s"expression aggregate APPROX_COUNT_DISTINCT" +
-              s"($arg0) needs an explicit AS alias to serve as a " +
-              "column name")
-          }
-          hlls += c
-          serve += (ServeCol.ApproxDistinct(c) -> alias)
-          navAgg += (NavKey.Agg("apd", navSrc(arg0)) -> alias)
-        case pctRe(fn0, arg0, frac0, alias0) =>
-          val fn = fn0.toUpperCase
-          val argT = arg0.trim
-          if (argT == "*" || argT.toUpperCase.startsWith("DISTINCT"))
-            fail(s"$fn needs a column or row-local expression argument " +
-              "(DISTINCT makes no difference to a percentile and is " +
-              "not accepted)")
-          val p: Double = (fn, Option(frac0)) match {
-            case ("MEDIAN", None) => 0.5
-            case ("MEDIAN", Some(_)) =>
-              fail("MEDIAN takes a single argument — use " +
-                "PERCENTILE_CONT(col, p) for other fractions")
-            case (_, None) =>
-              fail(s"$fn needs a fraction: $fn(col, p) with p in [0, 1]")
-            case (_, Some(f)) =>
-              val d = f.toDouble
-              if (d < 0.0 || d > 1.0)
-                fail(s"$fn fraction must be in [0, 1], got $f")
-              d
-          }
+    q.items.foreach { item =>
+      val (body, alias) = q.aliased(item)
+      q.aggCall(body) match {
+        case Some(c0) =>
+          val fn = c0.fn
+          if (c0.filter.nonEmpty && alias.isEmpty)
+            fail(s"FILTER aggregate '${q.text(item)}' needs an explicit AS " +
+              "alias to serve as a column name")
+          if (c0.arg == "*" && (fn != "COUNT" || c0.distinct))
+            fail(s"unsupported aggregate ${q.text(body)} — only COUNT(*) " +
+              "takes *; name the column or expression")
+          val c = c0.desugared
+          val argT = c.arg
           val isCol = plainIdentRe.matches(argT)
-          val c = if (isCol) unqualify(argT) else derivedName(argT)
-          val mp = graft.bitemporal.MvPct(c, p,
-            approx = fn == "APPROX_PERCENTILE")
-          val alias = Option(alias0).getOrElse {
-            if (!isCol)
-              fail(s"expression aggregate $fn($argT) needs an explicit " +
-                "AS alias to serve as a column name")
-            else if (fn == "MEDIAN") s"median_$c"
-            else mp.alias
-          }
-          pcts += mp
-          serve += (ServeCol.State(mp.alias) -> alias)
-          navAgg += (NavKey.Pct(navSrc(argT), p,
-            approx = fn == "APPROX_PERCENTILE") -> alias)
-        case vsRe(fn0, arg0, alias0) =>
-          val fn = fn0.toUpperCase
-          val argT = arg0.trim
-          if (argT == "*" || argT.toUpperCase.startsWith("DISTINCT"))
-            fail(s"$fn(DISTINCT …) is not incrementally maintainable " +
-              "here — the distinct multiset of values cannot be " +
-              "re-derived from sums; use the plain form")
-          val isCol = plainIdentRe.matches(argT)
-          val c = if (isCol) unqualify(argT) else derivedName(argT)
-          val alias = Option(alias0).getOrElse {
-            if (isCol) s"${fn.toLowerCase}_$c"
-            else fail(s"expression aggregate $fn($argT) needs an " +
-              "explicit AS alias to serve as a column name")
-          }
-          // the squared argument re-expands the ORIGINAL text so it
-          // validates as a row-local expression on its own; squaring
-          // the RAW value (no double cast) keeps DECIMAL inputs exact
-          // end to end — the only double arithmetic is the read-time
-          // formula
-          val sq = derivedName(s"($argT) * ($argT)")
-          varStdArgs += (fn -> argT)
-          sums += c; cnts += c; sums += sq
-          serve += (ServeCol.VarStd(c, sq, pop = fn.endsWith("_POP"),
-            isStd = fn.startsWith("STDDEV")) -> alias)
-          navAgg += (NavKey.Agg(
-            (if (fn.startsWith("STDDEV")) "std" else "var") +
-              (if (fn.endsWith("_POP")) "p" else ""),
-            navSrc(argT)) -> alias)
-        case aggDistRe(fn0, arg0, alias0) =>
-          val fn = fn0.toUpperCase
-          if (arg0.trim == "*")
-            fail(s"$fn(DISTINCT *) is malformed — name the column or " +
-              "expression whose distinct values the aggregate should see")
-          val isCol = plainIdentRe.matches(arg0.trim)
-          val d = if (isCol) unqualify(arg0) else derivedName(arg0)
-          def aliasOr(default: => String): String =
-            Option(alias0).getOrElse {
+          val col = if (argT == "*") "" else if (isCol) unqualify(argT)
+                    else derivedName(argT)
+          def aliasOr(default: => String, call: String): String =
+            alias.getOrElse {
               if (isCol) default
-              else fail(s"expression aggregate $fn(DISTINCT $arg0) needs " +
-                "an explicit AS alias to serve as a column name")
+              else fail(s"expression aggregate $call needs an explicit " +
+                "AS alias to serve as a column name")
             }
-          fn match {
-            // MIN/MAX over distinct values ≡ MIN/MAX over all values
-            case "MIN" => mins += d
-              val a = aliasOr(s"min_$d")
-              serve += (ServeCol.State(s"min_$d") -> a)
-              navAgg += (NavKey.Agg("min", navSrc(arg0)) -> a)
-            case "MAX" => maxs += d
-              val a = aliasOr(s"max_$d")
-              serve += (ServeCol.State(s"max_$d") -> a)
-              navAgg += (NavKey.Agg("max", navSrc(arg0)) -> a)
-            case "COUNT" =>
-              distincts += d; distinctNavSrc(d) = navSrc(arg0)
-              val a = aliasOr(s"cntd_$d")
-              serve += (ServeCol.State(s"cntd_$d") -> a)
-              navAgg += (NavKey.Agg("cntd", navSrc(arg0)) -> a)
-            case "SUM" =>
-              distincts += d; distinctSums += d
-              distinctNavSrc(d) = navSrc(arg0)
-              val a = aliasOr(s"sumd_$d")
-              serve += (ServeCol.State(s"sumd_$d") -> a)
-              navAgg += (NavKey.Agg("sumd", navSrc(arg0)) -> a)
-              navSum += (a -> s"sumd_$d")
-            case "AVG" =>
-              distincts += d; distinctSums += d
-              distinctNavSrc(d) = navSrc(arg0)
-              val a = aliasOr(s"avgd_$d")
-              serve += (ServeCol.AvgDistinct(d) -> a)
-              navAgg += (NavKey.Agg("avgd", navSrc(arg0)) -> a)
-              navSum += (a -> s"sumd_$d")
-          }
-        case aggRe(fn0, arg0, alias) =>
-          val fn = fn0.toUpperCase
-          if (arg0.trim.equalsIgnoreCase("distinct"))
-            fail(s"$fn(DISTINCT …) is malformed — the DISTINCT keyword " +
-              "needs an argument")
-          val arg = unqualify(arg0)
-          (fn, arg) match {
-            case ("COUNT", "*") =>
-              val a = Option(alias).getOrElse("n")
+          val a: String = fn match {
+            case "COUNT" if argT == "*" =>
+              val a = alias.getOrElse("n")
               serve += (ServeCol.State("n") -> a)
-              navAgg += (NavKey.Agg("n", "") -> a)
-            case ("COUNT", c) =>
-              // per-column NON-NULL counter: self-maintainable exactly
-              // like n (a null cell never contributes to the delta)
-              cnts += c
-              val a = Option(alias).getOrElse(s"cnt_$c")
-              serve += (ServeCol.State(s"cnt_$c") -> a)
-              navAgg += (NavKey.Agg("cnt", c.toLowerCase) -> a)
-            case ("SUM", c) =>
-              // the non-null counter rides along so the serve can mask
-              // an all-NULL group's 0 back to ANSI NULL
-              sums += c; cnts += c
-              val a = Option(alias).getOrElse(s"sum_$c")
-              serve += (ServeCol.Sum(c) -> a)
-              navAgg += (NavKey.Agg("sum", c.toLowerCase) -> a)
-              navSum += (a -> s"sum_$c")
-            case ("AVG", c) =>
-              // AVG = SUM / COUNT(col) at READ time — zero new state
-              // mechanics, both constituents are already maintainable
-              sums += c; cnts += c
-              val a = Option(alias).getOrElse(s"avg_$c")
-              serve += (ServeCol.Avg(c) -> a)
-              navAgg += (NavKey.Agg("avg", c.toLowerCase) -> a)
-              navSum += (a -> s"sum_$c")
-            case ("MIN", c) =>
-              mins += c
-              val a = Option(alias).getOrElse(s"min_$c")
-              serve += (ServeCol.State(s"min_$c") -> a)
-              navAgg += (NavKey.Agg("min", c.toLowerCase) -> a)
-            case ("MAX", c) =>
-              maxs += c
-              val a = Option(alias).getOrElse(s"max_$c")
-              serve += (ServeCol.State(s"max_$c") -> a)
-              navAgg += (NavKey.Agg("max", c.toLowerCase) -> a)
-            case _ => fail(s"unsupported aggregate $fn0($arg0)")
+              a
+            case _ if basicFns(fn) =>
+              // a stored column and a row-local expression (a derived
+              // column, content-addressed from its normalized text so
+              // SUM(x*y) and AVG(x * y) share one derived and state
+              // column) maintain alike. COUNT is a per-column NON-NULL
+              // counter; SUM and AVG ride it along (SUM's serve masks an
+              // all-NULL group's 0 back to ANSI NULL; AVG = SUM / COUNT
+              // at read time). MIN/MAX(DISTINCT) are the plain
+              // aggregates; COUNT/SUM/AVG(DISTINCT) keep one auxiliary
+              // pair view per argument (the Aux plumbing below)
+              val kind = basicKind(fn, c.distinct)
+              val a = aliasOr(s"${kind}_$col",
+                if (c.distinct) s"$fn(DISTINCT $argT)" else s"$fn($argT)")
+              kind match {
+                case "min" => mins += col; serve += (ServeCol.State(s"min_$col") -> a)
+                case "max" => maxs += col; serve += (ServeCol.State(s"max_$col") -> a)
+                case "cnt" => cnts += col; serve += (ServeCol.State(s"cnt_$col") -> a)
+                case "sum" =>
+                  sums += col; cnts += col; serve += (ServeCol.Sum(col) -> a)
+                  navSum += (a -> s"sum_$col")
+                case "avg" =>
+                  sums += col; cnts += col; serve += (ServeCol.Avg(col) -> a)
+                  navSum += (a -> s"sum_$col")
+                case _ =>
+                  distincts += col; distinctNavSrc(col) = navSrc(argT)
+                  if (kind != "cntd") {
+                    distinctSums += col; navSum += (a -> s"sumd_$col")
+                  }
+                  serve += ((if (kind == "avgd") ServeCol.AvgDistinct(col)
+                             else ServeCol.State(s"${kind}_$col")) -> a)
+              }
+              a
+            case _ if c.distinct =>
+              fail(if (varStdFns(fn))
+                  s"$fn(DISTINCT …) is not incrementally maintainable " +
+                    "here — the distinct multiset of values cannot be " +
+                    "re-derived from sums; use the plain form"
+                else s"$fn needs a column or row-local expression argument " +
+                  "(DISTINCT makes no difference to it and is not accepted)")
+            case "APPROX_COUNT_DISTINCT" =>
+              val a = aliasOr(s"apd_$col", s"$fn($argT)")
+              hlls += col; serve += (ServeCol.ApproxDistinct(col) -> a)
+              a
+            case _ if varStdFns(fn) =>
+              // the squared argument re-expands the ORIGINAL text so it
+              // validates as a row-local expression on its own; squaring
+              // the RAW value (no double cast) keeps DECIMAL inputs exact
+              // end to end — the only double arithmetic is the read-time
+              // formula
+              val sq = derivedName(s"($argT) * ($argT)")
+              varStdArgs += (fn -> argT)
+              sums += col; cnts += col; sums += sq
+              val a = aliasOr(s"${fn.toLowerCase}_$col", s"$fn($argT)")
+              serve += (ServeCol.VarStd(col, sq, pop = fn.endsWith("_POP"),
+                isStd = fn.startsWith("STDDEV")) -> a)
+              a
+            case _ => // the percentile family
+              val mp = graft.bitemporal.MvPct(col,
+                pctFraction(c).fold(msg => fail(msg), identity),
+                approx = fn == "APPROX_PERCENTILE")
+              pcts += mp
+              val a = aliasOr(if (fn == "MEDIAN") s"median_$col" else mp.alias,
+                s"$fn($argT)")
+              serve += (ServeCol.State(mp.alias) -> a)
+              a
           }
-        case identRe(g, alias) if groups.contains(unqualify(g)) =>
-          val gc = unqualify(g)
-          groupAliases(gc) = Option(alias).getOrElse(gc)
-        case aggExprRe(fn0, arg0, alias0) =>
-          val fn = fn0.toUpperCase
-          val alias = Option(alias0).getOrElse(fail(
-            s"expression aggregate $fn($arg0) needs an explicit " +
-              "AS alias to serve as a column name"))
-          val dn = derivedName(arg0)
-          fn match {
-            case "COUNT" =>
-              cnts += dn; serve += (ServeCol.State(s"cnt_$dn") -> alias)
-              navAgg += (NavKey.Agg("cnt", navSrc(arg0)) -> alias)
-            case "SUM" =>
-              sums += dn; cnts += dn
-              serve += (ServeCol.Sum(dn) -> alias)
-              navAgg += (NavKey.Agg("sum", navSrc(arg0)) -> alias)
-              navSum += (alias -> s"sum_$dn")
-            case "AVG" => sums += dn; cnts += dn
-              serve += (ServeCol.Avg(dn) -> alias)
-              navAgg += (NavKey.Agg("avg", navSrc(arg0)) -> alias)
-              navSum += (alias -> s"sum_$dn")
-            case "MIN" =>
-              mins += dn; serve += (ServeCol.State(s"min_$dn") -> alias)
-              navAgg += (NavKey.Agg("min", navSrc(arg0)) -> alias)
-            case "MAX" =>
-              maxs += dn; serve += (ServeCol.State(s"max_$dn") -> alias)
-              navAgg += (NavKey.Agg("max", navSrc(arg0)) -> alias)
+          navAgg += (navKey(c).get -> a)
+        case None =>
+          body match {
+            case g: UnresolvedAttribute if groups.contains(unqualify(q.text(g))) =>
+              val gc = unqualify(q.text(g))
+              groupAliases(gc) = alias.getOrElse(gc)
+            case _ =>
+              // a GROUP BY expression repeated in the SELECT list: matched
+              // by normalized source, alias mandatory (the expression is
+              // no name)
+              groupSrcs.collectFirst {
+                case (dn, src) if groupExprNames.contains(dn) &&
+                    src == normText(q.raw(body)) => dn
+              } match {
+                case Some(dn) => groupAliases(dn) = alias.getOrElse(
+                  fail(s"GROUP BY expression select item '${q.text(item)}' " +
+                    "needs an explicit AS alias to serve as a column name"))
+                case None => fail(s"select item '${q.text(item)}' is neither a " +
+                  s"GROUP BY column (${groups.mkString(", ")}) nor " +
+                  "COUNT(*)/COUNT/SUM/AVG/MIN/MAX([DISTINCT] col | row-local " +
+                  "expression AS alias) nor APPROX_COUNT_DISTINCT(col | expr " +
+                  "AS alias) nor VARIANCE/VAR_SAMP/VAR_POP/STDDEV/STDDEV_SAMP/" +
+                  "STDDEV_POP(col | expr AS alias) nor MEDIAN(col)/" +
+                  "PERCENTILE_CONT(col, p)/APPROX_PERCENTILE(col, p)")
+              }
           }
-        // a GROUP BY expression repeated in the SELECT list: matched by
-        // normalized text, alias mandatory (the expression is no name)
-        case exprAliasRe(body, alias) if groupExprNames.exists(dn =>
-            normText(derivedExprs(dn)) == normText(body)) =>
-          val nb = normText(body)
-          groupAliases(groupExprNames.find(dn =>
-            normText(derivedExprs(dn)) == nb).get) = alias
-        case item if groupExprNames.exists(dn =>
-            normText(derivedExprs(dn)) == normText(item)) =>
-          fail(s"GROUP BY expression select item '$item' needs an " +
-            "explicit AS alias to serve as a column name")
-        case other => fail(s"select item '$other' is neither a GROUP BY " +
-          s"column (${groups.mkString(", ")}) nor " +
-          "COUNT(*)/COUNT/SUM/AVG/MIN/MAX([DISTINCT] col | row-local " +
-          "expression AS alias) nor APPROX_COUNT_DISTINCT(col | expr " +
-          "AS alias) nor VARIANCE/VAR_SAMP/VAR_POP/STDDEV/STDDEV_SAMP/" +
-          "STDDEV_POP(col | expr AS alias) nor MEDIAN(col)/" +
-          "PERCENTILE_CONT(col, p)/APPROX_PERCENTILE(col, p)")
       }
+    }
 
     val fact = graftTable(factName)
     // each JOIN clause is one spoke of the star (none for a single-table
-    // view): resolve the dim table and read the fact fk off its ON
-    // clause; LEFT spokes keep facts with NULL/dangling fks as
-    // NULL-extended rows
-    val dims: Seq[(graft.GraftTable, String)] = joinSpecs.map {
-      case (dn, on, _) =>
-        val dim = graftTable(dn)
-        // top-level split only: an '=' inside a (hypothetical)
-        // literal or parens must not shear the clause
-        val sides = BitemporalDml.splitTopLevel(on, '=').map(_.trim)
-        if (sides.length != 2)
-          fail(s"ON clause must be fk = ${dn}._id, got '$on'")
-        val dimIdSide = sides.indexWhere(s =>
-          unqualify(s).equalsIgnoreCase("_id") &&
-            (!s.contains(".") ||
-              s.toLowerCase.startsWith(dn.toLowerCase + ".")))
-        if (dimIdSide < 0)
-          fail(s"ON clause must equate a fact column with ${dn}._id, " +
-            s"got '$on'")
-        dim -> unqualify(sides(1 - dimIdSide))
-    }
-    val leftJoins: Seq[Boolean] = joinSpecs.map(_._3)
+    // view), its fk read off the ON clause; LEFT spokes keep facts with
+    // NULL/dangling fks as NULL-extended rows
+    val dims: Seq[(graft.GraftTable, String)] =
+      q.joins.map { case (dn, fk, _) => graftTable(dn) -> fk }
+    val leftJoins: Seq[Boolean] = q.joins.map(_._3)
     // semantic WHERE validation, against the maintained relation's own
     // schema: a single-table sieve sees the payload AND the temporal
     // columns (`_valid_from < '2030-01-01'` is a legitimate row-local
@@ -1355,21 +1276,11 @@ object GraftMatviews {
     val serveAll =
       groups.map(g => (ServeCol.Group(g): ServeCol) -> groupAliases(g)) ++
         serve.result()
-    // navigation metadata
-    val navGroupOut: Seq[(String, String)] = groups.map { g =>
-      val src =
-        if (derivedExprs.contains(g)) normText(derivedExprs(g))
-        else g.toLowerCase
-      src -> groupAliases(g)
-    }
-    // normalized src -> PHYSICAL state column (the aux pair views'
-    // group columns — residual substitution on an aux scan needs them)
-    val navGroupPhys: Seq[(String, String)] = groups.map { g =>
-      val src =
-        if (derivedExprs.contains(g)) normText(derivedExprs(g))
-        else g.toLowerCase
-      src -> g
-    }
+    // navigation metadata: normalized src -> served alias, and -> the
+    // PHYSICAL state column (the aux pair views' group columns —
+    // residual substitution on an aux scan needs them)
+    val navGroupOut = groupSrcs.map { case (g, src) => src -> groupAliases(g) }
+    val navGroupPhys = groupSrcs.map { case (g, src) => src -> g }
     // an aux pair view needs exactly the derived definitions its own
     // group key uses: the view's derived group keys plus (when the
     // DISTINCT argument is an expression) the argument itself
@@ -1408,8 +1319,8 @@ object GraftMatviews {
       cnts.result().distinct, whereOpt, derivedExprs.toSeq, auxes,
       hlls.result().distinct, rangeLayout, leftJoins, pcts.toSeq,
       bucketKeyCols)
-    val joinsNav = joinSpecs.zip(dims).map {
-      case ((dn, _, left), (_, fk)) => (dn.toLowerCase, fk.toLowerCase, left)
+    val joinsNav = q.joins.map {
+      case (dn, fk, left) => (dn.toLowerCase, fk.toLowerCase, left)
     }
     val auxNav = auxes.flatMap(a => distinctNavSrc.get(a.arg).map(
       src => src -> DistinctAuxNav(a.arg, a.readAux))).toMap
@@ -1417,7 +1328,8 @@ object GraftMatviews {
       sess => mv.read(sess),
       () => { val ws = mv.refresh(); (ws.head, ws.tail.maxOption) },
       mvDir, canonicalDdl(nb),
-      NavInfo(factName.toLowerCase, joinsNav, whereOpt.map(normText),
+      NavInfo(factName.toLowerCase, joinsNav,
+        q.conjuncts.map(c => normText(q.raw(c))),
         navGroupOut, navAgg.result(), navSum.result(), validAt, trusted,
         () => mv.isFresh, navGroupPhys, auxNav))
 

@@ -5,6 +5,12 @@ import java.sql.Timestamp
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
+  UnresolvedFunction}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression,
+  LeafExpression, Literal, PlanExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit,
+  Sort}
 import org.apache.spark.sql.types.{DoubleType, FloatType, StructType}
 
 import graft.bitemporal.{BitemporalDml, BitemporalSql, SqlText}
@@ -214,76 +220,20 @@ object GraftMvNav {
   private final case class QGroup(src: String, out: String)
   private final case class QAgg(key: NavKey, out: String)
 
-  /** Paren depth at each offset; masked chars never open/close. */
-  private def depthOf(text: String, spans: Seq[(Int, Int)]): Array[Int] = {
-    val d = new Array[Int](math.max(text.length, 1))
-    var k = 0; var i = 0
-    while (i < text.length) {
-      d(i) = k
-      if (!SqlText.masked(spans, i)) {
-        val c = text.charAt(i)
-        if (c == '(') k += 1 else if (c == ')') k = math.max(0, k - 1)
-      }
-      i += 1
-    }
-    d
-  }
-
-  /** Split on TOP-LEVEL `AND` keywords — outside literals/comments,
-    * outside parens, and NOT the `AND` that closes a top-level
-    * `BETWEEN lo AND hi` (each unconsumed BETWEEN absorbs the next
-    * top-level AND). A predicate with a TOP-LEVEL `OR` is returned
-    * WHOLE: `A AND B OR C` parses as `(A AND B) OR C`, so its pieces
-    * are NOT conjuncts — re-joining them with AND would change the
-    * precedence (both sides of the subsumption match split with this
-    * same rule, so whole-text matching still works piecewise-equal). */
-  private[server] def splitAnd(t: String): Seq[String] = {
-    val spans = SqlText.maskedSpans(t)
-    val depth = depthOf(t, spans)
-    if ("(?i)\\bOR\\b".r.findAllMatchIn(t).exists(m =>
-        !SqlText.masked(spans, m.start) && depth(m.start) == 0))
-      return Seq(t.trim).filter(_.nonEmpty)
-    var pendingBetween = 0
-    val cuts = Seq.newBuilder[(Int, Int)]
-    "(?i)\\b(BETWEEN|AND)\\b".r.findAllMatchIn(t).foreach { m =>
-      if (!SqlText.masked(spans, m.start) && depth(m.start) == 0) {
-        if (m.group(1).equalsIgnoreCase("BETWEEN")) pendingBetween += 1
-        else if (pendingBetween > 0) pendingBetween -= 1
-        else cuts += ((m.start, m.end))
-      }
-    }
-    val bounds = ((0, 0) +: cuts.result()) :+ ((t.length, t.length))
-    bounds.sliding(2).map {
-      case Seq((_, s), (e, _)) => t.substring(s, e).trim
-      case _ => ""
-    }.filter(_.nonEmpty).toSeq
-  }
-
   private def attempt(session: SparkSession, original: String,
                       text: String, handles: Seq[Handle]): Option[String] = {
-    // split a trailing top-level ORDER BY / LIMIT off the core
-    val spans = SqlText.maskedSpans(text)
-    val depth = depthOf(text, spans)
-    val tailM = "(?i)\\b(ORDER\\s+BY|LIMIT)\\b".r.findAllMatchIn(text)
-      .find(m => !SqlText.masked(spans, m.start) && depth(m.start) == 0)
-    val (core0, tail) = tailM match {
-      case None => (text, "")
-      case Some(m) =>
-        (text.substring(0, m.start).trim, text.substring(m.start).trim)
-    }
-
     // the FOR VALID_TIME basis pin, if present (exactly one, nothing
     // else temporal)
     var forTs: Option[Timestamp] = None
-    val core = forValidRe.findFirstMatchIn(core0) match {
-      case Some(m) if !SqlText.masked(SqlText.maskedSpans(core0), m.start) =>
+    val core = forValidRe.findFirstMatchIn(text) match {
+      case Some(m) if !SqlText.masked(SqlText.maskedSpans(text), m.start) =>
         forTs = Some(
           try Timestamp.valueOf(m.group(2))
           catch { case _: IllegalArgumentException =>
             note("unparseable FOR APPLICATION_TIME timestamp"); return None })
-        core0.substring(0, m.start) + s"FROM ${m.group(1)}" +
-          core0.substring(m.end)
-      case _ => core0
+        text.substring(0, m.start) + s"FROM ${m.group(1)}" +
+          text.substring(m.end)
+      case _ => text
     }
     if (anyForRe.findFirstMatchIn(core).exists(m =>
         !SqlText.masked(SqlText.maskedSpans(core), m.start))) {
@@ -292,80 +242,58 @@ object GraftMvNav {
       return None
     }
 
-    val (list, factName, joinSpecs, whereOpt, groupBy, havingOpt) =
-      try GraftMatviews.splitSelect(core, requireGroupBy = false)
+    val q =
+      try GraftMatviews.parseSelect(core, ddl = false)
       catch { case _: IllegalArgumentException =>
         note("not a plain aggregate SELECT (FROM/JOIN/GROUP BY shape)")
         return None }
-
-    // query join spokes, canonicalized like the DDL's
-    val qJoins: Seq[(String, String, Boolean)] = joinSpecs.map {
-      case (dim, on, left) =>
-        val sides = BitemporalDml.splitTopLevel(on, '=').map(_.trim)
-        if (sides.length != 2) { note(s"ON clause not fk = dim._id: $on")
-          return None }
-        val dimIdSide = sides.indexWhere(s =>
-          unqualify(s).equalsIgnoreCase("_id") &&
-            (!s.contains(".") ||
-              s.toLowerCase.startsWith(dim.toLowerCase + ".")))
-        if (dimIdSide < 0) { note(s"ON clause not fk = dim._id: $on")
-          return None }
-        (dim.toLowerCase, unqualify(sides(1 - dimIdSide)).toLowerCase, left)
-    }
+    val qJoins = q.joins.map { case (d, fk, left) =>
+      (d.toLowerCase, fk.toLowerCase, left) }
 
     // an EMPTY group list is the GLOBAL aggregate (`SELECT COUNT(*) …
     // FROM fact`, no GROUP BY) — the degenerate rollup: every view
     // group merges into the one output row
-    val qGroupSrcs = BitemporalDml.splitTopLevel(groupBy).map(_.trim)
-      .filter(_.nonEmpty).map(navSrc)
+    val qGroupSrcs = q.groups.map(g => navSrc(q.raw(g)))
     if (qGroupSrcs.distinct.size != qGroupSrcs.size) {
       note("duplicated GROUP BY columns"); return None
     }
     val qGroupSet = qGroupSrcs.toSet
 
     // classify every select item; any unclassifiable item = base path
-    val items: Seq[Either[QGroup, QAgg]] =
-      BitemporalDml.splitTopLevel(list).map(_.trim).filter(_.nonEmpty)
-        .map { raw =>
-          classify(raw, qGroupSet) match {
-            case Some(it) => it
-            case None =>
-              note(s"select item not servable from state: '$raw' " +
-                "(aggregates need an explicit AS alias)")
-              return None
-          }
-        }
+    val items: Seq[Either[QGroup, QAgg]] = q.items.map { it =>
+      classify(q, it, qGroupSet).getOrElse {
+        note(s"select item not servable from state: '${q.text(it)}' " +
+          "(aggregates need an explicit AS alias)")
+        return None
+      }
+    }
     // aggregates need ≥1 to be a rewrite worth doing
     if (!items.exists(_.isRight)) { note("no aggregates in the select " +
       "list"); return None }
 
-    // the query's HAVING, decomposed into aggregate calls (matched by
-    // NavKey like select items) and group-column text — applied over
-    // the served relation in build(); an undecomposable HAVING = base
-    val hvSegs: Seq[Either[String, NavKey]] = havingOpt match {
-      case None => Nil
-      case Some(hv) => parseHaving(hv, qGroupSet) match {
-        case Some(segs) => segs
-        case None =>
-          note(s"HAVING not servable from state: '$hv' (aggregate " +
-            "calls must match view aggregates; bare identifiers must " +
-            "be GROUP BY columns)")
-          return None
+    // the query's HAVING: its aggregate calls must match view aggregates
+    // (keyed like select items) and everything else reference only the
+    // query's group columns — substituted per candidate view in build()
+    val hvKeys = scala.collection.mutable.ArrayBuffer.empty[NavKey]
+    q.having.foreach { hv =>
+      if (subst(q, hv, qGroupSet.map(g => g -> g).toMap,
+          c => GraftMatviews.navKey(c).map { k => hvKeys += k; "" }).isEmpty) {
+        note(s"HAVING not servable from state: '${q.text(hv)}' (aggregate " +
+          "calls must match view aggregates; bare identifiers must " +
+          "be GROUP BY columns)")
+        return None
       }
     }
 
     // the query's WHERE as top-level conjuncts: a candidate view's
     // WHERE conjuncts must be a sub-multiset (normalized), the rest is
     // the residual applied over the served relation
-    val qConj: Seq[(String, String)] =
-      whereOpt.map(splitAnd).getOrElse(Nil).map(c => (c, normText(c)))
-    val fact = factName.toLowerCase
+    val qConj = q.conjuncts.map(c => (c, normText(q.raw(c))))
+    val fact = q.fact.toLowerCase
 
-    def residualOf(h: Handle): Option[Seq[String]] = {
-      val vNorms = h.nav.whereNorm
-        .map(w => splitAnd(w).map(normText)).getOrElse(Nil)
+    def residualOf(h: Handle): Option[Seq[Expression]] = {
       val pool = scala.collection.mutable.ArrayBuffer(qConj: _*)
-      val allMatched = vNorms.forall { vn =>
+      val allMatched = h.nav.whereConj.forall { vn =>
         val i = pool.indexWhere(_._2 == vn)
         if (i >= 0) { pool.remove(i); true } else false
       }
@@ -375,7 +303,7 @@ object GraftMvNav {
     // candidate views, cheapest gates first; freshness (a directory
     // listing) and the schema analyses only for full structural matches
     val ordered = handles.flatMap { h =>
-      def miss(why: String): Option[(Handle, Seq[String])] = {
+      def miss(why: String): Option[(Handle, Seq[Expression])] = {
         if (h.nav.fact == fact) note(s"view ${h.name}: $why")
         None
       }
@@ -416,228 +344,78 @@ object GraftMvNav {
         residual.size, h.nav.groupOut.size)
     }
     ordered.iterator.flatMap { case (h, residual) =>
-      build(session, original, h, items, hvSegs, residual, qGroupSrcs, tail)
+      build(session, original, q, h, items, hvKeys.toSeq.distinct, residual,
+        qGroupSrcs)
     }.nextOption()
-  }
-
-  /** Aggregate-call text → match key + optional trailing alias, via
-    * the SAME regexes and desugar the DDL dispatch uses (so the two
-    * sides cannot drift). Shared by the select-item classifier and the
-    * HAVING decomposition (where calls carry no alias). */
-  private def aggKeyAlias(raw: String): Option[(NavKey, Option[String])] = {
-    import GraftMatviews._
-    val item = desugarFilter(raw) // may throw: caught by rewrite()
-    item match {
-      case apdRe(arg, alias) =>
-        Some((NavKey.Agg("apd", navSrc(arg)), Option(alias)))
-      case pctRe(fn0, arg, frac, alias) =>
-        val fn = fn0.toUpperCase
-        val p = (fn, Option(frac)) match {
-          case ("MEDIAN", None) => 0.5
-          case ("MEDIAN", Some(_)) => return None
-          case (_, None) => return None
-          case (_, Some(f)) => f.toDouble
-        }
-        Some((NavKey.Pct(navSrc(arg), p, fn == "APPROX_PERCENTILE"),
-          Option(alias)))
-      case vsRe(fn0, arg, alias) =>
-        val fn = fn0.toUpperCase
-        val kind = (if (fn.startsWith("STDDEV")) "std" else "var") +
-          (if (fn.endsWith("_POP")) "p" else "")
-        Some((NavKey.Agg(kind, navSrc(arg)), Option(alias)))
-      case aggDistRe(fn0, arg, alias) =>
-        val kind = fn0.toUpperCase match {
-          case "MIN" => "min"
-          case "MAX" => "max"
-          case "COUNT" => "cntd"
-          case "SUM" => "sumd"
-          case "AVG" => "avgd"
-        }
-        Some((NavKey.Agg(kind, navSrc(arg)), Option(alias)))
-      case aggRe(fn0, arg0, alias) =>
-        val fn = fn0.toUpperCase
-        val arg = arg0.trim
-        if (fn == "COUNT" && arg == "*")
-          Some((NavKey.Agg("n", ""), Option(alias)))
-        else if (arg == "*" || arg.equalsIgnoreCase("distinct")) None
-        else Some((NavKey.Agg(fn.toLowerCase match {
-          case "count" => "cnt"
-          case k => k
-        }, navSrc(arg)), Option(alias)))
-      case aggExprRe(fn0, arg, alias) =>
-        Some((NavKey.Agg(fn0.toLowerCase match {
-          case "count" => "cnt"
-          case k => k
-        }, navSrc(arg)), Option(alias)))
-      case _ => None
-    }
   }
 
   /** One select item → group ref or aggregate key (query side).
     * Aggregates need an explicit alias (the rewrite must reproduce the
     * query's output names; Spark's auto-names for unaliased aggregates
     * are not worth replicating). */
-  private def classify(raw: String, qGroups: Set[String])
-      : Option[Either[QGroup, QAgg]] = {
-    import GraftMatviews._
-    raw match {
-      case identRe(g, alias) if qGroups.contains(navSrc(g)) =>
-        Some(Left(QGroup(navSrc(g), Option(alias).getOrElse(unqualify(g)))))
-      case _ => aggKeyAlias(raw) match {
-        case Some((key, Some(alias))) => Some(Right(QAgg(key, alias)))
-        case Some((_, None)) => None // unaliased aggregate
-        case None => raw match {
-          case exprAliasRe(body, alias) if qGroups.contains(normText(body)) =>
-            Some(Left(QGroup(normText(body), alias)))
-          case _ => None
-        }
+  private def classify(q: GraftMatviews.MvSelect, item: Expression,
+                       qGroups: Set[String]): Option[Either[QGroup, QAgg]] = {
+    val (body, alias) = q.aliased(item)
+    body match {
+      case a: UnresolvedAttribute if qGroups.contains(navSrc(q.raw(a))) =>
+        Some(Left(QGroup(navSrc(q.raw(a)), alias.getOrElse(unqualify(q.raw(a))))))
+      case _ => q.aggCall(body) match {
+        case Some(c) =>
+          for (k <- GraftMatviews.navKey(c); a <- alias) yield Right(QAgg(k, a))
+        case None =>
+          val src = normText(q.raw(body))
+          alias.filter(_ => qGroups.contains(src)).map(a => Left(QGroup(src, a)))
       }
     }
-  }
-
-  // ---- HAVING decomposition ------------------------------------------
-
-  private val aggCallStartRe =
-    ("(?i)\\b(APPROX_COUNT_DISTINCT|APPROX_PERCENTILE|PERCENTILE_CONT|" +
-      "PERCENTILE|MEDIAN|STDDEV_SAMP|STDDEV_POP|STDDEV|VARIANCE|" +
-      "VAR_SAMP|VAR_POP|COUNT|SUM|MIN|MAX|AVG)\\s*\\(").r
-  private val filterHeadRe = "(?is)^\\s*FILTER\\s*\\(".r
-
-  /** Decompose a HAVING expression into aggregate-call spans (each
-    * keyed like a select item) and the text between them. The text
-    * segments may only reference the QUERY's group columns (validated
-    * here by token; substituted to served aliases per candidate view
-    * in build) — anything else is not provably servable. */
-  private def parseHaving(hv: String, qGroups: Set[String])
-      : Option[Seq[Either[String, NavKey]]] = {
-    val spans = SqlText.maskedSpans(hv)
-    val segs = Seq.newBuilder[Either[String, NavKey]]
-    var pos = 0
-    def closeOf(open: Int): Option[Int] = {
-      var d = 0; var i = open
-      while (i < hv.length) {
-        if (!SqlText.masked(spans, i)) {
-          val c = hv.charAt(i)
-          if (c == '(') d += 1
-          else if (c == ')') { d -= 1; if (d == 0) return Some(i) }
-        }
-        i += 1
-      }
-      None
-    }
-    for (m <- aggCallStartRe.findAllMatchIn(hv)
-        if m.start >= pos && !SqlText.masked(spans, m.start)) {
-      var end = closeOf(m.end - 1) match {
-        case Some(e) => e + 1
-        case None => return None
-      }
-      // absorb a trailing FILTER (WHERE …): the shared desugar turns
-      // the whole call into the expression-aggregate form
-      filterHeadRe.findFirstMatchIn(hv.substring(end)).foreach { fm =>
-        closeOf(end + fm.end - 1).foreach(e => end = e + 1)
-      }
-      aggKeyAlias(hv.substring(m.start, end)) match {
-        case Some((key, _)) =>
-          if (m.start > pos) segs += Left(hv.substring(pos, m.start))
-          segs += Right(key)
-          pos = end
-        case None => return None
-      }
-    }
-    if (pos < hv.length) segs += Left(hv.substring(pos))
-    val out = segs.result()
-    // every identifier in the text segments must be a query group col
-    // (substitutable per view); the substitution itself runs per
-    // candidate in build() — here an empty mapping-independent check
-    val ok = out.forall {
-      case Left(txt) =>
-        substGroupRefs(txt, qGroups.map(g => g -> g).toMap).isDefined
-      case Right(_) => true
-    }
-    if (ok) Some(out) else None
   }
 
   // ---- group-column reference substitution ----------------------------
 
-  // (?<![\w.]) so `1e5` / `0x1f` / `.member` never read as identifiers
-  private val identTokRe =
-    "(?<![\\w.])[A-Za-z_]\\w*(?:\\.[A-Za-z_]\\w*)*".r
-  // words that are provably NOT column references in predicate position
-  // (unquoted, these cannot parse as columns)
-  private val bareKeywords = Set("and", "or", "not", "in", "is", "null",
-    "between", "like", "ilike", "rlike", "escape", "true", "false",
-    "exists", "case", "when", "then", "else", "end", "distinct")
-
-  /** Rewrite a predicate fragment so every (unmasked) column reference
-    * becomes the view's served alias for that GROUP BY column — and
-    * every balanced CALL expression whose normalized text IS a view
-    * GROUP BY expression becomes that expression's alias (the
-    * time-bucketed dashboard's `date_trunc('month', ts) >= X`, which
-    * then composes with range-dir pruning). None = the fragment
-    * references something not provably a verbatim-served group value —
-    * backticked identifiers (could collide with an aggregate's served
-    * alias), calls that are NOT a group expression, typed literals
-    * aside (`DATE '…'` keeps), unknown columns — and the statement
-    * falls back to the base path. */
-  private def substGroupRefs(frag: String, allowed: Map[String, String])
-      : Option[String] = {
-    if (frag.indexOf('`') >= 0) return None
-    val spans = SqlText.maskedSpans(frag)
-    def balancedClose(open: Int): Option[Int] = {
-      var d = 0; var i = open
-      while (i < frag.length) {
-        if (!SqlText.masked(spans, i)) {
-          val c = frag.charAt(i)
-          if (c == '(') d += 1
-          else if (c == ')') { d -= 1; if (d == 0) return Some(i) }
-        }
-        i += 1
-      }
-      None
+  /** The source of `e` with every group reference replaced by its
+    * backticked column in `groups` (keyed by normalized source: a bare
+    * column, or any subtree whose text IS a GROUP BY expression, e.g.
+    * the time-window dashboard's `date_trunc('month', ts) >= X`, which
+    * then composes with range-dir pruning) and every aggregate call by
+    * `agg`'s text. Edits land at the nodes' source offsets, so the
+    * operators, literals and parentheses around them stay as written.
+    * A group value serves verbatim, so any predicate over it commutes
+    * with GROUP BY exactly. None = `e` reads something not provably a
+    * verbatim-served group value — an ungrouped column, a call or cast
+    * that is not a GROUP BY expression, a subquery, or a backticked
+    * identifier (it could collide with an aggregate's served alias) —
+    * and the statement falls back to the base path. */
+  private def subst(q: GraftMatviews.MvSelect, e: Expression,
+      groups: Map[String, String],
+      agg: GraftMatviews.AggCall => Option[String]): Option[String] = {
+    val (lo, hi) = q.wideSpan(e)
+    if (q.src.substring(lo, hi).indexOf('`') >= 0) return None
+    val edits = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
+    def edit(x: Expression, to: String): Boolean = {
+      val (s, t) = q.span(x); edits += ((s, t, to)); true
     }
+    def walk(x: Expression): Boolean = {
+      lazy val src = normText(q.raw(x))
+      x match {
+        case a: UnresolvedAttribute =>
+          groups.get(navSrc(q.raw(a))).exists(g => edit(a, s"`$g`"))
+        case _: Literal => true
+        case _ if groups.contains(src) => edit(x, s"`${groups(src)}`")
+        case f: UnresolvedFunction if q.aggCall(f).isDefined =>
+          q.aggCall(f).flatMap(agg).exists(edit(f, _))
+        // `x BETWEEN lo AND hi` parses as a call; it is an operator here
+        case f: UnresolvedFunction if f.nameParts.map(_.toLowerCase) ==
+            Seq("between") => f.arguments.forall(walk)
+        case _: UnresolvedFunction | _: Cast | _: PlanExpression[_] |
+            _: LeafExpression => false
+        case _ => x.children.forall(walk)
+      }
+    }
+    if (!walk(e)) return None
     val sb = new StringBuilder
-    var last = 0
-    for (m <- identTokRe.findAllMatchIn(frag)) {
-      // skip matches inside an already-consumed call span
-      if (m.start >= last && !SqlText.masked(spans, m.start)) {
-        val tok = m.matched
-        val low = tok.toLowerCase
-        var j = m.end
-        while (j < frag.length && frag.charAt(j).isWhitespace) j += 1
-        val nextCh = if (j < frag.length) frag.charAt(j) else ' '
-        val typedLit = (low == "date" || low == "timestamp" ||
-          low == "interval") && nextCh == '\''
-        if (typedLit || (bareKeywords(low) && !tok.contains("."))) {
-          // keyword / typed-literal head: keep verbatim
-        } else if (nextCh == '(') {
-          // a call: servable only when the WHOLE balanced expression
-          // is (the normalized text of) a view GROUP BY expression —
-          // which serves verbatim, so any predicate over it commutes
-          // with GROUP BY exactly like a plain group column
-          balancedClose(j) match {
-            case Some(e) =>
-              val span = frag.substring(m.start, e + 1)
-              allowed.get(normText(span)) match {
-                case Some(alias) =>
-                  sb.append(frag.substring(last, m.start))
-                    .append('`').append(alias).append('`')
-                  last = e + 1
-                case None => return None
-              }
-            case None => return None
-          }
-        }
-        else allowed.get(navSrc(tok)) match {
-          case Some(alias) =>
-            sb.append(frag.substring(last, m.start))
-              .append('`').append(alias).append('`')
-            last = m.end
-          case None => return None
-        }
-      }
-    }
-    sb.append(frag.substring(last))
-    Some(sb.toString)
+    var at = lo
+    edits.sortBy(_._1).foreach { case (s, t, to) =>
+      sb.append(q.src, at, s).append(to); at = t }
+    Some(sb.append(q.src, at, hi).toString)
   }
 
   // ---- the per-kind exactness/rollup rules (see the object doc) ------
@@ -696,11 +474,10 @@ object GraftMvNav {
 
   // ---- building the rewritten statement -------------------------------
 
-  private def build(session: SparkSession, original: String, h: Handle,
-                    items: Seq[Either[QGroup, QAgg]],
-                    hvSegs: Seq[Either[String, NavKey]],
-                    residual: Seq[String],
-                    qGroupSrcs: Seq[String], tail: String)
+  private def build(session: SparkSession, original: String,
+                    q: GraftMatviews.MvSelect, h: Handle,
+                    items: Seq[Either[QGroup, QAgg]], hvKeys: Seq[NavKey],
+                    residual: Seq[Expression], qGroupSrcs: Seq[String])
       : Option[String] = {
     def miss(why: String): Option[String] = { note(s"view ${h.name}: $why")
       None }
@@ -719,7 +496,7 @@ object GraftMvNav {
     // resolve every aggregate (select items AND HAVING calls) against
     // the view, applying the exactness matrix — one miss = base path
     val allKeys = (items.collect { case Right(QAgg(key, _)) => key } ++
-      hvSegs.collect { case Right(key) => key }).distinct
+      hvKeys).distinct
     val aggAliases = allKeys.map { key =>
       val kindOk = key match {
         case NavKey.Agg(k, a) =>
@@ -813,9 +590,9 @@ object GraftMvNav {
     // (they serve verbatim — filtering served groups IS filtering base
     // rows); substitution to served aliases, conservative grammar
     val residualSql = residual.map { c =>
-      substGroupRefs(c, vGroup) match {
+      subst(q, c, vGroup, _ => None) match {
         case Some(s) => s
-        case None => return miss(s"residual WHERE conjunct '$c' does " +
+        case None => return miss(s"residual WHERE conjunct '${q.text(c)}' does " +
           "not reference only the view's GROUP BY columns")
       }
     }
@@ -826,7 +603,8 @@ object GraftMvNav {
       case Left(QGroup(_, o)) => o.toLowerCase
       case Right(QAgg(_, o)) => o.toLowerCase
     }.toSet
-    if (!tailOk(tail, outNames))
+    val tail = q.tailText
+    if (!tailOk(q, outNames))
       return miss(s"ORDER BY/LIMIT tail '$tail' references more than " +
         "the query's own output columns")
 
@@ -851,23 +629,11 @@ object GraftMvNav {
 
       // the HAVING, substituted: group refs via the view's aliases,
       // aggregate calls via their served expressions
-      val hvText: Option[String] =
-        if (hvSegs.isEmpty) None
-        else {
-          val parts = hvSegs.map {
-            case Left(txt) => substGroupRefs(txt, vGroup) match {
-              case Some(s) => s
-              case None => return miss(s"HAVING fragment '$txt' does " +
-                "not reference only GROUP BY columns")
-            }
-            case Right(key) => servedExpr(key) match {
-              case Some(e) => e
-              case None => return miss(s"no served expression for $key " +
-                "in HAVING")
-            }
-          }
-          Some(parts.mkString)
-        }
+      val hvText: Option[String] = q.having.map { hv =>
+        subst(q, hv, vGroup, c => GraftMatviews.navKey(c).flatMap(servedExpr))
+          .getOrElse(return miss(s"HAVING '${q.text(hv)}' does not " +
+            "reference only GROUP BY columns and served aggregates"))
+      }
 
       // equal groups: state rows ARE the output groups, so the HAVING
       // is one more WHERE conjunct; a rollup keeps it as a real HAVING
@@ -907,9 +673,9 @@ object GraftMvNav {
       val physGroups = qGroupSrcs.map(s => physMap.getOrElse(s,
         return miss("view predates DISTINCT-rollup navigation metadata")))
       val resPhys = residual.map { c =>
-        substGroupRefs(c, physMap) match {
+        subst(q, c, physMap, _ => None) match {
           case Some(s2) => s2
-          case None => return miss(s"residual WHERE conjunct '$c' " +
+          case None => return miss(s"residual WHERE conjunct '${q.text(c)}' " +
             "is not substitutable onto the aux pair state")
         }
       }
@@ -999,20 +765,13 @@ object GraftMvNav {
       }
       // the rollup HAVING becomes a top-level WHERE over the joined,
       // already-aggregated relation — every group survives into it
-      val hvTop: Option[String] =
-        if (hvSegs.isEmpty) None
-        else {
-          val gMap = qGroupSrcs.zipWithIndex
-            .map { case (s, i) => s -> gName(i) }.toMap
-          Some(hvSegs.map {
-            case Left(txt) => substGroupRefs(txt, gMap) match {
-              case Some(s) => s
-              case None => return miss(s"HAVING fragment '$txt' does " +
-                "not reference only GROUP BY columns")
-            }
-            case Right(key) => topExpr(key)
-          }.mkString)
-        }
+      val hvTop: Option[String] = q.having.map { hv =>
+        val gMap = qGroupSrcs.zipWithIndex
+          .map { case (s, i) => s -> gName(i) }.toMap
+        subst(q, hv, gMap, c => GraftMatviews.navKey(c).map(topExpr))
+          .getOrElse(return miss(s"HAVING '${q.text(hv)}' does not " +
+            "reference only GROUP BY columns and served aggregates"))
+      }
       val wTop = hvTop.map(t => s" WHERE ($t)").getOrElse("")
       s"SELECT ${topSel.mkString(", ")} FROM $fromClause$wTop" +
         (if (tail.isEmpty) "" else " " + tail)
@@ -1042,20 +801,17 @@ object GraftMvNav {
       s"${rwSchema.simpleString})")
   }
 
-  private val tailRe =
-    "(?is)^(?:ORDER\\s+BY\\s+([\\s\\S]+?))?\\s*(?:LIMIT\\s+(\\d+))?$".r
-  private val orderItemRe =
-    ("(?is)^([A-Za-z_]\\w*)(?:\\s+(?:ASC|DESC))?" +
-      "(?:\\s+NULLS\\s+(?:FIRST|LAST))?$").r
-
-  private def tailOk(tail: String, outNames: Set[String]): Boolean =
-    tail.isEmpty || (tail match {
-      case tailRe(ob, _) =>
-        Option(ob).forall(t =>
-          BitemporalDml.splitTopLevel(t).forall(it => it.trim match {
-            case orderItemRe(id) => outNames.contains(id.toLowerCase)
-            case _ => false
-          }))
+  /** ORDER BY / LIMIT ride along only when every sort key is one of
+    * the query's own output columns (no OFFSET). */
+  private def tailOk(q: GraftMatviews.MvSelect, outNames: Set[String])
+      : Boolean =
+    q.tail.forall {
+      case s: Sort => s.order.forall(_.child match {
+        case a: UnresolvedAttribute =>
+          a.nameParts.size == 1 && outNames(a.nameParts.head.toLowerCase)
+        case _ => false
+      })
+      case _: GlobalLimit | _: LocalLimit => true
       case _ => false
-    })
+    }
 }

@@ -1,57 +1,24 @@
 package graft.server
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.PlanBridge
 
-/** One-call SQL-text entry covering the FULL graft surface — what a
-  * front door does per statement, callable without installing the
-  * session extensions (embedding apps, tests, the verify harness):
-  *
-  *   1. materialized-view DDL executes eagerly ([[GraftMatviews]]);
-  *   2. registered matview names re-bind to their current state;
-  *   3. `graft_*( … )` table-valued procedures substitute to their
-  *      result relations ([[GraftProcedures]]);
-  *   4. the rewritten text goes to `spark.sql` — which, on a session
-  *      carrying `graft.GraftExtensions`, ALSO resolves temporal
-  *      clauses, graft DML and recursive CTEs via [[GraftSqlParser]].
-  *
-  * Sessions with the extensions installed don't need this object —
-  * `spark.sql` alone does all four (the parser calls the same hooks);
-  * pgwire/HTTP/Connect ride that path. This entry exists so the text
-  * surface is NOT coupled to extension installation.
+/** One-call SQL-text entry covering the FULL graft surface, callable
+  * without installing the session extensions (embedding apps, tests,
+  * the verify harness): the statement goes through the same
+  * [[GraftSqlParser]] that pgwire, HTTP and Connect sessions parse
+  * with — matview DDL and maintenance, matview rebinding, EXPLAIN
+  * [REWRITE], aggregate navigation, `graft_*( … )` procedures,
+  * temporal clauses, graft DML and recursive CTEs. A session that
+  * carries `graft.GraftExtensions` already parses with it; any other
+  * session's parser is wrapped for the one statement.
   */
 object GraftSql {
-  def sql(spark: SparkSession, text: String): DataFrame =
-    GraftMatviews.routeDdl(spark, text)
-      .orElse(GraftMaintenance.route(spark, text))
-      .getOrElse {
-        GraftMatviews.refreshReferenced(spark, text)
-        // EXPLAIN REWRITE <stmt>: the aggregate-navigation decision as
-        // a one-row relation (did it navigate, onto which view, or the
-        // first gate that refused, per candidate)
-        GraftSqlParser.explainRewriteInner(text) match {
-          case Some(inner) => return GraftMvNav.explainReport(spark, inner)
-          case None =>
-        }
-        // transparent aggregate navigation: a plain GROUP BY over a
-        // registered table answered from a FRESH matview's state when
-        // provably identical (GraftMvNav's gates) — None = base path
-        GraftMvNav.rewrite(spark, text) match {
-          case Some(rw) => return spark.sql(rw)
-          case None =>
-        }
-        if (GraftSqlParser.isExplain(text)) {
-          // EXPLAIN pre-substitutes in PLANS-ONLY mode: stage pins
-          // (localCheckpoint jobs) flip to identity so the full lazy
-          // pipeline lands in the temp view and zero jobs launch —
-          // whether or not the session's parser then re-handles the
-          // EXPLAIN (extensions installed) or Spark renders it natively.
-          // EXPLAIN/execution parity: the inner statement nav-rewrites
-          // first, so the rendered plan IS the plan execution serves.
-          GraftProcedures.refuseUnexplainable(text)
-          spark.sql(graft.util.PlansOnly {
-            GraftProcedures.rewrite(spark,
-              GraftSqlParser.rewriteExplainInner(spark, text))
-          })
-        } else spark.sql(GraftProcedures.rewrite(spark, text))
-      }
+  def sql(spark: SparkSession, text: String): DataFrame = {
+    val parser = PlanBridge.sqlParser(spark) match {
+      case p: GraftSqlParser => p
+      case p => new GraftSqlParser(spark, p)
+    }
+    PlanBridge.ofRows(spark, parser.parsePlan(text))
+  }
 }

@@ -243,36 +243,10 @@ object GraftSqlParser {
     "^\\s*EXPLAIN\\s+REWRITE\\b",
     java.util.regex.Pattern.CASE_INSENSITIVE)
 
-  /** `EXPLAIN REWRITE <stmt>` → the inner statement. Shared with
-    * [[GraftSql]]. */
-  private[server] def explainRewriteInner(text: String): Option[String] = {
+  /** `EXPLAIN REWRITE <stmt>` → the inner statement. */
+  private def explainRewriteInner(text: String): Option[String] = {
     val stripped = graft.bitemporal.SqlText.stripLeadingComments(text)
     val m = explainRewriteHead.matcher(stripped)
     if (m.find()) Some(stripped.substring(m.end()).trim) else None
   }
-
-  /** EXPLAIN/execution parity for the TEXT front door ([[GraftSql]]):
-    * `EXPLAIN <select>` must describe the NAVIGATED plan exactly when
-    * executing `<select>` would serve it, so the inner statement is
-    * nav-rewritten before the explain renders. (The session-parser
-    * path gets this for free — its EXPLAIN branch re-enters parsePlan
-    * on the inner statement, which applies the same rewrite.) */
-  private[server] def rewriteExplainInner(session: SparkSession,
-                                          text: String): String = {
-    val stripped = graft.bitemporal.SqlText.stripLeadingComments(text)
-    val m = explainHead.matcher(stripped)
-    if (!m.find()) return text
-    GraftMvNav.rewrite(session, stripped.substring(m.end())) match {
-      case Some(rw) => stripped.substring(0, m.end()) + " " + rw
-      case None => text
-    }
-  }
-
-  /** Does the (comment-stripped) statement head with EXPLAIN? Shared
-    * with [[GraftSql]], which pre-substitutes procedures before the
-    * session parser can see the text and must flip to plans-only mode
-    * for an EXPLAIN the same way the parser's own branch does. */
-  private[server] def isExplain(text: String): Boolean =
-    explainHead.matcher(
-      graft.bitemporal.SqlText.stripLeadingComments(text)).find()
 }

@@ -16,7 +16,13 @@ object PlanBridge {
 
   /** Parse SQL text into an unresolved logical plan (no analysis). */
   def parsePlan(spark: SparkSession, sql: String): LogicalPlan =
-    cs(spark).sessionState.sqlParser.parsePlan(sql)
+    sqlParser(spark).parsePlan(sql)
+
+  /** The session's SQL parser (the graft front door's, when the session
+    * carries `graft.GraftExtensions`). */
+  def sqlParser(spark: SparkSession)
+      : org.apache.spark.sql.catalyst.parser.ParserInterface =
+    cs(spark).sessionState.sqlParser
 
   /** Execute a logical plan as a DataFrame (analysis happens here). */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =

@@ -587,6 +587,24 @@ class GraftTableSpec extends AnyFunSuite {
     assert(got == Map(1L -> ((1.0, false)), 2L -> ((2.0, true))))
   }
 
+  test("DML writes take the log's column types: an INT literal SET or " +
+      "INSERTed into a BIGINT column keeps the table readable") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_typed").toString
+    val t = new GraftTable(spark, dir, Seq("code", "tag"))
+    t.dml("acct", "INSERT INTO acct (_id, code, tag) VALUES " +
+      "(1, CAST(100 AS BIGINT), 'a'), (2, CAST(200 AS BIGINT), 'b')",
+      ts("2020-01-01 00:00:00"))
+    t.dml("acct", "UPDATE acct SET code = 300 WHERE _id = 1",
+      ts("2020-01-02 00:00:00"))
+    t.dml("acct", "INSERT INTO acct (_id, code, tag) VALUES (3, 300, 'c')",
+      ts("2020-01-03 00:00:00"))
+    val cur = t.current().select($"_id", $"code").orderBy($"_id")
+    assert(cur.schema("code").dataType ==
+      org.apache.spark.sql.types.LongType)
+    assert(cur.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq ==
+      Seq(1L -> 300L, 2L -> 200L, 3L -> 300L))
+  }
+
   test("vacuumLog: truncated log, base is source of truth, fresh instance intact") {
     val dir = java.nio.file.Files.createTempDirectory("graft_vac").toString
     val t = new GraftTable(spark, dir, Seq("bal"))

@@ -233,80 +233,6 @@ class RASpec extends AnyFunSuite {
     assert(probes == 7L, s"expected 7 fused probes (1/iteration), got $probes")
   }
 
-  test("blocked semi-naive (unroll K>1) matches K=1 and cuts probes ~K-fold") {
-    val edges = Seq((1, 2), (2, 3), (3, 4), (4, 2), (4, 5), (5, 6),
-      (6, 7), (7, 8)).toDF("src", "dst")
-    def closure(k: Int): Set[Seq[Any]] = rows(RA.fixpoint(edges, prev =>
-      prev.as("p").join(edges.as("e"), col("p.dst") === col("e.src"))
-        .select(col("p.src").as("src"), col("e.dst").as("dst")),
-      unroll = k))
-    val want = closure(1)
-    Seq(2, 3, 4).foreach(k => assert(closure(k) == want, s"unroll=$k"))
-
-    // probe count drops ~K-fold: the 8-chain needs 7 frontier steps at
-    // K=1 (+1 empty probe); at K=3 it is ceil coverage in 3 blocks
-    def probesOf(k: Int): Long = {
-      val p0 = org.apache.spark.sql.graftbridge.RddBridge.probeActions.get
-      closure(k)
-      org.apache.spark.sql.graftbridge.RddBridge.probeActions.get - p0
-    }
-    val p1 = probesOf(1)
-    val p3 = probesOf(3)
-    assert(p3 <= (p1 + 2) / 3 + 1, s"K=3 probes $p3 vs K=1 $p1")
-
-    // mutual recursion: the blocked fixpointN lands on identical
-    // relations, including the heterogeneous-schema pack/unpack
-    val N = 6
-    def mutual(k: Int): (Set[Seq[Any]], Set[Seq[Any]]) = {
-      val res = RA.fixpointN(
-        Seq(Some(Seq(0).toDF("n")), Some(Seq((0L, "b")).toDF("m", "tag"))),
-        (_, deltas) => Seq(
-          deltas(1).map(_.select((col("m") + 1).cast("int").as("n"))
-            .where(col("n") <= N)),
-          deltas(0).map(_.select((col("n") + 1).cast("long").as("m"),
-            lit("b").as("tag")).where(col("m") <= N))),
-        unroll = k)
-      (rows(res(0).get), rows(res(1).get))
-    }
-    val wantM = mutual(1)
-    Seq(2, 3).foreach(k => assert(mutual(k) == wantM, s"unroll=$k"))
-
-    // the quiet-then-reviving shape survives blocking too
-    def revive(k: Int): (Set[Seq[Any]], Set[Seq[Any]]) = {
-      val res = RA.fixpointN(Seq(Some(Seq(0).toDF("n")), None),
-        (_, deltas) => Seq(
-          None,
-          deltas(0).map(_.select((col("n") + 1).as("v")).where(col("v") <= 3))
-            .orElse(deltas(1).map(_.select((col("v") + 1).as("v"))
-              .where(col("v") <= 5)))),
-        unroll = k)
-      (rows(res(0).get), rows(res(1).get))
-    }
-    assert(revive(3) == revive(1))
-  }
-
-  test("graft.fixpoint.unroll rejects non-positive values as loudly as " +
-      "non-numeric ones") {
-    val edges = Seq((1, 2)).toDF("src", "dst")
-    def run(): Unit = RA.fixpoint(edges, prev =>
-      prev.as("p").join(edges.as("e"), col("p.dst") === col("e.src"))
-        .select(col("p.src").as("src"), col("e.dst").as("dst"))).count()
-    Seq("-4", "0", "nope").foreach { v =>
-      spark.conf.set("graft.fixpoint.unroll", v)
-      try {
-        val e = intercept[IllegalArgumentException](run())
-        assert(e.getMessage.contains("positive int"), s"$v: ${e.getMessage}")
-      } finally spark.conf.unset("graft.fixpoint.unroll")
-    }
-    // the EXPLICIT argument path rejects negatives too (0 stays the
-    // documented read-from-conf sentinel)
-    val e = intercept[IllegalArgumentException](RA.fixpoint(edges, prev =>
-      prev.as("p").join(edges.as("e"), col("p.dst") === col("e.src"))
-        .select(col("p.src").as("src"), col("e.dst").as("dst")),
-      unroll = -4).count())
-    assert(e.getMessage.contains("positive"), e.getMessage)
-  }
-
   test(":fixpointN fused probe survives a relation going quiet then reviving") {
     // a feeds b only below 3; b keeps counting to 5 alone; a must stay
     // converged (None deltas) while b continues — exercises live-subset

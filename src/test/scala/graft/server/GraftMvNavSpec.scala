@@ -896,4 +896,50 @@ class GraftMvNavSpec extends AnyFunSuite {
       GraftMatviews.reset()
     }
   }
+
+  test("one grammar: a view WHERE with IS DISTINCT FROM matches a " +
+      "recompute, a dashboard residual IS DISTINCT FROM navigates, and a " +
+      "BETWEEN conjunct in both the view and the query still navigates") {
+    val s = spark
+    import s.implicits._
+    val t = freshTable(Seq("status", "prio", "amt"))
+    GraftServer.register("gd_t", t)
+    try {
+      t.put((1 to 24).map(i => (i.toLong,
+          if (i % 4 == 0) null else Seq("O", "F", "P")(i % 3),
+          s"p${i % 3}", (i * 5).toLong))
+          .toDF("id", "st", "pr", "m"), $"id",
+        lit("2020-01-01").cast("timestamp"), None,
+        Seq("status" -> $"st", "prio" -> $"pr", "amt" -> $"m"),
+        ts("2024-01-01 00:00:00"))
+      GraftSql.sql(spark, "CREATE MATERIALIZED VIEW gd_v WITH " +
+        "(valid_at = '2030-01-01 00:00:00', buckets = 4, " +
+        "rewrite = 'trusted') AS SELECT prio, COUNT(*) AS n, " +
+        "SUM(amt) AS s FROM gd_t WHERE status IS DISTINCT FROM 'F' " +
+        "AND amt BETWEEN 10 AND 100 GROUP BY prio")
+      // the view's state equals the same aggregate recomputed (NULL
+      // statuses are DISTINCT FROM 'F' and stay in)
+      val recompute = baseTruth("SELECT prio, COUNT(*) AS n, SUM(amt) AS s " +
+        "FROM gd_t WHERE status IS DISTINCT FROM 'F' AND amt BETWEEN 10 " +
+        "AND 100 GROUP BY prio", "gd_t" -> t)
+      assert(rows(GraftSql.sql(spark, "SELECT prio, n, s FROM gd_v")) ==
+        rows(recompute))
+
+      // the view's conjuncts (BETWEEN included) matched, plus a residual
+      // IS DISTINCT FROM over the group column
+      val q = "SELECT prio, COUNT(*) AS n, SUM(amt) AS s FROM gd_t " +
+        "WHERE amt BETWEEN 10 AND 100 AND status IS DISTINCT FROM 'F' " +
+        "AND prio IS DISTINCT FROM 'p1' GROUP BY prio"
+      val ex = GraftSql.sql(spark, s"EXPLAIN REWRITE $q").collect()(0)
+      assert(ex.getBoolean(0), ex.getString(2))
+      assert(ex.getString(1).contains("FROM gd_v"), ex.getString(1))
+      val nav = GraftSql.sql(spark, q)
+      assert(scansMatview(nav))
+      assert(rows(nav) == rows(baseTruth(q, "gd_t" -> t)))
+      GraftSql.sql(spark, "DROP MATERIALIZED VIEW gd_v")
+    } finally {
+      GraftServer.unregister("gd_t")
+      GraftMatviews.reset()
+    }
+  }
 }
