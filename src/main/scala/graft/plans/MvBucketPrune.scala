@@ -41,7 +41,7 @@ import graft.bitemporal.MvState
   *   - state written before r13 carries no metadata — the rule no-ops
   *     (back-compat by construction).
   */
-object MvBucketPrune extends Rule[LogicalPlan] {
+object MvBucketPrune extends Rule[LogicalPlan] with PredicateHelper {
 
   def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case f @ Filter(cond, rel: LogicalRelation)
@@ -49,11 +49,6 @@ object MvBucketPrune extends Rule[LogicalPlan] {
       prune(cond, rel)
         .map(extra => Filter(And(cond, extra), rel))
         .getOrElse(f)
-  }
-
-  private def splitAnd(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitAnd(l) ++ splitAnd(r)
-    case other => Seq(other)
   }
 
   private def prune(cond: Expression,
@@ -64,7 +59,7 @@ object MvBucketPrune extends Rule[LogicalPlan] {
       tagged.metadata.getString(MvState.GroupsKey).split(MvState.GroupKeySep.charAt(0)).toSeq
     val bucketAttr = rel.output.find(_.name == "_bucket")
       .getOrElse(return None)
-    val conjuncts = splitAnd(cond)
+    val conjuncts = splitConjunctivePredicates(cond)
     // idempotence under the fixed-point optimizer batch: once any
     // conjunct constrains _bucket, this scan is already pruned
     if (conjuncts.exists(_.references.exists(_.name == "_bucket")))

@@ -414,8 +414,8 @@ object GraftMvNav {
     val sb = new StringBuilder
     var at = lo
     edits.sortBy(_._1).foreach { case (s, t, to) =>
-      sb.append(q.src, at, s).append(to); at = t }
-    Some(sb.append(q.src, at, hi).toString)
+      sb.append(q.src.substring(at, s)).append(to); at = t }
+    Some(sb.append(q.src.substring(at, hi)).toString)
   }
 
   // ---- the per-kind exactness/rollup rules (see the object doc) ------
