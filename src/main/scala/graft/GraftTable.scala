@@ -577,8 +577,8 @@ final class GraftTable(spark: SparkSession, dir: String,
     * source of truth for null-filling omitted INSERT columns and for
     * typing text ingest ([[copyFrom]]) and DML writes; empty where the
     * log is empty. Read off the cached file footers — a DataFrame's
-    * schema only where a footer lacks Spark's — so a commit pays no
-    * file listing for it. */
+    * schema only where a footer lacks Spark's — so a commit pays a
+    * listing of the tx log and of the base, and no Spark job. */
   private def knownLogTypes(): Map[String, org.apache.spark.sql.types.DataType] = {
     def schemaOf(footers: => Option[org.apache.spark.sql.types.StructType],
                  df: => DataFrame) =

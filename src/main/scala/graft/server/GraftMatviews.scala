@@ -8,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias,
   UnresolvedAttribute, UnresolvedFunction, UnresolvedHaving,
   UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And,
-  BaseGroupingSets, EqualTo, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Alias,
+  BaseGroupingSets, EqualTo, Expression, Literal, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter,
   GlobalLimit, Join, LocalLimit, LogicalPlan, Offset, Project, Sort}
 import org.apache.spark.sql.functions._
@@ -436,7 +436,7 @@ object GraftMatviews {
       items: Seq[Expression], fact: String,
       joins: Seq[(String, String, Boolean)], where: Option[Expression],
       groups: Seq[Expression], having: Option[Expression],
-      tail: Seq[LogicalPlan]) {
+      tail: Seq[LogicalPlan]) extends PredicateHelper {
 
     /** [start, end) of `e` in `src`: min start to max stop over the
       * subtree — a node's own origin can leave part of it out (a
@@ -455,31 +455,56 @@ object GraftMatviews {
     /** `e` exactly as written, without parentheses around it. */
     def raw(e: Expression): String = { val (s, t) = span(e); src.substring(s, t) }
 
+    private lazy val comments = SqlText.maskedSpans(src)
+      .filter(m => src.startsWith("--", m._1) || src.startsWith("/*", m._1))
+
+    /** The last code character before `i` (whitespace and comments
+      * skipped), or -1. */
+    private def before(i: Int): Int = {
+      var j = i - 1
+      while (j >= 0 && (src.charAt(j).isWhitespace ||
+          comments.exists(m => j >= m._1 && j < m._2))) {
+        j = comments.find(m => j >= m._1 && j < m._2).fold(j)(_._1) - 1
+      }
+      j
+    }
+
+    /** The first code character at or after `i` (whitespace and
+      * comments skipped), or `src.length`. */
+    private def after(i: Int): Int = {
+      var j = i
+      while (j < src.length && (src.charAt(j).isWhitespace ||
+          comments.exists(_._1 == j))) {
+        j = comments.find(_._1 == j).fold(j + 1)(_._2)
+      }
+      j
+    }
+
     /** [[span]] widened over parentheses that wrap `e` whole. */
     def wideSpan(e: Expression): (Int, Int) = {
-      def before(i: Int) = src.lastIndexWhere(!_.isWhitespace, i - 1)
-      def after(i: Int) = src.indexWhere(!_.isWhitespace, i)
       var (s, t) = span(e)
       while (before(s) >= 0 && src.charAt(before(s)) == '(' &&
-          after(t) >= 0 && src.charAt(after(t)) == ')') {
+          after(t) < src.length && src.charAt(after(t)) == ')') {
         s = before(s); t = after(t) + 1
       }
       (s, t)
     }
 
-    /** `e`'s source as its clause delimits it (wrapping parentheses
-      * kept) — the text a WHERE, GROUP BY item or derived column
-      * persists. */
+    /** `e`'s source with the parentheses that wrap it whole. */
     def text(e: Expression): String = { val (s, t) = wideSpan(e); src.substring(s, t) }
 
-    /** The WHERE's top-level AND conjuncts. */
-    def conjuncts: Seq[Expression] = {
-      def split(e: Expression): Seq[Expression] = e match {
-        case And(l, r) => split(l) ++ split(r)
-        case x => Seq(x)
-      }
-      where.toSeq.flatMap(split)
+    /** The clause item `e` stands for, as its delimiters cut it: [[text]]
+      * plus the comments beside it, up to the keyword or comma on
+      * either side — the text a WHERE or GROUP BY item persists (in the
+      * `_def` fingerprint and derived-column names), byte for byte what
+      * a keyword split of the source keeps. */
+    def clause(e: Expression): String = {
+      val (s, t) = wideSpan(e)
+      src.substring(before(s) + 1, after(t)).trim
     }
+
+    /** The WHERE's top-level AND conjuncts. */
+    def conjuncts: Seq[Expression] = where.toSeq.flatMap(splitConjunctivePredicates)
 
     /** A select item's expression and its alias, if one was written. */
     def aliased(item: Expression): (Expression, Option[String]) = item match {
@@ -1000,8 +1025,8 @@ object GraftMatviews {
     // declared join would serve wrong aggregates
     val q = parseSelect(select, ddl = true)
     val factName = q.fact
-    val whereOpt = q.where.map(q.text)
-    val havingOpt = q.having.map(q.text)
+    val whereOpt = q.where.map(q.clause)
+    val havingOpt = q.having.map(q.clause)
 
     // derived name -> ORIGINAL trimmed expression text (what executes —
     // normalization is for NAMING/matching only, so whitespace inside
@@ -1034,7 +1059,7 @@ object GraftMatviews {
     val groupExprNames = scala.collection.mutable.LinkedHashSet.empty[String]
     // (state column, normalized source) per GROUP BY item
     val groupSrcs: Seq[(String, String)] = q.groups.map { ge =>
-      val g = q.text(ge)
+      val g = q.clause(ge)
       if (g.matches("\\d+"))
         // a bare number would silently become a constant group key,
         // not the Postgres/Spark ordinal the user meant
