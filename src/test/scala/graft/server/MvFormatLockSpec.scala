@@ -7,9 +7,9 @@ import graft.TestSpark
 
 /** Persisted-format lock for materialized views created from SQL text:
   * every accepted select-item form, clause and option (comments beside
-  * the WHERE included) writes state whose bytes a restart adopts — the
-  * definition fingerprint (`_def`,
-  * which carries the WHERE text and every derived `_e<md5>` expression
+  * a WHERE or GROUP BY item included) writes state whose bytes a
+  * restart adopts — the definition fingerprint (`_def`, which carries
+  * the WHERE text and every derived `_e<md5>` expression
   * verbatim), the state schema (`_schema`) and the canonical DDL
   * (`_ddl`). The literals below were recorded from the release that
   * first shipped these forms: a change to any of them means deployed
@@ -63,11 +63,15 @@ class MvFormatLockSpec extends AnyFunSuite {
     "fl_left" -> (s"CREATE MATERIALIZED VIEW fl_left $basis) AS " +
       "SELECT region, COUNT(*) AS n, MAX(price) AS mp FROM fl_f " +
       "LEFT OUTER JOIN fl_d ON fl_d._id = fk GROUP BY region"),
-    // comments beside the WHERE predicate are part of its persisted text
+    // comments beside a WHERE predicate or a GROUP BY item are part of
+    // its persisted text
     "fl_cmt" -> (s"CREATE MATERIALIZED VIEW fl_cmt $basis) AS " +
       "SELECT grp, COUNT(*) AS n, SUM(amt) AS s FROM fl_f " +
       "WHERE /* live */ amt > 0 AND (tag <> 'z') /* not z */ -- positive\n" +
       "GROUP BY grp"),
+    "fl_gcmt" -> (s"CREATE MATERIALIZED VIEW fl_gcmt $basis) AS " +
+      "SELECT COUNT(*) AS n, SUM(amt) AS s FROM fl_f " +
+      "GROUP BY grp, /* bucket */ sub -- sub-bucket"),
     "fl_bk" -> (s"CREATE MATERIALIZED VIEW fl_bk $basis, " +
       "bucket_key = 'grp') AS SELECT grp, sub, COUNT(*) AS n, " +
       "SUM(amt) AS s FROM fl_f GROUP BY grp, sub"))
@@ -158,6 +162,16 @@ class MvFormatLockSpec extends AnyFunSuite {
       "e59a3a2b60a9dbc4d1d5de2a73f19d47",
     "fl_cmt/_schema" ->
       "grp:string,n:long,sum_amt:long,cnt_amt:long,_bucket:long",
+    "fl_gcmt/_ddl" ->
+      ("CREATE MATERIALIZED VIEW fl_gcmt WITH (valid_at = " +
+       "'2030-01-01 00:00:00.0', buckets = 2) AS SELECT COUNT(*) AS n, " +
+       "SUM(amt) AS s FROM fl_f GROUP BY grp, /* bucket */ sub -- sub-bucket"),
+    "fl_gcmt/_def" ->
+      "ab35c9ecdeadf71c68dc1780f31643bc",
+    // the commented item is a derived key, named by its whole slice
+    "fl_gcmt/_schema" ->
+      ("grp:string,_e6cce83df8c9376b1:string,n:long,sum_amt:long," +
+       "cnt_amt:long,_bucket:long"),
     "fl_bk/_ddl" ->
       ("CREATE MATERIALIZED VIEW fl_bk WITH (valid_at = '2030-01-01 " +
        "00:00:00.0', buckets = 2, bucket_key = 'grp') AS SELECT grp," +
