@@ -100,101 +100,40 @@ final class GraftTable(spark: SparkSession, dir: String,
     appended(log.append(f(this, args), systemTime))
   }
 
-  /** Incrementally-maintained JOIN aggregate view: this table as the
-    * FACT side joined to `dim` on `fkCol = dim._id`, COUNT/SUM per
-    * `groupCol` (a payload column of either table) at the fixed basis
-    * `validAt` — the Δ(A⋈B) IVM rules over both tx logs' tails; see
-    * [[graft.bitemporal.Matview]] for semantics and cost model. */
-  def joinMatview(name: String, dim: GraftTable, fkCol: String,
-                  groupCol: String, sumCols: Seq[String],
-                  validAt: Timestamp,
-                  nBuckets: Int = 64,
-                  minCols: Seq[String] = Nil,
-                  maxCols: Seq[String] = Nil,
-                  cntCols: Seq[String] = Nil,
-                  where: Option[String] = None): graft.bitemporal.JoinMatview =
-    joinMatviewN(name, dim, fkCol, Seq(groupCol), sumCols, validAt,
-      nBuckets, minCols, maxCols, cntCols, where)
-
-  /** [[joinMatview]] with a MULTI-column group key (either side may
-    * contribute group columns). */
-  def joinMatviewN(name: String, dim: GraftTable, fkCol: String,
-                   groupCols: Seq[String], sumCols: Seq[String],
-                   validAt: Timestamp,
-                   nBuckets: Int = 64,
-                   minCols: Seq[String] = Nil,
-                   maxCols: Seq[String] = Nil,
-                   cntCols: Seq[String] = Nil,
-                   where: Option[String] = None,
-                   derived: Seq[(String, String)] = Nil): graft.bitemporal.JoinMatview =
-    starMatview(name, Seq(dim -> fkCol), groupCols, sumCols, validAt,
-      nBuckets, minCols, maxCols, cntCols, where, derived)
-
-  /** [[joinMatviewN]] over ONE OR MORE dimension tables — the
-    * star-schema rollup `fact ⋈ dim1 ON fk1 = dim1._id ⋈ dim2 …`,
-    * maintained incrementally from every log's tail by the same
-    * Δ(A⋈B) rules (each dim is a spoke; "touched" propagates across
-    * every join edge). `dims` pairs each dimension table with the fact
-    * column holding its foreign key. */
-  def starMatview(name: String, dims: Seq[(GraftTable, String)],
-                  groupCols: Seq[String], sumCols: Seq[String],
-                  validAt: Timestamp,
-                  nBuckets: Int = 64,
-                  minCols: Seq[String] = Nil,
-                  maxCols: Seq[String] = Nil,
-                  cntCols: Seq[String] = Nil,
-                  where: Option[String] = None,
-                  derived: Seq[(String, String)] = Nil,
-                  distincts: Seq[graft.bitemporal.MvDistinct] = Nil,
-                  hllCols: Seq[String] = Nil,
-                  rangeLayout: Boolean = false,
-                  leftJoins: Seq[Boolean] = Nil,
-                  pcts: Seq[graft.bitemporal.MvPct] = Nil,
-                  bucketCols: Seq[String] = Nil)
-      : graft.bitemporal.JoinMatview = {
-    require(dims.nonEmpty, "at least one dimension table")
-    viewAt(java.nio.file.Paths.get(dir, "join_matview", name), dims,
-      groupCols, validAt, nBuckets, sumCols, minCols, maxCols, cntCols,
-      where, derived, distincts, hllCols, rangeLayout, leftJoins, pcts,
-      bucketCols)
-  }
-
-  /** An incrementally-maintained COUNT/SUM view over this table at a
-    * fixed valid-time basis (system = latest) — see
-    * [[graft.bitemporal.Matview]]: `refresh()` folds only the log tail,
-    * state rewrites only the hash buckets whose groups changed. */
-  def matview(name: String, groupCol: String, sumCols: Seq[String],
-              validAt: Timestamp, nBuckets: Int = 32,
+  /** An incrementally-maintained aggregate view over this table at a
+    * fixed valid-time basis `validAt` (system = latest) — see
+    * [[graft.bitemporal.Matview]]: `refresh()` folds only the logs'
+    * tails, state rewrites only the hash buckets whose groups changed.
+    * `dims` pairs each dimension table with the column of this (fact)
+    * table holding its foreign key: the star rollup `fact ⋈ dim1 ON
+    * fk1 = dim1._id ⋈ dim2 …` (LEFT per `leftJoins`), maintained by the
+    * Δ(A⋈B) rules over every log's tail; none is a single-table view.
+    * Group and aggregate columns may come from any side. The state
+    * placement and the default bucket count follow from whether there
+    * are spokes ([[GraftTable.viewDir]], [[GraftTable.defaultBuckets]]). */
+  def matview(name: String, groupCols: Seq[String], sumCols: Seq[String],
+              validAt: Timestamp,
+              dims: Seq[(GraftTable, String)] = Nil,
+              nBuckets: Option[Int] = None,
               minCols: Seq[String] = Nil,
               maxCols: Seq[String] = Nil,
               cntCols: Seq[String] = Nil,
-              where: Option[String] = None): graft.bitemporal.Matview =
-    matviewN(name, Seq(groupCol), sumCols, validAt, nBuckets, minCols,
-      maxCols, cntCols, where)
+              where: Option[String] = None,
+              derived: Seq[(String, String)] = Nil,
+              distincts: Seq[graft.bitemporal.MvDistinct] = Nil,
+              hllCols: Seq[String] = Nil,
+              rangeLayout: Boolean = false,
+              leftJoins: Seq[Boolean] = Nil,
+              pcts: Seq[graft.bitemporal.MvPct] = Nil,
+              bucketCols: Seq[String] = Nil): graft.bitemporal.Matview =
+    viewAt(GraftTable.viewDir(dir, name, dims.nonEmpty), dims, groupCols,
+      validAt, nBuckets.getOrElse(GraftTable.defaultBuckets(dims.nonEmpty)),
+      sumCols, minCols, maxCols, cntCols, where, derived, distincts, hllCols,
+      rangeLayout, leftJoins, pcts, bucketCols)
 
-  /** [[matview]] with a MULTI-column group key. */
-  def matviewN(name: String, groupCols: Seq[String], sumCols: Seq[String],
-               validAt: Timestamp, nBuckets: Int = 32,
-               minCols: Seq[String] = Nil,
-               maxCols: Seq[String] = Nil,
-               cntCols: Seq[String] = Nil,
-               where: Option[String] = None,
-               derived: Seq[(String, String)] = Nil,
-               distincts: Seq[graft.bitemporal.MvDistinct] = Nil,
-               hllCols: Seq[String] = Nil,
-               rangeLayout: Boolean = false,
-               pcts: Seq[graft.bitemporal.MvPct] = Nil,
-               bucketCols: Seq[String] = Nil)
-      : graft.bitemporal.Matview =
-    viewAt(java.nio.file.Paths.get(dir, "matview", name), Nil, groupCols,
-      validAt, nBuckets, sumCols, minCols, maxCols, cntCols, where,
-      derived, distincts, hllCols, rangeLayout, pcts = pcts,
-      bucketCols = bucketCols)
-
-  /** A view over this table as the fact and `dims` as its spokes (none
-    * for a single-table view) with an EXPLICIT state dir — every view
-    * builder lands here. The SQL front door places its views itself,
-    * and nests each DISTINCT aggregate's auxiliary pair-level view
+  /** [[matview]] with an EXPLICIT state dir and bucket count. The SQL
+    * front door places its views with [[GraftTable.viewDir]] too, and
+    * nests each DISTINCT aggregate's auxiliary pair-level view
     * (group key = the view's groups plus the argument) INSIDE the main
     * view's state dir, so DROP / failure cleanup / RESTORE handle the
     * whole tree as one; `bucketCols` buckets the pair state on the
@@ -230,12 +169,12 @@ final class GraftTable(spark: SparkSession, dir: String,
   /** Fold the log into the partitioned rectangle base — incrementally
     * when one exists (cost ∝ tail ids, not total history). The base
     * layout clusters by `clusterBy` when set (e.g. the fk column of a
-    * [[joinMatview]] fact table, so dim-touched refreshes prune fact
+    * star [[matview]]'s fact table, so dim-touched refreshes prune fact
     * files by footer stats instead of scanning the base). */
   def compact(): Unit =
     graft.bitemporal.MaintainerLease.withLease(
         java.nio.file.Paths.get(dir), "compact") {
-      log.compactIncremental(spark, payloadCols, compacted, clusterBy): Unit
+      log.compact(spark, payloadCols, clusterBy): Unit
     }
 
   /** Log retention: compact, then DELETE the tx files the base now
@@ -264,7 +203,7 @@ final class GraftTable(spark: SparkSession, dir: String,
     * [[graft.bitemporal.Matview.read(session*]]). Storage is shared;
     * only the plan binding differs. */
   def rectangles(session: SparkSession): DataFrame =
-    log.readAllAuto(session, payloadCols)
+    log.readAll(session, payloadCols)
 
   /** Snapshot at a bitemporal basis. */
   def asOf(validTime: Timestamp, systemTime: Timestamp): DataFrame =
@@ -822,4 +761,21 @@ final class GraftTable(spark: SparkSession, dir: String,
         TxOps.erase(rows, col("_id"), nullPayload(rows))
     }
   }
+}
+
+object GraftTable {
+  /** Where a view's state lives under its fact table's directory — a
+    * persisted layout: `matview/<name>` for a single-table view,
+    * `join_matview/<name>` for one with spokes. */
+  private[graft] def viewDir(tableDir: String, name: String,
+                             spokes: Boolean): java.nio.file.Path =
+    viewRoots(tableDir)(if (spokes) 1 else 0).resolve(name)
+
+  /** Every directory [[viewDir]] places views in. */
+  private[graft] def viewRoots(tableDir: String): Seq[java.nio.file.Path] =
+    Seq("matview", "join_matview").map(java.nio.file.Paths.get(tableDir, _))
+
+  /** The state bucket count of a view that names none. */
+  private[graft] def defaultBuckets(spokes: Boolean): Int =
+    if (spokes) 64 else 32
 }

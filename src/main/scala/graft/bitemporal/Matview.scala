@@ -183,10 +183,10 @@ final class Matview private[graft] (
   // wholly in the next refresh, or it would fold into state now AND
   // again later (the double-count race)
   private def factRel(upToTx: Long): DataFrame =
-    project(core.visible(factLog.readAllAuto(spark, factCols, upToTx)),
+    project(core.visible(factLog.readAll(spark, factCols, upToTx)),
       "_fact_id", factKeep)
   private def dimRel(i: Int, upToTx: Long): DataFrame =
-    project(core.visible(spokes(i).log.readAllAuto(spark, spokes(i).cols,
+    project(core.visible(spokes(i).log.readAll(spark, spokes(i).cols,
       upToTx)), dimId(i), dimKeeps(i))
 
   /** fact ⋈ every dim on its fk = dim id — LEFT for left spokes (NULL

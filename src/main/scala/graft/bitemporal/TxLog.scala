@@ -203,9 +203,25 @@ final class TxLog(val dir: String) {
     if (afterTx < 0) df else df.filter(col("_tx_id") > afterTx)
   }
 
-  /** Fold the full log into the base rectangle table, partitioned by
-    * system-from date for partition-pruned time travel. Returns the last
-    * folded tx id (readers union base + `read(spark, lastTx)` tail). */
+  /** Fold the log into the base rectangle table, partitioned by
+    * system-from date for partition-pruned time travel. Where the base
+    * ends is read from the PERSISTED base watermark, never from the
+    * caller: with no base yet the whole log folds; with one, only the
+    * tail past the watermark does, FROM STATE — cost ∝ the tail in both
+    * compute and I/O. Ids untouched by the tail keep their base
+    * rectangles verbatim (anti join on the tail's tiny id set); touched
+    * ids apply the tail's ops to their base rectangles
+    * ([[refoldTouched]], erase included); and only the AFFECTED
+    * `_sys_date` partitions are rewritten — a partition holding no
+    * touched id's rows keeps its files byte-for-byte (at 100 TB almost
+    * all of the base). Affected = partitions holding a touched id's old
+    * rows ∪ partitions the re-folded rectangles land in.
+    *
+    * The new partition contents write to a temp dir first (the old base
+    * is an input of the plan — overwrite-in-place would
+    * read-while-write), then swap in per partition directory. Returns
+    * the new compaction watermark (max folded tx id); readers union
+    * base + the tail after it ([[readAll]]). */
   def compact(spark: SparkSession, payloadCols: Seq[String],
               clusterBy: Seq[String] = Nil): Long = {
     // One directory listing: the returned id is the max tx id of the
@@ -213,14 +229,58 @@ final class TxLog(val dir: String) {
     // could report a tx as compacted that the fold never saw — readAll
     // would then silently drop its effects until the next compact.
     val files = txFiles()
-    require(files.nonEmpty, s"empty tx log at $logDir")
-    val last = files.map(txIdOf).max
-    val log = TxLog.readMerged(spark, files.map(_.toString))
-    writeBase(Bitemporal.fold(log, payloadCols)
-      .withColumn("_sys_date", to_date(col("_system_from"))), baseDir,
-      clusterBy)
-    setBaseWatermark(last)
-    last
+    val compacted = baseWatermark().filter(_ => Files.exists(baseDir))
+    if (compacted.isEmpty) {
+      require(files.nonEmpty, s"empty tx log at $logDir")
+      val last = files.map(txIdOf).max
+      val log = TxLog.readMerged(spark, files.map(_.toString))
+      writeBase(Bitemporal.fold(log, payloadCols)
+        .withColumn("_sys_date", to_date(col("_system_from"))), baseDir,
+        clusterBy)
+      setBaseWatermark(last)
+      return last
+    }
+    // an empty log is a truncated one whose base holds everything
+    val w = compacted.get
+    val last = (files.map(txIdOf) :+ w).max
+    if (last == w) return w
+    val tail = read(spark, afterTx = w)
+    val touched = tail.select(col("_id").cast("long").as("_id")).distinct()
+    val base = readBase(spark)
+    // checkpoint the refold once (rows ∝ touched ids' rectangles —
+    // tail-sized): it feeds BOTH the affected-partition collect and the
+    // base write below, and re-deriving it would run the fold-from-
+    // state pipeline twice per compaction; released when it ends
+    Checkpoints.scoped { cps =>
+      val refolded = cps.pin(
+        refoldTouched(spark, payloadCols, touched, tail,
+            base.drop("_sys_date"))
+          .withColumn("_sys_date", to_date(col("_system_from"))))
+      // the affected partition set is small by construction (the touched
+      // ids' history dates) — one driver-side collect of distinct dates
+      val affected: Seq[java.sql.Date] =
+        base.join(touched, Seq("_id"), "left_semi").select(col("_sys_date"))
+          .union(refolded.select(col("_sys_date")))
+          .distinct().collect().map(_.getDate(0)).toSeq
+      if (affected.isEmpty) { setBaseWatermark(last); return last } // tail touched nothing visible
+      val untouchedInAffected = base
+        .filter(col("_sys_date").isin(affected: _*))
+        .join(touched, Seq("_id"), "left_anti")
+      val tmp = Paths.get(dir, "base_tmp")
+      TxLog.deleteRecursively(tmp.toFile)
+      writeBase(untouchedInAffected.unionByName(refolded, allowMissingColumns = true),
+        tmp, clusterBy)
+      affected.foreach { d =>
+        val name = s"_sys_date=$d"
+        val dst = baseDir.resolve(name)
+        TxLog.deleteRecursively(dst.toFile) // a fully-erased partition just goes
+        val src = tmp.resolve(name)
+        if (Files.exists(src)) { Files.move(src, dst); () }
+      }
+      TxLog.deleteRecursively(tmp.toFile)
+      setBaseWatermark(last)
+      last
+    }
   }
 
   /** Base write layout: range-cluster by `(_sys_date, _id)` and sort
@@ -294,14 +354,15 @@ final class TxLog(val dir: String) {
   }
 
   /** Current rectangles WITHOUT requiring a fresh compaction: ids
-    * untouched since `lastCompacted` are served straight from the base
-    * (anti join against the tail's tiny id set — a broadcast at scale);
-    * touched ids are re-folded from their FULL log history. Read cost
-    * scales with the tail's id count, not the table — the reference's
-    * "queries include the live chunk ⇒ read-your-writes" semantics
-    * (SURVEY.md §3.3) without rewriting the base. */
+    * untouched since the PERSISTED base watermark are served straight
+    * from the base (anti join against the tail's tiny id set — a
+    * broadcast at scale); touched ids apply the tail's ops to their base
+    * rectangles ([[refoldTouched]]). Read cost scales with the tail's id
+    * count, not the table — the reference's "queries include the live
+    * chunk ⇒ read-your-writes" semantics (SURVEY.md §3.3) without
+    * rewriting the base. With no base yet the whole log folds; a
+    * truncated log is served from the base it was truncated into. */
   def readAll(spark: SparkSession, payloadCols: Seq[String],
-              lastCompacted: Long,
               upToTx: Long = Long.MaxValue): DataFrame = {
     // `upToTx` pins the relation to a tx-id SNAPSHOT: a reader that
     // derived a watermark from one directory listing can exclude
@@ -313,16 +374,21 @@ final class TxLog(val dir: String) {
     // The snapshot is only airtight against appends, which are
     // monotonic: a CONCURRENT compaction can advance the base past
     // `upToTx` between the caller's listing and this read, baking in
-    // txs the snapshot must exclude. Re-read the persisted watermark
-    // here: if it moved past `upToTx`, refold the snapshot wholly from
-    // the log (possible until truncate() deletes the prefix — and
-    // truncation plus a concurrent compaction racing a snapshot reader
-    // is outside the supported single-maintainer contract, so throw).
-    // Matview maintenance assumes ONE maintainer process per view not
-    // racing compact/vacuum; this guard turns a violated assumption
-    // into a full refold or a loud error instead of silent
-    // double-counting.
-    val bw = baseWatermark().getOrElse(-1L)
+    // txs the snapshot must exclude. If the persisted watermark is past
+    // `upToTx`, refold the snapshot wholly from the log (possible until
+    // truncate() deletes the prefix — and truncation plus a concurrent
+    // compaction racing a snapshot reader is outside the supported
+    // single-maintainer contract, so throw). Matview maintenance assumes
+    // ONE maintainer process per view not racing compact/vacuum; this
+    // guard turns a violated assumption into a full refold or a loud
+    // error instead of silent double-counting.
+    val bw = baseWatermark() match {
+      case None =>
+        return Bitemporal.fold(
+          if (upToTx == Long.MaxValue) read(spark)
+          else read(spark).filter(col("_tx_id") <= upToTx), payloadCols)
+      case Some(w) => w
+    }
     if (bw > upToTx) {
       require(truncatedUpTo().isEmpty,
         s"snapshot at tx $upToTx unrecoverable: base compacted to $bw and " +
@@ -333,15 +399,11 @@ final class TxLog(val dir: String) {
       val log = TxLog.readMerged(spark, snapFiles.map(_.toString))
       return Bitemporal.fold(log, payloadCols)
     }
-    // the base may also have advanced WITHIN the snapshot bound
-    // (lastCompacted < bw <= upToTx) — serving untouched rows from the
-    // newer base with the tail cut at bw is both correct and cheaper
-    val effCompacted = math.max(lastCompacted, bw)
-    val tailFiles = txFilesAfter(effCompacted).filter(txIdOf(_) <= upToTx)
+    val tailFiles = txFilesAfter(bw).filter(txIdOf(_) <= upToTx)
     if (tailFiles.isEmpty)
       return readBase(spark).drop("_sys_date")
     val tail = TxLog.readMerged(spark, tailFiles.map(_.toString))
-      .filter(col("_tx_id") > effCompacted)
+      .filter(col("_tx_id") > bw)
     // emptiness from cached footers (tx files are immutable; `_tx_id`
     // content always equals the file name's id, so file-level row
     // counts decide) — replaces a per-readAll `limit(1)` Spark job
@@ -386,77 +448,6 @@ final class TxLog(val dir: String) {
     Bitemporal.applyOps(state, ops, payloadCols)
   }
 
-  /** Incremental compaction — write-path cost ∝ the TAIL, not the full
-    * history, in BOTH compute and I/O: ids untouched since
-    * `lastCompacted` keep their base rectangles verbatim (anti join on
-    * the tail's tiny id set); touched ids are re-folded from their FULL
-    * log history (erase included); and only the AFFECTED `_sys_date`
-    * partitions are rewritten — a partition holding no touched id's
-    * rows keeps its files byte-for-byte (at 100 TB almost all of the
-    * base: a day's compaction rewrites the touched ids' history dates,
-    * not the table). Affected = partitions holding a touched id's old
-    * rows ∪ partitions the re-folded rectangles land in.
-    *
-    * The new partition contents write to a temp dir first (the old base
-    * is an input of the plan — overwrite-in-place would
-    * read-while-write), then swap in per partition directory. Falls
-    * back to a full [[compact]] when there is no base yet. Returns the
-    * new compaction watermark (max folded tx id). */
-  def compactIncremental(spark: SparkSession, payloadCols: Seq[String],
-                         lastCompacted: Long,
-                         clusterBy: Seq[String] = Nil): Long = {
-    val files = txFiles()
-    if (files.isEmpty) {
-      // legal only for a truncated log whose base already holds
-      // everything; an un-compacted empty log is still a caller error
-      require(lastCompacted >= 0 && Files.exists(baseDir),
-        s"empty tx log at $logDir")
-      return lastCompacted
-    }
-    val ids = files.map(txIdOf)
-    val last = ids.max
-    if (lastCompacted < 0 || !Files.exists(baseDir))
-      return compact(spark, payloadCols, clusterBy)
-    if (last <= lastCompacted) return lastCompacted
-    val tail = read(spark, afterTx = lastCompacted)
-    val touched = tail.select(col("_id").cast("long").as("_id")).distinct()
-    val base = readBase(spark)
-    // checkpoint the refold once (rows ∝ touched ids' rectangles —
-    // tail-sized): it feeds BOTH the affected-partition collect and the
-    // base write below, and re-deriving it would run the fold-from-
-    // state pipeline twice per compaction; released when it ends
-    Checkpoints.scoped { cps =>
-      val refolded = cps.pin(
-        refoldTouched(spark, payloadCols, touched, tail,
-            base.drop("_sys_date"))
-          .withColumn("_sys_date", to_date(col("_system_from"))))
-      // the affected partition set is small by construction (the touched
-      // ids' history dates) — one driver-side collect of distinct dates
-      val affected: Seq[java.sql.Date] =
-        base.join(touched, Seq("_id"), "left_semi").select(col("_sys_date"))
-          .union(refolded.select(col("_sys_date")))
-          .distinct().collect().map(_.getDate(0)).toSeq
-      if (affected.isEmpty) { setBaseWatermark(last); return last } // tail touched nothing visible
-      val untouchedInAffected = base
-        .filter(col("_sys_date").isin(affected: _*))
-        .join(touched, Seq("_id"), "left_anti")
-      val tmp = Paths.get(dir, "base_tmp")
-      TxLog.deleteRecursively(tmp.toFile)
-      writeBase(untouchedInAffected.unionByName(refolded, allowMissingColumns = true),
-        tmp, clusterBy)
-      affected.foreach { d =>
-        val name = s"_sys_date=$d"
-        val dst = baseDir.resolve(name)
-        TxLog.deleteRecursively(dst.toFile) // a fully-erased partition just goes
-        val src = tmp.resolve(name)
-        if (Files.exists(src)) { Files.move(src, dst); () }
-      }
-      TxLog.deleteRecursively(tmp.toFile)
-      setBaseWatermark(last)
-      last
-    }
-  }
-
   // ---- persisted base watermark: which tx ids the base represents ----
 
   private def bwFile = Paths.get(dir, "_base_watermark")
@@ -472,19 +463,6 @@ final class TxLog(val dir: String) {
 
   private def setBaseWatermark(w: Long): Unit =
     TxLog.writeAtomic(bwFile, w.toString.getBytes("UTF-8"))
-
-  /** [[readAll]] driven by the PERSISTED base watermark: correct from
-    * any fresh instance, truncated log included (where a full re-fold
-    * is impossible — the history lives only in the base). */
-  def readAllAuto(spark: SparkSession, payloadCols: Seq[String],
-                  upToTx: Long = Long.MaxValue): DataFrame =
-    baseWatermark() match {
-      case Some(w) => readAll(spark, payloadCols, w, upToTx)
-      case None =>
-        Bitemporal.fold(
-          if (upToTx == Long.MaxValue) read(spark)
-          else read(spark).filter(col("_tx_id") <= upToTx), payloadCols)
-    }
 
   /** The base rectangle table, KEEPING the `_sys_date` partition column:
     * [[Bitemporal.asOf]] turns it into a partition-pruning predicate, so

@@ -70,8 +70,8 @@ object Bitemp {
       val cust = T(s, dir, "customer").select($"c_custkey".as("id"),
         $"c_nationkey".cast("string").as("g"),
         $"c_acctbal".cast("decimal(12,2)").as("m"))
-      val mv = t.matview("by_nation", "grp", Seq("bal"),
-        ts("2030-01-01 00:00:00"), nBuckets = 16)
+      val mv = t.matview("by_nation", Seq("grp"), Seq("bal"),
+        ts("2030-01-01 00:00:00"), nBuckets = Some(16))
       t.put(cust, $"id", lit("2000-01-01").cast("timestamp"), None,
         Seq("grp" -> $"g", "bal" -> $"m"), ts("2020-01-01 00:00:00"))
       mv.refresh()
@@ -109,8 +109,8 @@ object Bitemp {
       val cust = T(s, dir, "customer").select($"c_custkey".as("id"),
         $"c_nationkey".cast("string").as("g"),
         $"c_acctbal".cast("decimal(12,2)").as("m"))
-      val mv = t.matview("mm_nation", "grp", Seq("bal"),
-        ts("2030-01-01 00:00:00"), nBuckets = 16,
+      val mv = t.matview("mm_nation", Seq("grp"), Seq("bal"),
+        ts("2030-01-01 00:00:00"), nBuckets = Some(16),
         minCols = Seq("bal"), maxCols = Seq("bal"))
       t.put(cust, $"id", lit("2000-01-01").cast("timestamp"), None,
         Seq("grp" -> $"g", "bal" -> $"m"), ts("2020-01-01 00:00:00"))
@@ -1276,8 +1276,8 @@ object Bitemp {
       val ord = T(s, dir, "orders").select($"o_orderkey".as("id"),
         $"o_custkey".cast("long").as("ck"),
         $"o_totalprice".cast("decimal(14,2)").as("m"))
-      val mv = fact.joinMatview("by_region", dim, "cust", "region",
-        Seq("amt"), ts("2030-01-01 00:00:00"), nBuckets = 16)
+      val mv = fact.matview("by_region", Seq("region"), Seq("amt"),
+        ts("2030-01-01 00:00:00"), Seq(dim -> "cust"), nBuckets = Some(16))
       dim.put(cust, $"id", lit("2000-01-01").cast("timestamp"), None,
         Seq("region" -> $"rg"), ts("2020-01-01 00:00:00"))
       fact.put(ord, $"id", lit("2000-01-01").cast("timestamp"), None,
@@ -1322,8 +1322,8 @@ object Bitemp {
       val ord = T(s, dir, "orders").select($"o_orderkey".as("id"),
         $"o_custkey".cast("long").as("ck"),
         $"o_totalprice".cast("decimal(14,2)").as("m"))
-      val mv = fact.joinMatview("mm_region", dim, "cust", "region",
-        Seq("amt"), ts("2030-01-01 00:00:00"), nBuckets = 16,
+      val mv = fact.matview("mm_region", Seq("region"), Seq("amt"),
+        ts("2030-01-01 00:00:00"), Seq(dim -> "cust"), nBuckets = Some(16),
         minCols = Seq("amt"), maxCols = Seq("amt"))
       dim.put(cust, $"id", lit("2000-01-01").cast("timestamp"), None,
         Seq("region" -> $"rg"), ts("2020-01-01 00:00:00"))
@@ -1432,7 +1432,7 @@ object Bitemp {
       def ts(x: String) = java.sql.Timestamp.valueOf(x)
       log.append(TxOps.put(cust, $"c_custkey", lit("2000-01-01").cast("timestamp"),
         None, Seq("bal" -> $"c_acctbal")), ts("2020-01-01 00:00:00"))
-      val compacted = log.compact(s, Seq("bal"))
+      log.compact(s, Seq("bal"))
       // tail: bump BUILDING balances, delete negative ones
       log.append(TxOps.put(cust.filter($"c_mktsegment" === "BUILDING"), $"c_custkey",
         lit("2001-01-01").cast("timestamp"), None,
@@ -1440,7 +1440,7 @@ object Bitemp {
       log.append(TxOps.delete(cust.filter($"c_acctbal" < 0), $"c_custkey",
         lit("2001-01-01").cast("timestamp"), None,
         Seq("bal" -> lit(null).cast("double"))), ts("2020-01-03 00:00:00"))
-      Bitemporal.asOf(log.readAll(s, Seq("bal"), compacted),
+      Bitemporal.asOf(log.readAll(s, Seq("bal")),
         validTime = lit("2002-01-01").cast("timestamp"),
         systemTime = lit("2020-06-01").cast("timestamp"))
         .select($"_id", $"bal")

@@ -858,8 +858,7 @@ object GraftMatviews {
   private def dropOnDisk(name: String): Boolean = {
     var found = false
     GraftServer.registered.foreach { case (_, t) =>
-      Seq("matview", "join_matview").foreach { kind =>
-        val root = java.nio.file.Paths.get(t.tableDir, kind)
+      graft.GraftTable.viewRoots(t.tableDir).foreach { root =>
         if (java.nio.file.Files.isDirectory(root)) {
           val listing = java.nio.file.Files.list(root)
           try listing.forEach { p =>
@@ -891,8 +890,7 @@ object GraftMatviews {
     val ddls: Seq[(java.nio.file.Path, String)] =
       GraftServer.registered.toSeq.sortBy(_._1)
         .flatMap { case (_, t) =>
-          Seq("matview", "join_matview").flatMap { kind =>
-            val root = java.nio.file.Paths.get(t.tableDir, kind)
+          graft.GraftTable.viewRoots(t.tableDir).flatMap { root =>
             if (!java.nio.file.Files.isDirectory(root)) Nil
             else {
               val listing = java.nio.file.Files.list(root)
@@ -1312,15 +1310,14 @@ object GraftMatviews {
     def auxDerived(d: String): Seq[(String, String)] =
       (groups :+ d).distinct.filter(derivedExprs.contains)
         .map(n => n -> derivedExprs(n))
-    val nb = buckets.getOrElse(if (dims.isEmpty) 32 else 64)
+    val nb = buckets.getOrElse(graft.GraftTable.defaultBuckets(dims.nonEmpty))
     val allPayload = fact.payloadColumns ++ dims.flatMap(_._1.payloadColumns)
     (distincts ++ hlls.result() ++ pcts.map(_.arg)).filterNot(d =>
         allPayload.contains(d) || derivedExprs.contains(d))
       .foreach(d => fail(s"aggregate argument $d must be a payload " +
         "column of " + (if (dims.isEmpty) factName else "a joined table") +
         " (or a row-local expression)"))
-    val mvDir = matviewDir(factName,
-      if (dims.isEmpty) "matview" else "join_matview", name)
+    val mvDir = graft.GraftTable.viewDir(fact.tableDir, name, dims.nonEmpty)
     // each DISTINCT argument's auxiliary pair-level view, nested inside
     // the main state dir and BUCKETED ON THE PARENT GROUP PREFIX (same
     // bucket count) so the main refresh's rollup scan partition-prunes
@@ -1420,8 +1417,13 @@ object GraftMatviews {
       // makes its populating refresh adopt the state — zero recompute).
       // Inside the SAME cleanup discipline: a failed sidecar write must
       // not leave a registered view whose CREATE reported failure.
-      graft.bitemporal.TxLog.writeAtomic(handle.stateDir.resolve("_ddl"),
-        handle.ddl.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      // Written only when its bytes change: a RESTORE that adopts the
+      // state re-enters here with the very text it read.
+      val ddlFile = handle.stateDir.resolve("_ddl")
+      val ddlBytes = handle.ddl.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      if (!java.nio.file.Files.exists(ddlFile) || !java.util.Arrays.equals(
+          java.nio.file.Files.readAllBytes(ddlFile), ddlBytes))
+        graft.bitemporal.TxLog.writeAtomic(ddlFile, ddlBytes)
     } catch { case e: Throwable =>
       // e.g. an empty source table: state schema is unknowable until
       // data lands — don't leave a half-registered view behind
@@ -1429,15 +1431,6 @@ object GraftMatviews {
     }
     import spark.implicits._
     Seq((name, a, b.map(long2Long).orNull)).toDF("view", "fact_tx", "dim_tx")
-  }
-
-  private def matviewDir(tableName: String, kind: String, name: String)
-      : java.nio.file.Path = {
-    // mirror GraftTable's placement: <table dir>/<kind>/<name>
-    val dir = GraftServer.registered.collectFirst {
-      case (n, t) if n.equalsIgnoreCase(tableName) => t
-    }.map(_.tableDir).getOrElse(fail(s"table $tableName vanished"))
-    java.nio.file.Paths.get(dir, kind, name)
   }
 
   // The DISTINCT serve/refresh composition (the r13 Aux machinery:

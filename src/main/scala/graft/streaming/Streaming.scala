@@ -190,22 +190,28 @@ object Streaming {
 
   /** The write side of the ingestion loop over a NON-file transport:
     * each micro-batch commits as ONE monotonic transaction
-    * ([[graft.bitemporal.TxLog.append]]) and incrementally compacts, so
-    * an `asOf` read right after a batch sees its writes. `systemTimeOf`
-    * maps batchId → the tx system time (deterministic in tests;
-    * production stamps the wall clock). The result is running; stop it
-    * via the returned handle. */
+    * ([[graft.bitemporal.TxLog.append]]) and compacts, so an `asOf` read
+    * right after a batch sees its writes. The compaction reads where the
+    * base ends from the log's persisted watermark (a restarted stream
+    * folds only the tail onto the base it finds) and runs under the
+    * table's maintainer lease, so it serializes with a front-door
+    * COMPACT or VACUUM of the same table. `systemTimeOf` maps batchId →
+    * the tx system time (deterministic in tests; production stamps the
+    * wall clock). The result is running; stop it via the returned
+    * handle. */
   def ingestOpStream(ops: DataFrame, logDir: String, payloadCols: Seq[String],
                      systemTimeOf: Long => java.sql.Timestamp,
                      checkpoint: Option[String] = None): StreamingQuery = {
     val log = new graft.bitemporal.TxLog(logDir)
-    @volatile var lastCompacted = -1L
     val w = ops.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       if (!batch.isEmpty) {
         log.append(batch, systemTimeOf(batchId))
-        lastCompacted =
-          log.compactIncremental(batch.sparkSession, payloadCols, lastCompacted)
+        graft.bitemporal.MaintainerLease.withLease(
+            java.nio.file.Paths.get(logDir), "compact") {
+          log.compact(batch.sparkSession, payloadCols)
+        }
       }
+      ()
     }
     checkpoint.foreach(c => w.option("checkpointLocation", c))
     w.start()
@@ -213,48 +219,21 @@ object Streaming {
 
   /** CONTINUOUS matview maintenance — the reference's "live index kept
     * current from the log" as a Structured Streaming loop: tail the
-    * table's tx-log directory and refresh the view each micro-batch.
-    * The stream is only the TRIGGER; `refresh()` itself is
+    * listed tx-log directories (the view's fact log and every spoke's
+    * dim log) and refresh the view each micro-batch. The stream is only
+    * the TRIGGER — each log projects to one literal column, so the union
+    * never fights over schemas — and `refresh()` itself is
     * watermark-exact (it folds committed tx files past the view's own
-    * watermark, nothing else), so duplicate triggers, empty batches and
-    * restarts are all harmless — the view never double-counts, and a
-    * crashed maintainer resumes from the view's persisted watermark
-    * with no checkpoint coordination between the two. */
-  def maintainMatview(spark: SparkSession, tableDir: String,
-                      schema: StructType, view: graft.bitemporal.Matview,
+    * watermarks, nothing else), so duplicate triggers, empty batches,
+    * batches that straddle several logs and restarts are all harmless:
+    * the view never double-counts, and a crashed maintainer resumes
+    * from the view's persisted watermarks with no checkpoint
+    * coordination between the two. A star view must list every spoke's
+    * log, or it sleeps through dim-only churn until the next fact tx. */
+  def maintainMatview(spark: SparkSession, logs: Seq[(String, StructType)],
+                      view: graft.bitemporal.Matview,
                       checkpoint: Option[String] = None,
                       availableNow: Boolean = false): StreamingQuery =
-    maintainTicks(spark, Seq(tableDir -> schema), checkpoint, availableNow) {
-      () => view.refresh(); ()
-    }
-
-  /** Continuous maintenance of a JOIN matview: new tx files in EITHER
-    * log trigger a refresh. Only the arrival SIGNAL is consumed (each
-    * log stream projects to one literal column so the union never
-    * fights over schemas) — `refresh()` re-derives everything from the
-    * logs themselves and is watermark-exact, so duplicate triggers,
-    * batches that straddle both logs, and restarts never double-count
-    * (same argument as [[maintainMatview]]; join parity is proven in
-    * JoinMatviewSpec, trigger/restart behavior in its streaming test). */
-  def maintainJoinMatview(spark: SparkSession,
-                          factDir: String, factSchema: StructType,
-                          dimDir: String, dimSchema: StructType,
-                          view: graft.bitemporal.JoinMatview,
-                          checkpoint: Option[String] = None,
-                          availableNow: Boolean = false): StreamingQuery =
-    maintainStarMatview(spark,
-      Seq(factDir -> factSchema, dimDir -> dimSchema), view,
-      checkpoint, availableNow)
-
-  /** [[maintainJoinMatview]] for a STAR view: new tx files in ANY of
-    * the listed logs (fact + every dim spoke) trigger the refresh —
-    * a star view maintained through the 2-log variant would sleep
-    * through third-dim-only churn until the next fact/first-dim tx. */
-  def maintainStarMatview(spark: SparkSession,
-                          logs: Seq[(String, StructType)],
-                          view: graft.bitemporal.JoinMatview,
-                          checkpoint: Option[String] = None,
-                          availableNow: Boolean = false): StreamingQuery =
     maintainTicks(spark, logs, checkpoint, availableNow) {
       () => view.refresh(); ()
     }
@@ -283,7 +262,7 @@ object Streaming {
     * through the SQL front door, so COMPOSITE serve paths — a DISTINCT
     * view's pinned pair-level auxiliaries — refresh as one unit; a
     * Scala-level [[graft.bitemporal.Matview]] handle cannot reach
-    * those. Same trigger-only semantics as [[maintainStarMatview]]:
+    * those. Same trigger-only semantics as [[maintainMatview]]:
     * REFRESH is watermark-exact, so duplicate triggers, empty batches
     * and restarts never double-count; an unknown or dropped view name
     * fails the query loudly instead of spinning. */

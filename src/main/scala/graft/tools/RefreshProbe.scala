@@ -70,8 +70,8 @@ object RefreshProbe {
     }
     phases("compact") =
       if (doCompact) time { fact.compact(); dim.compact() } else 0.0
-    val mv = fact.joinMatview("rp", dim, "cust", "region", Seq("amt"),
-      ts("2030-01-01 00:00:00"), nBuckets = 64,
+    val mv = fact.matview("rp", Seq("region"), Seq("amt"),
+      ts("2030-01-01 00:00:00"), Seq(dim -> "cust"), nBuckets = Some(64),
       cntCols = Seq("score"), where = Some("amt > 50000"))
     phases("build") = time { mv.refresh(): Unit }
 

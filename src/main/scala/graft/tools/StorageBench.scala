@@ -55,8 +55,8 @@ object StorageBench {
       }
     }
     phases("compact") = time { t.compact() }
-    val mv = t.matview("sb", "grp", Seq("amt"),
-      validAt = ts("2030-01-01 00:00:00"), nBuckets = 32)
+    val mv = t.matview("sb", Seq("grp"), Seq("amt"),
+      validAt = ts("2030-01-01 00:00:00"), nBuckets = Some(32))
     phases("matview_build") = time { mv.refresh(): Unit }
     // one more tx, then the incremental refresh (∝ tail)
     phases("matview_incr") = time {

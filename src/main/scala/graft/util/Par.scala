@@ -81,8 +81,6 @@ object Par {
   def spread(df: DataFrame, force: Boolean = false,
              minWidth: Int = 0): DataFrame = {
     val spark = df.sparkSession
-    if (spark.conf.getOption("spark.graft.spread.enabled").contains("false"))
-      return df
     val target = spark.sparkContext.defaultParallelism
     // A plan that already contains a shuffle-inducing operator runs its
     // tail at the session shuffle parallelism — nothing to fix, and

@@ -434,7 +434,7 @@ class GraftTableSpec extends AnyFunSuite {
     // a tail tx on day 3 touching ONLY id 10 (whose history lives in
     // the day-2 partition)
     put(Seq(10L), "2024-01-03 00:00:00", bump = 100.0)
-    val lastInc = log.compactIncremental(spark, Seq("price"), lastFull)
+    val lastInc = log.compact(spark, Seq("price"))
     assert(lastInc > lastFull)
 
     // day-1 partition: byte-identical files (names AND mtimes) — the
@@ -487,7 +487,7 @@ class GraftTableSpec extends AnyFunSuite {
     putBal(2L, 30.0, "2024-01-03 00:00:00")
     def visibleAt(upTo: Long): Map[Long, Double] =
       graft.bitemporal.Bitemporal.currentState(
-          log.readAllAuto(spark, Seq("bal"), upToTx = upTo))
+          log.readAll(spark, Seq("bal"), upToTx = upTo))
         .select(col("_id").cast("long"), col("bal"))
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     // the bound is what closes the matview refresh race: a reader that
@@ -498,7 +498,7 @@ class GraftTableSpec extends AnyFunSuite {
     assert(visibleAt(Long.MaxValue) == Map(1L -> 20.0, 2L -> 30.0))
     // and the bound composes with a compacted base: compact at t0+1,
     // then the bound beyond the base watermark folds base + bounded tail
-    log.compactIncremental(spark, Seq("bal"), -1L)
+    log.compact(spark, Seq("bal"))
     putBal(2L, 40.0, "2024-01-04 00:00:00")
     assert(visibleAt(t0 + 2) == Map(1L -> 20.0, 2L -> 30.0))
     assert(visibleAt(Long.MaxValue) == Map(1L -> 20.0, 2L -> 40.0))
@@ -518,11 +518,11 @@ class GraftTableSpec extends AnyFunSuite {
     // a racing maintainer compacts the base PAST a snapshot another
     // reader recorded — the base now bakes in txs the snapshot must
     // exclude, and simply subtracting the tail can't undo a fold
-    val bw = log.compactIncremental(spark, Seq("bal"), -1L)
+    val bw = log.compact(spark, Seq("bal"))
     assert(bw == t0 + 2)
     def stateAt(upTo: Long): Map[Long, Double] =
       graft.bitemporal.Bitemporal.currentState(
-          log.readAll(spark, Seq("bal"), lastCompacted = -1L, upToTx = upTo))
+          log.readAll(spark, Seq("bal"), upToTx = upTo))
         .select(col("_id").cast("long"), col("bal"))
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     // while the log prefix survives, the snapshot refolds from it

@@ -282,7 +282,7 @@ class ScaleSpec extends AnyFunSuite {
           case None => hconf.unset("parquet.block.size")
         }
       }
-      val mv = t.matview("smm", "grp", Nil, validAt, nBuckets = 8,
+      val mv = t.matview("smm", Seq("grp"), Nil, validAt, nBuckets = Some(8),
         maxCols = Seq("amt"))
       mv.refresh()
       (t, mv, dir)
@@ -334,7 +334,7 @@ class ScaleSpec extends AnyFunSuite {
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val validAt = ts("2030-01-01 00:00:00")
     def build(n: Long): (GraftTable, GraftTable,
-        graft.bitemporal.JoinMatview, String) = {
+        graft.bitemporal.Matview, String) = {
       val fdir = java.nio.file.Files
         .createTempDirectory(s"graft_sjmv_f$n").toString
       val ddir = java.nio.file.Files
@@ -375,8 +375,8 @@ class ScaleSpec extends AnyFunSuite {
           case None => hconf.unset("parquet.block.size")
         }
       }
-      val mv = fact.joinMatview("sc", dim, "cust", "region",
-        Seq("amt"), validAt, nBuckets = 8)
+      val mv = fact.matview("sc", Seq("region"), Seq("amt"), validAt,
+        Seq(dim -> "cust"), nBuckets = Some(8))
       mv.refresh()
       (fact, dim, mv, fdir)
     }
@@ -385,7 +385,7 @@ class ScaleSpec extends AnyFunSuite {
         .filter(col("column") === "cust" &&
           col("min").cast("long") <= 5 && col("max").cast("long") >= 5)
         .agg(coalesce(sum(col("rows")), lit(0L))).head.getLong(0)
-    def touchRefresh(dim: GraftTable, mv: graft.bitemporal.JoinMatview,
+    def touchRefresh(dim: GraftTable, mv: graft.bitemporal.Matview,
                      tick: Int): Double = {
       dim.put(Seq(5L).toDF("id"), $"id",
         lit("2000-01-01").cast("timestamp"), None,

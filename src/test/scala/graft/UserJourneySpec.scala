@@ -32,8 +32,8 @@ class UserJourneySpec extends AnyFunSuite {
         concat(lit("g"), $"id" % 4).as("g"), ($"id" * 10.0).as("m")),
       $"id", lit("2024-01-01").cast("timestamp"), None,
       Seq("grp" -> $"g", "amt" -> $"m"), day(1))
-    val mv = t.matview("weekly", "grp", Seq("amt"),
-      validAt = ts("2030-01-01 00:00:00"), nBuckets = 4)
+    val mv = t.matview("weekly", Seq("grp"), Seq("amt"),
+      validAt = ts("2030-01-01 00:00:00"), nBuckets = Some(4))
     for (d <- 2 to 6) {
       if (d % 2 == 0)
         t.dml("acct", s"UPDATE acct SET amt = CAST(${d * 100}.0 AS DOUBLE) " +

@@ -158,7 +158,7 @@ class BitemporalSpec extends AnyFunSuite {
     val last = log.compact(spark, Seq("v"))
     assert(last == 2L)
     // readAll at that watermark: empty tail, serves purely from base
-    val cur = Bitemporal.currentState(log.readAll(spark, Seq("v"), last))
+    val cur = Bitemporal.currentState(log.readAll(spark, Seq("v")))
       .select($"_id", $"v").collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(cur.toSet == Set((1L, 3.0))) // tx2's put (v+2) is the latest
   }
@@ -166,32 +166,24 @@ class BitemporalSpec extends AnyFunSuite {
   test("incremental compaction == full compaction, erase in the tail included") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    def rects(log: TxLog) = log.readBase(spark).drop("_sys_date")
-      .collect().map(_.toSeq).toSet
-    def build(dir: String, incremental: Boolean): Set[Seq[Any]] = {
-      val log = new TxLog(dir)
-      val rows = Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)).toDF("id", "v")
-      log.append(TxOps.put(rows, $"id", lit("2000-01-01").cast("timestamp"),
-        None, Seq("v" -> $"v")), ts(100))
-      val first = log.compact(spark, Seq("v"))
-      // tail: update id 1, erase id 2 — id 3 untouched (base-served)
-      log.append(TxOps.put(rows.filter($"id" === 1), $"id",
-        lit("2001-01-01").cast("timestamp"), None,
-        Seq("v" -> ($"v" + 10))), ts(200))
-      log.append(TxOps.erase(rows.filter($"id" === 2), $"id",
-        Seq("v" -> lit(null).cast("double"))), ts(300))
-      val last =
-        if (incremental) log.compactIncremental(spark, Seq("v"), first)
-        else log.compact(spark, Seq("v"))
-      assert(last == 2L)
-      rects(log)
-    }
-    val full = build(
-      java.nio.file.Files.createTempDirectory("txinc_full").toString,
-      incremental = false)
-    val inc = build(
-      java.nio.file.Files.createTempDirectory("txinc_inc").toString,
-      incremental = true)
+    def rects(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val log = new TxLog(
+      java.nio.file.Files.createTempDirectory("txinc_inc").toString)
+    val rows = Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)).toDF("id", "v")
+    log.append(TxOps.put(rows, $"id", lit("2000-01-01").cast("timestamp"),
+      None, Seq("v" -> $"v")), ts(100))
+    log.compact(spark, Seq("v"))
+    // tail: update id 1, erase id 2 — id 3 untouched (base-served)
+    log.append(TxOps.put(rows.filter($"id" === 1), $"id",
+      lit("2001-01-01").cast("timestamp"), None,
+      Seq("v" -> ($"v" + 10))), ts(200))
+    log.append(TxOps.erase(rows.filter($"id" === 2), $"id",
+      Seq("v" -> lit(null).cast("double"))), ts(300))
+    // a base exists, so this folds the tail from state
+    assert(log.compact(spark, Seq("v")) == 2L)
+    val inc = rects(log.readBase(spark).drop("_sys_date"))
+    // the reference: the whole log folded at once (a full compaction)
+    val full = rects(Bitemporal.fold(log.read(spark), Seq("v")))
     assert(inc == full)
     // erase took effect and the update folded
     assert(!inc.exists(_.head == 2L))
@@ -231,7 +223,7 @@ class BitemporalSpec extends AnyFunSuite {
     val rows = Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)).toDF("id", "v")
     log.append(TxOps.put(rows, $"id", lit("2000-01-01").cast("timestamp"),
       None, Seq("v" -> $"v")), ts(100))
-    val lastCompacted = log.compact(spark, Seq("v"))
+    log.compact(spark, Seq("v"))
     // tail: update id 1, delete id 2 — id 3 untouched
     log.append(TxOps.put(rows.filter($"id" === 1), $"id",
       lit("2002-01-01").cast("timestamp"), None,
@@ -243,12 +235,12 @@ class BitemporalSpec extends AnyFunSuite {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select("_id", "v", "_valid_from", "_valid_to", "_system_from", "_system_to")
         .collect().map(_.toSeq).toSet
-    val incremental = canon(log.readAll(spark, Seq("v"), lastCompacted))
+    val incremental = canon(log.readAll(spark, Seq("v")))
     val full = canon(Bitemporal.fold(log.read(spark), Seq("v")))
     assert(incremental == full)
     // and with an empty tail it is exactly the base
-    val fresh = log.compact(spark, Seq("v"))
-    assert(canon(log.readAll(spark, Seq("v"), fresh)) == full)
+    log.compact(spark, Seq("v"))
+    assert(canon(log.readAll(spark, Seq("v"))) == full)
   }
 
   test("schemaless log: a tx may introduce new payload columns (mergeSchema)") {

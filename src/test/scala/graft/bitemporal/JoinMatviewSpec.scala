@@ -43,14 +43,14 @@ class JoinMatviewSpec extends AnyFunSuite {
       .toMap
   }
 
-  private def viewState(mv: JoinMatview): Map[String, (Long, java.math.BigDecimal)] =
+  private def viewState(mv: Matview): Map[String, (Long, java.math.BigDecimal)] =
     mv.read().collect()
       .map(r => (r.getString(r.fieldIndex("region")),
         (r.getLong(r.fieldIndex("n")),
           r.getDecimal(r.fieldIndex("sum_amt")))))
       .toMap
 
-  private def assertParity(mv: JoinMatview, fact: GraftTable,
+  private def assertParity(mv: Matview, fact: GraftTable,
                            dim: GraftTable): Unit = {
     val want = recompute(fact, dim)
     val got = viewState(mv)
@@ -75,8 +75,8 @@ class JoinMatviewSpec extends AnyFunSuite {
 
   test("join view parity: fact ops, dim group-move, deletes, both tails") {
     val (fact, dim, _) = fresh()
-    val mv = fact.joinMatview("by_region", dim, "cust", "region",
-      Seq("amt"), validAt, nBuckets = 8)
+    val mv = fact.matview("by_region", Seq("region"), Seq("amt"), validAt,
+      Seq(dim -> "cust"), nBuckets = Some(8))
 
     putDims(dim, Seq((1L, "east"), (2L, "east"), (3L, "west")))
     putFacts(fact, Seq((10L, 1L, "10.00"), (11L, 1L, "20.00"),
@@ -132,8 +132,8 @@ class JoinMatviewSpec extends AnyFunSuite {
       "null-extended rows; a dim put/delete moves facts between the " +
       "matched and null-extended groups with zero fact ops") {
     val (fact, dim, _) = fresh()
-    val mv = fact.starMatview("left_by_region", Seq(dim -> "cust"),
-      Seq("region"), Seq("amt"), validAt, nBuckets = 8,
+    val mv = fact.matview("left_by_region", Seq("region"), Seq("amt"),
+      validAt, Seq(dim -> "cust"), nBuckets = Some(8),
       leftJoins = Seq(true))
     def recomputeLeft(): Map[String, (Long, java.math.BigDecimal)] = {
       val vf = Bitemporal.asOf(fact.rectangles(), lit(validAt), lit(sysProbe))
@@ -224,8 +224,8 @@ class JoinMatviewSpec extends AnyFunSuite {
     val n = 24
     putDims(dim, (1L to n.toLong).map(i => (i, s"r$i")))
     putFacts(fact, (1L to n.toLong).map(i => (100 + i, i, "10.00")))
-    val mv = fact.joinMatview("by_region", dim, "cust", "region",
-      Seq("amt"), validAt, nBuckets = 16)
+    val mv = fact.matview("by_region", Seq("region"), Seq("amt"), validAt,
+      Seq(dim -> "cust"), nBuckets = Some(16))
     mv.refresh()
 
     // bucket dirs live under the fact table's dir/join_matview/<name>/state
@@ -262,16 +262,16 @@ class JoinMatviewSpec extends AnyFunSuite {
     val dim2 = new GraftTable(spark, ddir, Seq("region"))
     putDims(dim2, Seq((1L, "east"), (2L, "west")))
     putFacts(fact, Seq((10L, 1L, "10.00"), (11L, 2L, "20.00")))
-    val mv = fact.joinMatview("live", dim2, "cust", "region",
-      Seq("amt"), validAt, nBuckets = 4)
+    val mv = fact.matview("live", Seq("region"), Seq("amt"), validAt,
+      Seq(dim2 -> "cust"), nBuckets = Some(4))
     val fSchema = spark.read.option("mergeSchema", "true")
       .parquet(s"$fdir/log/tx_*").schema
     val dSchema = spark.read.option("mergeSchema", "true")
       .parquet(s"$ddir/log/tx_*").schema
     val ckpt = java.nio.file.Files.createTempDirectory("graft_jmv_ckpt").toString
     def drain(): Unit = {
-      val q = graft.streaming.Streaming.maintainJoinMatview(spark,
-        fdir, fSchema, ddir, dSchema, mv,
+      val q = graft.streaming.Streaming.maintainMatview(spark,
+        Seq(fdir -> fSchema, ddir -> dSchema), mv,
         checkpoint = Some(ckpt), availableNow = true)
       q.awaitTermination()
     }
@@ -302,8 +302,8 @@ class JoinMatviewSpec extends AnyFunSuite {
     val (fact, dim, _) = fresh()
     putDims(dim, Seq((1L, "east")))
     putFacts(fact, Seq((10L, 777L, "10.00"))) // fk 777 matches no dim
-    val mv = fact.joinMatview("empty", dim, "cust", "region",
-      Seq("amt"), validAt, nBuckets = 4)
+    val mv = fact.matview("empty", Seq("region"), Seq("amt"), validAt,
+      Seq(dim -> "cust"), nBuckets = Some(4))
     mv.refresh()
     assert(mv.read().collect().isEmpty)
     mv.refresh() // second refresh over empty state: no crash, no-op
@@ -342,7 +342,7 @@ class JoinMatviewSpec extends AnyFunSuite {
       .toMap
   }
 
-  private def assertParityMM(mv: JoinMatview, fact: GraftTable,
+  private def assertParityMM(mv: Matview, fact: GraftTable,
                              dim: GraftTable): Unit = {
     val want = recomputeMM(fact, dim)
     val got = mv.read().collect()
@@ -365,8 +365,8 @@ class JoinMatviewSpec extends AnyFunSuite {
   test("join view MIN/MAX: touched-group re-read across the join stays " +
       "exact through extreme-removal on either side") {
     val (fact, dim, _) = fresh()
-    val mv = fact.joinMatview("mm", dim, "cust", "region",
-      Seq("amt"), validAt, nBuckets = 8,
+    val mv = fact.matview("mm", Seq("region"), Seq("amt"), validAt,
+      Seq(dim -> "cust"), nBuckets = Some(8),
       minCols = Seq("amt"), maxCols = Seq("amt"))
 
     putDims(dim, Seq((1L, "east"), (2L, "east"), (3L, "west")))
@@ -415,8 +415,8 @@ class JoinMatviewSpec extends AnyFunSuite {
     // restart + truncation: rebuild path carries the extremes too
     fact.compact(); fact.vacuumLog()
     putFacts(fact, Seq((18L, 1L, "0.50")))
-    val mv2 = fact.joinMatview("mm", dim, "cust", "region",
-      Seq("amt"), validAt, nBuckets = 8,
+    val mv2 = fact.matview("mm", Seq("region"), Seq("amt"), validAt,
+      Seq(dim -> "cust"), nBuckets = Some(8),
       minCols = Seq("amt"), maxCols = Seq("amt"))
     mv2.refresh()
     assertParityMM(mv2, fact, dim)
@@ -427,7 +427,7 @@ class JoinMatviewSpec extends AnyFunSuite {
     val fdir = java.nio.file.Files.createTempDirectory("graft_jmv_fc").toString
     val ddir = java.nio.file.Files.createTempDirectory("graft_jmv_fcd").toString
     // the fact table clusters its base by the fk column — the turnkey
-    // form of the mitigation JoinMatview's cost model documents
+    // form of the mitigation Matview's cost model documents
     val fact = new GraftTable(spark, fdir, Seq("cust", "amt"),
       clusterBy = Seq("cust"))
     val dim = new GraftTable(spark, ddir, Seq("region"))
@@ -460,14 +460,14 @@ class JoinMatviewSpec extends AnyFunSuite {
     assert(admit / total <= 0.5,
       s"fk-clustered base must prune: $admit of $total files admit cust=5")
 
-    val mv = fact.joinMatview("fc", dim, "cust", "region",
-      Seq("amt"), validAt, nBuckets = 4)
+    val mv = fact.matview("fc", Seq("region"), Seq("amt"), validAt,
+      Seq(dim -> "cust"), nBuckets = Some(4))
     mv.refresh()
     assertParity(mv, fact, dim)
 
     // dim-ONLY group move; capture the refresh's delta plan (the
     // checkpoint runs as a bare RDD job, invisible to listeners — the
-    // JoinMatview test hook snapshots the executed plan instead) and
+    // Matview test hook snapshots the executed plan instead) and
     // assert the fact side is filtered by a PUSHED literal In(cust),
     // which the parquet reader turns into footer-stat skipping over the
     // clustered files — not a semi-join that scans every fact file
@@ -514,8 +514,8 @@ class JoinMatviewSpec extends AnyFunSuite {
       lit("2000-01-01").cast("timestamp"), None,
       Seq("cust" -> $"c", "prod" -> $"p",
         "amt" -> $"m".cast("decimal(12,2)")), sys()): Unit
-    val mv = fact.starMatview("star_pred", Seq(d1 -> "cust", d2 -> "prod"),
-      Seq("region", "cat"), Seq("amt"), validAt, nBuckets = 4)
+    val mv = fact.matview("star_pred", Seq("region", "cat"), Seq("amt"),
+      validAt, Seq(d1 -> "cust", d2 -> "prod"), nBuckets = Some(4))
     mv.refresh()
 
     // one refresh with BOTH dims touched (zero fact ops): the affected
@@ -580,8 +580,8 @@ class JoinMatviewSpec extends AnyFunSuite {
     val (fact, dim, _) = fresh()
     putDims(dim, Seq((1L, "east"), (2L, "west")))
     putFacts(fact, Seq((10L, 2L, "3.00")))
-    val mv = fact.starMatview("tight_star", Seq(dim -> "cust"),
-      Seq("region"), Seq("amt"), validAt, nBuckets = 2)
+    val mv = fact.matview("tight_star", Seq("region"), Seq("amt"),
+      validAt, Seq(dim -> "cust"), nBuckets = Some(2))
     (1 to 5).foreach { i =>
       putFacts(fact, Seq((i.toLong, 1L, f"$i%d.25")))
       mv.refresh()
@@ -596,15 +596,15 @@ class JoinMatviewSpec extends AnyFunSuite {
     val (fact, dim, fdir) = fresh()
     putDims(dim, Seq((1L, "east"), (2L, "west")))
     putFacts(fact, Seq((10L, 1L, "10.00"), (11L, 2L, "20.00")))
-    val mv = fact.joinMatview("jv", dim, "cust", "region",
-      Seq("amt"), validAt, nBuckets = 4)
+    val mv = fact.matview("jv", Seq("region"), Seq("amt"), validAt,
+      Seq(dim -> "cust"), nBuckets = Some(4))
     mv.refresh()
     assertParity(mv, fact, dim)
 
     // fresh instance over the same state dir: watermarks recovered,
     // refresh is a no-op, read serves
-    val mv2 = fact.joinMatview("jv", dim, "cust", "region",
-      Seq("amt"), validAt, nBuckets = 4)
+    val mv2 = fact.matview("jv", Seq("region"), Seq("amt"), validAt,
+      Seq(dim -> "cust"), nBuckets = Some(4))
     assert(mv2.watermarks == mv.watermarks)
     assertParity(mv2, fact, dim)
     // state adoption lock: the definition fingerprint and the "wf wd"

@@ -271,8 +271,8 @@ class MaintainerLeaseSpec extends AnyFunSuite {
     t.put(Seq((1L, "a", 5L)).toDF("id", "g0", "x"), $"id",
       lit("2020-01-01").cast("timestamp"), None,
       Seq("g" -> $"g0", "v" -> $"x"), ts("2024-01-01 00:00:00"))
-    val mv = t.matview("lease_mv", "g", Seq("v"),
-      ts("2030-01-01 00:00:00"), nBuckets = 2)
+    val mv = t.matview("lease_mv", Seq("g"), Seq("v"),
+      ts("2030-01-01 00:00:00"), nBuckets = Some(2))
     Files.write(Paths.get(dir, "_maintainer_lease"),
       s"o@h\n${System.currentTimeMillis() + 60000}\ncompact".getBytes(UTF_8))
     assert(intercept[IllegalStateException](mv.refresh())
@@ -286,8 +286,8 @@ class MaintainerLeaseSpec extends AnyFunSuite {
     dim.put(Seq((1L, "EU")).toDF("id", "r0"), $"id",
       lit("2020-01-01").cast("timestamp"), None, Seq("r" -> $"r0"),
       ts("2024-01-01 00:00:00"))
-    val jmv = t.joinMatview("lease_jmv", dim, "v", "r", Nil,
-      ts("2030-01-01 00:00:00"), nBuckets = 2)
+    val jmv = t.matview("lease_jmv", Seq("r"), Nil,
+      ts("2030-01-01 00:00:00"), Seq(dim -> "v"), nBuckets = Some(2))
     Files.write(Paths.get(dimDir, "_maintainer_lease"),
       s"o@h\n${System.currentTimeMillis() + 60000}\ncompact".getBytes(UTF_8))
     assert(intercept[IllegalStateException](jmv.refresh())

@@ -51,7 +51,7 @@ class MatviewSpec extends AnyFunSuite {
 
   test("refresh parity through put / update / group-move / delete / erase") {
     val (t, _) = freshTable()
-    val mv = t.matview("by_grp", "grp", Seq("amt"), validAt, nBuckets = 8)
+    val mv = t.matview("by_grp", Seq("grp"), Seq("amt"), validAt, nBuckets = Some(8))
 
     // tx1: initial population, three groups
     t.put(Seq((1L, "a", "10.00"), (2L, "a", "20.00"), (3L, "b", "5.50"),
@@ -96,7 +96,7 @@ class MatviewSpec extends AnyFunSuite {
     // extremes are NOT self-maintainable: deleting the max forces the
     // group re-read fallback — exactly the cases exercised here
     val (t, _) = freshTable()
-    val mv = t.matview("mm_grp", "grp", Seq("amt"), validAt, nBuckets = 8,
+    val mv = t.matview("mm_grp", Seq("grp"), Seq("amt"), validAt, nBuckets = Some(8),
       minCols = Seq("amt"), maxCols = Seq("amt"))
 
     def recomputeMm(): Map[String, (java.math.BigDecimal, java.math.BigDecimal)] =
@@ -167,7 +167,7 @@ class MatviewSpec extends AnyFunSuite {
   test("refresh rewrites only the buckets of changed groups") {
     val (t, dir) = freshTable()
     // many groups spread over many buckets
-    val mv = t.matview("by_grp", "grp", Seq("amt"), validAt, nBuckets = 16)
+    val mv = t.matview("by_grp", Seq("grp"), Seq("amt"), validAt, nBuckets = Some(16))
     t.put(spark.range(200).select($"id", concat(lit("g"), $"id" % 40).as("g"),
         lit("1.00").cast("decimal(12,2)").as("m")),
       $"id", lit("2020-01-01").cast("timestamp"), None,
@@ -202,7 +202,7 @@ class MatviewSpec extends AnyFunSuite {
 
   test("continuous maintenance: stream-triggered refresh reaches parity; restart is idempotent") {
     val (t, dir) = freshTable()
-    val mv = t.matview("live", "grp", Seq("amt"), validAt, nBuckets = 4)
+    val mv = t.matview("live", Seq("grp"), Seq("amt"), validAt, nBuckets = Some(4))
     t.put(Seq((1L, "a", "10.00"), (2L, "b", "20.00")).toDF("id", "g", "m"),
       $"id", lit("2020-01-01").cast("timestamp"), None,
       Seq("grp" -> $"g", "amt" -> $"m".cast("decimal(12,2)")),
@@ -213,7 +213,7 @@ class MatviewSpec extends AnyFunSuite {
 
     // drain available txs through the maintainer, then stop
     def drain(): Unit = {
-      val q = graft.streaming.Streaming.maintainMatview(spark, dir, schema,
+      val q = graft.streaming.Streaming.maintainMatview(spark, Seq(dir -> schema),
         mv, checkpoint = Some(ckpt), availableNow = true)
       q.awaitTermination()
     }
@@ -251,7 +251,7 @@ class MatviewSpec extends AnyFunSuite {
     // inferred schema failed. Ten refreshes on ONE group cross every
     // boundary if widening recurs.
     val (t, _) = freshTable()
-    val mv = t.matview("tight", "grp", Seq("amt"), validAt, nBuckets = 2)
+    val mv = t.matview("tight", Seq("grp"), Seq("amt"), validAt, nBuckets = Some(2))
     (1 to 10).foreach { i =>
       t.put(Seq((i.toLong, "g", f"$i%d.00")).toDF("id", "g", "m"),
         $"id", lit("2020-01-01").cast("timestamp"), None,
@@ -273,7 +273,7 @@ class MatviewSpec extends AnyFunSuite {
     // scale (production row groups are 128 MB — same mechanics)
     hc.set("parquet.block.size", "65536")
     try {
-      val mv = t.matview("sorted1", "grp", Seq("amt"), validAt, nBuckets = 1)
+      val mv = t.matview("sorted1", Seq("grp"), Seq("amt"), validAt, nBuckets = Some(1))
       val rows = spark.range(120000).select($"id",
         format_string("g%07d", $"id").as("g"),
         ($"id" % 97).cast("decimal(12,2)").as("m"))
@@ -319,7 +319,7 @@ class MatviewSpec extends AnyFunSuite {
         .exists(_.references.exists(_.name == "_bucket"))
 
     val (t, _) = freshTable()
-    val mv = t.matview("pruned1", "grp", Seq("amt"), validAt, nBuckets = 16)
+    val mv = t.matview("pruned1", Seq("grp"), Seq("amt"), validAt, nBuckets = Some(16))
     val rows = spark.range(800).select($"id",
       format_string("g%04d", $"id" % 200).as("g"),
       lit("2.00").cast("decimal(12,2)").as("m"))
@@ -359,7 +359,7 @@ class MatviewSpec extends AnyFunSuite {
     assert(!bucketPruned(mv.read().filter($"grp" > "g0042")))
 
     // multi-column key: both equalities prune, one does not
-    val mv2 = t.matviewN("pruned2", Seq("grp", "amt"), Nil, validAt, 8)
+    val mv2 = t.matview("pruned2", Seq("grp", "amt"), Nil, validAt, nBuckets = Some(8))
     mv2.refresh()
     // the literal must compare in the column's own type: a string-vs-
     // decimal equality wraps the ATTRIBUTE in a cast and (correctly)
@@ -380,7 +380,7 @@ class MatviewSpec extends AnyFunSuite {
         lit("1.00").cast("decimal(12,2)").as("m")),
       $"id", lit("2020-01-01").cast("timestamp"), None,
       Seq("at" -> $"ts", "amt" -> $"m"), ts("2024-03-01 00:00:00"))
-    val mv3 = t3.matview("pruned3", "at", Seq("amt"), validAt, 8)
+    val mv3 = t3.matview("pruned3", Seq("at"), Seq("amt"), validAt, nBuckets = Some(8))
     mv3.refresh()
     val p3 = mv3.read()
       .filter($"at" === lit("2024-02-05 10:00:00").cast("timestamp"))
@@ -392,7 +392,7 @@ class MatviewSpec extends AnyFunSuite {
   test("definition-mismatch discard removes the schema/tz sidecars: a " +
       "failed rebuild reads as 'has no state', never the OLD columns") {
     val (t, dir) = freshTable()
-    val mv = t.matview("by_grp_sc", "grp", Seq("amt"), validAt, nBuckets = 4)
+    val mv = t.matview("by_grp_sc", Seq("grp"), Seq("amt"), validAt, nBuckets = Some(4))
     t.put(Seq((1L, "a", "10.00"), (2L, "b", "20.00")).toDF("id", "g", "m"),
       $"id", lit("2020-01-01").cast("timestamp"), None,
       Seq("grp" -> $"g", "amt" -> $"m".cast("decimal(12,2)")),
@@ -405,7 +405,7 @@ class MatviewSpec extends AnyFunSuite {
     // the discard must take the '_schema' (and '_tz') sidecars with the
     // data — a survivor would let read() serve the OLD definition's
     // column set while no state exists
-    val bad = t.matviewN("by_grp_sc", Seq("grp"), Seq("d1"), validAt, 4,
+    val bad = t.matview("by_grp_sc", Seq("grp"), Seq("d1"), validAt, nBuckets = Some(4),
       derived = Seq("d1" -> "no_such_col * 2"))
     intercept[Exception](bad.refresh())
     assert(!java.nio.file.Files.exists(root.resolve("_schema")),
@@ -430,7 +430,7 @@ class MatviewSpec extends AnyFunSuite {
     MvState.captureMemberPlans = true
     try {
       val (t, _) = freshTable()
-      val mv = t.matview("mm_push", "grp", Nil, validAt, nBuckets = 4,
+      val mv = t.matview("mm_push", Seq("grp"), Nil, validAt, nBuckets = Some(4),
         maxCols = Seq("amt"))
       t.put(spark.range(200).select($"id",
           format_string("g%03d", $"id" % 50).as("g"),
@@ -473,7 +473,7 @@ class MatviewSpec extends AnyFunSuite {
       MvState.capturedMemberPlans.synchronized(
         MvState.capturedMemberPlans.clear())
       val (t2, _) = freshTable()
-      val mv2 = t2.matviewN("mm_push2", Seq("grp", "amt"), Nil, validAt, 4,
+      val mv2 = t2.matview("mm_push2", Seq("grp", "amt"), Nil, validAt, nBuckets = Some(4),
         maxCols = Seq("amt"))
       // multi-col key -> tuple cap (100); touch 150 distinct tuples
       t2.put(spark.range(300).select($"id",
@@ -508,7 +508,7 @@ class MatviewSpec extends AnyFunSuite {
     MvState.captureMemberPlans = true
     try {
       val (t, _) = freshTable()
-      val mv = t.matviewN("pct_push", Seq("grp"), Nil, validAt, 4,
+      val mv = t.matview("pct_push", Seq("grp"), Nil, validAt, nBuckets = Some(4),
         pcts = Seq(MvPct("amt", 0.5, approx = false)))
       t.put(spark.range(200).select($"id",
           format_string("g%03d", $"id" % 50).as("g"),

@@ -1148,6 +1148,61 @@ class GraftMatviewsSpec extends AnyFunSuite {
     }
   }
 
+  test("a RESTORE that adopts a view rewrites no file under its state " +
+      "dir, the _ddl sidecar included") {
+    val s = spark
+    import s.implicits._
+    val fact = freshTable(Seq("cust", "amt"))
+    val dim = freshTable(Seq("region"))
+    GraftServer.register("ddlfact", fact)
+    GraftServer.register("ddldim", dim)
+    try {
+      dim.put(Seq((1L, "EU"), (2L, "US")).toDF("id", "r"), $"id",
+        lit("2020-01-01").cast("timestamp"), None,
+        Seq("region" -> $"r"), ts("2024-01-01 00:00:00"))
+      fact.put(Seq((10L, 1L, 10L), (11L, 2L, 20L)).toDF("id", "c", "a"),
+        $"id", lit("2020-01-01").cast("timestamp"), None,
+        Seq("cust" -> $"c", "amt" -> $"a"), ts("2024-01-01 00:00:01"))
+      GraftSql.sql(spark, "CREATE MATERIALIZED VIEW mv_ddl1 WITH " +
+        "(valid_at = '2030-01-01 00:00:00', buckets = 4) AS " +
+        "SELECT cust, SUM(amt) AS total FROM ddlfact GROUP BY cust")
+      GraftSql.sql(spark, "CREATE MATERIALIZED VIEW mv_ddl2 WITH " +
+        "(valid_at = '2030-01-01 00:00:00', buckets = 4) AS " +
+        "SELECT region, SUM(amt) AS total FROM ddlfact " +
+        "JOIN ddldim ON cust = ddldim._id GROUP BY region")
+      val roots = Seq("matview/mv_ddl1", "join_matview/mv_ddl2")
+        .map(java.nio.file.Paths.get(fact.tableDir, _))
+      def files = roots.flatMap { r =>
+        val w = java.nio.file.Files.walk(r)
+        try {
+          import scala.jdk.CollectionConverters._
+          w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+            .toList
+        } finally w.close()
+      }
+      assert(files.exists(_.getFileName.toString == "_ddl"))
+      // an old mtime on every file: any rewrite shows, however coarse
+      // the filesystem's clock
+      val old = java.nio.file.attribute.FileTime.fromMillis(1000000000000L)
+      files.foreach(java.nio.file.Files.setLastModifiedTime(_, old))
+      def snap() = files.map(f => (f.toString,
+        java.util.Arrays.hashCode(java.nio.file.Files.readAllBytes(f)),
+        java.nio.file.Files.getLastModifiedTime(f).toMillis)).toSet
+      val before = snap()
+      GraftMatviews.reset() // simulated JVM restart: registry gone
+      val restored = GraftSql.sql(spark, "RESTORE MATERIALIZED VIEWS")
+        .collect().map(r => (r.getString(0), r.getString(1))).toMap
+      assert(restored == Map("mv_ddl1" -> "restored", "mv_ddl2" -> "restored"),
+        restored.toString)
+      assert(snap() == before, "an adopting RESTORE rewrote a state file")
+    } finally {
+      Seq("mv_ddl1", "mv_ddl2").foreach(v =>
+        GraftSql.sql(spark, s"DROP MATERIALIZED VIEW IF EXISTS $v"))
+      GraftServer.unregister("ddlfact")
+      GraftServer.unregister("ddldim")
+    }
+  }
+
   test("non-maintainable shapes are rejected, not snapshotted") {
     val s = spark
     import s.implicits._

@@ -433,7 +433,25 @@ class GraftMvNavSpec extends AnyFunSuite {
           "WHERE date_trunc('year', ts) >= TIMESTAMP '2024-01-01' " +
           "GROUP BY CAST(date_trunc('month', ts) AS DATE)").isEmpty,
         "a non-group call expression in the residual must fall back")
+      // wrapping parentheses do not key navigation (it keys on the
+      // parsed GROUP BY item): a parenthesized query is served by the
+      // bare-key view, and a parenthesized view serves the bare query
+      def navigates(q: String): Unit = {
+        val d = GraftSql.sql(spark, q)
+        assert(scansMatview(d), s"must navigate: $q")
+        assert(rows(d) == rows(baseTruth(q, "xr_t" -> t)))
+      }
+      navigates("SELECT CAST(date_trunc('month', ts) AS DATE) AS m, " +
+        "COUNT(*) AS n, SUM(amt) AS sm FROM xr_t " +
+        "GROUP BY (CAST(date_trunc('month', ts) AS DATE))")
       GraftSql.sql(spark, "DROP MATERIALIZED VIEW xr_v")
+      GraftSql.sql(spark, "CREATE MATERIALIZED VIEW xr_p WITH " +
+        "(valid_at = '2030-01-01 00:00:00', rewrite = 'trusted') AS " +
+        "SELECT date_trunc('month', ts) AS mo, COUNT(*) AS n FROM xr_t " +
+        "GROUP BY (date_trunc('month', ts))")
+      navigates("SELECT date_trunc('month', ts) AS mo, COUNT(*) AS n " +
+        "FROM xr_t GROUP BY date_trunc('month', ts)")
+      GraftSql.sql(spark, "DROP MATERIALIZED VIEW xr_p")
     } finally {
       GraftServer.unregister("xr_t")
       GraftMatviews.reset()

@@ -287,7 +287,7 @@ class MvSharedRebuildSpec extends AnyFunSuite {
         lit("2020-01-01").cast("timestamp"), None,
         Seq("g" -> $"g", "v" -> $"v"), ts(at)): Unit
     put((1L to 40L).map(i => (i, s"g${i % 30}", i)), "2024-01-01 00:00:00")
-    val mv = t.matviewN("lay", Seq("g"), Seq("v"), validAt, nBuckets = 16)
+    val mv = t.matview("lay", Seq("g"), Seq("v"), validAt, nBuckets = Some(16))
     val stateDir = java.nio.file.Paths.get(dir, "matview", "lay", "state")
     def truth: Map[String, (Long, Long)] = t.current().groupBy($"g")
       .agg(count(lit(1)), sum($"v")).collect()
@@ -378,12 +378,12 @@ class MvSharedRebuildSpec extends AnyFunSuite {
           "FROM sgfact JOIN sgdim ON cust = sgdim._id GROUP BY region"))
       assert(e2.getMessage.contains("reserved"), e2.getMessage)
       val e3 = intercept[IllegalArgumentException](
-        signed.matviewN("sg3", Seq("g"), Nil, validAt))
+        signed.matview("sg3", Seq("g"), Nil, validAt))
       assert(e3.getMessage.contains("reserved"), e3.getMessage)
       val (dim2, _) = freshTable(Seq("region"))
       val e4 = intercept[IllegalArgumentException](
-        fact.starMatview("sg4", Seq(dim2 -> "cust"), Seq("region"),
-          Nil, validAt, derived = Seq("_sign" -> "amt * 2")))
+        fact.matview("sg4", Seq("region"), Nil, validAt, Seq(dim2 -> "cust"),
+          derived = Seq("_sign" -> "amt * 2")))
       assert(e4.getMessage.contains("reserved"), e4.getMessage)
     } finally {
       Seq("sgsingle", "sgfact", "sgdim").foreach(GraftServer.unregister)

@@ -468,4 +468,28 @@ class StreamingSpec extends AnyFunSuite {
         assert(e.getMessage.contains("plain identifier"), e.getMessage)
       }
   }
+
+  test("ingestOpStream over a vacuumed GraftTable keeps every vacuumed row") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.types.{DoubleType, StructType}
+    val dir = Files.createTempDirectory("txlog_ingest_vacuum").toString
+    val t = new graft.GraftTable(spark, dir, Seq("bal"))
+    t.put(Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)).toDF("id", "b"), $"id",
+      lit("2020-01-01").cast("timestamp"), None, Seq("bal" -> $"b"),
+      ts("2024-01-01 00:00:00"))
+    t.vacuumLog() // ids 1-3 now live only in the base
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val lines = MemoryStream[String]
+    val q = Streaming.ingestOpStream(
+      Streaming.txOpsFromJson(lines.toDF(), new StructType().add("bal", DoubleType)),
+      dir, Seq("bal"), _ => ts("2024-01-02 00:00:00"))
+    try {
+      lines.addData("""{"_op":"put","_id":4,"_valid_from":"2020-01-01 00:00:00",""" +
+        """"_valid_to":null,"bal":4.0}""")
+      q.processAllAvailable()
+    } finally q.stop()
+    val current = t.current().select($"_id", $"bal").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(current == Map(1L -> 1.0, 2L -> 2.0, 3L -> 3.0, 4L -> 4.0))
+  }
 }

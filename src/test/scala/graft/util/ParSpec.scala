@@ -102,11 +102,4 @@ class ParSpec extends AnyFunSuite {
       .rdd.getNumPartitions == target)
   }
 
-  test("spread.enabled=false is a global off switch") {
-    spark.conf.set("spark.graft.spread.enabled", "false")
-    try {
-      val df = bigNarrow(1)
-      assert(Par.spread(df) eq df)
-    } finally spark.conf.unset("spark.graft.spread.enabled")
-  }
 }
